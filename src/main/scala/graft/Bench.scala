@@ -36,12 +36,6 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    // Same reason: nearDupPairsShared re-issues .cache() on a structurally
-    // identical plan from its second consumer onward (the documented shared-
-    // work design), and CacheManager WARNs "already cached" every time.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.CacheManager",
-      org.apache.logging.log4j.Level.ERROR)
     // Every spark.read.load(<glob>) (the WARC fixture readbacks) makes
     // FileStreamSink.hasMetadata probe getFileStatus on the LITERAL glob
     // string, catch the inevitable FileNotFoundException, and WARN with

@@ -448,14 +448,18 @@ object SparkEntry {
     * `dedup_clusters`. `.cache()` registers the plan with Spark's
     * CacheManager: both queries build structurally identical plans, so
     * whichever runs second reads the materialized pairs instead of
-    * recomputing the banded blocking join (the dominant cost of both).
+    * recomputing the banded blocking join (the dominant cost of both). The
+    * second consumer finds the plan already registered (`storageLevel` looks
+    * it up by plan) and does not re-issue `.cache()`.
     * Lifecycle: scoped to the driver mains — Verify's JVM exits right after
     * the run, and Bench clears the cache between timing passes so no pass
     * rides pairs materialized by an earlier one (the first consumer within
     * a pass honestly pays materialization). */
   private def nearDupPairsShared(s: SparkSession, dir: String): DataFrame = {
     val docs = load(s, dir, "documents")
-    graft.api.BandedLsh.nearDupPairs(docs, "doc_id", "text", 4, 8, 3, 123L, 0.5).cache()
+    val pairs = graft.api.BandedLsh.nearDupPairs(docs, "doc_id", "text", 4, 8, 3, 123L, 0.5)
+    if (pairs.storageLevel == org.apache.spark.storage.StorageLevel.NONE) pairs.cache()
+    else pairs
   }
 
   /** The deterministically-dirtied documents shared by every source-format

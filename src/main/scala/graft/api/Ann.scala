@@ -62,16 +62,12 @@ object Ann {
     val live = df.filter(normSq(col(vecCol)) > 0.0)
     val sk = live.select(col(idCol).as("id"),
       graft.functions.cosine_sketch64(col(vecCol), nbits, seed).as("sk"))
-    // bucket repartition → the self-join reads ONE ReusedExchange: the
-    // full-vector cosine_sketch64 pass runs once per vector, not per side
+    // the shared self band-join's ReusedExchange: the full-vector
+    // cosine_sketch64 pass runs once per vector, not per side
     val banded = sk.select(col("id"),
         posexplode(SketchBlocking.chunks(col("sk"), bands, nbits)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
-      .repartition(col("band"), col("chunk"))
-    val a = banded.select(col("id").as("id_a"), col("band"), col("chunk"))
-    val b = banded.select(col("id").as("id_b"), col("band"), col("chunk"))
-    val cand = a.join(b, Seq("band", "chunk"))
-      .filter(col("id_a") < col("id_b"))
+    val cand = BandedLsh.selfBandJoin(banded, "id", bucket = Seq("band", "chunk"))
       .select("id_a", "id_b").distinct()
     cand
       .join(live.select(col(idCol).as("id_a"), col(vecCol).as("va")), "id_a")

@@ -2,7 +2,6 @@ package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Scale-out helpers for the reference's banded LSH blocking-join pattern
   * (/root/reference/README.md:133-164). The README idiom is one join per
@@ -80,31 +79,52 @@ object BandedLsh {
       .withColumnRenamed("col", "band_hash")
   }
 
+  /** The self band-join under every banded pair path: rows sharing a
+    * `bucket` key pair up as `(id_a, <payload>_a, id_b, <payload>_b)` with
+    * id_a < id_b, once per shared bucket (callers verify and deduplicate).
+    * `payload` maps each carried column to its base name (`text` becomes
+    * `text_a`/`text_b`); only the id, payload and bucket columns reach the
+    * join.
+    *
+    * The explicit bucket repartition is the point: both join sides read ONE
+    * ReusedExchange (verified in the executed plans, pinned by
+    * SingleComputeSpec), so whatever expensive kernel built `banded` —
+    * minhash banding, simhash, a perceptual or cosine sketch — runs once per
+    * row, and the exchange ships each row once, not once per join side.
+    * `hint` goes on the left side for callers whose plan depends on one. */
+  private[api] def selfBandJoin(banded: DataFrame, id: String,
+                                payload: Seq[(String, String)] = Nil,
+                                bucket: Seq[String] = Seq("band", "band_hash"),
+                                hint: Option[String] = None): DataFrame = {
+    val shared = banded.repartition(bucket.map(col): _*)
+    def side(s: String) = shared.select((col(id).as(s"id$s") +:
+      payload.map { case (c, name) => col(c).as(s"$name$s") }) ++ bucket.map(col): _*)
+    val a = side("_a")
+    hint.fold(a)(a.hint(_)).join(side("_b"), bucket)
+      .filter(col("id_a") < col("id_b"))
+  }
+
   /** Distinct candidate id pairs (id_a < id_b) that collide in at least one
-    * band — the blocking stage of a self near-dup join. Only ids flow through
-    * the band join and the distinct: shuffling and deduplicating (id, id)
-    * longs is cheap where dragging the full documents through would move the
-    * whole corpus per band; texts are re-attached afterwards by two id joins. */
-  def candidatePairs(df: DataFrame, idCol: String, textCol: String,
-                     ngramWidth: Int, bandCount: Int, bandSize: Int, seed: Long): DataFrame = {
-    // bucket repartition → the self-join reads ONE ReusedExchange: the
-    // banding pass (lsh_min) runs once per document, not once per side.
-    // The SHUFFLE_HASH hint is load-bearing for that: when the banded rows
-    // estimate under the broadcast threshold the planner would otherwise
-    // broadcast one side — which REPLACES that side's exchange with a
-    // broadcast build, so the CPU-bound minhash banding runs twice (once
-    // per side) and the build serializes on the driver (measured at sf0.1:
-    // a second full lsh_min pass + a 6.7 s single-task build). A shuffled
-    // hash join keeps both sides on the one exchange and builds per
-    // partition.
+    * band — the blocking stage of [[editVerifiedPairs]]. Only ids flow
+    * through the band join and the distinct: shuffling and deduplicating
+    * (id, id) longs is cheap where dragging the full documents through would
+    * move the whole corpus per band; texts are re-attached afterwards by two
+    * id joins. */
+  private[api] def candidatePairs(df: DataFrame, idCol: String, textCol: String,
+                                  ngramWidth: Int, bandCount: Int, bandSize: Int,
+                                  seed: Long): DataFrame = {
+    // The SHUFFLE_HASH hint is load-bearing for the shared exchange: when
+    // the banded rows estimate under the broadcast threshold the planner
+    // would otherwise broadcast one side — which REPLACES that side's
+    // exchange with a broadcast build, so the CPU-bound minhash banding runs
+    // twice (once per side) and the build serializes on the driver
+    // (measured at sf0.1: a second full lsh_min pass + a 6.7 s single-task
+    // build). A shuffled hash join keeps both sides on the one exchange and
+    // builds per partition.
     val banded = bandedRows(df, idCol, textCol, ngramWidth, bandCount, bandSize, seed)
       .select(col(idCol), col("band"), col("band_hash"))
-      .repartition(col("band"), col("band_hash"))
-    val a = banded.select(col(idCol).as("id_a"), col("band"), col("band_hash"))
-    val b = banded.select(col(idCol).as("id_b"), col("band"), col("band_hash"))
     val n = SparkEnv.shufflePartitions(df.sparkSession)
-    val idPairs = a.hint("shuffle_hash").join(b, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
+    val idPairs = selfBandJoin(banded, idCol, hint = Some("shuffle_hash"))
       .select("id_a", "id_b")
       // strict-width dedup: AQE sizes shuffles on BYTES, and a candidate
       // id-pair stream is tiny bytes but quadratic-in-bucket CPU — the
@@ -154,19 +174,8 @@ object BandedLsh {
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
                    ngramWidth: Int, bandCount: Int, bandSize: Int, seed: Long,
                    threshold: Double): DataFrame = {
-    // explicit bucket repartition: the self-join below then reads ONE
-    // ReusedExchange for both sides (verified in the executed plan), so
-    // the minhash banding pass — the signature compute — runs once per
-    // document and the band exchange ships each doc's (text, signature)
-    // rows once, not once per join side
-    val banded = bandedRows(df, idCol, textCol, ngramWidth, bandCount, bandSize, seed)
-      .repartition(col("band"), col("band_hash"))
-    val a = banded.select(col(idCol).as("id_a"), col(textCol).as("text_a"),
-      col("band"), col("band_hash"))
-    val b = banded.select(col(idCol).as("id_b"), col(textCol).as("text_b"),
-      col("band"), col("band_hash"))
-    a.join(b, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
+    selfBandJoin(bandedRows(df, idCol, textCol, ngramWidth, bandCount, bandSize, seed),
+        idCol, Seq(textCol -> "text"))
       .withColumn("sim", graft.functions.lsh_jaccard(col("text_a"), col("text_b"), ngramWidth))
       .filter(col("sim") > threshold)
       .select("id_a", "id_b", "sim")
@@ -179,7 +188,7 @@ object BandedLsh {
     * where the O(|a|·|b|) DP per pair is trivially bounded and edit
     * distance is the wanted semantics (shingle Jaccard under-weights
     * transpositions and single-char edits in short strings). Candidates
-    * come from [[candidatePairs]] (one banding pass, ReusedExchange
+    * come from the internal `candidatePairs` (one banding pass, ReusedExchange
     * self-join, distinct before the text joins — a pair colliding in k
     * bands pays the DP once); verification is one codegen'd builtin on
     * the deduplicated stream.
@@ -196,7 +205,7 @@ object BandedLsh {
     *
     * Plan shape — the OPPOSITE order from [[nearDupPairs]], and measured,
     * not assumed: ids-only band join → `distinct` → broadcast text attach
-    * → one DP per UNIQUE pair ([[candidatePairs]]). Near-uniform key
+    * → one DP per UNIQUE pair (`candidatePairs`). Near-uniform key
     * spaces (serial numbers, templated names) give shingle-MinHash a
     * narrow true/random Jaccard gap, so pairs that collide at all collide
     * in MANY bands; verifying inside the band join pays the DP per
@@ -221,66 +230,6 @@ object BandedLsh {
         lit(1.0) - col("lev") / greatest(length(col("text_a")), length(col("text_b"))))
       .filter(col("edit_sim") >= minSim)
       .select("id_a", "id_b", "lev", "edit_sim")
-
-  /** [[editVerifiedPairs]] behind the [[candidateCensus]] pre-flight — the
-    * same mega-bucket governor [[nearDupPairsAdaptive]] wires in front of
-    * the Jaccard verifier, for the path whose candidate volume is MOST
-    * prone to explode: record-linkage banding is deliberately loose
-    * (recall-oriented few-band configs) over near-uniform key spaces, so
-    * one hot key (a default value, an empty-ish name, a templated SKU)
-    * puts C(n,2) collisions on ONE sort-merge-join task. When the largest
-    * bucket exceeds `maxRelationalBucket`, candidate ENUMERATION routes
-    * through the fused triangle-blocking operator
-    * ([[bandedSelfJoinPairs]] at `threshold = -1`, which emits every
-    * bucket collision — Jaccard ≥ 0 > −1 — with
-    * numBlocks·(numBlocks+1)/2-way parallelism inside even a single
-    * bucket), and the Levenshtein verify then runs on the same
-    * distinct-ids → text-attach tail as the relational path. Both routes
-    * share [[bandedRows]]' sub-width drop, so the PAIR SET IS IDENTICAL
-    * either way (spec-pinned on a planted degenerate key cluster).
-    * The census costs one extra banding pass (~2 s at 500k rows) — the
-    * pre-flight price of never hitting the quadratic single-task cliff. */
-  def editVerifiedPairsAdaptive(df: DataFrame, idCol: String, textCol: String,
-                                ngramWidth: Int, bandCount: Int, bandSize: Int,
-                                seed: Long, minSim: Double,
-                                maxRelationalBucket: Long = 8192L,
-                                numBlocks: Int = 8): DataFrame = {
-    // The fused fallback ([[bandedSelfJoinPairs]]) carries ids as longs;
-    // a non-integral id (string UUID — plausible in record linkage) would
-    // cast to null and silently drop pairs ONLY when the hot-bucket route
-    // trips, breaking the identical-pair-set contract. Fail loudly up
-    // front instead; the relational [[editVerifiedPairs]] keeps native id
-    // types if longs are unavailable.
-    df.schema(idCol).dataType match {
-      case ByteType | ShortType | IntegerType | LongType => ()
-      case t => throw new IllegalArgumentException(
-        s"editVerifiedPairsAdaptive requires an integral id column (the " +
-          s"fused hot-bucket route carries ids as longs); '$idCol' is $t. " +
-          "Use editVerifiedPairs, or map ids to longs first.")
-    }
-    val (_, maxBucket, _) =
-      candidateCensus(df, idCol, textCol, ngramWidth, bandCount, bandSize, seed)
-    if (maxBucket <= maxRelationalBucket)
-      editVerifiedPairs(df, idCol, textCol, ngramWidth, bandCount, bandSize,
-        seed, minSim)
-    else {
-      val idType = df.schema(idCol).dataType
-      val cand = bandedSelfJoinPairs(df, idCol, textCol, ngramWidth,
-          bandCount, bandSize, seeds = Seq(seed), threshold = -1.0,
-          numBlocks = numBlocks)
-        .select(col("id_a").cast(idType).as("id_a"),
-          col("id_b").cast(idType).as("id_b"))
-      cand
-        .join(df.select(col(idCol).as("id_a"), col(textCol).as("text_a")), "id_a")
-        .join(df.select(col(idCol).as("id_b"), col(textCol).as("text_b")), "id_b")
-        .withColumn("lev",
-        graft.functions.levenshtein_cp(col("text_a"), col("text_b")).cast("long"))
-        .withColumn("edit_sim", lit(1.0) -
-          col("lev") / greatest(length(col("text_a")), length(col("text_b"))))
-        .filter(col("edit_sim") >= minSim)
-        .select("id_a", "id_b", "lev", "edit_sim")
-    }
-  }
 
   /** Candidate-pair census over the banded blocking buckets: Σ C(n,2) and
     * the largest bucket, computed straight from bucket SIZES (one
@@ -454,8 +403,8 @@ object BandedLsh {
     // exchange, re-evaluating BOTH lsh_min kernels per row at the scan
     // (outer generates are exempt; empty-band rows surface as one null
     // row and die in the same-stage filter — bit-identical output).
-    // bucket repartition → the self-join reads ONE ReusedExchange: both
-    // lsh_min passes run once per document.
+    // the shared self band-join's ReusedExchange: both lsh_min passes run
+    // once per document.
     val hashed = df
       .filter(length(col(textCol)) >= ngramWidth)
       .repartition(n, col(idCol))
@@ -466,13 +415,7 @@ object BandedLsh {
         posexplode_outer(col("bands")))
       .filter(col("col").isNotNull)
       .select(col("id"), col("sig"), col("pos").as("band"), col("col").as("band_hash"))
-      .repartition(col("band"), col("band_hash"))
-    val a = banded.select(col("id").as("id_a"), col("sig").as("sig_a"),
-      col("band"), col("band_hash"))
-    val b = banded.select(col("id").as("id_b"), col("sig").as("sig_b"),
-      col("band"), col("band_hash"))
-    a.join(b, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
+    selfBandJoin(banded, "id", Seq("sig" -> "sig"))
       .select("id_a", "id_b", "sig_a", "sig_b")
       .distinct()
       // codegen'd agreement count (bit-equal to the zip_with fold: an
@@ -535,25 +478,39 @@ object BandedLsh {
       ca.join(cb, keys)
         .filter(col("__ca") * col("__cb") > hotThreshold)
         .select(keys.map(col): _*))
+    // the cold branch is left to AQE on purpose — its buckets are bounded
+    // by construction, and coalescing them is the right call
     val cold = a.join(hot, keys, "left_anti")
       .join(b.join(hot, keys, "left_anti"), keys)
-    // strict REPARTITION_BY_NUM on (keys, __blk) for the hot branch: the
-    // blocked rows are tiny in BYTES, so AQE would coalesce the
-    // ENSURE_REQUIREMENTS exchange right back into a handful of tasks and
-    // erase the parallelism the blocking just bought (the same
-    // output-blind-AQE trap BlockedSelfJoin guards against). The cold branch
-    // is left to AQE on purpose — its buckets are bounded by construction,
-    // and coalescing them is the right call.
-    val n = SparkEnv.shufflePartitions(a.sparkSession)
+    cold.unionByName(gridJoin(a.join(hot, keys, "left_semi"), scatterA,
+      b.join(hot, keys, "left_semi"), keys, blocks))
+  }
+
+  /** The grid-blocked hot join under both skew-hardened band joins
+    * ([[bandJoinSkewSafe]], [[nearDupAgainstIndex]]'s sidecar branch):
+    * `scattered JOIN replicated USING (keys)`, row for row, with each hot
+    * bucket's m·n pairs spread over `blocks` tasks. `scattered` rows go to
+    * one block each by `xxhash64(scatter) mod blocks` (`scatter` must carry
+    * per-row entropy — an id, never the join key); `replicated` rows go to
+    * every block.
+    *
+    * Strict REPARTITION_BY_NUM on (keys, block) for both sides: the blocked
+    * rows are tiny in BYTES, so AQE would coalesce an ENSURE_REQUIREMENTS
+    * exchange right back into a handful of tasks and erase the parallelism
+    * the blocking just bought (the same output-blind-AQE trap
+    * BlockedSelfJoin guards against). */
+  private[api] def gridJoin(scattered: DataFrame, scatter: Column,
+                            replicated: DataFrame, keys: Seq[String],
+                            blocks: Int): DataFrame = {
+    val n = SparkEnv.shufflePartitions(scattered.sparkSession)
     val blkKeys = (keys :+ "__blk").map(col)
-    val aHot = a.join(hot, keys, "left_semi")
-      .withColumn("__blk", pmod(xxhash64(scatterA), lit(blocks.toLong)).cast("int"))
+    val s = scattered
+      .withColumn("__blk", pmod(xxhash64(scatter), lit(blocks.toLong)).cast("int"))
       .repartition(n, blkKeys: _*)
-    val bHot = b.join(hot, keys, "left_semi")
+    val r = replicated
       .withColumn("__blk", explode(sequence(lit(0), lit(blocks - 1))))
       .repartition(n, blkKeys: _*)
-    val hotJoined = aHot.join(bHot, keys :+ "__blk").drop("__blk")
-    cold.unionByName(hotJoined)
+    s.join(r, keys :+ "__blk").drop("__blk")
   }
 
   /** Near-dup pairs between two DIFFERENT corpora: banded blocking on both
@@ -900,15 +857,8 @@ object BandedLsh {
         val hotRows = spark.table(s"${indexTable}_hot")
         val hotKeys = broadcast(hotRows.select(keys.map(col): _*).distinct())
         val cold = batchRows.join(hotKeys, keys, "left_anti").join(idx, keys)
-        val n = SparkEnv.shufflePartitions(spark)
-        val blkKeys = (keys :+ "__blk").map(col)
-        val bHot = batchRows.join(hotKeys, keys, "left_semi")
-          .withColumn("__blk", pmod(xxhash64(col("batch_id")), lit(blocks.toLong)).cast("int"))
-          .repartition(n, blkKeys: _*)
-        val iHot = hotRows
-          .withColumn("__blk", explode(sequence(lit(0), lit(blocks - 1))))
-          .repartition(n, blkKeys: _*)
-        cold.unionByName(bHot.join(iHot, keys :+ "__blk").drop("__blk"))
+        cold.unionByName(gridJoin(batchRows.join(hotKeys, keys, "left_semi"),
+          col("batch_id"), hotRows, keys, blocks))
       }
     val cand = collided
       .filter(col("batch_id") =!= col("corpus_id"))
@@ -1016,60 +966,5 @@ object BandedLsh {
           "silently wrong on this graph; raise maxIters (rounds needed ~ log2 of the largest " +
           "component's diameter thanks to the pointer-jump accelerator)")
     labels
-  }
-
-  /** Optional MLlib-backed near-dup join (SURVEY.md §2.5): same
-    * `(id_a, id_b, sim)` contract as [[nearDupPairs]] — `id_a < id_b`,
-    * `sim > threshold` — but computed with stock
-    * `org.apache.spark.ml.feature.MinHashLSH.approxSimilarityJoin` over a
-    * `HashingTF(binary)` encoding of the char-n-gram shingle sets. Pipeline:
-    * SQL built-ins generate the distinct n-grams (no UDF), `HashingTF` maps
-    * them into a 2^`vocabBits` binary term space, `MinHashLSH` with
-    * `numHashTables` single-hash tables blocks, and the join's `keyDistance`
-    * (exact Jaccard distance over the term space) verifies.
-    *
-    * NOT bit-compatible with the custom kernels: MLlib's `(a·x+b) mod prime`
-    * family shares nothing with the reference's FxHash/ChaCha12 chain
-    * (SURVEY §2.5), its tables are 1-row OR-amplification where
-    * [[nearDupPairs]] bands AND `bandSize` minima, and `sim` here is Jaccard
-    * over HashingTF's hashed term space, where a collision can merge two
-    * distinct shingles. Candidates and sims are therefore approximations of
-    * the custom path; the spec gates recall against it, not parity. Use this
-    * when interoperating with an existing MLlib pipeline (e.g. to reuse a
-    * fitted model or compose with other `ml.feature` stages); use
-    * [[nearDupPairs]] when reproducibility against the reference matters.
-    *
-    * Scale shape is the same as the custom path's relational form: one
-    * explode of `numHashTables` hash values, one shuffle on (table, hash),
-    * ids only through the join. Rows shorter than `ngramWidth` are dropped
-    * up front (empty shingle set — same rule as [[bandedRows]]; MLlib
-    * additionally requires ≥ 1 non-zero vector entry). */
-  def approxJoinMllib(df: DataFrame, idCol: String, textCol: String,
-                      ngramWidth: Int, numHashTables: Int, seed: Long,
-                      threshold: Double, vocabBits: Int = 18): DataFrame = {
-    require(vocabBits >= 1 && vocabBits <= 30,
-      s"vocabBits must be in [1, 30], got $vocabBits")
-    import org.apache.spark.ml.feature.{HashingTF, MinHashLSH}
-    val grams = df.filter(length(col(textCol)) >= ngramWidth)
-      .select(col(idCol).as("__id"),
-        array_distinct(expr(
-          s"transform(sequence(1, length($textCol) - ${ngramWidth - 1}), " +
-            s"i -> substring($textCol, i, $ngramWidth))")).as("__grams"))
-    val featurized = new HashingTF()
-      .setInputCol("__grams").setOutputCol("__features")
-      .setNumFeatures(1 << vocabBits).setBinary(true)
-      .transform(grams)
-      .select("__id", "__features")
-    val model = new MinHashLSH()
-      .setInputCol("__features").setOutputCol("__hashes")
-      .setNumHashTables(numHashTables).setSeed(seed)
-      .fit(featurized)
-    // approxSimilarityJoin keeps pairs with distance < threshold, so the
-    // Jaccard-distance cutoff 1 - threshold reproduces sim > threshold with
-    // matching strictness
-    model.approxSimilarityJoin(featurized, featurized, 1.0 - threshold, "__dist")
-      .select(col("datasetA.__id").as("id_a"), col("datasetB.__id").as("id_b"),
-        (lit(1.0) - col("__dist")).as("sim"))
-      .filter(col("id_a") < col("id_b"))
   }
 }

@@ -71,24 +71,30 @@ object Dedup {
     * forces a matching chunk, and differences confined to the ignored bits
     * only ADD candidates (which full-Hamming verification then filters). */
   def simhashDupPairs(df: DataFrame, idCol: String, textCol: String,
-                      bands: Int, maxHamming: Int): DataFrame = {
+                      bands: Int, maxHamming: Int): DataFrame =
+    hammingPairs(df.select(col(idCol).as("id"),
+      graft.functions.simhash64(col(textCol)).as("h")), bands, maxHamming)
+
+  /** The banded-Hamming pairing over a pre-hashed `(id, h)` frame of 64-bit
+    * hashes, shared by [[simhashDupPairs]] and the perceptual media paths
+    * ([[Multimodal.imageNearDupPairs]], [[Multimodal.audioNearDupPairs]]):
+    * the pigeonhole blocking above, then exact Hamming over the two longs.
+    * Never all-pairs: candidate volume is bounded by chunk-collision degree,
+    * and only ids+hashes cross the exchange. Output `(id_a, id_b, hamming)`
+    * with id_a < id_b, hamming ≤ `maxHamming`; NULL hashes (un-hashable
+    * payloads) can't pair: their chunks are NULL, and the join's inferred
+    * not-null filter drops them right after the explode. An explicit
+    * `h IS NOT NULL` filter would be pushed below the projection and
+    * evaluate the hash kernel a second time. */
+  private[api] def hammingPairs(hashed: DataFrame, bands: Int,
+                                maxHamming: Int): DataFrame = {
     require(bands >= 1 && bands <= 64, s"bands must be in [1, 64], got $bands")
-    val sim = df.select(col(idCol).as("id"), col(textCol).as("text"),
-      graft.functions.simhash64(col(textCol)).as("sh"))
-    // explicit (band, chunk) repartition: the self-join below then reads
-    // ONE ReusedExchange for both sides (verified in the executed plan),
-    // so the full-text simhash pass runs once per document — without it
-    // each join side recomputes the scan + simhash64
-    val banded = sim.select(col("id"), col("sh"),
-      posexplode(SketchBlocking.chunks(col("sh"), bands, bands * (64 / bands))))
+    val banded = hashed.select(col("id"), col("h"),
+        posexplode(SketchBlocking.chunks(col("h"), bands, bands * (64 / bands))))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
-      .repartition(col("band"), col("chunk"))
-    val a = banded.select(col("id").as("id_a"), col("sh").as("sh_a"), col("band"), col("chunk"))
-    val b = banded.select(col("id").as("id_b"), col("sh").as("sh_b"), col("band"), col("chunk"))
-    a.join(b, Seq("band", "chunk"))
-      .filter(col("id_a") < col("id_b"))
+    BandedLsh.selfBandJoin(banded, "id", Seq("h" -> "h"), Seq("band", "chunk"))
       .select(col("id_a"), col("id_b"),
-        graft.functions.hamming_dist(col("sh_a"), col("sh_b")).as("hamming"))
+        graft.functions.hamming_dist(col("h_a"), col("h_b")).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }

@@ -333,9 +333,10 @@ object Multimodal {
   /** Perceptual image near-dup pairs — the image-side analog of the text
     * near-dup family: hash every image ONCE (the decode is the per-row
     * cost; it runs before the banding exchange and never again), block
-    * with the [[Dedup.simhashDupPairs]] pigeonhole rule (64-bit hash in
-    * `bands` chunks; Hamming ≤ bands-1 guarantees a chunk match), verify
-    * candidates with exact Hamming over the two longs. Never all-pairs:
+    * with the one banded-Hamming pairing [[Dedup.simhashDupPairs]] also
+    * runs (64-bit hash in `bands` chunks; Hamming ≤ bands-1 guarantees a
+    * chunk match), verify candidates with exact Hamming over the two
+    * longs. Never all-pairs:
     * candidate volume is bounded by chunk-collision degree, ids+hashes
     * only cross the exchange, and payload bytes never shuffle. Output
     * `(id_a, id_b, hamming)` with id_a < id_b, hamming ≤ `maxHamming`;
@@ -344,8 +345,8 @@ object Multimodal {
   def imageNearDupPairs(media: DataFrame, idCol: String, bytesCol: String,
                         bands: Int = 4, maxHamming: Int = 10,
                         kind: String = "dhash"): DataFrame =
-    hammingNearDupPairs(media.select(col(idCol).as("id"),
-      imageHash(col(bytesCol), kind).as("ih")), bands, maxHamming)
+    Dedup.hammingPairs(media.select(col(idCol).as("id"),
+      imageHash(col(bytesCol), kind).as("h")), bands, maxHamming)
 
   /** Perceptual audio near-dup pairs — [[imageNearDupPairs]] with the
     * clip fingerprint ([[graft.core.AudioFingerprint]]) in place of the
@@ -355,36 +356,8 @@ object Multimodal {
     * payload bytes never shuffle, un-hashable clips can't pair. */
   def audioNearDupPairs(media: DataFrame, idCol: String, bytesCol: String,
                         bands: Int = 4, maxHamming: Int = 6): DataFrame =
-    hammingNearDupPairs(media.select(col(idCol).as("id"),
-      graft.functions.audio_fp(col(bytesCol)).as("ih")), bands, maxHamming)
-
-  /** Shared banded-Hamming pairing over a pre-hashed `(id, ih)` frame:
-    * the [[Dedup.simhashDupPairs]] pigeonhole rule (64-bit hash in
-    * `bands` chunks; Hamming ≤ bands−1 guarantees a chunk match), exact
-    * Hamming verify over the two longs. Never all-pairs: candidate
-    * volume is bounded by chunk-collision degree. Output
-    * `(id_a, id_b, hamming)` with id_a < id_b, hamming ≤ `maxHamming`;
-    * NULL hashes silently can't pair — dedup over junk is not
-    * meaningful. */
-  private def hammingNearDupPairs(idHash: DataFrame, bands: Int,
-                                  maxHamming: Int): DataFrame = {
-    require(bands >= 1 && bands <= 64, s"bands must be in [1, 64], got $bands")
-    val hashed = idHash.filter(col("ih").isNotNull)
-    val banded = hashed.select(col("id"), col("ih"),
-        posexplode(SketchBlocking.chunks(col("ih"), bands, bands * (64 / bands))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
-      .repartition(col("band"), col("chunk"))
-    val a = banded.select(col("id").as("id_a"), col("ih").as("ih_a"),
-      col("band"), col("chunk"))
-    val b = banded.select(col("id").as("id_b"), col("ih").as("ih_b"),
-      col("band"), col("chunk"))
-    a.join(b, Seq("band", "chunk"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        graft.functions.hamming_dist(col("ih_a"), col("ih_b")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+    Dedup.hammingPairs(media.select(col(idCol).as("id"),
+      graft.functions.audio_fp(col(bytesCol)).as("h")), bands, maxHamming)
 
   /** PNG fixture for the perceptual-dedup gate: the [[syntheticPngs]]
     * originals (ids 0..n-1) plus NEAR twins for every id ≡ 0 (mod 3) —

@@ -69,6 +69,27 @@ class SingleComputeSpec extends AnyFunSuite {
       s"sketching must compute once:\n${df.queryExecution.executedPlan}")
   }
 
+  test("editVerifiedPairs: the lsh_min banding pass runs once") {
+    import org.apache.spark.sql.functions._
+    // short keys, the record-linkage shape: the first 24 chars of each doc
+    val keys = docs.select(col("doc_id"), substring(col("text"), 1, 24).as("key"))
+    val df = api.BandedLsh.editVerifiedPairs(keys, "doc_id", "key",
+      ngramWidth = 2, bandCount = 4, bandSize = 6, seed = 5L, minSim = 0.5)
+    assert(computeSites(df, "lsh_min") == 1,
+      s"banding must compute once:\n${df.queryExecution.executedPlan}")
+  }
+
+  test("imageNearDupPairs: the image hash runs once") {
+    // through parquet: over a local relation the optimizer folds the hash
+    // into the scan on the driver and no plan node computes it
+    val dir = java.nio.file.Files.createTempDirectory("graft-media").resolve("m").toString
+    api.Multimodal.syntheticPngTwins(spark, 48).write.parquet(dir)
+    val media = spark.read.parquet(dir)
+    val df = api.Multimodal.imageNearDupPairs(media, "media_id", "bytes")
+    assert(computeSites(df, "image_dhash") == 1,
+      s"image hash must compute once:\n${df.queryExecution.executedPlan}")
+  }
+
   test("dupSpans: the gram explode runs once (window-form flag rule)") {
     for (crossDoc <- Seq(true, false)) {
       val df = api.Dedup.dupSpans(docs, "doc_id", "text", width = 8,

@@ -209,6 +209,42 @@ class PipelineOpsSpec extends AnyFunSuite {
       assert(sizes.count(_ > 1000) >= reducers,
         s"hot pairs should spread over all $reducers reducers, " +
           s"sizes: ${sizes.sorted.reverse.take(8)}")
+
+      // the other caller of the same grid join: a sidecar probe. One band,
+      // so the 120 identical corpus docs form ONE hot bucket (sidecar at
+      // cap 50); its 20x120 batch pairs must leave the grid join on
+      // `blocks` = 4 tasks, not on the one reducer a plain join uses. A
+      // wide reducer count keeps the 4 block groups from sharing a task
+      // by hash collision.
+      val dupText = "the same boilerplate paragraph repeated across the corpus"
+      val corpus = ((0L until 120L).map(i => (i, dupText)) ++
+        (200L until 230L).map(i => (i, s"unique document body number $i with extra words")))
+        .toDF("doc_id", "text")
+      val batch = (1000L until 1020L).map(i => (i, dupText)).toDF("doc_id", "text")
+      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", "64")
+      BandedLsh.saveSignatureIndex(corpus, "graft_test_grid_idx", 4,
+        "doc_id", "text", 4, 1, 3, 123L, hotBucketCap = 50L)
+      try {
+        assert(spark.table("graft_test_grid_idx_hot").count() == 120)
+        val probe = BandedLsh.nearDupAgainstIndex("graft_test_grid_idx", corpus, batch,
+          "doc_id", "text", 4, 1, 3, 123L, 0.5, blocks = 4)
+        assert(probe.collect().length == 20 * 120)
+        object Plan extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+        val grid = Plan.collect(probe.queryExecution.executedPlan) {
+          case j: org.apache.spark.sql.execution.joins.ShuffledJoin
+              if j.leftKeys.exists(_.toString.contains("__blk")) => j
+        }
+        assert(grid.size == 1, s"expected one grid join:\n${probe.queryExecution.executedPlan}")
+        val hotSizes = grid.head.execute().mapPartitions(it => Iterator(it.size)).collect()
+        assert(hotSizes.sum == 20 * 120)
+        assert(hotSizes.count(_ > 0) >= 4,
+          s"the hot bucket should spread over 4 tasks, sizes: ${hotSizes.filter(_ > 0).toSeq}")
+      } finally {
+        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+        Seq("graft_test_grid_idx", "graft_test_grid_idx_hot")
+          .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
   }
 
@@ -271,33 +307,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(cand == counts.map(n => n * (n - 1) / 2).sum)
     assert(maxBucket == counts.max)
     assert(rows == counts.sum / 8) // 8 bands per surviving doc
-  }
-
-  test("approxJoinMllib: recall vs the custom path, sims agree off-boundary") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val custom = BandedLsh.nearDupPairs(docs, "doc_id", "text", 4, 8, 3, 123L, 0.3)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val mllib = BandedLsh.approxJoinMllib(docs, "doc_id", "text",
-        ngramWidth = 4, numHashTables = 8, seed = 123L, threshold = 0.3)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    // recall over the custom path's solid pairs (sim comfortably above the
-    // threshold — boundary pairs can legitimately flip on either side from
-    // HashingTF term collisions): MLlib's 8 single-hash OR-tables admit a
-    // true pair of sim s with p = 1-(1-s)^8 >= 0.94 at s = 0.3, so a 0.9
-    // floor is conservative, not tuned to the fixture
-    val solid = custom.filter(_._2 >= 0.35)
-    assert(solid.nonEmpty, "fixture produced no pairs above 0.35 — vacuous test")
-    val recalled = solid.keys.count(mllib.contains)
-    assert(recalled.toDouble / solid.size >= 0.9,
-      s"mllib recall ${recalled}/${solid.size} below 0.9 floor")
-    // on shared pairs the two sims measure the same Jaccard (exact shingle
-    // sets vs 2^18 hashed term space) and must agree tightly
-    val shared = solid.keys.filter(mllib.contains)
-    assert(shared.forall(k => math.abs(custom(k) - mllib(k)) < 0.05),
-      "shared-pair sims diverge > 0.05: HashingTF space too collided")
-    // contract shape: ordered ids, sims strictly above threshold
-    assert(mllib.keys.forall { case (a, b) => a < b })
-    assert(mllib.values.forall(_ > 0.3))
   }
 
   test("TextAnalysis langId and qualityScore") {
@@ -1763,46 +1772,6 @@ class PipelineOpsSpec extends AnyFunSuite {
         ngramWidth = 2, bandCount = 8, bandSize = 2, seed = 7L, minSim = 0.85)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(loose.contains((1L, 2L)) && loose.subsetOf(Set((1L, 2L), (1L, 3L), (2L, 3L))))
-  }
-  test("editVerifiedPairsAdaptive: a degenerate key cluster routes to the fused enumerator, same pairs") {
-    // 60 near-identical keys (single trailing-digit edits of one template)
-    // collide in essentially every band -> the largest bucket is ~60; with
-    // maxRelationalBucket below that the census must route; plus a handful
-    // of unrelated keys that must keep NOT pairing either way
-    val hot = (0 until 60).map(i => (i.toLong, f"Customer#0000000$i%02d"))
-    val cold = Seq((100L, "Supplier#999999999"), (101L, "Vendor#123456789"),
-      (102L, "Account#555000111"))
-    val rows = (hot ++ cold).toDF("id", "name")
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3))).toSet
-    val base = pairs(BandedLsh.editVerifiedPairs(rows, "id", "name",
-      ngramWidth = 2, bandCount = 4, bandSize = 2, seed = 7L, minSim = 0.9))
-    assert(base.nonEmpty, "fixture is vacuous: no edit-verified pairs")
-    // generous bucket bound -> relational route
-    val rel = pairs(BandedLsh.editVerifiedPairsAdaptive(rows, "id", "name",
-      ngramWidth = 2, bandCount = 4, bandSize = 2, seed = 7L, minSim = 0.9))
-    assert(rel == base, s"relational route: adaptive=${rel.size} base=${base.size}")
-    // bound below the hot cluster -> fused route, identical pair set
-    // (lev and edit_sim carried through bit-equal). Prove the route is
-    // actually taken: the census must see the planted mega-bucket.
-    val (_, maxBucket, _) = BandedLsh.candidateCensus(rows, "id", "name",
-      ngramWidth = 2, bandCount = 4, bandSize = 2, seed = 7L)
-    assert(maxBucket > 8L, s"fixture failed to plant a mega-bucket: $maxBucket")
-    val fused = pairs(BandedLsh.editVerifiedPairsAdaptive(rows, "id", "name",
-      ngramWidth = 2, bandCount = 4, bandSize = 2, seed = 7L, minSim = 0.9,
-      maxRelationalBucket = 8L))
-    assert(fused == base, s"fused route: adaptive=${fused.size} base=${base.size}")
-    // non-integral ids fail LOUDLY at the entry point: the fused route
-    // carries ids as longs, so a string UUID would cast to null and
-    // silently drop pairs only when the hot-bucket route trips —
-    // breaking the identical-pair-set contract nondeterministically
-    val strIds = rows.select(concat(lit("u-"), col("id")).as("id"), col("name"))
-    val e = intercept[IllegalArgumentException] {
-      BandedLsh.editVerifiedPairsAdaptive(strIds, "id", "name",
-        ngramWidth = 2, bandCount = 4, bandSize = 2, seed = 7L, minSim = 0.9)
-    }
-    assert(e.getMessage.contains("integral id column"), e.getMessage)
   }
   test("perplexityBuckets: ANSI ntile per lang, id tie-break, head/middle/tail") {
     val scored = Seq(
