@@ -212,8 +212,8 @@ object ScaleBench {
           .foreach(r => println(s"  top bucket band=${r.get(0)} hash=${r.get(1)} n=${r.get(2)}"))
         0L
       },
-      // census-routed near-dup mining: relational below the candidate
-      // budget, fused above it (the ×100 cliff protection)
+      // census-routed near-dup mining: one block below the candidate
+      // budget, numBlocks above it (the mega-bucket protection)
       "adaptive" -> { (k: Int) =>
         api.BandedLsh.nearDupPairsAdaptive(docs(k), "doc_id", "text", 4, 8, 3, 42L, 0.6).count()
       },

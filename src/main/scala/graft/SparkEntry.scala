@@ -2308,8 +2308,8 @@ object SparkEntry {
       nearDupPairsShared(s, dir).orderBy("id_a", "id_b")
     }),
     // Scale-cliff-protected near-dup mining (BandedLsh.nearDupPairsAdaptive):
-    // a candidate census routes between the relational and fused paths.
-    // maxRelationalCandidates=0 forces the FUSED route here — the relational
+    // a candidate census picks the fused operator's block count.
+    // maxRelationalCandidates=0 forces the 8-block route here — the one-block
     // route is exactly minhash_dedup_pairs above, so this gate pins the
     // routed branch against the same brute-force ground truth (recall 1 at
     // 8x3 banding on this data; identical params/seed/threshold).

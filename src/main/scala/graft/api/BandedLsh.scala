@@ -86,12 +86,14 @@ object BandedLsh {
     * `text_a`/`text_b`); only the id, payload and bucket columns reach the
     * join.
     *
-    * The explicit bucket repartition is the point: both join sides read ONE
-    * ReusedExchange (verified in the executed plans, pinned by
-    * SingleComputeSpec), so whatever expensive kernel built `banded` —
-    * minhash banding, simhash, a perceptual or cosine sketch — runs once per
-    * row, and the exchange ships each row once, not once per join side.
-    * `hint` goes on the left side for callers whose plan depends on one. */
+    * The explicit bucket repartition lets both join sides read ONE
+    * exchange, so the kernel that built `banded` runs once per row — over
+    * uncached inputs (pinned by SingleComputeSpec). Under AQE over a CACHED
+    * input the sides plan two band exchanges and the kernel runs twice; the
+    * callers still carrying that hazard are `candidatePairs`,
+    * [[nearDupPairsBySignature]], `Ann.cosineLshPairs` and
+    * `Dedup.hammingPairs`. `hint` goes on the left side for callers whose
+    * plan depends on one. */
   private[api] def selfBandJoin(banded: DataFrame, id: String,
                                 payload: Seq[(String, String)] = Nil,
                                 bucket: Seq[String] = Seq("band", "band_hash"),
@@ -142,44 +144,39 @@ object BandedLsh {
   }
 
   /** Full near-dup pair mining: banded blocking + exact-Jaccard verification.
-    * Returns (id_a, id_b, sim) with sim > threshold.
+    * Returns distinct (id_a, id_b, sim) with sim > threshold, ids in the
+    * input's integral id type.
     *
-    * Uses the relational band join with verification INSIDE the band join —
-    * `lsh_jaccard` runs on each band collision as it streams out of the
-    * join, BEFORE the distinct. This is the README idiom's own order
-    * (reference/README.md:138-141 filters each per-seed join, then unions)
-    * and it is what keeps the path linear at scale: inside a join task the
-    * buffered bucket's texts recur, so the jaccard expression's bounded
-    * shingle memo covers the working set (O(distinct-strings-per-bucket)
-    * shingle builds). Round 10 measured the opposite order — verify after
-    * `distinct()` + two id-joins — inflating per-pair cost ~50× past ~2^17
-    * distinct texts, because the deduplicated pair stream has no text
-    * locality at all (docs/SCALE.md "Measured scale slopes"). The rewrite
-    * removed that cliff outright — re-measured at ×100 of sf0.1 (500k
-    * docs, 2.4e8 candidates): 45.8 s, sub-linear slope 41.5, vs the fused
-    * operator's 60.9 s — where the old order never finished.
-    * The cost moved instead to shuffling texts through the band exchange
-    * (bandCount copies) — the README idiom pays the same, and it is a
-    * linear byte cost AQE handles, not a super-linear CPU cliff. A pair
-    * colliding in k bands computes jaccard k times, but k-1 are memo hits
-    * on both texts; `distinct()` then collapses the duplicates (sim is a
-    * pure function of the pair, so distinct-on-(ids,sim) is exact).
+    * Runs the fused [[bandedSelfJoinPairs]] operator at ONE block: one
+    * (band, hash) exchange, then the native `jaccardSorted` loop per bucket,
+    * shingling only buckets with two or more members. The banding runs once
+    * per doc by construction; no join needs two sides to share an exchange.
     *
-    * The fused [[bandedSelfJoinPairs]] remains the tool for explosive
-    * buckets of SHORT keys (a mega-bucket's C(n,2) collisions land on one
-    * join task here; the fused triangle blocking splits exactly that —
-    * measured 3× on 15k near-identical names). Both paths are spec-checked
-    * to produce identical pair sets; [[nearDupPairsAdaptive]] routes on a
-    * bucket census. */
+    * Measured, kept as negative results (tables in docs/SCALE.md):
+    * verifying after `distinct()` + two id-joins lost all text locality and
+    * never finished at ×100 of sf0.1 (round 10). Verifying inside a
+    * relational self band-join (round 11 on) ran the banding twice under AQE
+    * over a cached input and sorted the text-carrying rows once per join
+    * side. This operator with EAGER shingling (every band row) was SLOWER
+    * than that join: 4.11 s vs 3.77 s for this call, 12.9 vs 10.1 executor
+    * CPU-s (benchmark `dedup_batch`, seed 12, traced, 4 vCPU). Shingling
+    * only groups that can pair took it to 2.56 s and 6.9 CPU-s; the whole
+    * `dedup_batch` pass went 5.21 → 3.33 s wall at the median of 10
+    * alternating pairs. */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
                    ngramWidth: Int, bandCount: Int, bandSize: Int, seed: Long,
-                   threshold: Double): DataFrame = {
-    selfBandJoin(bandedRows(df, idCol, textCol, ngramWidth, bandCount, bandSize, seed),
-        idCol, Seq(textCol -> "text"))
-      .withColumn("sim", graft.functions.lsh_jaccard(col("text_a"), col("text_b"), ngramWidth))
-      .filter(col("sim") > threshold)
-      .select("id_a", "id_b", "sim")
-      .distinct()
+                   threshold: Double): DataFrame =
+    inIdType(df, idCol, bandedSelfJoinPairs(df, idCol, textCol, ngramWidth, bandCount,
+      bandSize, Seq(seed), threshold, numBlocks = 1))
+
+  /** Casts the fused operator's long pair ids back to `df`'s id type. */
+  private def inIdType(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
+    val idType = df.schema(idCol).dataType
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"near-dup pair ids must be an integral column, $idCol is $idType")
+    pairs.select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"),
+      col("sim"))
   }
 
   /** Entity-resolution pair mining: banded MinHash blocking verified by
@@ -211,10 +208,11 @@ object BandedLsh {
     * in MANY bands; verifying inside the band join pays the DP per
     * collision and ships two text copies per collision row — measured
     * 3.1× SLOWER at sf0.1 (32.8 s vs 10.5 s) than deduplicating the
-    * narrow id stream first. nearDupPairs' inverted order wins there
-    * because its verifier has a per-text shingle memo that feeds on
-    * bucket locality; the Levenshtein DP has no such memo, so unique-pair
-    * count is the only thing that matters.
+    * narrow id stream first. nearDupPairs' per-collision order wins there
+    * because its fused operator shingles each bucket member once per
+    * bucket and then pays ~70 ns per merge-scan pair; the Levenshtein DP
+    * has no such per-member reuse, so unique-pair count is the only thing
+    * that matters.
     *
     * Scale: pair volume is bounded by the blocking census
     * ([[candidateCensus]] is the pre-flight); per-pair cost is O(keyLen²)
@@ -236,8 +234,8 @@ object BandedLsh {
     * map-side-combined aggregation over (band, band_hash) counts) without
     * materializing a single pair. Returns (candidatePairs, maxBucket,
     * inputRows). Cost is one banding pass + a count-only shuffle — ~2 s on
-    * a 500k-doc corpus — against which [[nearDupPairsAdaptive]] routes
-    * between the relational and fused verification paths. Also useful as a
+    * a 500k-doc corpus — from which [[nearDupPairsAdaptive]] picks the
+    * fused operator's block count. Also useful as a
     * standalone pre-flight: a census result of 10^10 pairs says "fix your
     * banding or expect an all-pairs bill" BEFORE the cluster pays it. */
   def candidateCensus(df: DataFrame, idCol: String, textCol: String,
@@ -253,31 +251,17 @@ object BandedLsh {
   }
 
   /** [[nearDupPairs]] with mega-bucket protection: runs [[candidateCensus]]
-    * first and routes to the fused [[bandedSelfJoinPairs]] operator when a
-    * single bucket (or, if the caller sets a budget, total candidate
-    * volume) exceeds what the relational path handles gracefully. Same
-    * (id_a, id_b, sim) output either way — pair-set and sim equality
-    * across the three paths is spec-pinned.
+    * first and runs the same fused operator with `numBlocks` triangle
+    * blocks instead of one when a single bucket exceeds
+    * `maxRelationalBucket` (or, if the caller sets a budget, total candidate
+    * volume exceeds `maxRelationalCandidates`). Same (id_a, id_b, sim)
+    * output either way (spec-pinned).
     *
-    * HISTORY of the routing (measured, local[32], sf0.1 documents
-    * replicated with structure-preserving ciphers — ScaleBench /
-    * docs/SCALE.md): round 10's relational path verified AFTER
-    * `distinct()` + two id-joins, lost all text locality, and effectively
-    * never finished at ×100 (500k docs, 2.4e8 candidates) — the router
-    * then existed to dodge that cliff. Round 11 moved verification inside
-    * the band join (the README idiom's order), and the re-measured ×100
-    * relational run is 45.8 s vs the fused operator's 60.9 s, shuffling
-    * 3.5× fewer bytes — so candidate VOLUME no longer routes by default
-    * (`maxRelationalCandidates` = Long.MaxValue; set a finite budget to
-    * re-enable, e.g. when verification CPU must be bounded up front).
-    *
-    * What still routes: `maxRelationalBucket` = 8192. A degenerate
-    * bucket's C(n,2) collisions land on ONE sort-merge-join task
-    * (8192²/2 ≈ 3.4e7 pairs ≈ minutes, growing quadratically); the fused
-    * operator's triangle blocking splits exactly that — measured 3× on
-    * 15k near-identical short keys. The census reads both signals from
-    * bucket counts alone, ~2 s at 500k docs, without materializing a
-    * pair. */
+    * Why 8192: at one block a bucket's C(n,2) comparisons land on ONE task
+    * (8192²/2 ≈ 3.4e7 pairs, growing quadratically); triangle blocking
+    * splits exactly that — measured 3× on 15k near-identical short keys.
+    * Candidate VOLUME does not route by default (Long.MaxValue). The census
+    * reads both signals from bucket counts alone, ~2 s at 500k docs. */
   def nearDupPairsAdaptive(df: DataFrame, idCol: String, textCol: String,
                            ngramWidth: Int, bandCount: Int, bandSize: Int, seed: Long,
                            threshold: Double,
@@ -286,15 +270,10 @@ object BandedLsh {
                            numBlocks: Int = 8): DataFrame = {
     val (cand, maxBucket, _) =
       candidateCensus(df, idCol, textCol, ngramWidth, bandCount, bandSize, seed)
-    if (cand <= maxRelationalCandidates && maxBucket <= maxRelationalBucket)
-      nearDupPairs(df, idCol, textCol, ngramWidth, bandCount, bandSize, seed, threshold)
-    else {
-      val idType = df.schema(idCol).dataType
-      bandedSelfJoinPairs(df, idCol, textCol, ngramWidth, bandCount, bandSize,
-          seeds = Seq(seed), threshold = threshold, numBlocks = numBlocks)
-        .select(col("id_a").cast(idType).as("id_a"),
-          col("id_b").cast(idType).as("id_b"), col("sim"))
-    }
+    val blocks =
+      if (cand <= maxRelationalCandidates && maxBucket <= maxRelationalBucket) 1 else numBlocks
+    inIdType(df, idCol, bandedSelfJoinPairs(df, idCol, textCol, ngramWidth, bandCount,
+      bandSize, Seq(seed), threshold, blocks))
   }
 
   /** Fused banded self-join: the same pair set as the README's per-seed
@@ -303,17 +282,19 @@ object BandedLsh {
     * inside buckets instead of a join. Why: a relational join materializes
     * every candidate pair through join machinery (~2 µs/pair measured) while
     * the jaccard kernel itself costs ~70 ns/pair; at ~10^8 bucket pairs the
-    * machinery IS the query. Shape:
+    * machinery IS the query. Ids come back as longs. Shape:
     *
-    *  1. per seed, hash every row's single band value (family cache — cheap);
+    *  1. per seed, the [[bandedRows]] pass (id spread, then one `lsh_min`
+    *     per doc), each band tagged with a (seedIndex << 32) | band key;
     *  2. salt rows into `numBlocks` deterministic blocks and replicate each
     *     row to every (block-pair) group of its bucket — the classic triangle
     *     blocking for self-joins, giving numBlocks·(numBlocks+1)/2-way
     *     parallelism inside even a single mega-bucket (AQE cannot split a
-    *     single key; this does);
-    *  3. flatMapGroups: intern each member's sorted shingle array once per
-    *     group, run the pairwise merge-scan loop natively, emit passing pairs;
-    *  4. distinct across seeds (the UNION).
+    *     single key; this does). At one block the groups are the buckets;
+    *  3. the BlockedSelfJoin exec: shingle the members of each group that
+    *     can emit a pair, run the pairwise merge-scan loop, emit passing
+    *     pairs;
+    *  4. distinct across bands and seeds (the UNION).
     */
   def bandedSelfJoinPairs(df: DataFrame, idCol: String, textCol: String,
                           ngramWidth: Int, bandCount: Int, bandSize: Int, seeds: Seq[Long],
@@ -326,30 +307,16 @@ object BandedLsh {
     // (surfaced by scoped Verify runs planning this query first)
     graft.sql.LshFunctions.ensurePlannerStrategy(spark)
     val nb = numBlocks
-    // Rows shorter than the n-gram width all carry the EMPTY shingle set:
-    // they hash identically in every band (one catastrophic mega-bucket) yet
-    // can never pass a threshold > 0 (jaccard of an empty set is 0), so they
-    // are dropped before blocking.
-    val salted = df
-      .filter(col(textCol).isNotNull && length(col(textCol)) >= ngramWidth)
-      .select(col(idCol).cast("long").as("id"), col(textCol).as("text"),
-        pmod(col(idCol).cast("long"), lit(nb)).cast("int").as("salt"))
-    // Codegen'd band explosion: per seed, posexplode the lsh_min band array
-    // (the family cache makes per-seed hashing cheap), tag with a
-    // (seedIndex << 32) | band blocking key, and union — one relational child
-    // the optimizer can prune/push into.
-    val perSeed = seeds.zipWithIndex.map { case (seed, si) =>
-      salted
-        .select(col("id"), col("text"), col("salt"),
-          posexplode(graft.functions.lsh_min(col("text"), ngramWidth, bandCount, bandSize, seed)))
-        .select((lit(si.toLong << 32) + col("pos").cast("long")).as("bk"),
-          col("col").as("h"), col("salt"), col("id"), col("text"))
+    val banded = seeds.zipWithIndex.map { case (seed, si) =>
+      bandedRows(df, idCol, textCol, ngramWidth, bandCount, bandSize, seed)
+        .select((lit(si.toLong << 32) + col("band").cast("long")).as("bk"),
+          col("band_hash").as("h"), col(idCol).cast("long").as("id"), col(textCol).as("text"))
     }.reduce(_ unionAll _)
     // Triangle block replication: each row meets every block once, so every
-    // bucket pair meets in exactly one (blo, bhi) group per band —
-    // numBlocks·(numBlocks+1)/2-way parallelism inside even a single
-    // mega-bucket (AQE cannot split one key; this does).
-    val exploded = perSeed
+    // bucket pair meets in exactly one (blo, bhi) group per band. At one
+    // block every row is one copy in its bucket's only group.
+    val blocked = banded
+      .withColumn("salt", pmod(col("id"), lit(nb.toLong)).cast("int"))
       .select(col("bk"), col("h"), col("salt"), col("id"), col("text"),
         explode(sequence(lit(0), lit(nb - 1))).as("other"))
       .select(col("bk"), col("h"),
@@ -365,7 +332,7 @@ object BandedLsh {
     // which AQE must not touch, and it already satisfies the operator's
     // ClusteredDistribution so EnsureRequirements adds only the local sort.
     val shuffleParts = SparkEnv.shufflePartitions(spark)
-    val clustered = exploded.repartition(shuffleParts,
+    val clustered = blocked.repartition(shuffleParts,
       col("bk"), col("h"), col("blo"), col("bhi"))
     // the custom whole-operator plan node (see BlockedSelfJoin scaladoc):
     // clustered+sorted on (bk, h, blo, bhi), streamed group-at-a-time

@@ -28,7 +28,9 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   * Each (bk, h, blo, bhi) group receives every bucket member whose block
   * touches the pair, runs the native pairwise merge-scan Jaccard loop, and
   * emits (id_a, id_b, sim) with sim > threshold. Equality with the README's
-  * relational join form is spec-pinned (PipelineOpsSpec).
+  * relational join form is spec-pinned (PipelineOpsSpec). At one block
+  * (blo = bhi = salt = 0) the groups are the plain buckets: this is how
+  * `nearDupPairs` runs.
   *
   * Why a custom operator instead of groupByKey.flatMapGroups (the previous
   * shape): the semantics — "compare all pairs WITHIN a group, emit a
@@ -128,15 +130,18 @@ case class BlockedSelfJoinExec(
         /** Consume one full sorted key run; return its passing pairs.
           * Hot loop: primitive parallel arrays (no tuple boxing), metric
           * updates batched once per group (a per-comparison `SQLMetric +=`
-          * is a virtual call × tens of millions of pairs). */
+          * is a virtual call × tens of millions of pairs). Shingling is
+          * lazy: most band rows sit in singleton buckets, so members are
+          * buffered as (id, UTF-8 bytes) and shingled only when the group
+          * can emit a pair (eager shingling measured in `nearDupPairs`). */
         private def nextGroup(): Iterator[(Long, Long, Double)] = {
           val first = in.head
           val bk = first.getLong(0); val h = first.getLong(1)
           val blo = first.getInt(2); val bhi = first.getInt(3)
           val aIds = new scala.collection.mutable.ArrayBuffer[Long]
-          val aSets = new scala.collection.mutable.ArrayBuffer[Array[Int]]
+          val aTexts = new scala.collection.mutable.ArrayBuffer[Array[Byte]]
           val bIds = new scala.collection.mutable.ArrayBuffer[Long]
-          val bSets = new scala.collection.mutable.ArrayBuffer[Array[Int]]
+          val bTexts = new scala.collection.mutable.ArrayBuffer[Array[Byte]]
           var continue = true
           while (continue && in.hasNext) {
             val r = in.head
@@ -147,12 +152,16 @@ case class BlockedSelfJoinExec(
               val salt = r.getInt(4)
               val id = r.getLong(5)
               val txt = r.getUTF8String(6).getBytes
-              val set = graft.core.Shingles.sortedShinglesUtf8(txt, 0, txt.length, w)
-              if (salt == blo) { aIds += id; aSets += set }
-              if (salt == bhi && blo != bhi) { bIds += id; bSets += set }
+              if (salt == blo) { aIds += id; aTexts += txt }
+              if (salt == bhi && blo != bhi) { bIds += id; bTexts += txt }
             }
           }
-          val ida = aIds.toArray; val seta = aSets.toArray
+          numGroups += 1
+          val canPair = if (blo == bhi) aIds.length >= 2 else aIds.nonEmpty && bIds.nonEmpty
+          if (!canPair) return Iterator.empty
+          def shingled(texts: scala.collection.mutable.ArrayBuffer[Array[Byte]]) =
+            texts.iterator.map(b => graft.core.Shingles.sortedShinglesUtf8(b, 0, b.length, w)).toArray
+          val ida = aIds.toArray; val seta = shingled(aTexts)
           val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
           var comparisons = 0L
           if (blo == bhi) {
@@ -172,7 +181,7 @@ case class BlockedSelfJoinExec(
               i += 1
             }
           } else {
-            val idb = bIds.toArray; val setb = bSets.toArray
+            val idb = bIds.toArray; val setb = shingled(bTexts)
             var i = 0
             while (i < ida.length) {
               val idI = ida(i); val setI = seta(i)
@@ -191,7 +200,6 @@ case class BlockedSelfJoinExec(
               i += 1
             }
           }
-          numGroups += 1
           numComparisons += comparisons
           out.iterator
         }

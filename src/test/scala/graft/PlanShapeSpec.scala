@@ -288,27 +288,50 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("minhash_dedup_pairs verifies INSIDE the band join, distinct carries no text") {
-    val plan = planOf("minhash_dedup_pairs")
-    // the sim filter must sit below the distinct (verification streams out
-    // of the band join with bucket locality — the round-11 memo-locality
-    // fix; verify-after-distinct is the measured ×100 cliff)
-    val lines = plan.linesIterator.toIndexedSeq
-    // Catalyst folds the sim>threshold filter straight into the band join's
-    // condition (post-join predicate) — accept either that or a Filter node
-    val verifyLine = lines.indexWhere(l =>
-      l.contains("lsh_jaccard") && (l.contains("Filter") || l.contains("Join")))
-    val distinctLine = lines.indexWhere(l =>
-      l.contains("HashAggregate") && l.contains("id_a") && l.contains("id_b"))
-    assert(verifyLine >= 0, s"jaccard verification filter missing:\n$plan")
-    assert(distinctLine >= 0, s"pair distinct missing:\n$plan")
-    // executedPlan prints top-down: the filter being BELOW the aggregate
-    // means a larger line index
-    assert(verifyLine > distinctLine,
-      s"jaccard must run inside the band join, before the distinct:\n$plan")
-    // the distinct itself must aggregate only (id_a, id_b, sim), no text
-    val distinctOverIds = lines.exists(l =>
-      l.contains("HashAggregate") && l.contains("id_a") && l.contains("id_b") && !l.contains("text"))
-    assert(distinctOverIds, s"pair distinct should carry ids+sim only:\n$plan")
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    // the band join is the fused BlockedSelfJoin exec at one block: it
+    // verifies per bucket, below the pair distinct (verify-after-distinct
+    // is the measured ×100 cliff), and has no two join sides that would
+    // need to share the band exchange. Checked structurally, through the
+    // cached pairs' build plan.
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case c: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        c +: nodes(c.relation.cachedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    // the nodes one shuffle stage runs, stopping at the stages it reads
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: Exchange | _: QueryStageExec => Nil
+      case _ => p +: p.children.flatMap(stage)
+    }
+    val plan = SparkEntry.queries("minhash_dedup_pairs")(spark, dir).queryExecution.executedPlan
+    val all = nodes(plan)
+    val execs = all.collect { case e: org.apache.spark.sql.graft.BlockedSelfJoinExec => e }
+    assert(execs.size == 1, s"expected one BlockedSelfJoin exec:\n$plan")
+    assert(!all.exists(n => n.nodeName.contains("HashJoin") || n.nodeName.contains("MergeJoin")),
+      s"no relational band join should remain:\n$plan")
+    assert(!all.exists(_.expressions.exists(_.toString.contains("lsh_jaccard"))),
+      s"verification belongs to the exec, not a jaccard expression:\n$plan")
+    val distincts = all.collect { case a: HashAggregateExec
+      if a.groupingExpressions.flatMap(_.references.map(_.name)).toSet ==
+        Set("id_a", "id_b", "sim") => a }
+    assert(distincts.nonEmpty, s"pair distinct missing:\n$plan")
+    distincts.foreach { d =>
+      assert(nodes(d).contains(execs.head), s"verification must run below the distinct:\n$plan")
+      assert(!d.child.output.exists(_.name == "text"),
+        s"pair distinct should carry ids+sim only:\n$plan")
+    }
+    // exactly one exchange ships banded rows, and it feeds the exec
+    val bandExchanges = all.collect { case e: ShuffleExchangeExec
+      if stage(e.child).exists(_.isInstanceOf[GenerateExec]) => e }
+    assert(bandExchanges.size == 1, s"expected one (band, hash) exchange:\n$plan")
+    assert(nodes(execs.head).contains(bandExchanges.head),
+      s"the band exchange must feed the exec:\n$plan")
   }
 
   test("pack_bins_nfd: no single-partition data window (every Window has partition keys)") {

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the one-pass contracts won in round 12: operators whose plan used
@@ -47,6 +48,30 @@ class SingleComputeSpec extends AnyFunSuite {
     val df = api.BandedLsh.nearDupPairs(docs, "doc_id", "text", 4, 8, 3, 42L, 0.6)
     assert(computeSites(df, "lsh_min") == 1,
       s"banding must compute once:\n${df.queryExecution.executedPlan}")
+  }
+
+  test("nearDupPairs over a cached input: one banding pass, one band exchange") {
+    // a join over a cached input planned its two sides' band exchanges
+    // separately under AQE, so the banding ran twice; the fused operator
+    // has one consumer of the banded rows
+    val cached = docs.cache()
+    try {
+      val df = api.BandedLsh.nearDupPairs(cached, "doc_id", "text", 4, 8, 3, 42L, 0.6)
+      assert(computeSites(df, "lsh_min") == 1,
+        s"banding must compute once:\n${df.queryExecution.executedPlan}")
+      // exchanges shipping banded rows: the Generate that explodes the
+      // bands runs in the exchange's own stage
+      def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+        case _: Exchange | _: QueryStageExec => Nil
+        case _ => p +: p.children.flatMap(stage)
+      }
+      val bandExchanges = liveNodes(df.queryExecution.executedPlan).count {
+        case e: ShuffleExchangeExec => stage(e.child).exists(_.isInstanceOf[GenerateExec])
+        case _ => false
+      }
+      assert(bandExchanges == 1,
+        s"one (band, hash) exchange expected:\n${df.queryExecution.executedPlan}")
+    } finally cached.unpersist()
   }
 
   test("signatureDupPairs: both lsh_min passes run once") {

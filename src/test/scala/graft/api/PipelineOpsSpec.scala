@@ -272,14 +272,31 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(fused.nonEmpty)
   }
 
-  test("nearDupPairs (join path) equals the fused multi-band path") {
+  test("nearDupPairs equals the README SQL blocking idiom (per-band UNION)") {
+    graft.sql.LshFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val join = BandedLsh.nearDupPairs(docs, "doc_id", "text", 4, 8, 3, 123L, 0.5)
+    docs.createOrReplaceTempView("docs_ndp")
+    // an independent reference sharing no plan code with the fused
+    // operator: one equi-join per band on element_at(lsh_min(..), b)
+    val sqlPairs = spark.sql((1 to 8).map(b => s"""
+      SELECT a.doc_id AS id_a, b.doc_id AS id_b, lsh_jaccard(a.text, b.text, 4) AS sim
+      FROM docs_ndp a JOIN docs_ndp b
+        ON element_at(lsh_min(a.text, 4, 8, 3, 123), $b) =
+           element_at(lsh_min(b.text, 4, 8, 3, 123), $b)
+      WHERE a.doc_id < b.doc_id AND lsh_jaccard(a.text, b.text, 4) > 0.5""")
+      .mkString("\nUNION\n"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val fused = BandedLsh.bandedSelfJoinPairs(docs, "doc_id", "text", 4, 8, 3, Seq(123L), 0.5)
+    val pairs = BandedLsh.nearDupPairs(docs, "doc_id", "text", 4, 8, 3, 123L, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(fused == join, s"fused=${fused.size} join=${join.size}")
-    assert(fused.nonEmpty)
+    assert(pairs == sqlPairs, s"nearDupPairs=${pairs.size} sql=${sqlPairs.size}")
+    assert(pairs.nonEmpty)
+    // an int id column comes back as int, same pairs
+    val asInt = BandedLsh.nearDupPairs(docs.select(col("doc_id").cast("int").as("doc_id"),
+      col("text")), "doc_id", "text", 4, 8, 3, 123L, 0.5)
+    val int = org.apache.spark.sql.types.IntegerType
+    assert(asInt.schema.map(_.dataType) == Seq(int, int, org.apache.spark.sql.types.DoubleType))
+    assert(asInt.collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong, r.getDouble(2)))
+      .toSet == pairs)
   }
 
   test("nearDupPairsAdaptive: both routes produce the nearDupPairs set") {
@@ -307,6 +324,16 @@ class PipelineOpsSpec extends AnyFunSuite {
     assert(cand == counts.map(n => n * (n - 1) / 2).sum)
     assert(maxBucket == counts.max)
     assert(rows == counts.sum / 8) // 8 bands per surviving doc
+    // nearDupPairs runs at one block: every bucket is one group and every
+    // member pair one kernel call, so the exec's comparison counter is the
+    // census (a threshold no other spec uses: the run must not hit a cache)
+    val pairs = BandedLsh.nearDupPairs(docs, "doc_id", "text", 4, 8, 3, 123L, 0.45)
+    pairs.collect()
+    object Plan extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val execs = Plan.collect(pairs.queryExecution.executedPlan) {
+      case e: org.apache.spark.sql.graft.BlockedSelfJoinExec => e }
+    assert(execs.size == 1, s"${pairs.queryExecution.executedPlan}")
+    assert(execs.head.metrics("numComparisons").value == cand)
   }
 
   test("TextAnalysis langId and qualityScore") {
