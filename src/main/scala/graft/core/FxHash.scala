@@ -22,9 +22,6 @@ object FxHash {
   /** Hash one 64-bit word from the empty state. */
   @inline def hash1(w: Long): Long = add(0L, w)
 
-  /** Hash two 64-bit words (e.g. seed then shingle) from the empty state. */
-  @inline def hash2(w0: Long, w1: Long): Long = add(add(0L, w0), w1)
-
   /** FxHash64 of a char-slice per Rust `&[char]: Hash` (length prefix, then
     * each code point zero-extended), truncated to u32 (returned 0-extended in
     * an Int's bit pattern). Mirrors shingleset.rs:37-47. */

@@ -400,8 +400,8 @@ object EventStreams {
         if (text == null) Iterator.empty
         else {
           val bytes = text.getBytes("UTF-8")
-          val set = graft.core.Shingles.fromTextUtf8(bytes, 0, bytes.length, w)
-          val hs = graft.core.MinHashFamily(bandCount, bandSize, lshSeed).hash(set)
+          val hs = graft.core.MinHashFamily(bandCount, bandSize, lshSeed)
+            .hashWindows(graft.core.Shingles.windowHashesUtf8(bytes, 0, bytes.length, w))
           hs.iterator.zipWithIndex.map { case (h, band) => (band, h, id, ts) }
         }
       }.toDF("band", "h", "doc_id", "ts")

@@ -89,6 +89,13 @@ object LshParams {
   * (list overload, 4 args: minhash.rs:85-150). Overload dispatch follows the
   * reference's execution-time type dispatch (minhash.rs:162-166) but at
   * analysis time, on the first argument's type.
+  *
+  * Text mode hashes the UTF-8 bytes' window hashes, duplicates kept,
+  * straight into the family's minima ([[Shingles.windowHashesUtf8]] ->
+  * [[MinHashFamily.hashWindows]]): no shingle set is built, since a minimum
+  * over the multiset equals the minimum over the set. List mode hashes each
+  * element whole into a set first (the list may repeat shingles, and the
+  * reference dedups them the same way).
   */
 case class LshMin(children: Seq[Expression], is32: Boolean)
     extends Expression with ImplicitCastInputTypes {
@@ -140,10 +147,10 @@ case class LshMin(children: Seq[Expression], is32: Boolean)
   /** Unboxed entry point shared by eval and generated code. `v` is a
     * UTF8String (text mode) or ArrayData (shingle-list mode). */
   def hashValue(v: AnyRef): ArrayData = {
-    val set =
+    val hashes =
       if (isTextMode) {
         val s = v.asInstanceOf[UTF8String].getBytes
-        Shingles.fromTextUtf8(s, 0, s.length, ngramWidth)
+        family.hashWindows(Shingles.windowHashesUtf8(s, 0, s.length, ngramWidth))
       } else {
         val arr = v.asInstanceOf[ArrayData]
         val n = arr.numElements()
@@ -157,9 +164,9 @@ case class LshMin(children: Seq[Expression], is32: Boolean)
           set.add(FxHash.hashCodePoints(cps, cps.length))
           i += 1
         }
-        set
+        family.hash(set)
       }
-    LshParams.toArrayData(family.hash(set), is32)
+    LshParams.toArrayData(hashes, is32)
   }
 
   override def eval(input: InternalRow): Any = {

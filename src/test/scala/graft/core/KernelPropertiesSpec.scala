@@ -208,4 +208,169 @@ class KernelPropertiesSpec extends AnyFunSuite {
         s"cosine bits differ: got $got want $want")
     }
   }
+
+  // ---- the loops the window-hash / column-blocked kernels replaced, kept
+  // verbatim as the bit-equality oracle ----
+
+  /** Old shingling: copy each window into a buffer, hash it, add to a set. */
+  private def oldShingleSet(cps: Array[Int], w: Int, salt: Option[String]): IntHashSet = {
+    val st = FxHash.saltState(salt)
+    val set = new IntHashSet(math.max(8, cps.length))
+    val n = cps.length - w + 1
+    val window = new Array[Int](w)
+    var i = 0
+    while (i < n) {
+      System.arraycopy(cps, i, window, 0, w)
+      set.add(FxHash.hashCodePointsSalted(st, window, w))
+      i += 1
+    }
+    set
+  }
+
+  /** Old sorted set: hash set -> toArray -> flip the sign bit -> sort. */
+  private def oldSorted(cps: Array[Int], w: Int): Array[Int] = {
+    val arr = oldShingleSet(cps, w, None).toArray
+    var i = 0
+    while (i < arr.length) { arr(i) = arr(i) ^ Int.MinValue; i += 1 }
+    java.util.Arrays.sort(arr)
+    arr
+  }
+
+  /** Old MinHash: one seed at a time over the set, unsigned compare. */
+  private def oldMinHash(fam: MinHashFamily, set: IntHashSet): Array[Long] = {
+    val shingles = set.toArray
+    val out = new Array[Long](fam.bandCount)
+    var b = 0
+    while (b < fam.bandCount) {
+      var h = 0L
+      var j = 0
+      while (j < fam.bandSize) {
+        val s = fam.seeds(b * fam.bandSize + j)
+        var m = -1L
+        var k = 0
+        while (k < shingles.length) {
+          val v = FxHash.add(FxHash.hash1(s), shingles(k).toLong & 0xffffffffL)
+          if (java.lang.Long.compareUnsigned(v, m) < 0) m = v
+          k += 1
+        }
+        h = FxHash.add(h, m)
+        j += 1
+      }
+      out(b) = h
+      b += 1
+    }
+    out
+  }
+
+  /** Old Euclidean: per-band A (d × bandSize row-major) and b, one
+    * sequential dot product per column with strided reads. */
+  private def oldEuclid(r: Double, bandCount: Int, bandSize: Int, seed: Long,
+                        x: Array[Double]): Array[Long] = {
+    val d = x.length
+    val rng = new StdRng(seed)
+    val bands = Array.fill(bandCount) {
+      val a = Array.fill(d * bandSize)(rng.stdNormal())
+      val b = Array.fill(bandSize)(rng.uniformF64(0.0, r))
+      (a, b)
+    }
+    def f64ToU64(v: Double): Long =
+      if (!(v > 0.0)) 0L
+      else if (v >= 1.8446744073709552e19) -1L
+      else if (v < 9.223372036854775807e18) v.toLong
+      else (v - 9.223372036854775808e18).toLong | Long.MinValue
+    bands.map { case (a, b) =>
+      var h = FxHash.add(FxHash.add(0L, 1L), bandSize.toLong)
+      var j = 0
+      while (j < bandSize) {
+        var acc = 0.0
+        var k = 0
+        while (k < d) { acc += x(k) * a(k * bandSize + j); k += 1 }
+        h = FxHash.add(h, f64ToU64(math.ceil((acc + b(j)) / r)))
+        j += 1
+      }
+      h
+    }
+  }
+
+  /** Unicode text incl. 4-byte code points (surrogate pairs): mostly 0..24
+    * code points, so strings shorter than every w in 1..6 and the empty
+    * string occur; some 60..300, so sets past the radix-sort cutoff (64
+    * windows) occur too. */
+  private val uniText: Gen[String] = Gen.frequency(
+      3 -> Gen.chooseNum(0, 24), 1 -> Gen.chooseNum(60, 300)).flatMap(n =>
+    Gen.listOfN(n, Gen.frequency(
+      6 -> Gen.alphaNumChar.map(_.toString),
+      2 -> Gen.oneOf(" ", "é", "ß", "語", "中"),
+      2 -> Gen.oneOf("😀", "🌀", "𝕏", "\uD800\uDC00", "\uDBFF\uDFFF"))).map(_.mkString))
+
+  private def sortedDistinct(a: Array[Int]): Seq[Int] = a.distinct.sorted.toSeq
+
+  test("window-hash shingling and sort-dedup sets are bit-equal to the hash-set loops they replaced") {
+    val salts: Gen[Option[String]] = Gen.oneOf(None, Some("pepper"), Some("abcdefghi"))
+    forSamples(Gen.zip(uniText, Gen.chooseNum(1, 6), salts), n = 600) { case (s, w, salt) =>
+      val cps = Shingles.codePoints(s)
+      val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val want = sortedDistinct(oldShingleSet(cps, w, salt).toArray)
+      assert(sortedDistinct(Shingles.fromText(s, w, salt).toArray) == want)
+      assert(sortedDistinct(Shingles.fromTextUtf8(bytes, 0, bytes.length, w, salt).toArray) == want)
+      val windows = Shingles.windowHashesUtf8(bytes, 0, bytes.length, w)
+      assert(windows.length == math.max(0, cps.length - w + 1))
+      if (salt.isEmpty) {
+        assert(sortedDistinct(windows) == want)
+        assert(Shingles.sortedShinglesUtf8(bytes, 0, bytes.length, w).toSeq == oldSorted(cps, w).toSeq)
+      }
+    }
+    // a slice of a larger buffer decodes only the slice
+    val pre = "xy😀".getBytes("UTF-8"); val body = "語z😀ab".getBytes("UTF-8")
+    val buf = pre ++ body ++ "tail".getBytes("UTF-8")
+    assert(Shingles.windowHashesUtf8(buf, pre.length, body.length, 2).toSeq ==
+      Shingles.windowHashesUtf8(body, 0, body.length, 2).toSeq)
+  }
+
+  test("MinHashFamily.hashWindows is bit-equal to the per-seed set loop it replaced") {
+    // bandCount·bandSize over 1..35 hits every remainder mod 4 (the seed block)
+    forSamples(Gen.zip(uniText, Gen.chooseNum(1, 6), Gen.chooseNum(1, 7), Gen.chooseNum(1, 5), Gen.long),
+        n = 400) { case (s, w, bands, size, seed) =>
+      val fam = MinHashFamily(bands, size, seed)
+      val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val set = oldShingleSet(Shingles.codePoints(s), w, None)
+      val want = oldMinHash(fam, set).toSeq
+      assert(fam.hashWindows(Shingles.windowHashesUtf8(bytes, 0, bytes.length, w)).toSeq == want)
+      assert(fam.hash(set).toSeq == want)
+    }
+    // empty input: every minimum stays u64::MAX
+    val fam = MinHashFamily(3, 5, 7L)
+    assert(fam.hashWindows(Array.emptyIntArray).toSeq == oldMinHash(fam, new IntHashSet()).toSeq)
+    // windows with the sign bit set and duplicates in any order
+    forSamples(Gen.listOf(Gen.chooseNum(Int.MinValue, Int.MaxValue)), n = 200) { xs =>
+      val set = new IntHashSet(4); xs.foreach(set.add)
+      val dup = (xs ++ xs.reverse).toArray
+      assert(fam.hashWindows(dup).toSeq == oldMinHash(fam, set).toSeq)
+    }
+  }
+
+  test("EuclideanFamily 12-column projection is bit-equal to the per-band sequential loop it replaced") {
+    val component: Gen[Double] = Gen.frequency(
+      20 -> Gen.chooseNum(-100.0, 100.0),
+      1 -> Gen.oneOf(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
+        0.0, -0.0, 1e300, -1e300))
+    // bandCount·bandSize over 1..35 hits every remainder mod 12 (the column
+    // block). r = 1e-15 makes (x·a + b)/r ~1e16..1e18, an integral double
+    // whose u64 carries the dot product's low mantissa bits, so a 1-ulp
+    // difference (an FMA, a reordered sum) changes the hash.
+    val cases = Gen.zip(Gen.oneOf(1, 5, 384), Gen.chooseNum(1, 7), Gen.chooseNum(1, 5), Gen.long,
+      Gen.oneOf(0.5, 4.0, 1e-15)).flatMap { shape =>
+      Gen.listOfN(2, Gen.listOfN(shape._1, component).map(_.toArray)).map(xs => (shape, xs))
+    }
+    forSamples(cases, n = 150) { case ((d, bands, size, seed, r), xs) =>
+      val fam = EuclideanFamily(r, bands, size, seed, d)
+      xs.foreach { x =>
+        assert(fam.hash(x).toSeq == oldEuclid(r, bands, size, seed, x).toSeq,
+          s"d=$d bands=$bands size=$size seed=$seed")
+      }
+      // all-finite (at d=384 nearly every random vector above holds a NaN)
+      val finite = Array.tabulate(d)(k => math.sin(seed.toDouble + k) * 37.0)
+      assert(fam.hash(finite).toSeq == oldEuclid(r, bands, size, seed, finite).toSeq)
+    }
+  }
 }
