@@ -68,9 +68,7 @@ object ScaleBench {
     * appends one generation of files per table; compaction folds them). */
   private def stateFileCount(spark: SparkSession, prefix: String): Long =
     api.IncrementalCuration.stateTables(prefix).map { t =>
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.defaultTablePath(
-          org.apache.spark.sql.catalyst.TableIdentifier(t)))
+      val loc = api.BucketedWrite.tableDir(spark, t)
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(loc)) 0L
       else {
@@ -648,7 +646,7 @@ object ScaleBench {
       // is corpus-bound).
       "sig_compact" -> { (k: Int) =>
         val t = s"scale_sigc_x$k"
-        Seq(t, s"${t}_hot", s"${t}_compact_tmp", s"${t}_hot_compact_tmp")
+        Seq(t, s"${t}_hot").flatMap(n => Seq(n, api.BucketedWrite.scratchOf(n)))
           .foreach(n => spark.sql(s"DROP TABLE IF EXISTS $n"))
         api.BandedLsh.saveSignatureIndex(docs(k), t, 32, "doc_id", "text",
           4, 8, 3, 123L, hotBucketCap = 50)

@@ -117,19 +117,6 @@ object Ann {
       posexplode(graft.functions.lsh_euclidean(col(vecCol), bucketWidth, bandCount, bandSize, seed)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
 
-  /** Materialize the corpus's (band, band_hash) bucket layout once, for
-    * repeated query batches: `(band, band_hash, neighbor_id)` rows
-    * hash-partitioned on the band-join key. Persist the result — `.cache()`
-    * for a session, or `write.bucketBy(n, "band", "band_hash")` to a table
-    * for the production layout (docs/SCALE.md) — and every subsequent
-    * [[lshBucketedTopK]] batch skips the corpus hash+explode+shuffle pass
-    * entirely: only the (tiny) query side is hashed and shuffled. */
-  def bucketCorpus(corpus: DataFrame, bucketWidth: Double, bandCount: Int,
-                   bandSize: Int, seed: Long,
-                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    bandedExplode(corpus, "neighbor_id", bucketWidth, bandCount, bandSize, seed, idCol, vecCol)
-      .repartition(col("band"), col("band_hash"))
-
   /** LSH-bucketed top-k: candidates are corpus vectors sharing at least one
     * `lsh_euclidean` band bucket with the query; exact cosine ranks the
     * candidates. Recall depends on (bucketWidth, bandCount, bandSize). */
@@ -140,8 +127,8 @@ object Ann {
       bandedExplode(corpus, "neighbor_id", bucketWidth, bandCount, bandSize, seed, idCol, vecCol),
       corpus, queries, k, bucketWidth, bandCount, bandSize, seed, idCol, vecCol)
 
-  /** Persist the [[bucketCorpus]] layout as a Spark bucketed table — the
-    * production form of the pre-bucketed ANN index (docs/SCALE.md). The
+  /** Persist the corpus's `(band, band_hash)` bucket layout as a Spark
+    * bucketed table — the pre-bucketed ANN index (docs/SCALE.md). The
     * `(band, band_hash, neighbor_id)` rows are written parquet, bucketed AND
     * sorted on the band-join key, so every subsequent query batch's band
     * join reads the corpus side with **zero exchange**: the bucketed scan
@@ -171,9 +158,10 @@ object Ann {
     lshBucketedTopKPrebucketed(corpus.sparkSession.table(table), corpus, queries, k,
       bucketWidth, bandCount, bandSize, seed, idCol, vecCol)
 
-  /** [[lshBucketedTopK]] against a pre-materialized [[bucketCorpus]] layout:
-    * the corpus explosion is read, not recomputed. */
-  def lshBucketedTopKPrebucketed(bucketedCorpus: DataFrame, corpus: DataFrame,
+  /** [[lshBucketedTopK]] against the corpus's banded rows
+    * `(band, band_hash, neighbor_id)`: exploded inline, or read from a
+    * [[saveBucketedCorpus]] table. */
+  private def lshBucketedTopKPrebucketed(bucketedCorpus: DataFrame, corpus: DataFrame,
                                  queries: DataFrame, k: Int,
                                  bucketWidth: Double, bandCount: Int, bandSize: Int, seed: Long,
                                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {

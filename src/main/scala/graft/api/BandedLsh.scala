@@ -697,16 +697,15 @@ object BandedLsh {
     * on both paths, and [[signatureIndexHealth]] re-flags it if it ever
     * re-grows past the cap.
     *
-    * Crash safety, the `commitRepair` discipline: leftover
-    * `{table}_compact_tmp` / `{table}_hot_compact_tmp` (catalog entry OR
-    * surviving warehouse directory) REFUSES the run. Commit order — stage
-    * both survivor sets → swap the sidecar → swap the main table. Before
-    * the first swap the index is untouched (drop the scratches, re-run);
-    * between the swaps the index over-detects against deleted main rows
-    * only until a re-run (which then rewrites just the main side — the
-    * per-store no-op check makes re-runs converge); a crash inside a swap
-    * leaves the scratch holding the only copy — the refusal message names
-    * the RENAME that completes the commit.
+    * Crash safety: each store is one [[BucketedWrite.stage]] /
+    * [[BucketedWrite.swap]] rewrite (a leftover scratch of either store
+    * refuses the run before anything is written; the refusal names the
+    * RENAME that completes a cut swap). Commit order — stage both survivor
+    * sets → swap the sidecar → swap the main table. Before the first swap
+    * the index is untouched (drop the scratches, re-run); between the
+    * swaps the index over-detects against deleted main rows only until a
+    * re-run (which then rewrites just the main side — the per-store no-op
+    * check makes re-runs converge).
     *
     * A store whose rows never matched the deletion set is NOT rewritten —
     * its files stay bit-identical, same contract as the ANN repairs.
@@ -716,23 +715,10 @@ object BandedLsh {
                             table: String, deletedIds: DataFrame): DataFrame = {
     import spark.implicits._
     val hotTable = s"${table}_hot"
-    val scratch = s"${table}_compact_tmp"
-    val hotScratch = s"${table}_hot_compact_tmp"
-    Seq(scratch, hotScratch).foreach { s =>
-      require(!BucketedWrite.scratchLeftover(spark, s),
-        s"$s exists: a prior compaction of '$table' was interrupted. If " +
-          "the live table still exists, DROP the scratch and re-run; if " +
-          "only the scratch survives (crash inside the swap), ALTER TABLE " +
-          "<scratch> RENAME TO <live> completes the commit.")
-    }
+    Seq(table, hotTable).foreach(BucketedWrite.refuseLeftover(spark, _))
     val del = broadcast(deletedIds
       .select(col(deletedIds.columns.head).cast("long").as("corpus_id"))
       .distinct())
-    val numBuckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table is not a bucketed signature index"))
     // the two per-store match counts are independent TINY read-only jobs
     // (broadcast-probe scans dominated by the scheduling floor) —
     // overlapped (guide §2.6); the heavier staging writes below stay
@@ -752,26 +738,15 @@ object BandedLsh {
     // re-select the canonical column order: a USING-column join moves the
     // join key to the front, and the rewritten table must keep the layout
     // appendToSignatureIndex's positional insertInto expects
-    val cols = Seq("band", "band_hash", "corpus_id").map(col)
+    def survivors(live: DataFrame): DataFrame =
+      live.join(del, Seq("corpus_id"), "left_anti")
+        .select(Seq("band", "band_hash", "corpus_id").map(col): _*)
     // the staging writes stay sequential: each is a saturating scan+write
     // (the overlap-vs-convoy measurement in saveSignatureIndex's note)
-    if (mainRemoved > 0)
-      BucketedWrite.saveBucketed(
-        spark.table(table).join(del, Seq("corpus_id"), "left_anti")
-          .select(cols: _*),
-        scratch, numBuckets, Seq("band", "band_hash"))
-    if (hotRemoved > 0)
-      spark.table(hotTable).join(del, Seq("corpus_id"), "left_anti")
-        .select(cols: _*)
-        .write.format("parquet").mode("overwrite").saveAsTable(hotScratch)
-    if (hotRemoved > 0) {
-      BucketedWrite.dropTable(spark, hotTable)
-      spark.sql(s"ALTER TABLE `$hotScratch` RENAME TO `$hotTable`")
-    }
-    if (mainRemoved > 0) {
-      BucketedWrite.dropTable(spark, table)
-      spark.sql(s"ALTER TABLE `$scratch` RENAME TO `$table`")
-    }
+    if (mainRemoved > 0) BucketedWrite.stage(spark, table)(survivors)
+    if (hotRemoved > 0) BucketedWrite.stage(spark, hotTable)(survivors)
+    if (hotRemoved > 0) BucketedWrite.swap(spark, hotTable)
+    if (mainRemoved > 0) BucketedWrite.swap(spark, table)
     Seq(("main", mainRemoved), ("hot", hotRemoved))
       .filter(_._2 > 0).toDF("store", "removed_rows")
   }

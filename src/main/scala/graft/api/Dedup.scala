@@ -488,48 +488,33 @@ object Dedup {
     * so that pass pays no exchange.
     *
     * `width` and `crossDocOnly` are the index-identity contract (same
-    * values as the build, like every append); the bucket count is read
-    * from the catalog so compaction cannot change the layout. `deletedIds`
+    * values as the build, like every append); the scratch takes the live
+    * table's layout, so compaction cannot change it. `deletedIds`
     * broadcasts — takedown lists are bounded in practice; a corpus-scale
     * deletion is a rebuild, not a compaction.
     *
-    * Crash safety, the [[graft.api.Ann]] `commitRepair` discipline: a
-    * leftover `{table}_compact_tmp` (catalog entry OR surviving warehouse
-    * directory) REFUSES the run. Commit order — stage survivors →
-    * rewrite flags from the scratch → drop old triples → rename scratch
-    * into place. Every window is recoverable: before the flag rewrite the
-    * index is untouched (drop the scratch, re-run); after it the flags
-    * already describe the post-compact state and only appends can
-    * transiently over-detect against deleted grams until the swap lands;
-    * between drop and rename the scratch holds the only copy — rename it
-    * to `table` by hand and the index is exactly the committed state. */
+    * Crash safety: the triples are one [[BucketedWrite.stage]] /
+    * [[BucketedWrite.swap]] rewrite (a leftover scratch refuses the run;
+    * the refusal names the RENAME that completes a cut swap). Commit
+    * order — stage survivors → rewrite flags from the scratch → swap.
+    * Before the flag rewrite the index is untouched (drop the scratch,
+    * re-run); after it the flags already describe the post-compact state
+    * and only appends can transiently over-detect against deleted grams
+    * until the swap lands. */
   def compactGramIndex(spark: org.apache.spark.sql.SparkSession,
                        table: String, deletedIds: DataFrame, width: Int,
                        crossDocOnly: Boolean = true): Unit = {
     val flagsTable = s"${table}_flags"
-    val scratch = s"${table}_compact_tmp"
-    require(!BucketedWrite.scratchLeftover(spark, scratch),
-      s"$scratch exists: a prior compaction of '$table' was interrupted. " +
-        "If the main table still exists, DROP the scratch and re-run; if " +
-        "only the scratch survives (crash between drop and rename), " +
-        s"ALTER TABLE $scratch RENAME TO $table completes the commit.")
-    val numBuckets = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-      .getOrElse(throw new IllegalStateException(
-        s"$table is not a bucketed gram index"))
     val del = deletedIds
       .select(col(deletedIds.columns.head).cast("long").as("doc_id"))
       .distinct()
-    BucketedWrite.saveBucketed(
-      spark.table(table).join(broadcast(del), Seq("doc_id"), "left_anti")
-        .select("gh", "doc_id", "pos"),
-      scratch, numBuckets, Seq("gh"))
+    BucketedWrite.stage(spark, table)(
+      _.join(broadcast(del), Seq("doc_id"), "left_anti")
+        .select("gh", "doc_id", "pos"))
     BucketedWrite.dropTable(spark, flagsTable)
-    flagGrams(spark.table(scratch), width, crossDocOnly)
+    flagGrams(spark.table(BucketedWrite.scratchOf(table)), width, crossDocOnly)
       .write.format("parquet").mode("overwrite").saveAsTable(flagsTable)
-    BucketedWrite.dropTable(spark, table)
-    spark.sql(s"ALTER TABLE `$scratch` RENAME TO `$table`")
+    BucketedWrite.swap(spark, table)
   }
 
   /** Corpus-level duplication report over [[dupSpans]]: per `groupCol`

@@ -162,14 +162,17 @@ object IncrementalCuration {
     * tables does not survive the in-memory catalog's death, so
     * recovered-session plans pay exchanges the original layout avoided
     * (correctness unchanged; a persistent metastore keeps the spec).
+    * Rewrites of recovered tables follow [[BucketedWrite.stage]]'s
+    * layout rule: [[compactState]] and the takedown's hash rewrite pass
+    * `Params.numBuckets` and restore the bucketing; the takedown's
+    * signature and gram rewrites stay plain parquet.
     * Returns the number of tables re-registered. */
   def recoverFromWarehouse(spark: SparkSession, prefix: String): Int = {
     var n = 0
-    // the shared CatalogOps.ensureRegistered primitive (defaultTablePath
-    // probe — see its scaladoc for the USE-database trap it avoids)
+    // the shared BucketedWrite.ensureRegistered primitive
     def ensure(t: String): Boolean = {
       val had = spark.catalog.tableExists(t)
-      val ok = org.apache.spark.sql.graft.CatalogOps.ensureRegistered(spark, t)
+      val ok = BucketedWrite.ensureRegistered(spark, t)
       if (ok && !had) n += 1
       ok
     }
@@ -692,17 +695,15 @@ object IncrementalCuration {
     * disk). The vocabulary and meta tables are single-generation by
     * construction and are left untouched.
     *
-    * Crash safety: the [[Dedup.compactGramIndex]] scratch-commit
-    * discipline PER TABLE — a leftover `{t}_compact_tmp` refuses the
-    * run; each table is staged fully before its drop+rename window, and
-    * a crash between tables leaves every table either fully old or
-    * fully new (both readable — compaction is semantics-preserving, so
-    * partial progress is safe and a re-run completes it). Bucket counts
-    * come from the catalog when the registration carries them and fall
-    * back to `params.numBuckets` when it doesn't — which means running
-    * compaction after a [[recoverFromWarehouse]] session RESTORES the
-    * bucketed layout the in-memory catalog's death erased (recovered
-    * registrations are plain parquet; see the recovery scaladoc).
+    * Crash safety: one [[BucketedWrite.stage]] / [[BucketedWrite.swap]]
+    * rewrite PER TABLE, every table's leftover scratch refused before
+    * the first write. A crash between tables leaves every table either
+    * fully old or fully new (both readable — compaction is
+    * semantics-preserving, so partial progress is safe and a re-run
+    * completes it). The bucketed tables pass `params.numBuckets` as the
+    * stage's fallback, so compaction after a [[recoverFromWarehouse]]
+    * session RESTORES the bucketed layout the in-memory catalog's death
+    * erased.
     *
     * Returns one row per rewritten table:
     * `(table, rows_before, rows_after)`. */
@@ -710,6 +711,15 @@ object IncrementalCuration {
                    params: Params = Params()): DataFrame = {
     import spark.implicits._
     val p = params
+    val lineT = lineTable(prefix)
+    val nbT = nbTable(prefix)
+    val hashT = hashTable(prefix)
+    val sigT = sigTable(prefix)
+    val gramT = gramTable(prefix)
+    // refused BEFORE recovery: a table whose swap was cut has no live
+    // directory, which recovery would report as torn state
+    Seq(lineT, nbT, hashT, sigT, s"${sigT}_hot", gramT, s"${gramT}_flags")
+      .foreach(BucketedWrite.refuseLeftover(spark, _))
     recoverFromWarehouse(spark, prefix)
     val meta = readMeta(spark, prefix)
     require(meta.get("params_hash").contains(paramsHash(p)),
@@ -717,11 +727,6 @@ object IncrementalCuration {
         "(stored fingerprint absent or differs) — compact with the " +
         "build's values")
 
-    val lineT = lineTable(prefix)
-    val nbT = nbTable(prefix)
-    val hashT = hashTable(prefix)
-    val sigT = sigTable(prefix)
-    val gramT = gramTable(prefix)
     // one staged rewrite per table, each independent and per-table atomic
     // (stage fully, then drop+rename) — overlapped (guide §2.6). The
     // crash contract is unchanged: any interleaving leaves every table
@@ -748,44 +753,16 @@ object IncrementalCuration {
           (d: DataFrame) => d.select("doc_id", "pos", "fin").distinct(),
           Seq.empty))
     val out = Par.run(spark, tables.map { case (t, fold, keys) =>
-      (s"compactState($prefix): rewrite $t",
-        () => rewriteStaged(spark, t, fold, keys, p.numBuckets))
+      (s"compactState($prefix): rewrite $t", () => {
+        val before = spark.table(t).count()
+        BucketedWrite.stage(spark, t,
+          Some(p.numBuckets -> keys).filter(_._2.nonEmpty))(fold)
+        val after = spark.table(BucketedWrite.scratchOf(t)).count()
+        BucketedWrite.swap(spark, t)
+        (t, before, after)
+      })
     }, parallelism = 4)
     out.toDF("table", "rows_before", "rows_after")
-  }
-
-  /** Stage → drop → rename rewrite of one state table: `fold` reads the
-    * LIVE table and is fully written to a `{t}_compact_tmp` scratch
-    * before the live table drops (the [[Dedup.compactGramIndex]]
-    * discipline); a leftover scratch refuses the run. Bucketed tables
-    * keep (or, after a [[recoverFromWarehouse]] session, REGAIN) their
-    * layout — the bucket count comes from the catalog when the
-    * registration carries it, else `fallbackBuckets`. */
-  private def rewriteStaged(spark: SparkSession, t: String,
-                            fold: DataFrame => DataFrame,
-                            bucketKeys: Seq[String],
-                            fallbackBuckets: Int): (String, Long, Long) = {
-    val scratch = s"${t}_compact_tmp"
-    require(!BucketedWrite.scratchLeftover(spark, scratch),
-      s"$scratch exists: a prior rewrite of '$t' was interrupted. " +
-        "If the live table still exists, DROP the scratch and re-run; " +
-        s"if only the scratch survives, ALTER TABLE `$scratch` RENAME " +
-        s"TO `$t` completes the commit.")
-    val before = spark.table(t).count()
-    val folded = fold(spark.table(t))
-    if (bucketKeys.nonEmpty) {
-      val buckets = spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-        .bucketSpec.map(_.numBuckets).getOrElse(fallbackBuckets)
-      BucketedWrite.saveBucketed(folded, scratch, buckets, bucketKeys)
-    } else {
-      BucketedWrite.dropTable(spark, scratch)
-      folded.write.format("parquet").saveAsTable(scratch)
-    }
-    val after = spark.table(scratch).count()
-    BucketedWrite.dropTable(spark, t)
-    spark.sql(s"ALTER TABLE `$scratch` RENAME TO `$t`")
-    (t, before, after)
   }
 
   /** GDPR-class takedown through the day-2 state: delete `deletedDocs`
@@ -827,18 +804,25 @@ object IncrementalCuration {
     *     keep-earliest).
     *
     * Validation BEFORE the first mutation (the admitBatch discipline):
-    * the set must be non-empty, id-unique, and every id must still be
-    * IN the hash index — which also makes an accidental RE-RUN of the
-    * same takedown refuse loudly instead of silently double-subtracting
-    * the count statistics. Mutation order puts the hash rewrite FIRST,
-    * so a crash between tables leaves a state whose re-run is REFUSED
-    * by that same check (torn, but loudly so — rebuild day-1 state),
-    * never one that double-subtracts. */
+    * no rewritten table (hash, signatures and their sidecar, grams) may
+    * have a leftover [[BucketedWrite.stage]] scratch; the set must be
+    * non-empty, id-unique, and every id must still be IN the hash index
+    * — which also makes an accidental RE-RUN of the same takedown refuse
+    * loudly instead of silently double-subtracting the count statistics.
+    * Mutation order puts the hash rewrite (one stage/swap) FIRST, so a
+    * crash between tables leaves a state whose re-run is REFUSED by that
+    * same check (torn, but loudly so — rebuild day-1 state), never one
+    * that double-subtracts. Each rewrite stages in its table's layout,
+    * so the takedown runs the same on a [[recoverFromWarehouse]] session
+    * as on the session that built the state. */
   def takedownState(deletedDocs: DataFrame, prefix: String, idCol: String,
                     textCol: String, labelCol: Column,
                     params: Params = Params()): Unit = {
     val spark = deletedDocs.sparkSession
     val p = params
+    // refused BEFORE recovery, as in compactState
+    Seq(hashTable(prefix), sigTable(prefix), s"${sigTable(prefix)}_hot",
+      gramTable(prefix)).foreach(BucketedWrite.refuseLeftover(spark, _))
     recoverFromWarehouse(spark, prefix)
     val meta = readMeta(spark, prefix)
     require(meta.get("params_hash").contains(paramsHash(p)),
@@ -868,9 +852,11 @@ object IncrementalCuration {
       // hash FIRST (and alone): once these rows are gone, any re-entry of
       // this function (crash between tables, accidental repeat) fails the
       // coverage check above instead of double-subtracting counts
-      rewriteStaged(spark, hashTable(prefix),
+      BucketedWrite.stage(spark, hashTable(prefix),
+          Some(p.numBuckets -> Seq("h")))(
         _.join(broadcast(delIds), Seq("doc_id"), "left_anti")
-          .select("h", "doc_id"), Seq("h"), p.numBuckets)
+          .select("h", "doc_id"))
+      BucketedWrite.swap(spark, hashTable(prefix))
       // the remaining four subtractions touch disjoint tables — overlapped
       // (guide §2.6); a crash mid-bundle leaves the same refused-on-re-run
       // torn state as a crash between the sequential calls did

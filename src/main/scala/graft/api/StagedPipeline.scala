@@ -76,11 +76,10 @@ object StagedPipeline {
   def recoverFromWarehouse(spark: SparkSession, tablePrefix: String): Int = {
     var n = 0
     // registered, or re-registered from a surviving directory — the
-    // shared CatalogOps.ensureRegistered primitive (defaultTablePath
-    // probe; see its scaladoc for the USE-database trap it avoids)
+    // shared BucketedWrite.ensureRegistered primitive
     def ensure(t: String): Boolean = {
       val had = spark.catalog.tableExists(t)
-      val ok = org.apache.spark.sql.graft.CatalogOps.ensureRegistered(spark, t)
+      val ok = BucketedWrite.ensureRegistered(spark, t)
       if (ok && !had) n += 1
       ok
     }

@@ -18,29 +18,6 @@ import org.apache.spark.sql.catalyst.catalog.CatalogTableType
   * (`@Unstable`) and callable from anywhere. */
 object CatalogOps {
 
-  /** Ensure `table` is registered: keep an existing entry, else probe
-    * the catalog's own managed-table location
-    * (`sessionState.catalog.defaultTablePath` — CURRENT-database-aware,
-    * never a warehouse-root string concat, which under `USE mydb` would
-    * both miss the real directory and mis-register a stale same-named
-    * root directory) and re-register a surviving directory as an
-    * external parquet table. The one recovery primitive shared by
-    * [[graft.api.StagedPipeline.recoverFromWarehouse]] and
-    * [[graft.api.IncrementalCuration.recoverFromWarehouse]] — one owner,
-    * so the two resume paths can never diverge. Returns true iff the
-    * table is registered on exit (false = no entry and no directory). */
-  def ensureRegistered(spark: SparkSession, table: String): Boolean =
-    spark.catalog.tableExists(table) || {
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.sessionState.catalog.defaultTablePath(
-          TableIdentifier(table.toLowerCase)))
-      loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(loc) && {
-        spark.catalog.createTable(table, loc.toString, "parquet")
-        true
-      }
-    }
-
   /** Remove `table`'s catalog entry WITHOUT touching its files. No-op
     * if the table is not registered. */
   def deregisterKeepingFiles(spark: SparkSession, table: String): Unit = {

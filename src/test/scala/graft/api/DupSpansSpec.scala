@@ -640,13 +640,43 @@ class DupSpansSpec extends AnyFunSuite {
     assert(re == Set((1L, 5L, 12L), (3L, 0L, 7L), (4L, 3L, 10L), (10L, 0L, 7L)),
       s"post-compact append diverged: $re")
     // a leftover scratch refuses the next compaction
+    val scratch = s"${table}_compact_tmp"
     spark.range(1).selectExpr("0L as gh", "id as doc_id", "0L as pos")
-      .write.format("parquet").saveAsTable(s"${table}_compact_tmp")
+      .write.format("parquet").saveAsTable(scratch)
     val e = intercept[IllegalArgumentException] {
       Dedup.compactGramIndex(spark, table, Seq(3L).toDF("doc_id"), width = 8)
     }
     assert(e.getMessage.contains("interrupted"))
-    spark.sql(s"DROP TABLE ${table}_compact_tmp")
+    spark.sql(s"DROP TABLE $scratch")
+
+    // commit point "live dropped, only the scratch survives", built with
+    // the shared stage/swap calls in the compaction's own order (stage
+    // triples, re-derive flags from the scratch, swap): the refusal names
+    // the rename, and running it gives exactly the uncrashed result — a
+    // twin index over the same docs, compacted without a crash
+    val twin = "graft_gramidx_spec_compact_twin"
+    Dedup.saveGramIndex(survivors.unionByName(Seq((10L, shared)).toDF("doc_id", "text")),
+      twin, 2, "doc_id", "text", width = 8)
+    Dedup.compactGramIndex(spark, twin, Seq(3L).toDF("doc_id"), width = 8)
+    try {
+      BucketedWrite.stage(spark, table)(
+        _.filter(col("doc_id") =!= 3L).select("gh", "doc_id", "pos"))
+      BucketedWrite.dropTable(spark, s"${table}_flags")
+      Dedup.flagGrams(spark.table(scratch), 8, crossDocOnly = true)
+        .write.format("parquet").saveAsTable(s"${table}_flags")
+      BucketedWrite.dropTable(spark, table)
+      val e2 = intercept[IllegalArgumentException] {
+        Dedup.compactGramIndex(spark, table, Seq(3L).toDF("doc_id"), width = 8)
+      }
+      val rename = s"ALTER TABLE $scratch RENAME TO $table"
+      assert(e2.getMessage.contains(rename), e2.getMessage)
+      spark.sql(rename)
+    } finally BucketedWrite.dropTable(spark, scratch)
+    def index(t: String) = Seq(t, s"${t}_flags").map(spark.table(_)
+      .collect().map(_.toString).sorted.toSeq) :+
+      BucketedWrite.bucketSpec(spark, t)
+    assert(index(table) == index(twin),
+      "the named rename did not give the uncrashed compaction")
   }
 
   test("gram index append: a batch gram resurfacing an OLD doc's window flags the old doc") {

@@ -408,6 +408,53 @@ class IncrementalCurationSpec extends AnyFunSuite {
     assert(e1.getMessage.contains("double-subtract"), e1.getMessage)
   }
 
+  test("takedownState across a simulated JVM restart: same future admits") {
+    val prefix = "graft_inccur_takexs"
+    IncrementalCuration.reset(spark, prefix)
+    IncrementalCuration.buildState(df(dayA), prefix, "doc_id", "text",
+      col("lang") === "en", P)
+    val ranks = IncrementalCuration.loadVocab(spark, prefix)
+    // recovered registrations carry no bucket spec: every rewrite must
+    // stage in the layout the recovered session reads
+    IncrementalCuration.stateTables(prefix).foreach(t =>
+      org.apache.spark.sql.graft.CatalogOps.deregisterKeepingFiles(spark, t))
+    val delIdsSet = Set(6L, 7L, 8L, 9L)
+    IncrementalCuration.takedownState(df(dayA.filter(r => delIdsSet(r._1))),
+      prefix, "doc_id", "text", col("lang") === "en", P)
+    val survivors = dayA.filterNot(r => delIdsSet(r._1))
+    val got = rowsOf(IncrementalCuration.admitBatch(df(dayB), bench,
+      df(survivors), prefix, "doc_id", "text", col("lang") === "en", P))
+    val ref = rowsOf(IncrementalCuration.admitReference(
+      df(survivors ++ dayB), bench, "doc_id", "text", col("lang") === "en",
+      batchMinId = 100L, ranks, P))
+    assert(got == ref,
+      s"post-restart takedown admit diverged:\n got $got\n ref $ref")
+  }
+
+  test("takedownState refuses a leftover scratch before its first mutation") {
+    val prefix = "graft_inccur_takescr"
+    IncrementalCuration.reset(spark, prefix)
+    IncrementalCuration.buildState(df(dayA), prefix, "doc_id", "text",
+      col("lang") === "en", P)
+    val hashT = s"${prefix}_hash"
+    val hashRows = spark.table(hashT).count()
+    // the LAST table the takedown rewrites carries the leftover; the
+    // hash index, rewritten first, must still be untouched
+    val scratch = BucketedWrite.scratchOf(s"${prefix}_sigs")
+    Seq((1L, 0, 0L)).toDF("corpus_id", "band", "band_hash")
+      .write.format("parquet").saveAsTable(scratch)
+    try {
+      val e = intercept[IllegalArgumentException] {
+        IncrementalCuration.takedownState(df(dayA.filter(_._1 == 6L)),
+          prefix, "doc_id", "text", col("lang") === "en", P)
+      }
+      assert(e.getMessage.contains("interrupted"), e.getMessage)
+      spark.catalog.refreshTable(hashT)
+      assert(spark.table(hashT).count() == hashRows,
+        "the hash index was rewritten before the refusal")
+    } finally BucketedWrite.dropTable(spark, scratch)
+  }
+
   test("incrementalAdmitReplay equals sequential batch admission on the same slices") {
     // the streaming twin must be BIT-EQUAL to driving admitBatch by hand
     // over the same chunks in the same order — pinning the foreachBatch
@@ -449,6 +496,35 @@ class IncrementalCurationSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("compact_tmp"), e.getMessage)
     } finally BucketedWrite.dropTable(spark, scratch)
+
+    // commit point "live dropped, only the scratch survives" on the line
+    // table: the refusal names the rename, and running it then re-running
+    // the compaction gives exactly the uncrashed result (a twin state)
+    val lines = s"${prefix}_lines"
+    try {
+      BucketedWrite.stage(spark, lines, Some(P.numBuckets -> Seq("lh")))(
+        _.groupBy("lh").agg(sum("docs").as("docs")).filter($"docs" =!= 0L)
+          .select("lh", "docs"))
+      BucketedWrite.dropTable(spark, lines)
+      val e2 = intercept[IllegalArgumentException] {
+        IncrementalCuration.compactState(spark, prefix, P)
+      }
+      val rename = s"ALTER TABLE $scratch RENAME TO $lines"
+      assert(e2.getMessage.contains(rename), e2.getMessage)
+      spark.sql(rename)
+    } finally BucketedWrite.dropTable(spark, scratch)
+    IncrementalCuration.compactState(spark, prefix, P)
+    val twin = "graft_inccur_cmptwin"
+    IncrementalCuration.reset(spark, twin)
+    IncrementalCuration.buildState(df(dayA), twin, "doc_id", "text",
+      col("lang") === "en", P)
+    IncrementalCuration.compactState(spark, twin, P)
+    def state(p: String) = IncrementalCuration.stateTables(p).map { t =>
+      t.stripPrefix(p) -> (spark.table(t).collect().map(_.toString).sorted.toSeq,
+        BucketedWrite.bucketSpec(spark, t))
+    }.toMap
+    assert(state(prefix) == state(twin),
+      "the completed commit diverged from the uncrashed compaction")
   }
 
   test("a corpus lookup missing prior-batch ids fails loudly, never silently under-dedups") {

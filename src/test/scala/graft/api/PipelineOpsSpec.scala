@@ -1008,27 +1008,6 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("Ann pre-bucketed corpus layout: same results, corpus pass skipped") {
-    val vecs = (0L until 60L).map(i =>
-      (i, Array.tabulate(6)(d => math.cos(i * 0.7 + d) * 3.0))).toDF("vec_id", "embedding")
-    val qs = vecs.filter($"vec_id" < 3)
-    val direct = Ann.lshBucketedTopK(vecs, qs, k = 3,
-      bucketWidth = 4.0, bandCount = 4, bandSize = 2, seed = 7L)
-      .orderBy("query_id", "rank").collect()
-    val bucketed = Ann.bucketCorpus(vecs, bucketWidth = 4.0, bandCount = 4,
-      bandSize = 2, seed = 7L).cache()
-    try {
-      bucketed.count() // materialize the layout once
-      val pre = Ann.lshBucketedTopKPrebucketed(bucketed, vecs, qs, k = 3,
-        bucketWidth = 4.0, bandCount = 4, bandSize = 2, seed = 7L)
-      assert(pre.orderBy("query_id", "rank").collect().map(_.toSeq).toSeq ==
-        direct.map(_.toSeq).toSeq)
-      // the second batch reads the materialized buckets instead of
-      // re-exploding the corpus
-      assert(pre.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
-    } finally bucketed.unpersist()
-  }
-
   test("signature index: batch-vs-index pairs equal the self-join's cross pairs") {
     // incremental ingestion must find exactly the near-dup pairs the full
     // (corpus + batch) self-join finds between the two sides — same family,
@@ -1268,26 +1247,78 @@ class PipelineOpsSpec extends AnyFunSuite {
 
   test("compactSignatureIndex refuses leftover scratches from an interrupted run") {
     val prefix = "graft_test_cmp2_idx"
-    val corpus = (0L until 20L)
-      .map(i => (i, s"unique document body number $i with extra words"))
+    val hot = s"${prefix}_hot"
+    val twin = "graft_test_cmp2_twin"
+    val dupText = "the same boilerplate paragraph repeated across the corpus"
+    // a hot sidecar AND cold rows, so both stores are rewritten
+    val corpus = ((0L until 60L).map(i => (i, dupText)) ++
+      (100L until 120L).map(i => (i, s"unique document body number $i with extra words")))
       .toDF("doc_id", "text")
-    BandedLsh.saveSignatureIndex(corpus, prefix, 4,
-      "doc_id", "text", 4, 8, 3, 123L)
+    def build(t: String): Unit = BandedLsh.saveSignatureIndex(corpus, t, 4,
+      "doc_id", "text", 4, 8, 3, 123L, hotBucketCap = 50L)
+    val del = ((0L until 40L) ++ (100L until 105L)).toDF("doc_id")
+    def rows(t: String) =
+      spark.table(t).collect().map(_.toString).sorted.toSeq
+    def index(t: String) = (rows(t), rows(s"${t}_hot"),
+      BucketedWrite.bucketSpec(spark, t))
+    build(prefix)
+    build(twin)
     try {
+      val intact = index(prefix)
       for (scr <- Seq(s"${prefix}_compact_tmp", s"${prefix}_hot_compact_tmp")) {
         Seq((1L, 0, 0L)).toDF("corpus_id", "band", "band_hash")
           .write.format("parquet").mode("overwrite").saveAsTable(scr)
         val e = intercept[IllegalArgumentException] {
-          BandedLsh.compactSignatureIndex(spark, prefix,
-            Seq(0L).toDF("doc_id"))
+          BandedLsh.compactSignatureIndex(spark, prefix, del)
         }
         assert(e.getMessage.contains("interrupted"), e.getMessage)
         spark.sql(s"DROP TABLE `$scr`")
       }
-      // both refusals left the index intact
-      assert(spark.table(prefix).count() == 20 * 8)
-    } finally for (t <- Seq(prefix, s"${prefix}_hot"))
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      assert(index(prefix) == intact, "a refusal touched the index")
+      // the uncrashed result
+      assert(BandedLsh.compactSignatureIndex(spark, twin, del)
+        .collect().map(_.getString(0)).toSet == Set("main", "hot"))
+      val done = index(twin)
+
+      // commit points, built with the shared stage/swap calls in the
+      // compaction's own order: stage main, stage sidecar, swap sidecar,
+      // swap main
+      val d = broadcast(del.select($"doc_id".as("corpus_id")))
+      def crashAfterSidecarSwap(): Unit = {
+        def survivors(live: org.apache.spark.sql.DataFrame) = live
+          .join(d, Seq("corpus_id"), "left_anti")
+          .select("band", "band_hash", "corpus_id")
+        BucketedWrite.stage(spark, prefix)(survivors)
+        BucketedWrite.stage(spark, hot)(survivors)
+        BucketedWrite.swap(spark, hot)
+      }
+      // "sidecar swapped, main staged": drop the scratch, re-run, converge
+      crashAfterSidecarSwap()
+      val e1 = intercept[IllegalArgumentException] {
+        BandedLsh.compactSignatureIndex(spark, prefix, del)
+      }
+      assert(e1.getMessage.contains("DROP the scratch and re-run"),
+        e1.getMessage)
+      BucketedWrite.dropTable(spark, BucketedWrite.scratchOf(prefix))
+      assert(BandedLsh.compactSignatureIndex(spark, prefix, del)
+        .collect().map(_.getString(0)).toSet == Set("main"))
+      assert(index(prefix) == done, "the re-run did not converge")
+
+      // "live dropped, only the scratch survives": the named rename
+      // completes the commit
+      build(prefix)
+      crashAfterSidecarSwap()
+      BucketedWrite.dropTable(spark, prefix)
+      val e2 = intercept[IllegalArgumentException] {
+        BandedLsh.compactSignatureIndex(spark, prefix, del)
+      }
+      val rename = s"ALTER TABLE ${prefix}_compact_tmp RENAME TO $prefix"
+      assert(e2.getMessage.contains(rename), e2.getMessage)
+      spark.sql(rename)
+      assert(index(prefix) == done, "the named rename did not complete the commit")
+    } finally for (t <- Seq(prefix, hot, twin, s"${twin}_hot") ++
+        Seq(prefix, hot).map(BucketedWrite.scratchOf))
+      BucketedWrite.dropTable(spark, t)
   }
 
   test("Ann.cosineLshPairs: sign-LSH blocking finds near-parallel vectors, verifies exactly") {
