@@ -657,7 +657,7 @@ object SparkEntry {
       // across seeds, exact-jaccard > 0.8 filter — computed by the fused
       // triangle-blocked pairwise operator (3x the relational-join form at
       // sf0.1: the join materializes each of ~10^8 candidate pairs through
-      // ~2us of machinery while the jaccard kernel is ~70ns; the fused loop
+      // ~2us of machinery while the jaccard kernel is 156ns; the fused loop
       // also parallelizes INSIDE the mega-bucket, which AQE cannot split).
       // Verbatim SQL form supported and proven pair-identical in
       // PipelineOpsSpec ("bandedSelfJoinPairs equals the SQL blocking join").

@@ -210,7 +210,7 @@ object BandedLsh {
     * 3.1× SLOWER at sf0.1 (32.8 s vs 10.5 s) than deduplicating the
     * narrow id stream first. nearDupPairs' per-collision order wins there
     * because its fused operator shingles each bucket member once per
-    * bucket and then pays ~70 ns per merge-scan pair; the Levenshtein DP
+    * bucket and then pays 156 ns per merge-scan pair; the Levenshtein DP
     * has no such per-member reuse, so unique-pair count is the only thing
     * that matters.
     *
@@ -281,41 +281,62 @@ object BandedLsh {
     * UNION, `lsh_jaccard > threshold`), computed as a native pairwise loop
     * inside buckets instead of a join. Why: a relational join materializes
     * every candidate pair through join machinery (~2 µs/pair measured) while
-    * the jaccard kernel itself costs ~70 ns/pair; at ~10^8 bucket pairs the
-    * machinery IS the query. Ids come back as longs. Shape:
+    * the jaccard kernel itself costs 156 ns/pair (`core.jaccard_ns_per_pair`
+    * in perfbench); at ~10^8 bucket pairs the machinery IS the query. Ids
+    * come back as longs. Shape:
     *
-    *  1. per seed, the [[bandedRows]] pass (id spread, then one `lsh_min`
-    *     per doc), each band tagged with a (seedIndex << 32) | band key;
+    *  1. one id spread exchange for all seeds, then one `posexplode` of the
+    *     seeds' concatenated `lsh_min` arrays; each band is tagged with a
+    *     (seedIndex << 32) | band key ([[blockedRows]]);
     *  2. salt rows into `numBlocks` deterministic blocks and replicate each
     *     row to every (block-pair) group of its bucket — the classic triangle
     *     blocking for self-joins, giving numBlocks·(numBlocks+1)/2-way
     *     parallelism inside even a single mega-bucket (AQE cannot split a
     *     single key; this does). At one block the groups are the buckets;
-    *  3. the BlockedSelfJoin exec: shingle the members of each group that
-    *     can emit a pair, run the pairwise merge-scan loop, emit passing
-    *     pairs;
+    *  3. the BlockedSelfJoin exec, clustered and radix-sorted on one 64-bit
+    *     hash of the group key: shingle the members of each group that can
+    *     emit a pair, run the pairwise merge-scan loop, emit passing pairs;
     *  4. distinct across bands and seeds (the UNION).
-    */
+    *
+    * One spread exchange, not one per seed ([[bandedRows]] per seed, until
+    * this shape): under AQE over a cached input the per-seed exchanges were
+    * not reused, so a 2-seed call shuffled its input twice (two 20k-row
+    * exchange jobs per `dedup_batch` pass). */
   def bandedSelfJoinPairs(df: DataFrame, idCol: String, textCol: String,
                           ngramWidth: Int, bandCount: Int, bandSize: Int, seeds: Seq[Long],
-                          threshold: Double, numBlocks: Int = 8): DataFrame = {
-    import org.apache.spark.sql.graft.{BlockedSelfJoin, PlanShim}
-    val spark = df.sparkSession
-    // self-register the whole-operator planner strategy (idempotent): the
-    // operator must work from a bare session, not only after
-    // LshFunctions.register — a latent ordering dependency otherwise
-    // (surfaced by scoped Verify runs planning this query first)
-    graft.sql.LshFunctions.ensurePlannerStrategy(spark)
-    val nb = numBlocks
-    val banded = seeds.zipWithIndex.map { case (seed, si) =>
-      bandedRows(df, idCol, textCol, ngramWidth, bandCount, bandSize, seed)
-        .select((lit(si.toLong << 32) + col("band").cast("long")).as("bk"),
-          col("band_hash").as("h"), col(idCol).cast("long").as("id"), col(textCol).as("text"))
-    }.reduce(_ unionAll _)
+                          threshold: Double, numBlocks: Int = 8): DataFrame =
+    blockedPairs(blockedRows(df, idCol, textCol, ngramWidth, bandCount, bandSize, seeds,
+      numBlocks), ngramWidth, threshold)
+
+  /** The BlockedSelfJoin exec's input, in its positional contract
+    * (g, bk, h, blo, bhi, salt, id, text): every band row of every seed,
+    * replicated to each triangle block-pair group of its bucket, with `g`
+    * the 64-bit hash of the group key (bk, h, blo, bhi). */
+  private[api] def blockedRows(df: DataFrame, idCol: String, textCol: String,
+                               ngramWidth: Int, bandCount: Int, bandSize: Int,
+                               seeds: Seq[Long], numBlocks: Int): DataFrame = {
+    // the bandedRows spread and filter, once for all seeds
+    val minima = seeds.map(s =>
+      graft.functions.lsh_min(col(textCol), ngramWidth, bandCount, bandSize, s))
+    val banded = df.filter(length(col(textCol)) >= ngramWidth)
+      .repartition(SparkEnv.shufflePartitions(df.sparkSession), col(idCol))
+      .select(col(idCol).cast("long").as("id"), col(textCol).as("text"),
+        posexplode(if (minima.size == 1) minima.head else concat(minima: _*)))
+      .select(
+        (shiftleft((col("pos") / bandCount).cast("long"), 32) +
+          (col("pos") % bandCount).cast("long")).as("bk"),
+        col("col").as("h"), col("id"), col("text"))
     // Triangle block replication: each row meets every block once, so every
     // bucket pair meets in exactly one (blo, bhi) group per band. At one
-    // block every row is one copy in its bucket's only group.
-    val blocked = banded
+    // block every row is one copy in its bucket's only group. blo/bhi stay
+    // computed there too, one shape for every block count. Measured on
+    // `dedup_batch` (seed 101): under the old clustering on the four group
+    // columns, literal blo/bhi at one block made EnsureRequirements add a
+    // second exchange (shuffle write 92.2 -> 159.8 MB, 14 -> 15 jobs); on
+    // the one hash key they neither add nor save anything (103.2 MB, 10
+    // jobs either way).
+    val nb = numBlocks
+    banded
       .withColumn("salt", pmod(col("id"), lit(nb.toLong)).cast("int"))
       .select(col("bk"), col("h"), col("salt"), col("id"), col("text"),
         explode(sequence(lit(0), lit(nb - 1))).as("other"))
@@ -323,7 +344,20 @@ object BandedLsh {
         least(col("salt"), col("other")).cast("int").as("blo"),
         greatest(col("salt"), col("other")).cast("int").as("bhi"),
         col("salt"), col("id"), col("text"))
-    // Strict repartition on the blocking keys BEFORE the operator: the
+      .select(xxhash64(col("bk"), col("h"), col("blo"), col("bhi")).as("g"), col("*"))
+  }
+
+  /** [[blockedRows]] through the exec, deduplicated across bands and seeds. */
+  private[api] def blockedPairs(blocked: DataFrame, ngramWidth: Int,
+                                threshold: Double): DataFrame = {
+    import org.apache.spark.sql.graft.{BlockedSelfJoin, PlanShim}
+    val spark = blocked.sparkSession
+    // self-register the whole-operator planner strategy (idempotent): the
+    // operator must work from a bare session, not only after
+    // LshFunctions.register — a latent ordering dependency otherwise
+    // (surfaced by scoped Verify runs planning this query first)
+    graft.sql.LshFunctions.ensurePlannerStrategy(spark)
+    // Strict repartition on the group hash BEFORE the operator: the
     // in-group work is quadratic in group size, which AQE cannot see — it
     // sizes shuffles on input bytes, and the exploded input is tiny, so the
     // ENSURE_REQUIREMENTS exchange gets coalesced to ~3 partitions and the
@@ -331,11 +365,9 @@ object BandedLsh {
     // 0.15s-wall workload). repartition(n, cols) is REPARTITION_BY_NUM,
     // which AQE must not touch, and it already satisfies the operator's
     // ClusteredDistribution so EnsureRequirements adds only the local sort.
-    val shuffleParts = SparkEnv.shufflePartitions(spark)
-    val clustered = blocked.repartition(shuffleParts,
-      col("bk"), col("h"), col("blo"), col("bhi"))
+    val clustered = blocked.repartition(SparkEnv.shufflePartitions(spark), col("g"))
     // the custom whole-operator plan node (see BlockedSelfJoin scaladoc):
-    // clustered+sorted on (bk, h, blo, bhi), streamed group-at-a-time
+    // clustered and sorted on g, streamed run-at-a-time
     PlanShim.ofRows(spark,
         BlockedSelfJoin(ngramWidth, threshold, BlockedSelfJoin.outputAttrs(),
           PlanShim.logical(clustered)))
@@ -834,35 +866,82 @@ object BandedLsh {
     * is (transitively) connected to in the near-dup pair graph.
     *
     * Adaptive execution: dedup graphs are usually tiny relative to the corpus
-    * (edges only between near-dups), so when the edge count is below
+    * (edges only between near-dups), so when the edge count is at most
     * `driverThreshold` the components are computed with a driver-side
-    * union-find — one collect, exact, no iteration. Larger graphs fall back
-    * to distributed hash-min iteration (`maxIters` rounds, one shuffle each,
+    * union-find — exact, no iteration. Larger graphs fall back to
+    * distributed hash-min iteration (`maxIters` rounds, one shuffle each,
     * lineage truncated per round). */
   def dupClusters(pairs: DataFrame, maxIters: Int = 10,
                   driverThreshold: Long = 1000000L): DataFrame = {
     val spark = pairs.sparkSession
     val edges = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .localCheckpoint(true)
-    if (edges.count() <= driverThreshold) {
-      val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
-      import spark.implicits._
-      return nodes.map(n => (n, find(n))).toSeq.toDF("id", "cluster")
+    driverEdges(edges, driverThreshold) match {
+      case Some(e) =>
+        // union-find over the sorted distinct ids: index order is id order,
+        // so linking the larger root under the smaller keeps every root its
+        // component's min id
+        val ids = e.clone()
+        java.util.Arrays.sort(ids)
+        var n = 0
+        var i = 0
+        while (i < ids.length) {
+          if (n == 0 || ids(i) != ids(n - 1)) { ids(n) = ids(i); n += 1 }
+          i += 1
+        }
+        val parent = Array.tabulate(n)(identity)
+        def find(x: Int): Int = {
+          var r = x
+          while (parent(r) != r) r = parent(r)
+          var c = x
+          while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+          r
+        }
+        def index(id: Long) = java.util.Arrays.binarySearch(ids, 0, n, id)
+        i = 0
+        while (i < e.length) {
+          val ra = find(index(e(i))); val rb = find(index(e(i + 1)))
+          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+          i += 2
+        }
+        import spark.implicits._
+        (0 until n).map(k => (ids(k), ids(find(k)))).toDF("id", "cluster")
+      case None => distributedClusters(edges.localCheckpoint(true), maxIters)
     }
-    distributedClusters(edges, maxIters)
+  }
+
+  /** `edges`' (a, b) pairs packed into one long array when there are at
+    * most `threshold` of them, else None — in ONE job, where a
+    * localCheckpoint, a count and a collect ran 4. Each task reads at most
+    * threshold + 1 edges and ships them only while they fit its
+    * partition's even share of the threshold, else just its count, so the
+    * driver never holds much more than `threshold` edges. Spark's take
+    * (`limit(threshold + 1).collect()`) bounds it the same way but runs one
+    * job per scale-up round: two or more over a multi-partition frame, as
+    * the benchmark's AQE-coalesced pair checkpoint is. A skewed graph
+    * within the threshold (a partition over its share) pays a second,
+    * bounded collect. Both reads and the distributed branch's checkpoint
+    * run `edges`' one query plan, so an unmaterialized input's shuffles
+    * are computed once. */
+  private def driverEdges(edges: DataFrame, threshold: Long): Option[Array[Long]] = {
+    // two longs per edge in one JVM array
+    val limit = math.min(threshold, Int.MaxValue / 2 - 8L)
+    if (limit < 0) return None
+    val rdd = edges.queryExecution.toRdd
+    val share = limit / math.max(1, rdd.getNumPartitions)
+    val read = (it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
+      val kept = new scala.collection.mutable.ArrayBuilder.ofLong
+      var n = 0L
+      while (n <= limit && it.hasNext) {
+        val r = it.next()
+        if (n < share) { kept += r.getLong(0); kept += r.getLong(1) }
+        n += 1
+      }
+      (n, if (n <= share) kept.result() else null)
+    }
+    val parts = edges.sparkSession.sparkContext.runJob(rdd, read)
+    if (parts.map(_._1).sum > limit) None
+    else if (parts.forall(_._2 != null)) Some(Array.concat(parts.map(_._2): _*))
+    else Some(edges.collect().flatMap(r => Array(r.getLong(0), r.getLong(1))))
   }
 
   private def distributedClusters(pairs: DataFrame, maxIters: Int): DataFrame = {

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.graft.CatalogOps
 
 /** Shared writer for persisted index layouts ([[Ann.saveBucketedCorpus]],
   * [[BandedLsh.saveSignatureIndex]]): a parquet table bucketed AND sorted on
@@ -89,14 +90,26 @@ private[graft] object BucketedWrite {
   /** Refuse to rewrite `live` while its scratch survives: the scratch may
     * hold the only copy of a table whose swap was cut. Multi-table callers
     * run this for every table they will rewrite before their first
-    * mutation; [[stage]] runs it again for its own table. */
+    * mutation; [[stage]] runs it again for its own table.
+    *
+    * Both named recovery steps need the scratch registered. A restart
+    * (in-memory catalog) keeps only its directory, so a refusal first
+    * re-registers that directory as a MANAGED table: DROP then deletes its
+    * files, and RENAME moves them to `live`'s own directory — an external
+    * registration would leave `live` reading the scratch directory, which
+    * the next compaction refuses as a leftover. A directory with no
+    * readable parquet (a cut `stage` write) stays unregistered. */
   def refuseLeftover(spark: SparkSession, live: String): Unit = {
     val scratch = scratchOf(live)
-    require(!scratchLeftover(spark, scratch),
-      s"$scratch exists: a prior compaction of '$live' was interrupted. " +
-        s"If '$live' still exists, DROP the scratch and re-run; if only " +
-        "the scratch survives (crash inside the swap), " +
-        s"ALTER TABLE $scratch RENAME TO $live completes the commit.")
+    if (scratchLeftover(spark, scratch)) {
+      if (!spark.catalog.tableExists(scratch))
+        scala.util.Try(CatalogOps.registerManaged(spark, scratch, tableDir(spark, scratch)))
+      throw new IllegalArgumentException(
+        s"$scratch exists: a prior compaction of '$live' was interrupted. " +
+          s"If '$live' still exists, DROP the scratch and re-run; if only " +
+          "the scratch survives (crash inside the swap), " +
+          s"ALTER TABLE $scratch RENAME TO $live completes the commit.")
+    }
   }
 
   /** Write `survivors(live table)` in full to [[scratchOf]]`(live)`, in

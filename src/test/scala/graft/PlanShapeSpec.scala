@@ -287,6 +287,35 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(resized.isEmpty, s"AQE must not resize the strict exchange:\n$resized")
   }
 
+  test("fused self-join sorts its input on one radix-sortable key") {
+    // four sort keys led by the 8-valued band index made almost every
+    // comparison fall through to the row comparator (TimSort on top of the
+    // profile); one LongType key is decided by the sort prefix alone, so
+    // SortExec takes its radix-sort path
+    import org.apache.spark.sql.execution.{SortExec, SortPrefixUtils, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.graft.BlockedSelfJoinExec
+    object Plan extends AdaptiveSparkPlanHelper
+    for (q <- Seq("lsh_blocking_join", "neardup_adaptive")) {
+      val df = SparkEntry.queries(q)(spark, dir)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val execs = Plan.collect(plan) { case e: BlockedSelfJoinExec => e }
+      assert(execs.nonEmpty, s"$q: expected BlockedSelfJoinExec:\n$plan")
+      execs.foreach { e =>
+        val sort = e.child match {
+          case s: SortExec => s
+          case WholeStageCodegenExec(s: SortExec) => s
+          case other => fail(s"$q: the exec must read its sort directly:\n$other")
+        }
+        assert(sort.sortOrder.size == 1 &&
+          SortPrefixUtils.canSortFullyWithPrefix(sort.sortOrder.head),
+          s"$q: expected one prefix-decided sort key, got ${sort.sortOrder}:\n$plan")
+      }
+    }
+    assert(spark.conf.get("spark.sql.sort.enableRadixSort").toBoolean)
+  }
+
   test("minhash_dedup_pairs verifies INSIDE the band join, distinct carries no text") {
     import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}

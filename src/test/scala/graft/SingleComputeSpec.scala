@@ -74,6 +74,30 @@ class SingleComputeSpec extends AnyFunSuite {
     } finally cached.unpersist()
   }
 
+  test("bandedSelfJoinPairs over a cached input: all seeds share one spread exchange") {
+    // one spread exchange per seed was not reused under AQE over a cached
+    // input: a 2-seed call shuffled its input once per seed
+    val cached = docs.cache()
+    try {
+      val df = api.BandedLsh.bandedSelfJoinPairs(cached, "doc_id", "text", 4, 1, 3,
+        Seq(11L, 12L), 0.6)
+      assert(computeSites(df, "lsh_min") == 1,
+        s"both seeds' banding must compute in one node:\n${df.queryExecution.executedPlan}")
+      // the id spread: a strict exchange whose own stage explodes nothing
+      def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+        case _: Exchange | _: QueryStageExec => Nil
+        case _ => p +: p.children.flatMap(stage)
+      }
+      import org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM
+      val spreads = liveNodes(df.queryExecution.executedPlan).count {
+        case e: ShuffleExchangeExec => e.shuffleOrigin == REPARTITION_BY_NUM &&
+          !stage(e.child).exists(_.isInstanceOf[GenerateExec])
+        case _ => false
+      }
+      assert(spreads == 1, s"one spread exchange expected:\n${df.queryExecution.executedPlan}")
+    } finally cached.unpersist()
+  }
+
   test("signatureDupPairs: both lsh_min passes run once") {
     val df = api.BandedLsh.nearDupPairsBySignature(docs, "doc_id", "text",
       4, 8, 3, 42L, k = 24, sigSeed = 77L, threshold = 0.3)

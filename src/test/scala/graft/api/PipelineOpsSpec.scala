@@ -16,6 +16,18 @@ class PipelineOpsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** 300 generated docs in near-dup triples: 100 random 12-word texts,
+    * each with two one-word edits of itself (4-gram Jaccard ~0.8). */
+  private lazy val plantedDocs = {
+    val rnd = new scala.util.Random(7)
+    val words = Array.fill(200)(rnd.alphanumeric.take(3 + rnd.nextInt(5)).mkString)
+    (0 until 100).flatMap { i =>
+      val base = Vector.fill(12)(words(rnd.nextInt(words.length)))
+      Seq(base, base.updated(3, "edited"), base.updated(8, "changed")).zipWithIndex
+        .map { case (t, k) => ((3 * i + k).toLong, t.mkString(" ")) }
+    }.toDF("doc_id", "text")
+  }
+
   test("simhash64: deterministic, near-texts have small hamming") {
     val a = SimHash.simhash64("the quick brown fox jumps over the lazy dog")
     val b = SimHash.simhash64("the quick brown fox jumps over the lazy cat")
@@ -116,6 +128,35 @@ class PipelineOpsSpec extends AnyFunSuite {
       .forall(_.getClass.getSimpleName.contains("LocalRelation")))
     assert(dist.queryExecution.optimizedPlan.collectLeaves()
       .exists(_.getClass.getSimpleName.contains("LogicalRDD")))
+  }
+
+  test("dupClusters driver branch is one job over a materialized pair frame") {
+    // a localCheckpoint, a count and a collect were 4 jobs; one bounded
+    // read both picks the branch and fetches the edges, over any number of
+    // partitions (Spark's take runs a job per scale-up round)
+    val pairs = BandedLsh.nearDupPairs(plantedDocs, "doc_id", "text", 4, 8, 3, 123L, 0.5)
+      .repartition(3).localCheckpoint(true)
+    val (uf, jobs) = org.apache.spark.sql.graft.JobCount.of(spark)(BandedLsh.dupClusters(pairs))
+    assert(jobs == 1, s"driver branch ran $jobs jobs")
+    def labels(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val got = labels(uf)
+    assert(got.size > 2 && got.values.toSet.size < got.size, "the pairs must form clusters")
+    assert(got == labels(BandedLsh.dupClusters(pairs, driverThreshold = 0L)))
+    // the bound stays inside a JVM array's range at any threshold
+    val unbounded = BandedLsh.dupClusters(pairs, driverThreshold = Long.MaxValue)
+    assert(unbounded.queryExecution.optimizedPlan.collectLeaves()
+      .forall(_.getClass.getSimpleName.contains("LocalRelation")))
+    assert(labels(unbounded) == got)
+    // exactly at the threshold stays on the driver (over the partitions'
+    // even shares: the bounded second read), one edge over does not
+    val edges = pairs.count()
+    for ((t, local) <- Seq((edges, true), (edges - 1, false))) {
+      val leaves = BandedLsh.dupClusters(pairs, driverThreshold = t)
+        .queryExecution.optimizedPlan.collectLeaves()
+      assert(leaves.forall(_.getClass.getSimpleName.contains("LocalRelation")) == local,
+        s"threshold $t over $edges edges")
+    }
   }
 
   test("dupClusters distributed path: min propagates along edges, not just pointers") {
@@ -270,6 +311,32 @@ class PipelineOpsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fused == sqlPairs, s"fused=${fused.size} sql=${sqlPairs.size}")
     assert(fused.nonEmpty)
+  }
+
+  test("BlockedSelfJoin splits a run of colliding group hashes into the exact groups") {
+    // every row gets the same sort key, so each partition is ONE run
+    // holding every group: the exec must split it by the full group key
+    // and give what the per-group runs give, pairs, groups and kernel calls
+    object Plan extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    for (blocks <- Seq(1, 8)) {
+      def run(collide: Boolean) = {
+        val rows = BandedLsh.blockedRows(plantedDocs, "doc_id", "text", 4, 8, 3,
+          Seq(123L, 7L), blocks)
+        val pairs = BandedLsh.blockedPairs(
+          if (collide) rows.withColumn("g", lit(0L)) else rows, 4, 0.5)
+        val got = pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        val exec = Plan.collect(pairs.queryExecution.executedPlan) {
+          case e: org.apache.spark.sql.graft.BlockedSelfJoinExec => e }.head
+        (got, exec.metrics("numGroups").value, exec.metrics("numComparisons").value)
+      }
+      val (base, groups, comparisons) = run(collide = false)
+      val (split, splitGroups, splitComparisons) = run(collide = true)
+      assert(base.nonEmpty)
+      assert(split == base, s"$blocks blocks: split=${split.size} base=${base.size}")
+      assert(splitGroups == groups && splitComparisons == comparisons,
+        s"$blocks blocks: groups $splitGroups vs $groups, comparisons " +
+          s"$splitComparisons vs $comparisons")
+    }
   }
 
   test("nearDupPairs equals the README SQL blocking idiom (per-band UNION)") {
@@ -1319,6 +1386,49 @@ class PipelineOpsSpec extends AnyFunSuite {
     } finally for (t <- Seq(prefix, hot, twin, s"${twin}_hot") ++
         Seq(prefix, hot).map(BucketedWrite.scratchOf))
       BucketedWrite.dropTable(spark, t)
+  }
+
+  test("BucketedWrite: a swap cut by a restart recovers with the named rename") {
+    // the commit point cut after "live dropped", then a JVM restart
+    // (in-memory catalog): only the scratch's directory survives, and the
+    // refusal must make its own printed recovery step work
+    import org.apache.spark.sql.graft.CatalogOps
+    val live = "graft_test_restart_swap"
+    val scratch = BucketedWrite.scratchOf(live)
+    val rows = (0L until 40L).map(i => (i, i % 5, s"row $i")).toDF("id", "k", "v")
+    BucketedWrite.saveBucketed(rows, live, 4, Seq("k"))
+    try {
+      BucketedWrite.stage(spark, live)(_.filter($"id" % 2 === 0))
+      BucketedWrite.dropTable(spark, live)
+      CatalogOps.deregisterKeepingFiles(spark, scratch)
+      assert(!spark.catalog.tableExists(scratch) && BucketedWrite.scratchLeftover(spark, scratch))
+      val e = intercept[IllegalArgumentException](BucketedWrite.refuseLeftover(spark, live))
+      val rename = s"ALTER TABLE $scratch RENAME TO $live"
+      assert(e.getMessage.contains(rename), e.getMessage)
+      spark.sql(rename)
+      assert(spark.table(live).collect().map(_.getLong(0)).sorted.toSeq == (0L until 40L by 2))
+      // the recovered table owns the live directory, not the scratch's:
+      // nothing is left over, and the next rewrite is not refused
+      val loc = spark.sessionState.catalog
+        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(live)).location
+      assert(loc.getPath.stripSuffix("/") == BucketedWrite.tableDir(spark, live).toUri.getPath,
+        s"$live reads $loc")
+      assert(!BucketedWrite.scratchLeftover(spark, scratch))
+      BucketedWrite.stage(spark, live, Some((4, Seq("k"))))(_.filter($"id" < 10))
+      BucketedWrite.swap(spark, live)
+      assert(spark.table(live).count() == 5)
+
+      // cut before the swap, then a restart: the named DROP now deletes
+      // the scratch's files and the re-run goes through
+      BucketedWrite.stage(spark, live)(identity)
+      CatalogOps.deregisterKeepingFiles(spark, scratch)
+      intercept[IllegalArgumentException](BucketedWrite.refuseLeftover(spark, live))
+      spark.sql(s"DROP TABLE $scratch")
+      assert(!BucketedWrite.scratchLeftover(spark, scratch))
+      BucketedWrite.stage(spark, live)(identity)
+      BucketedWrite.swap(spark, live)
+      assert(spark.table(live).count() == 5)
+    } finally Seq(live, scratch).foreach(BucketedWrite.dropTable(spark, _))
   }
 
   test("Ann.cosineLshPairs: sign-LSH blocking finds near-parallel vectors, verifies exactly") {
