@@ -53,9 +53,8 @@ object BandedLsh {
   }
 
   /** The S-curve itself: P(pair of similarity `s` becomes a candidate)
-    * under (bandCount, bandSize) banding. Exposed for planning/reporting
-    * (e.g. expected false-candidate rate at a sub-threshold similarity). */
-  def candidateProbability(s: Double, bandCount: Int, bandSize: Int): Double =
+    * under (bandCount, bandSize) banding — the curve [[planBands]] solves. */
+  private[api] def candidateProbability(s: Double, bandCount: Int, bandSize: Int): Double =
     1.0 - math.pow(1.0 - math.pow(s, bandSize), bandCount)
 
   /** Explode `lsh_min(textCol, ...)` into (band, hash) rows keyed by `idCol`.

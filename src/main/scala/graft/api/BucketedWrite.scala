@@ -98,17 +98,25 @@ private[graft] object BucketedWrite {
     * files, and RENAME moves them to `live`'s own directory — an external
     * registration would leave `live` reading the scratch directory, which
     * the next compaction refuses as a leftover. A directory with no
-    * readable parquet (a cut `stage` write) stays unregistered. */
+    * readable parquet (a cut `stage` write) cannot be registered, so DROP
+    * cannot reach it: the refusal names the directory to delete instead.
+    * Such a scratch never held the only copy — the swap runs only after
+    * the stage write completed. */
   def refuseLeftover(spark: SparkSession, live: String): Unit = {
     val scratch = scratchOf(live)
     if (scratchLeftover(spark, scratch)) {
-      if (!spark.catalog.tableExists(scratch))
-        scala.util.Try(CatalogOps.registerManaged(spark, scratch, tableDir(spark, scratch)))
+      val dir = tableDir(spark, scratch)
+      val registered = spark.catalog.tableExists(scratch) ||
+        scala.util.Try(CatalogOps.registerManaged(spark, scratch, dir)).isSuccess
+      val interrupted = s"$scratch exists: a prior compaction of '$live' was interrupted. "
       throw new IllegalArgumentException(
-        s"$scratch exists: a prior compaction of '$live' was interrupted. " +
-          s"If '$live' still exists, DROP the scratch and re-run; if only " +
-          "the scratch survives (crash inside the swap), " +
-          s"ALTER TABLE $scratch RENAME TO $live completes the commit.")
+        if (registered)
+          interrupted + s"If '$live' still exists, DROP the scratch and re-run; if only " +
+            "the scratch survives (crash inside the swap), " +
+            s"ALTER TABLE $scratch RENAME TO $live completes the commit."
+        else
+          interrupted + "Its directory holds no readable table (a cut write): " +
+            s"delete the directory $dir and re-run.")
     }
   }
 

@@ -158,8 +158,8 @@ object Dedup {
     // definition) becomes a single-task disk spill. A count filter on the
     // SAME window couldn't help (the group must be buffered to count it),
     // so the trim happens BEFORE the exchange: `excludeGrams` (a `gh`
-    // frame, tiny by construction — produce it with [[hotGrams]] on the
-    // compaction cadence, the [[BandedLsh.signatureIndexHealth]] contract)
+    // frame, tiny by construction — the census [[dupSpansAdaptive]] runs
+    // and returns)
     // anti-joins the triples map-side under a broadcast, and the hot
     // group never reaches the window. Excluded grams are NOT flagged —
     // route that text to [[dropBoilerplateLines]], which is the pass that
@@ -250,12 +250,11 @@ object Dedup {
     * mega-gram's group incrementally, so this pass is safe on exactly the
     * degenerate keys the window form spills on. Output is bounded by
     * tokens/cap rows (a corpus with more over-cap grams than that is all
-    * boilerplate). Run on the compaction cadence; feed the result (or its
-    * persisted table) back as `excludeGrams`. */
-  def hotGrams(df: DataFrame, idCol: String, textCol: String, width: Int,
-               cap: Long, spreadInput: Boolean = true,
-               tokenize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-                 Tokenizers.asciiWords): DataFrame = {
+    * boilerplate). [[dupSpansAdaptive]] runs it and returns its result. */
+  private[api] def hotGrams(df: DataFrame, idCol: String, textCol: String,
+                            width: Int, cap: Long, spreadInput: Boolean = true,
+                            tokenize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+                              Tokenizers.asciiWords): DataFrame = {
     require(cap >= 1, s"cap must be >= 1, got $cap")
     gramHashes(df, idCol, textCol, width, spreadInput, tokenize)
       .groupBy("gh")

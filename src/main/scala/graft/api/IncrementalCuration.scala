@@ -167,7 +167,7 @@ object IncrementalCuration {
     * `Params.numBuckets` and restore the bucketing; the takedown's
     * signature and gram rewrites stay plain parquet.
     * Returns the number of tables re-registered. */
-  def recoverFromWarehouse(spark: SparkSession, prefix: String): Int = {
+  private def recoverFromWarehouse(spark: SparkSession, prefix: String): Int = {
     var n = 0
     // the shared BucketedWrite.ensureRegistered primitive
     def ensure(t: String): Boolean = {

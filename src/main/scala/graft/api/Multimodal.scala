@@ -51,10 +51,6 @@ object Multimodal {
     }
   }
 
-  /** Back-compat alias for the stub decode (specs and docs reference it). */
-  def decodeBytes(bytes: Array[Byte]): (Long, Int, Int, Double) =
-    StubDecoder.decode(bytes)
-
   /** A REAL image decoder on `javax.imageio` (public JDK surface — no
     * external codec libraries needed): decodes PNG/JPEG/GIF/BMP payloads
     * and emits pixel-derived features, so the [[DecodeMedia]] seam carries
@@ -326,7 +322,7 @@ object Multimodal {
   /** image_dhash/image_ahash(bytes) as a Column: 64-bit perceptual hash
     * over the decoded raster, NULL for undecodable / over-cap / narrower-
     * than-grid payloads ([[graft.core.ImageHash]] for the pinned spec). */
-  def imageHash(bytes: Column, kind: String = "dhash"): Column =
+  private[api] def imageHash(bytes: Column, kind: String = "dhash"): Column =
     ColumnShim.column(org.apache.spark.sql.graft.ImageHash64(
       ColumnShim.expression(bytes), kind))
 
@@ -397,7 +393,7 @@ object Multimodal {
 
   /** decode_media(bytes) as a Column: struct(checksum, width, height,
     * mean_byte), NULL payload → NULL struct. */
-  def decodeMedia(bytes: Column, decoder: MediaDecoder = StubDecoder): Column =
+  private def decodeMedia(bytes: Column, decoder: MediaDecoder = StubDecoder): Column =
     ColumnShim.column(DecodeMedia(ColumnShim.expression(bytes), decoder))
 
   /** Feature extraction as one codegen'd projection: a single decode per row

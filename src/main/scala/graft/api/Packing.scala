@@ -271,9 +271,9 @@ object Packing {
     * every bucket total and therefore every other row's `run` is exact.
     * Output: `(id, value, run)` with `run` = sum of `value` over all
     * strictly-preceding rows. */
-  def globalRunningSum(df: DataFrame, idCol: String, orderCol: Column,
-                       valueCol: Column, buckets: Int = 128,
-                       quantileErr: Double = 0.001): DataFrame = {
+  private[api] def globalRunningSum(df: DataFrame, idCol: String, orderCol: Column,
+                                    valueCol: Column, buckets: Int = 128,
+                                    quantileErr: Double = 0.001): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     val base = df
       .select(col(idCol).as("id"), orderCol.as("__ord"),

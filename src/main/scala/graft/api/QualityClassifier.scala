@@ -30,28 +30,9 @@ import graft.core.HyperLogLog.lnPinned
   */
 object QualityClassifier {
 
-  /** Per-bucket NB log-odds from a labeled corpus:
-    * `lo_b = ln p(b|pos) − ln p(b|neg)`, add-one smoothed, expressed as
-    * `ln((p_b+1)·(N+B)) − ln((n_b+1)·(P+B))` (all arguments ≥ 1). The
-    * same table DSIR would call log importance ratios of the positive
-    * seed against the negatives — NB's novelty is the labeled split and
-    * the document prior, not the algebra. */
-  def nbLogOdds(pos: DataFrame, neg: DataFrame, textCol: String,
-                buckets: Int): Array[Double] = {
-    require(buckets >= 2 && buckets <= (1 << 20),
-      s"buckets must be in [2, 2^20], got $buckets")
-    val p = Sampling.dsirBucketCounts(pos, textCol, buckets)
-    val n = Sampling.dsirBucketCounts(neg, textCol, buckets)
-    val pTot = p.sum.toDouble + buckets
-    val nTot = n.sum.toDouble + buckets
-    Array.tabulate(buckets) { b =>
-      lnPinned((p(b) + 1).toDouble * nTot) - lnPinned((n(b) + 1).toDouble * pTot)
-    }
-  }
-
   /** The class prior term `ln(nPos) − ln(nNeg)` (document counts; both
     * sides must be non-empty). */
-  def nbPrior(nPos: Long, nNeg: Long): Double = {
+  private[api] def nbPrior(nPos: Long, nNeg: Long): Double = {
     require(nPos >= 1 && nNeg >= 1, s"need non-empty classes, got $nPos/$nNeg")
     lnPinned(nPos.toDouble) - lnPinned(nNeg.toDouble)
   }
@@ -77,13 +58,7 @@ object QualityClassifier {
     // one fused pass for all four training statistics (was: two count-only
     // scans + two per-class feature scans); same integer counts ⇒ the same
     // lnPinned arguments ⇒ a bit-identical model
-    val (p, n, nPos, nNeg) = classBucketCounts(docs, textCol, labelCol, buckets)
-    val prior = nbPrior(nPos, nNeg)
-    val pTot = p.sum.toDouble + buckets
-    val nTot = n.sum.toDouble + buckets
-    val lo = Array.tabulate(buckets) { b =>
-      lnPinned((p(b) + 1).toDouble * nTot) - lnPinned((n(b) + 1).toDouble * pTot)
-    }
+    val (lo, prior) = modelFromArrays(classBucketCounts(docs, textCol, labelCol, buckets))
     nbScore(docs, textCol, lo, prior, out)
   }
 
@@ -95,7 +70,7 @@ object QualityClassifier {
     * persistable, MERGEABLE form of what [[trainScore]] computes
     * transiently: one row per feature bucket `(bucket, pos_cnt,
     * neg_cnt)` plus one `bucket = -1` row carrying the class document
-    * counts. Everything downstream ([[nbLogOdds]]' smoothed log-ratios,
+    * counts. Everything downstream ([[modelFromArrays]]' smoothed log-ratios,
     * [[nbPrior]]) is a pure function of these counts, and counts are
     * ADDITIVE across corpus slices — so a model "trained on A ∪ B" is
     * exactly `nbCountsDf(A) + nbCountsDf(B)` summed per bucket, the
@@ -211,8 +186,10 @@ object QualityClassifier {
   }
 
   /** `(logOdds, prior)` from in-memory sufficient statistics — the pure
-    * back half of [[modelFromCounts]] (same lnPinned algebra, so equal
-    * integer counts give bit-equal doubles). */
+    * back half of [[trainScore]] and [[modelFromCounts]]. Per-bucket NB
+    * log-odds `lo_b = ln p(b|pos) − ln p(b|neg)`, add-one smoothed, are
+    * expressed as `ln((p_b+1)·(N+B)) − ln((n_b+1)·(P+B))` (all arguments
+    * ≥ 1), so equal integer counts give bit-equal doubles. */
   def modelFromArrays(counts: (Array[Long], Array[Long], Long, Long))
       : (Array[Double], Double) = {
     val (p, n, nPos, nNeg) = counts

@@ -235,8 +235,8 @@ object Sampling {
     * ≥ 1 — the [[graft.functions.ln_pinned]] domain — making the whole
     * table bit-reproducible cross-engine (libm ln is not). Two corpus
     * scans (one per side), each one map-side-combined aggregation. */
-  def dsirLogRatios(raw: DataFrame, target: DataFrame, textCol: String,
-                    buckets: Int): Array[Double] = {
+  private[api] def dsirLogRatios(raw: DataFrame, target: DataFrame, textCol: String,
+                                 buckets: Int): Array[Double] = {
     require(buckets >= 2 && buckets <= (1 << 20),
       s"buckets must be in [2, 2^20], got $buckets")
     // the two sides' counts are independent aggregations — overlapped
@@ -259,8 +259,8 @@ object Sampling {
     * feature stream (unigrams then bigrams, array order — bit-exact).
     * Adds `logw` (0.0 for featureless docs); the ratio table rides the
     * plan as a literal array (`buckets` doubles, one copy per plan). */
-  def dsirScore(df: DataFrame, textCol: String, ratios: Array[Double],
-                out: String = "logw"): DataFrame = {
+  private[api] def dsirScore(df: DataFrame, textCol: String, ratios: Array[Double],
+                             out: String = "logw"): DataFrame = {
     val ratioLit = lit(ratios)
     df.withColumn(out,
       aggregate(dsirFeatures(col(textCol)), lit(0.0), (acc, f) =>

@@ -34,10 +34,10 @@ object SemanticDedup {
     * centroid init and the Lloyd's accumulation order are part of the
     * engine's bit-exact contract (mirrored by the Python oracle).
     */
-  def assignClusters(df: DataFrame, nClusters: Int, seed: Long,
-                     iters: Int = 5, sampleSize: Int = 10000,
-                     idCol: String = "vec_id",
-                     vecCol: String = "embedding"): DataFrame = {
+  private[api] def assignClusters(df: DataFrame, nClusters: Int, seed: Long,
+                                  iters: Int = 5, sampleSize: Int = 10000,
+                                  idCol: String = "vec_id",
+                                  vecCol: String = "embedding"): DataFrame = {
     val base = df.select(col(idCol).cast("long").as(idCol),
       col(vecCol).cast("array<double>").as(vecCol))
     val centroids = Ann.trainQuantizer(base, nClusters, seed, iters, sampleSize,
@@ -49,8 +49,8 @@ object SemanticDedup {
     * quantizer of an existing [[Ann.IvfIndex]] (`index.centroids`), so a
     * corpus that already fitted an ANN index dedups in its cells without a
     * second training pass. */
-  def assignToCentroids(df: DataFrame, centroids: Array[Array[Double]],
-                        vecCol: String = "embedding"): DataFrame = {
+  private[api] def assignToCentroids(df: DataFrame, centroids: Array[Array[Double]],
+                                     vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.graft.{CentroidModel, ColumnShim, NearestCell}
     require(centroids.nonEmpty, "at least one centroid required")
     val model = new CentroidModel(df.sparkSession.sparkContext.broadcast(centroids))
@@ -135,16 +135,4 @@ object SemanticDedup {
       .select(col(idCol), col("cluster"), col("rank"), col("center_dist"))
   }
 
-  /** The deduplicated corpus: input rows whose id survived
-    * [[semanticDedup]]. Ids-only anti join — payload columns never move
-    * through the dedup shuffles. */
-  def keepRepresentatives(df: DataFrame, nClusters: Int, tau: Double,
-                          seed: Long, iters: Int = 5, sampleSize: Int = 10000,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding"): DataFrame = {
-    val droppedIds =
-      semanticDedup(df, nClusters, tau, seed, iters, sampleSize, idCol, vecCol)
-        .filter(!col("kept")).select(col(idCol).as("__drop_id"))
-    df.join(droppedIds, df(idCol) === col("__drop_id"), "left_anti")
-  }
 }

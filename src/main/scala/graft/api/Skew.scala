@@ -4,9 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Skew mitigation by key salting — the manual counterpart to AQE's
-  * skew-join splitting, for the shapes AQE cannot reach (broadcast-infeasible
-  * hot keys feeding aggregation, stateful ops keyed on a hot key, or any
-  * join AQE won't rewrite because the skew is in the map-side stats, not
+  * skew-join splitting, for the joins AQE cannot reach (a dim too big to
+  * broadcast, or any join AQE won't rewrite because the skew is in the map-side stats, not
   * the shuffle files).
   */
 object Skew {
@@ -48,22 +47,5 @@ object Skew {
       explode(array((0 until n).map(lit(_)): _*)))
     fs.join(ds, fs(factKey) === ds(dimKey) && fs("__salt") === ds("__salt"), joinType)
       .drop("__salt")
-  }
-
-  /** Two-level aggregation for skewed group keys: partial-aggregate on
-    * (key, salt), then combine the `n` partials per key. Correct for
-    * associative/commutative aggregates (sum/count/min/max — the partial
-    * and final columns are the caller's contract). At 100 TB this turns a
-    * single hot reducer into `n` without touching the map side: the first
-    * aggregate's map-side combine already shrinks each partition to
-    * #keys×n rows. */
-  def saltedAgg(df: DataFrame, key: String, scatter: Seq[Column], n: Int,
-                partial: Seq[Column], finalAgg: Seq[Column]): DataFrame = {
-    require(n >= 1, s"salt fan-out must be >= 1, got $n")
-    df.withColumn("__salt", pmod(xxhash64(scatter: _*), lit(n.toLong)).cast("int"))
-      .groupBy(col(key), col("__salt"))
-      .agg(partial.head, partial.tail: _*)
-      .groupBy(col(key))
-      .agg(finalAgg.head, finalAgg.tail: _*)
   }
 }

@@ -44,8 +44,8 @@ object TextAnalysis {
     * pipeline runs FIRST (before extraction spends a single cycle on the
     * page): drops rows whose `<meta name="robots">` directive list
     * contains `noindex` or `none` (tokens comma-split, trimmed,
-    * lowercased — [[graft.core.HtmlText.hasNoindex]]'s rule expressed in
-    * builtins so the verdict inlines into codegen; the trim is a
+    * lowercased — the rule expressed in builtins so the verdict
+    * inlines into codegen; the trim is a
     * `[\x00-\x20]` edge regexp, NOT Spark's space-only `trim`, because
     * multi-line meta attributes pad tokens with newlines and
     * `String.trim` strips every char ≤ U+0020). Pages without a robots
@@ -158,9 +158,6 @@ object TextAnalysis {
     pick
   }
 
-  /** Whitespace token count. */
-  def tokenCount(text: Column): Column = size(words(text))
-
   /** Distinct-token ratio (lexical diversity), exact double division. */
   def lexicalDiversity(text: Column): Column =
     size(array_distinct(words(text))).cast("double") / size(words(text))
@@ -190,7 +187,7 @@ object TextAnalysis {
     * not corpus-sized — before the one shuffle). `topK` then plans as
     * TakeOrderedAndProject: per-partition heaps + a driver merge of k rows,
     * never a full sort of the vocabulary. */
-  def vocabCounts(df: DataFrame, textCol: String): DataFrame =
+  private def vocabCounts(df: DataFrame, textCol: String): DataFrame =
     SparkEnv.spread(df) // tokenize parallelism must not be capped by file layout
       .select(explode(split(lower(col(textCol)), "[^a-z]+")).as("token"))
       .filter(length(col("token")) > 0)
@@ -652,7 +649,7 @@ object TextAnalysis {
     * rare-token noise scores high; curation thresholds both tails (the
     * CCNet recipe scores against an external LM's distribution; the
     * self-scored variant needs no model artifact and is fully
-    * reproducible). Tokenization is [[vocabCounts]]'s, so the vocabulary
+    * reproducible). Tokenization is [[vocabTopK]]'s, so the vocabulary
     * and the document tokens share one identity.
     *
     * Deterministic across engines the same two ways as [[tokenEntropy]]:

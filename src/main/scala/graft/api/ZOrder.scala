@@ -61,40 +61,13 @@ object ZOrder {
     * Lakehouse tables typically cluster on a (source, time, length)-shaped
     * triple; two dims leave the third scattered across every file.
     *
-    * CONTRACT: low 21 bits per dim (2^21 = 2M distinct codes — far beyond
-    * the 2^bits quantile grid [[quantileCode]] produces, which is the
-    * recommended feeder for heavy-tailed dims exactly as with
-    * [[zvalue2]]). Same pre-scaling rules: quantize/rank first, negatives
-    * and >2^21 domains are the caller's to fold in. */
+    * CONTRACT: low 21 bits per dim (2^21 = 2M distinct codes). Same
+    * pre-scaling rules as [[zvalue2]]: quantize/rank first, negatives and
+    * >2^21 domains are the caller's to fold in. */
   def zvalue3(a: Column, b: Column, c: Column): Column =
     spread3(a.cast("long"))
       .bitwiseOR(shiftleft(spread3(b.cast("long")), 1))
       .bitwiseOR(shiftleft(spread3(c.cast("long")), 2))
-
-  /** Rank-normalize a heavy-tailed dimension into [0, 2^bits) quantile
-    * codes for [[zvalue2]] — raw values unbalance the curve (a lognormal
-    * price column puts 99% of rows in the curve's first segments and the
-    * per-file min/max boxes stop discriminating). One bounded-memory
-    * Greenwald–Khanna pass (`stat.approxQuantile`, eager like the ANN
-    * quantizer training) collects 2^bits − 1 cut points; the code is then
-    * "count of cuts ≤ v" — a codegen'd fold over a ≤4095-element literal
-    * array, monotone in the value, so range predicates on the RAW column
-    * still map to contiguous code ranges and parquet stats still prune.
-    *
-    * Default 8 bits per dim = a 256×256 curve grid — ample for file-level
-    * skipping (files per table are thousands, not millions); more bits
-    * only lengthen the per-row fold. This is a LAYOUT helper: codes
-    * depend on approxQuantile's merge order, so don't build
-    * correctness-gated results on them — the written data itself is
-    * unchanged either way. */
-  def quantileCode(df: DataFrame, dim: Column, bits: Int = 8): Column = {
-    require(bits >= 1 && bits <= 12, s"bits must be in [1, 12], got $bits")
-    val nCuts = (1 << bits) - 1
-    val probs = (1 to nCuts).map(_.toDouble / (nCuts + 1)).toArray
-    val cuts = df.select(dim.cast("double").as("__q"))
-      .stat.approxQuantile("__q", probs, 1.0 / (4 << bits))
-    size(filter(lit(cuts), c => c <= dim.cast("double")))
-  }
 
   /** Write `df` as parquet clustered on the z-curve of (dimA, dimB):
     * range-partition into `nFiles` curve segments, sort each segment, drop

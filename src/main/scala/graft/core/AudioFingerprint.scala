@@ -90,7 +90,7 @@ object AudioFingerprint {
   /** 64-bit fingerprint of interleaved samples per the recipe above;
     * null (no hash is honest) for clips shorter than [[Segments]]
     * frames. */
-  def fp64(samples: Array[Int], frames: Int, channels: Int): java.lang.Long = {
+  private def fp64(samples: Array[Int], frames: Int, channels: Int): java.lang.Long = {
     if (frames < Segments) return null
     val mono = new Array[Long](frames)
     var t = 0

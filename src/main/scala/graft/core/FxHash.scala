@@ -44,7 +44,7 @@ object FxHash {
     * 8-byte words, then 4/2/1-byte remainders, each zero-extended into one
     * round. (Rust `from_ne_bytes` — native-endian — is little-endian on
     * every platform the reference ships for.) */
-  def writeBytes(state: Long, bytes: Array[Byte]): Long = {
+  private def writeBytes(state: Long, bytes: Array[Byte]): Long = {
     var h = state
     var i = 0
     val n = bytes.length

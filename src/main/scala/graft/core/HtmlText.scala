@@ -200,8 +200,8 @@ object HtmlText {
     *     to lowercase, FIRST occurrence of a name wins within a tag;
     *   - the returned content is trimmed but otherwise verbatim.
     *
-    * [[hasNoindex]] turns the directive into the drop verdict: the
-    * content is a comma-separated token list (tokens trimmed, folded
+    * [[graft.api.TextAnalysis.filterNoindex]] turns the directive into the
+    * drop verdict: the content is a comma-separated token list (tokens trimmed, folded
     * lowercase); `noindex` or `none` means the page must not be kept. */
   def metaRobots(s: String): String = {
     val n = s.length
@@ -368,16 +368,6 @@ object HtmlText {
     }
     null
   }
-
-  /** The drop verdict over [[metaRobots]] content: true iff the
-    * comma-separated directive list (tokens trimmed, lowercased)
-    * contains `noindex` or `none`. Null content (no robots meta) is
-    * false — absence means indexable. */
-  def hasNoindex(robots: String): Boolean =
-    robots != null && robots.split(",", -1).exists { t =>
-      val tok = t.trim.toLowerCase(java.util.Locale.ROOT)
-      tok == "noindex" || tok == "none"
-    }
 
   /** Main-content extraction — the jusText/trafilatura-class tier above
     * [[extract]]: the same scan, but each output line (block) additionally

@@ -33,7 +33,7 @@ object HyperLogLog {
   val MinP = 4
   val MaxP = 16
 
-  def alpha(m: Int): Double = m match {
+  private def alpha(m: Int): Double = m match {
     case 16 => 0.673
     case 32 => 0.697
     case 64 => 0.709
@@ -62,7 +62,7 @@ object HyperLogLog {
   }
 
   /** Raw harmonic-mean estimate, bit-deterministic (doc above). */
-  def rawEstimate(registers: Array[Byte]): Double = {
+  private def rawEstimate(registers: Array[Byte]): Double = {
     val m = registers.length
     var sum = 0.0
     var i = 0

@@ -105,8 +105,8 @@ object Shingles {
   }
 
   /** Shingle set over UTF-8 bytes (same semantics as fromText). */
-  def fromTextUtf8(bytes: Array[Byte], offset: Int, len: Int, ngramWidth: Int,
-                   salt: Option[String] = None): IntHashSet = {
+  private[core] def fromTextUtf8(bytes: Array[Byte], offset: Int, len: Int, ngramWidth: Int,
+                                 salt: Option[String] = None): IntHashSet = {
     val cps = new Array[Int](len)
     val n = decodeUtf8(bytes, offset, len, cps)
     toSet(windowHashes(FxHash.saltState(salt), cps, n, ngramWidth))
@@ -120,7 +120,8 @@ object Shingles {
 
   /** Shingle set from caller-provided shingle strings: each string hashed
     * whole as its code-point sequence (shingleset.rs:12-22). */
-  def fromShingles(shingles: Iterator[String], salt: Option[String] = None): IntHashSet = {
+  private[graft] def fromShingles(shingles: Iterator[String],
+                                  salt: Option[String] = None): IntHashSet = {
     val st = FxHash.saltState(salt)
     val set = new IntHashSet(16)
     while (shingles.hasNext) {

@@ -10,7 +10,7 @@ object SimHash {
 
   /** FxHash64 of one token's code points (length-prefixed, like the shingle
     * hash but without the u32 truncation). */
-  def tokenHash(cps: Array[Int], len: Int): Long = hashAt(cps, 0, len)
+  private[graft] def tokenHash(cps: Array[Int], len: Int): Long = hashAt(cps, 0, len)
 
   /** [[tokenHash]] straight off UTF-8 bytes — the aggregate/probe hot path:
     * two passes (count code points for the length prefix, then fold), zero
@@ -46,7 +46,7 @@ object SimHash {
   }
 
   /** [[tokenHash]] of cps[off, off+len) without a window copy. */
-  @inline def hashAt(cps: Array[Int], off: Int, len: Int): Long = {
+  @inline private def hashAt(cps: Array[Int], off: Int, len: Int): Long = {
     var h = FxHash.add(0L, len.toLong)
     var i = off
     val end = off + len

@@ -28,15 +28,14 @@ object Sketches {
 
   final val HashGamma: Long = 0x9e3779b97f4a7c15L
 
-  @inline def h1OfCodePoints(cps: Array[Int]): Long = SimHash.tokenHash(cps, cps.length)
-  @inline def h2Of(h1: Long): Long = FxHash.add(h1, HashGamma)
+  @inline private def h2Of(h1: Long): Long = FxHash.add(h1, HashGamma)
 
   @inline private def probe(h1: Long, h2: Long, i: Int, logSize: Int): Int =
     ((h1 + i.toLong * h2) >>> (64 - logSize)).toInt
 
   // ---- Bloom ----
 
-  def bloomWords(logm: Int): Int = 1 << (logm - 6) // m bits / 64
+  private def bloomWords(logm: Int): Int = 1 << (logm - 6) // m bits / 64
 
   def bloomAdd(words: Array[Long], h1: Long, k: Int, logm: Int): Unit = {
     val h2 = h2Of(h1)
@@ -124,7 +123,7 @@ object Sketches {
   // bit-deterministic like the rest of the family. Header = (9 << 32) | b
   // (above the CMS range, merges as counter-add).
 
-  def histBuckets(b: Int): Int = (64 - b) << b
+  private def histBuckets(b: Int): Int = (64 - b) << b
 
   def histEmpty(b: Int): Array[Long] = {
     val counters = new Array[Long](1 + histBuckets(b))
@@ -132,7 +131,7 @@ object Sketches {
     counters
   }
 
-  def histBucketOf(v: Long, b: Int): Int = {
+  private def histBucketOf(v: Long, b: Int): Int = {
     require(v >= 0, s"histogram values must be non-negative, got $v")
     if (v < (1L << b)) v.toInt
     else {
@@ -145,7 +144,7 @@ object Sketches {
 
   /** Lower bound of bucket i — the quantile estimate returned for ranks
     * landing in it (≤ true value < bound · (1 + 2^-b) in the log region). */
-  def histBucketLow(i: Int, b: Int): Long = {
+  private def histBucketLow(i: Int, b: Int): Long = {
     if (i < (1 << b)) i.toLong
     else {
       val o = i >>> b

@@ -108,7 +108,7 @@ final class StdRng(seed: Long) {
 
   /** rand_core BlockRng32 `next_u64`: two consecutive u32 words, lo then hi
     * (with the one-word-left stitch case preserved for exactness). */
-  def nextU64(): Long = {
+  private def nextU64(): Long = {
     if (bufPos >= 64) refill()
     if (bufPos == 63) {
       val lo = buf(63).toLong & 0xffffffffL
@@ -149,13 +149,13 @@ final class StdRng(seed: Long) {
   }
 
   /** rand 0.8.5 `Standard` f64: (u >> 11) * 2^-53, in [0,1). */
-  @inline def stdF64(): Double = (nextU64() >>> 11) * 1.1102230246251565e-16
+  @inline private def stdF64(): Double = (nextU64() >>> 11) * 1.1102230246251565e-16
 
   /** rand 0.8.5 `Open01` f64: top-52-bit mantissa into [1,2), minus
     * (1 - EPSILON/2), giving (0,1) — ln() of it is always finite. This is
     * what rand_distr 0.4.3's ziggurat Marsaglia tail draws (normal.rs
     * zero_case); `Standard` would admit exactly 0 and ln(0) = -Inf. */
-  @inline def open01F64(): Double =
+  @inline private def open01F64(): Double =
     java.lang.Double.longBitsToDouble((nextU64() >>> 12) | (1023L << 52)) -
       (1.0 - java.lang.Math.ulp(1.0) / 2.0)
 

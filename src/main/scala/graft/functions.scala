@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.lit
-import org.apache.spark.sql.graft.{BloomBuild, BloomContains, BpeCount, HtmlExtract, HtmlMainContent, HtmlMetaRobots, BpeRanks, BpeTokens, CmsBuild, CmsEstimate, ColumnShim, CosineSim, CosineSketch64, HammingDist, HistQuantile, HistSketch, HllDistinct, HllEstimate, HllSketch, LnPinned, LshEuclidean, LshJaccard, LshMin, MinFingerprint, ShingleHashes, SimHash64, SketchMerge, TopKByScore, WinnowFingerprint, ZlibLen}
+import org.apache.spark.sql.graft.{BloomBuild, BloomContains, BpeCount, HtmlExtract, HtmlMainContent, HtmlMetaRobots, BpeRanks, BpeTokens, CmsBuild, CmsEstimate, ColumnShim, CosineSketch64, HammingDist, HistQuantile, HistSketch, HllDistinct, HllEstimate, HllSketch, LnPinned, LshEuclidean, LshJaccard, LshMin, ShingleHashes, SimHash64, SketchMerge, TopKByScore, ZlibLen}
 
 /** Typed DataFrame-API bindings for the LSH functions (the reference exposes
   * SQL only; this is the idiomatic Spark column surface on top of the same
@@ -114,15 +114,6 @@ object functions {
   def levenshtein_cp(a: Column, b: Column): Column =
     toCol(org.apache.spark.sql.graft.LevenshteinCp(col2expr(a), col2expr(b)))
 
-  /** 64-bit perceptual image difference hash over the decoded raster
-    * ([[graft.core.ImageHash]]); NULL for undecodable payloads. */
-  def image_dhash(bytes: Column): Column =
-    toCol(org.apache.spark.sql.graft.ImageHash64(col2expr(bytes), "dhash"))
-
-  /** 64-bit perceptual image average hash over the decoded raster. */
-  def image_ahash(bytes: Column): Column =
-    toCol(org.apache.spark.sql.graft.ImageHash64(col2expr(bytes), "ahash"))
-
   /** Integer-exact box-filter image downscale over the decoded raster
     * ([[graft.core.ImageHash.resizeBox]]): struct(width, height, out_w,
     * out_h, pixels); NULL for undecodable payloads. */
@@ -138,14 +129,6 @@ object functions {
   /** Hamming distance between two 64-bit hashes. */
   def hamming_dist(a: Column, b: Column): Column =
     toCol(HammingDist(col2expr(a), col2expr(b)))
-
-  /** Minimum k-gram FxHash64 document fingerprint. */
-  def min_fingerprint(text: Column, k: Int): Column =
-    toCol(MinFingerprint(col2expr(text), col2expr(lit(k.toLong))))
-
-  /** Winnowed k-gram fingerprint set (window w). */
-  def winnow_fingerprint(text: Column, k: Int, w: Int): Column =
-    toCol(WinnowFingerprint(col2expr(text), col2expr(lit(k.toLong)), col2expr(lit(w.toLong))))
 
   /** Sorted distinct u32 FxHash shingle set of the text's w-code-point
     * windows — the set lsh_min/lsh_jaccard operate on, as a column. */
@@ -205,12 +188,6 @@ object functions {
   /** 64-bit random-hyperplane cosine sketch (sign LSH). */
   def cosine_sketch64(vec: Column, nbits: Int, seed: Long): Column =
     toCol(CosineSketch64(col2expr(vec), nbits, seed))
-
-  /** Pairwise cosine similarity (codegen'd, strict left-to-right
-    * accumulation — the engine's bit-deterministic scoring kernel; also
-    * [[graft.api.Ann.cosine]]). */
-  def cosine_sim(a: Column, b: Column): Column =
-    toCol(CosineSim(col2expr(a), col2expr(b)))
 
   /** Byte-level BPE token count under a caller-supplied merge list (the
     * public GPT-2-family algorithm; no model file is bundled — learned

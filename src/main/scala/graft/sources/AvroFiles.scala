@@ -34,7 +34,8 @@ object AvroFiles {
 
   /** Spark [[StructType]] → Avro record schema. Nullable fields become
     * `union(null, T)` — the standard Avro optionality encoding. */
-  def avroSchemaFor(schema: StructType, recordName: String = "graft_record"): Schema = {
+  private[sources] def avroSchemaFor(schema: StructType,
+                                     recordName: String = "graft_record"): Schema = {
     def atom(dt: DataType): Schema = dt match {
       case LongType    => Schema.create(Schema.Type.LONG)
       case IntegerType => Schema.create(Schema.Type.INT)

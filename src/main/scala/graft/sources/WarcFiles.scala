@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
   * columns: `(path, record_offset, warc_type, record_id, target_uri,
   * warc_date, content_type, content)` — `content` is the raw block
   * bytes; `response` records keep their HTTP envelope in the block, per
-  * spec ([[httpBody]] strips it when wanted).
+  * spec ([[httpBodyText]] strips and decodes it when wanted).
   */
 object WarcFiles {
 
@@ -118,26 +118,6 @@ object WarcFiles {
         org.apache.spark.sql.Encoders.BINARY))
       .flatMap { case (p, bytes) => parseWarc(p, bytes) }(
         org.apache.spark.sql.Encoders.row(schema))
-  }
-
-  /** Strip an HTTP response envelope from a block: everything past the
-    * first CRLF CRLF. Blocks without one (resource records, truncated
-    * envelopes) pass through whole — the caller asked for the body and
-    * the whole block is the best available answer. Pure codegen'd
-    * byte-less expression work is not possible on binary, so this is a
-    * driver-composable Column over built-ins: decode → locate → slice.
-    *
-    * CONTRACT: the result is a UTF-8 DECODE of the body — non-UTF-8
-    * bytes become U+FFFD and compressed bodies (Content-Encoding: gzip)
-    * come out as mojibake. That is the right shape for a tape already
-    * known to be identity-encoded, but real crawl tapes are mostly
-    * gzip'd — use [[httpBodyText]] (Content-Encoding-aware) for those;
-    * a caller needing the raw body bytes must slice `content` itself. */
-  def httpBody(content: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions._
-    val text = content.cast("string")
-    val sep = instr(text, "\r\n\r\n")
-    when(sep > 0, text.substr(sep + lit(4), length(text))).otherwise(text)
   }
 
   /** Content-Encoding-aware body decode

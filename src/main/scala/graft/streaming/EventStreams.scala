@@ -350,17 +350,6 @@ object EventStreams {
       }
   }
 
-  /** Streaming exact dedup on event ids: state is bounded by the watermark
-    * (dropDuplicatesWithinWatermark), so long-running pipelines don't
-    * accumulate unbounded id state; in batch mode it degrades to a plain
-    * dropDuplicates. */
-  def dedupEvents(events: DataFrame, idCols: Seq[String] = Seq("event_id"),
-                  watermark: String = "1 hour"): DataFrame = {
-    if (events.isStreaming)
-      events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(idCols)
-    else events.dropDuplicates(idCols)
-  }
-
   /** Streaming exact content dedup: drops rows whose text (byte-exact, via
     * the codegen'd built-in xxhash64) was already seen within the watermark
     * horizon. The streaming twin of `Dedup.exact`: state is one 64-bit hash

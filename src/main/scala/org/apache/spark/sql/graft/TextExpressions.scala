@@ -321,7 +321,7 @@ object HtmlExtract {
   * `<meta name="robots">` tag, or NULL when the page carries none —
   * the page-level crawl opt-out a compliant pipeline honors before
   * curation ([[graft.core.HtmlText.metaRobots]] states the exact scan
-  * and attribute rules; `HtmlText.hasNoindex` is the drop verdict).
+  * and attribute rules; `TextAnalysis.filterNoindex` is the drop verdict).
   * NULL → NULL; codegen is one static call. */
 case class HtmlMetaRobots(child: Expression)
     extends UnaryExpression with ImplicitCastInputTypes {

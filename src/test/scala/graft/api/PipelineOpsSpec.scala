@@ -339,6 +339,32 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("fused pair exec: same pairs at any input split, shuffle width or AQE") {
+    // neither the input's partitioning, nor the shuffle width, nor adaptive
+    // execution may change which pairs come out, or their similarities
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def both(docs: org.apache.spark.sql.DataFrame) = (
+      pairs(BandedLsh.nearDupPairs(docs, "doc_id", "text", 4, 8, 3, 123L, 0.5)),
+      pairs(BandedLsh.bandedSelfJoinPairs(docs, "doc_id", "text", 4, 8, 3,
+        Seq(123L, 7L), 0.5)))
+    val base = both(plantedDocs)
+    assert(base._1.nonEmpty && base._2.nonEmpty)
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      for (inParts <- Seq(1, 7); width <- Seq(3, 16); aqe <- Seq(true, false)) {
+        spark.conf.set(keys(0), width.toLong)
+        spark.conf.set(keys(1), aqe)
+        val got = both(plantedDocs.repartition(inParts))
+        assert(got == base, s"input $inParts partitions, width $width, AQE $aqe")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("nearDupPairs equals the README SQL blocking idiom (per-band UNION)") {
     graft.sql.LshFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -1428,6 +1454,37 @@ class PipelineOpsSpec extends AnyFunSuite {
       BucketedWrite.stage(spark, live)(identity)
       BucketedWrite.swap(spark, live)
       assert(spark.table(live).count() == 5)
+    } finally Seq(live, scratch).foreach(BucketedWrite.dropTable(spark, _))
+  }
+
+  test("BucketedWrite: a cut stage write names the scratch directory to delete") {
+    // a restart cut the stage write: the scratch is a bare directory with
+    // only `_temporary/` in it, which no catalog call can register, so the
+    // refusal must name the directory itself as the thing to delete
+    val live = "graft_test_cut_stage"
+    val scratch = BucketedWrite.scratchOf(live)
+    val rows = (0L until 40L).map(i => (i, i % 5, s"row $i")).toDF("id", "k", "v")
+    BucketedWrite.saveBucketed(rows, live, 4, Seq("k"))
+    def liveRows = spark.table(live).collect().map(_.toString).sorted.toSeq
+    val intact = liveRows
+    val dir = BucketedWrite.tableDir(spark, scratch)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      fs.create(new org.apache.hadoop.fs.Path(dir, "_temporary/0/part-00000.parquet")).close()
+      val e = intercept[IllegalArgumentException] {
+        BucketedWrite.stage(spark, live)(_.filter($"id" % 2 === 0))
+      }
+      assert(e.getMessage.contains("interrupted"), e.getMessage)
+      assert(!spark.catalog.tableExists(scratch), "a bare directory cannot be registered")
+      val step = s"delete the directory $dir and re-run"
+      assert(e.getMessage.contains(step), e.getMessage)
+      assert(liveRows == intact, "the refusal touched the live table")
+      fs.delete(dir, true)
+      BucketedWrite.stage(spark, live)(_.filter($"id" % 2 === 0))
+      BucketedWrite.swap(spark, live)
+      assert(spark.table(live).select("id").as[Long].collect().sorted.toSeq ==
+        (0L until 40L by 2))
+      assert(!BucketedWrite.scratchLeftover(spark, scratch))
     } finally Seq(live, scratch).foreach(BucketedWrite.dropTable(spark, _))
   }
 

@@ -57,7 +57,7 @@ class QualityClassifierSpec extends AnyFunSuite {
       QualityClassifier.nbPrior(0, 5)
     }
     intercept[IllegalArgumentException] {
-      QualityClassifier.nbLogOdds(corpus, corpus, "text", buckets = 1)
+      QualityClassifier.trainScore(corpus, "text", col("is_seed"), buckets = 1)
     }
   }
 }

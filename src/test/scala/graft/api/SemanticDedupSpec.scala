@@ -64,14 +64,7 @@ class SemanticDedupSpec extends AnyFunSuite {
     assert(c1.values.toSet.size > 1, "sample-init must not collapse to one cell")
   }
 
-  test("keepRepresentatives returns exactly the kept rows; IVF centroids reusable") {
-    val verdicts = SemanticDedup.semanticDedup(emb, nClusters = 4, tau = 0.3,
-      seed = 77L, sampleSize = 100)
-    val keptIds = verdicts.filter(col("kept")).collect().map(_.getLong(0)).toSet
-    val survivors = SemanticDedup.keepRepresentatives(emb, nClusters = 4,
-      tau = 0.3, seed = 77L, sampleSize = 100)
-    assert(survivors.collect().map(_.getLong(0)).toSet == keptIds)
-    // caller-supplied centroids: a fitted IVF index's quantizer slots in
+  test("assignToCentroids: a fitted IVF index's centroids slot in") {
     val idx = Ann.fitIvf(emb, nlist = 4, seed = 77L, sampleSize = 100)
     val viaIvf = SemanticDedup.assignToCentroids(emb, idx.centroids)
     assert(viaIvf.select("vec_id", "cluster").count() == emb.count())

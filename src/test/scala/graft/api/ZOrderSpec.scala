@@ -136,27 +136,6 @@ class ZOrderSpec extends AnyFunSuite {
     assert(zFiles <= 8, s"z3 layout should confine the box, touched $zFiles")
   }
 
-  test("quantileCode balances a heavy-tailed dim and stays monotone") {
-    import spark.implicits._
-    // lognormal-ish: x = exp(N(0,2)) — raw values put almost all mass in
-    // the first sliver of the range
-    val rng = new scala.util.Random(23)
-    val vals = (0 until 40000).map(i => (i.toLong, math.exp(rng.nextGaussian() * 2)))
-    val df = vals.toDF("id", "x")
-    val coded = df.withColumn("c", ZOrder.quantileCode(df, col("x"), bits = 8))
-    val counts = coded.groupBy("c").count().collect()
-      .map(r => (r.getInt(0), r.getLong(1)))
-    assert(counts.forall { case (c, _) => c >= 0 && c <= 255 })
-    // balance: every populated code holds well under raw-value skew —
-    // the heaviest bucket stays within ~3x of the ideal 40000/256
-    assert(counts.map(_._2).max <= 3 * (40000 / 256),
-      s"max bucket ${counts.map(_._2).max}")
-    assert(counts.length >= 200, s"only ${counts.length} codes populated")
-    // monotone: sort by value, codes must be non-decreasing
-    val byVal = coded.orderBy("x").select("c").collect().map(_.getInt(0))
-    byVal.sliding(2).foreach { case Array(a, b) => assert(a <= b) case _ => }
-  }
-
   test("within a file, rows are in non-decreasing z order (curve locality)") {
     import spark.implicits._
     val rng = new scala.util.Random(5)

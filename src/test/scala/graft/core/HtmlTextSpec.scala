@@ -168,17 +168,6 @@ class HtmlTextSpec extends AnyFunSuite {
       "'<metadata' is not a meta tag (boundary char check)")
   }
 
-  test("hasNoindex: comma token list, noindex/none drop, absence keeps") {
-    assert(HtmlText.hasNoindex("noindex, follow"))
-    assert(HtmlText.hasNoindex(" NONE "))
-    assert(HtmlText.hasNoindex("nofollow,\n noindex"),
-      "multi-line attribute padding trims like String.trim (all <= U+0020)")
-    assert(!HtmlText.hasNoindex("index, follow"))
-    assert(!HtmlText.hasNoindex("nofollow"), "nofollow alone is indexable")
-    assert(!HtmlText.hasNoindex(null))
-    assert(!HtmlText.hasNoindex(""))
-  }
-
   test("main content: spaces never count toward length or density") {
     // 24 counted chars padded with many spaces: still under a 25 floor
     assert(m("<p>" + ("ab " * 12) + "</p>") == "")

@@ -46,7 +46,7 @@ class WarcFilesSpec extends AnyFunSuite {
       s"wrap must surface the declared length: ${e3.getMessage}")
   }
 
-  test("read: distributed parse over a 2-file tape; httpBody strips envelopes") {
+  test("read: distributed 2-file tape parse; httpBodyText strips envelopes") {
     val base = java.nio.file.Files.createTempDirectory("warc_spec")
     val httpBlock = ("HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" +
       "<p>body</p>").getBytes("UTF-8")
@@ -55,7 +55,7 @@ class WarcFilesSpec extends AnyFunSuite {
     java.nio.file.Files.write(base.resolve("b.warc"),
       WarcFiles.buildWarc(Seq((2L, "u2", httpBlock))))
     val got = WarcFiles.read(spark, s"$base/*.warc")
-      .withColumn("body", WarcFiles.httpBody(col("content")))
+      .withColumn("body", WarcFiles.httpBodyText(col("content")))
       .select("target_uri", "body").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got("u1") == "plain", "no envelope: block passes through whole")
