@@ -39,8 +39,7 @@ object PlanDump {
           col("text"))
         val bg = api.Dedup.gramHashes(batch, "doc_id", "text", 8, true,
           api.Tokenizers.asciiWords)
-        val (hits, newFlags) =
-          api.Dedup.appendFlagsFrames(bg, t, 8, crossDocOnly = true)
+        val (hits, newFlags) = api.Dedup.appendFlagsFrames(bg, t, 8)
         newFlags.explain("formatted")
         hits.unpersist()
       case other => sys.error(s"unknown mode '$other'")

@@ -190,15 +190,14 @@ object Ann {
     * the data.
     *
     * Centroids: `iters` rounds of Lloyd's algorithm from seeded-random unit
-    * starts, computed on a driver-collected sample (`sampleSize` rows) —
+    * starts, computed on a driver-collected sample (10 000 rows) —
     * the quantizer is a tiny model; the corpus itself never leaves executors.
     */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nlist: Int, nprobe: Int, seed: Long, iters: Int = 5,
-              sampleSize: Int = 10000,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k") // aligned with pqTopK/ivfPqTopK
-    fitIvf(corpus, nlist, seed, iters, sampleSize, idCol, vecCol)
+    fitIvf(corpus, nlist, seed, iters, idCol, vecCol)
       .search(queries, k, nprobe, idCol, vecCol)
   }
 
@@ -237,10 +236,9 @@ object Ann {
     * nothing; repeated-batch callers stop paying the training sample pass and
     * (with `cells` persisted) the assignment scan per batch. */
   def fitIvf(corpus: DataFrame, nlist: Int, seed: Long, iters: Int = 5,
-             sampleSize: Int = 10000,
              idCol: String = "vec_id", vecCol: String = "embedding"): IvfIndex = {
     val spark = corpus.sparkSession
-    val centroids = trainQuantizer(corpus, nlist, seed, iters, sampleSize, idCol, vecCol)
+    val centroids = trainQuantizer(corpus, nlist, seed, iters, 10000, idCol, vecCol)
     // codegen'd expressions over a broadcast centroid table — the corpus-wide
     // assignment pass reads each vector once out of ArrayData with no boxed
     // Seq[Double] per-row conversion (the former Scala-UDF tax)
@@ -399,12 +397,12 @@ object Ann {
     * cells for the full IVF-PQ layout (cluster pruning × compressed
     * residual scan) — both halves exist and are oracle-gated separately. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, m: Int, ksub: Int,
-             seed: Long, iters: Int = 5, sampleSize: Int = 10000,
+             seed: Long, iters: Int = 5,
              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.graft.{AdcTables, ColumnShim, PqAdcDist, PqCodes, PqModel}
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = corpus.sparkSession
-    val books = trainPq(corpus, m, ksub, seed, iters, sampleSize, idCol, vecCol)
+    val books = trainPq(corpus, m, ksub, seed, iters, 10000, idCol, vecCol)
     val model = new PqModel(spark.sparkContext.broadcast(books))
     val codes = corpus.select(col(idCol).cast("long").as("neighbor_id"),
       ColumnShim.column(PqCodes(ColumnShim.expression(col(vecCol)), model)).as("codes"))
@@ -470,10 +468,10 @@ object Ann {
     * like [[pqTopK]]. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                 nlist: Int, nprobe: Int, m: Int, ksub: Int, seed: Long,
-                iters: Int = 5, sampleSize: Int = 10000,
+                iters: Int = 5,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    fitIvfPq(corpus, nlist, m, ksub, seed, iters, sampleSize, idCol, vecCol)
+    fitIvfPq(corpus, nlist, m, ksub, seed, iters, idCol, vecCol)
       .search(queries, k, nprobe, idCol, vecCol)
   }
 
@@ -547,12 +545,12 @@ object Ann {
     * index; production corpora want the cell pruning, so only the composed
     * form gets the fitted API. */
   def fitIvfPq(corpus: DataFrame, nlist: Int, m: Int, ksub: Int, seed: Long,
-               iters: Int = 5, sampleSize: Int = 10000,
+               iters: Int = 5,
                idCol: String = "vec_id", vecCol: String = "embedding"): IvfPqIndex = {
     import org.apache.spark.sql.graft.{CentroidModel, ColumnShim, NearestCell, PqCodes, PqModel}
     val spark = corpus.sparkSession
-    val cents = trainQuantizer(corpus, nlist, seed, iters, sampleSize, idCol, vecCol)
-    val books = trainPq(corpus, m, ksub, seed + 1, iters, sampleSize, idCol, vecCol)
+    val cents = trainQuantizer(corpus, nlist, seed, iters, 10000, idCol, vecCol)
+    val books = trainPq(corpus, m, ksub, seed + 1, iters, 10000, idCol, vecCol)
     val cmodel = new CentroidModel(spark.sparkContext.broadcast(cents))
     val pmodel = new PqModel(spark.sparkContext.broadcast(books))
     val encoded = corpus.select(col(idCol).cast("long").as("neighbor_id"),
@@ -770,7 +768,7 @@ object Ann {
     * ballooned cells' codes joined to `corpus` on id for the vectors
     * (only the drifted rows cross the wire; at 100 TB give the join a
     * broadcastable flagged side or a bucketed corpus), one bounded sample
-    * collect per ballooned cell (≤ `sampleSize` vectors, ballooned cells
+    * collect per ballooned cell (≤ 10 000 vectors, ballooned cells
     * ≤ nlist), and one partitioned rewrite of the reassigned rows. The
     * reassigned set is MATERIALIZED to a scratch table before the old
     * partitions drop — the rewrite must never re-read what it replaces.
@@ -798,8 +796,7 @@ object Ann {
     * rows under superseded cell geometry — searches stay approximate-
     * correct and re-running after recovery converges. */
   def rebalanceIvfPqCells(corpus: DataFrame, tablePrefix: String, seed: Long,
-                          maxSkew: Double = 4.0, iters: Int = 5,
-                          sampleSize: Int = 10000,
+                          maxSkew: Double = 4.0,
                           idCol: String = "vec_id",
                           vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.graft.{CentroidModel, ColumnShim, NearestCell}
@@ -838,7 +835,7 @@ object Ann {
       val report = ballooned.map { case (c, rows, skew) =>
         val k = math.max(2, math.ceil(2.0 * skew / maxSkew).toInt)
         val subs = trainQuantizer(flagged.filter(col("cell") === c),
-          k, seed + c, iters, sampleSize, "neighbor_id", "__vec",
+          k, seed + c, 5, 10000, "neighbor_id", "__vec",
           initFromSample = true)
         newCents(c) = subs(0)
         extras ++= subs.drop(1)
@@ -1067,7 +1064,7 @@ object Ann {
     * per-cell population. */
   def reindexIvfPq(corpus: DataFrame, tablePrefix: String, nlist: Int,
                    m: Int, ksub: Int, seed: Long, iters: Int = 5,
-                   sampleSize: Int = 10000, idCol: String = "vec_id",
+                   idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
     val spark = corpus.sparkSession
     val codesTable = s"${tablePrefix}_codes"
@@ -1076,8 +1073,7 @@ object Ann {
       s"$scratch exists: a prior reindex of '$tablePrefix' was interrupted. " +
         "Reindex is deterministic in (corpus, seed) — DROP the scratch and " +
         "re-run; nothing needs rescuing from it.")
-    val idx = fitIvfPq(corpus, nlist, m, ksub, seed, iters, sampleSize,
-      idCol, vecCol)
+    val idx = fitIvfPq(corpus, nlist, m, ksub, seed, iters, idCol, vecCol)
     idx.encoded.write.format("parquet").mode("overwrite").saveAsTable(scratch)
     BucketedWrite.dropTable(spark, s"${tablePrefix}_model")
     // insertInto is positional and the live table keeps its partition

@@ -19,20 +19,19 @@ object BandedLsh {
     * a threshold and required recall at that threshold, this returns the
     * LARGEST row count r (steepest curve → fewest sub-threshold false
     * candidates, i.e. least verification work) whose required band count
-    * b = ceil(ln(1−recall) / ln(1−threshold^r)) fits `maxBands`, plus
-    * that b. Cost model: bands multiply the blocking join's exploded-row
-    * volume linearly, while rows only lengthen each signature — so cap
-    * `maxBands` by shuffle budget and let r absorb the precision.
+    * b = ceil(ln(1−recall) / ln(1−threshold^r)) fits 64 bands, plus
+    * that b, with r at most 16. Cost model: bands multiply the blocking
+    * join's exploded-row volume linearly, while rows only lengthen each
+    * signature — so the band count is capped by shuffle budget and r
+    * absorbs the precision.
     *
-    * Returns (bandCount, bandSize). Always satisfiable: r=1 needs
-    * b = ln(1−recall)/ln(1−threshold) which is finite for threshold>0;
-    * if even that exceeds maxBands, this throws rather than silently
-    * under-recalling. */
-  def planBands(threshold: Double, targetRecall: Double,
-                maxBands: Int = 64, maxRows: Int = 16): (Int, Int) = {
+    * Returns (bandCount, bandSize). r=1 needs
+    * b = ln(1−recall)/ln(1−threshold), finite for threshold>0; if even
+    * that exceeds 64, this throws rather than silently under-recalling. */
+  def planBands(threshold: Double, targetRecall: Double): (Int, Int) = {
     require(threshold > 0.0 && threshold < 1.0, s"threshold in (0,1), got $threshold")
     require(targetRecall > 0.0 && targetRecall < 1.0, s"recall in (0,1), got $targetRecall")
-    require(maxBands >= 1 && maxRows >= 1, "maxBands and maxRows must be >= 1")
+    val maxBands = 64
     def bandsFor(r: Int): Int = {
       val hit = math.pow(threshold, r) // P(one band matches the pair)
       val missOne = 1.0 - hit
@@ -44,12 +43,12 @@ object BandedLsh {
       else if (missOne >= 1.0) Int.MaxValue
       else math.ceil(math.log1p(-targetRecall) / math.log(missOne)).toInt.max(1)
     }
-    (maxRows to 1 by -1).iterator
+    (16 to 1 by -1).iterator
       .map(r => (bandsFor(r), r))
       .find(_._1 <= maxBands)
       .getOrElse(throw new IllegalArgumentException(
         s"recall $targetRecall at threshold $threshold needs ${bandsFor(1)} " +
-          s"bands even at bandSize=1 — raise maxBands or lower the target"))
+          s"bands even at bandSize=1, over the $maxBands-band budget — lower the target"))
   }
 
   /** The S-curve itself: P(pair of similarity `s` becomes a candidate)
@@ -250,11 +249,10 @@ object BandedLsh {
   }
 
   /** [[nearDupPairs]] with mega-bucket protection: runs [[candidateCensus]]
-    * first and runs the same fused operator with `numBlocks` triangle
-    * blocks instead of one when a single bucket exceeds
-    * `maxRelationalBucket` (or, if the caller sets a budget, total candidate
-    * volume exceeds `maxRelationalCandidates`). Same (id_a, id_b, sim)
-    * output either way (spec-pinned).
+    * first and runs the same fused operator with 8 triangle blocks instead
+    * of one when a single bucket exceeds 8192 rows (or, if the caller sets
+    * a budget, total candidate volume exceeds `maxRelationalCandidates`).
+    * Same (id_a, id_b, sim) output either way (spec-pinned).
     *
     * Why 8192: at one block a bucket's C(n,2) comparisons land on ONE task
     * (8192²/2 ≈ 3.4e7 pairs, growing quadratically); triangle blocking
@@ -264,13 +262,10 @@ object BandedLsh {
   def nearDupPairsAdaptive(df: DataFrame, idCol: String, textCol: String,
                            ngramWidth: Int, bandCount: Int, bandSize: Int, seed: Long,
                            threshold: Double,
-                           maxRelationalCandidates: Long = Long.MaxValue,
-                           maxRelationalBucket: Long = 8192L,
-                           numBlocks: Int = 8): DataFrame = {
+                           maxRelationalCandidates: Long = Long.MaxValue): DataFrame = {
     val (cand, maxBucket, _) =
       candidateCensus(df, idCol, textCol, ngramWidth, bandCount, bandSize, seed)
-    val blocks =
-      if (cand <= maxRelationalCandidates && maxBucket <= maxRelationalBucket) 1 else numBlocks
+    val blocks = if (cand <= maxRelationalCandidates && maxBucket <= 8192L) 1 else 8
     inIdType(df, idCol, bandedSelfJoinPairs(df, idCol, textCol, ngramWidth, bandCount,
       bandSize, Seq(seed), threshold, blocks))
   }
@@ -519,12 +514,12 @@ object BandedLsh {
     * index instead ([[saveSignatureIndex]] + [[nearDupAgainstIndex]]) and
     * pay the corpus-side hashing once. Returns `(id_a, id_b, sim)` with
     * sim > threshold; both banded inputs are projected to ids before the
-    * join (texts re-attach at verification). */
+    * join (texts re-attach at verification). The band join takes
+    * [[bandJoinSkewSafe]]'s default hot threshold and block count. */
   def nearDupJoin(a: DataFrame, b: DataFrame,
                   idColA: String, textColA: String, idColB: String, textColB: String,
                   ngramWidth: Int, bandCount: Int, bandSize: Int, seed: Long,
-                  threshold: Double,
-                  hotThreshold: Long = 1000000L, blocks: Int = 16): DataFrame = {
+                  threshold: Double): DataFrame = {
     // Deliberately NOT checkpointed: bandJoinSkewSafe consumes each side
     // three times (count + cold + hot), but measured at sf0.1 an eager
     // localCheckpoint COSTS more than the banding recompute it saves
@@ -536,7 +531,7 @@ object BandedLsh {
       .select(col(idColA).as("id_a"), col("band"), col("band_hash"))
     val rb = bandedRows(b, idColB, textColB, ngramWidth, bandCount, bandSize, seed)
       .select(col(idColB).as("id_b"), col("band"), col("band_hash"))
-    val cand = bandJoinSkewSafe(ra, rb, col("id_a"), hotThreshold, blocks)
+    val cand = bandJoinSkewSafe(ra, rb, col("id_a"))
       .select("id_a", "id_b")
       .distinct()
     cand
@@ -713,8 +708,9 @@ object BandedLsh {
     * row of `deletedIds` from BOTH stores (bucketed main + hot sidecar)
     * without re-hashing, re-banding, or even touching the corpus text —
     * the index is ids+hashes only, so compaction is an id-column-scan-bound
-    * rewrite, never a corpus pass. The deletion set broadcasts (takedown
-    * lists are bounded; a corpus-scale deletion is a rebuild).
+    * rewrite, never a corpus pass. The deletion set is read once and
+    * broadcast (takedown lists are bounded; a corpus-scale deletion is a
+    * rebuild), and both stores' match counts come from one job.
     *
     * Bucket CLASSIFICATION stays frozen, symmetric with the append
     * contract: a hot bucket whose population drops below the cap stays in
@@ -747,22 +743,29 @@ object BandedLsh {
     import spark.implicits._
     val hotTable = s"${table}_hot"
     Seq(table, hotTable).foreach(BucketedWrite.refuseLeftover(spark, _))
-    val del = broadcast(deletedIds
-      .select(col(deletedIds.columns.head).cast("long").as("corpus_id"))
-      .distinct())
-    // the two per-store match counts are independent TINY read-only jobs
-    // (broadcast-probe scans dominated by the scheduling floor) —
-    // overlapped (guide §2.6); the heavier staging writes below stay
-    // sequential, and the swaps stay sequential and ordered (sidecar
-    // first), which is the crash contract
-    val hotLive = spark.catalog.tableExists(hotTable)
-    val Seq(mainRemoved, hotRemoved) = Par.run(spark, Seq[(String, () => Long)](
-      (s"compactSignatureIndex($table): main match count", () =>
-        spark.table(table).join(del, Seq("corpus_id"), "left_semi").count()),
-      (s"compactSignatureIndex($table): hot match count", () =>
-        if (hotLive)
-          spark.table(hotTable).join(del, Seq("corpus_id"), "left_semi").count()
-        else 0L)))
+    // ONE read of the deletion set: a broadcast already bounds it by
+    // driver memory, so it is collected once and every consumer below
+    // reads the driver-side copy (the staging joins as a local relation)
+    val ids = deletedIds.select(col(deletedIds.columns.head).cast("long"))
+      .collect().iterator.filterNot(_.isNullAt(0)).map(_.getLong(0)).toSet
+    val del = broadcast(ids.toSeq.toDF("corpus_id"))
+    // both stores' match counts in ONE job: the stores' id columns, tagged
+    // by store and unioned, are probed against the broadcast id set and
+    // counted per tag
+    def tagged(store: String, t: String) =
+      spark.table(t).select(lit(store).as("store"), col("corpus_id"))
+    val stores =
+      if (spark.catalog.tableExists(hotTable))
+        tagged("main", table).unionByName(tagged("hot", hotTable))
+      else tagged("main", table)
+    val bIds = spark.sparkContext.broadcast(ids)
+    val removed =
+      try stores.rdd
+        .filter(r => !r.isNullAt(1) && bIds.value.contains(r.getLong(1)))
+        .map(_.getString(0)).countByValue()
+      finally bIds.destroy()
+    val mainRemoved = removed.getOrElse("main", 0L)
+    val hotRemoved = removed.getOrElse("hot", 0L)
     // stage every survivor set BEFORE the first swap: the only
     // unrecoverable-by-rerun window is inside a RENAME, and staging first
     // keeps that window to the two metadata operations per store
@@ -773,7 +776,9 @@ object BandedLsh {
       live.join(del, Seq("corpus_id"), "left_anti")
         .select(Seq("band", "band_hash", "corpus_id").map(col): _*)
     // the staging writes stay sequential: each is a saturating scan+write
-    // (the overlap-vs-convoy measurement in saveSignatureIndex's note)
+    // (the overlap-vs-convoy measurement in saveSignatureIndex's note), and
+    // the swaps stay sequential and ordered (sidecar first), which is the
+    // crash contract
     if (mainRemoved > 0) BucketedWrite.stage(spark, table)(survivors)
     if (hotRemoved > 0) BucketedWrite.stage(spark, hotTable)(survivors)
     if (hotRemoved > 0) BucketedWrite.swap(spark, hotTable)

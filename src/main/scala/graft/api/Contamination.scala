@@ -63,38 +63,22 @@ object Contamination {
       .filter(col("shared_ngrams") >= minShared)
   }
 
-  /** [[sharedNgrams]] behind a broadcast BLOOM pre-filter — the shape for
-    * benchmark suites too big to broadcast as an exact join hash table.
-    * [[sharedNgrams]] broadcasts the bench's exploded shingle set (fine to
-    * ~10^7 shingles); a full eval-suite sweep can carry 10^8+, where the
-    * broadcast table is multi-GB per executor. A Bloom filter over the same
-    * hashes is 2^log2m BITS regardless (log2m=30 → 128 MB for ~1% fp at
-    * 10^8 keys), so it still broadcasts — and `might_contain=false` is a
-    * guaranteed non-member, so the map-side probe drops every corpus
-    * shingle outside the bench set (minus the fp rate) BEFORE any join.
-    * The exact join then eliminates the fp's, so the output is
-    * bit-identical to [[sharedNgrams]] (the gate pins both paths to one
-    * oracle). Its strategy is the `broadcastExact` knob:
-    *
-    *  - `true` (default): the exact bench side broadcasts like
-    *    [[sharedNgrams]]' — the bloom is a pure map-side pre-prune that
-    *    cuts probe/aggregation work and costs only the per-shingle probe.
-    *  - `false`: the oversized-bench mode this variant exists for — when
-    *    the exact hash table exceeds the broadcast budget, the join runs
-    *    as a shuffle over the SURVIVORS, whose volume is actual-overlap +
-    *    fp leakage, not corpus size. (On a corpus whose shingle space the
-    *    bench largely covers — tiny vocabularies, bench sampled from the
-    *    corpus itself — the bloom prunes little and this mode degenerates
-    *    to shuffling the corpus shingle stream; that is inherent to the
-    *    regime, not a plan defect.)
+  /** [[sharedNgrams]] behind a broadcast BLOOM pre-filter. A Bloom filter
+    * over the bench's shingle hashes is 2^log2m BITS regardless of the
+    * bench size, and `might_contain=false` is a guaranteed non-member, so
+    * the map-side probe drops every corpus shingle outside the bench set
+    * (minus the fp rate) BEFORE any join. The exact join — the bench side
+    * broadcast like [[sharedNgrams]]' — then eliminates the fp's, so the
+    * output is bit-identical to [[sharedNgrams]] (the gate pins both paths
+    * to one oracle). The bloom is a pure map-side pre-prune that cuts
+    * probe/aggregation work and costs only the per-shingle probe.
     *
     * Two bench passes (bloom build + exact side) — the bench is the tiny
     * side, re-reading it is noise next to the corpus scan either way. */
   def sharedNgramsBloomPruned(corpus: DataFrame, benchmark: DataFrame,
                               idCol: String, textCol: String, ngramWidth: Int,
                               minShared: Long, log2m: Int = 22, k: Int = 5,
-                              corpusParallelism: Option[Int] = None,
-                              broadcastExact: Boolean = true): DataFrame = {
+                              corpusParallelism: Option[Int] = None): DataFrame = {
     def exploded(df: DataFrame, outId: String) =
       df.filter(col(textCol).isNotNull && length(col(textCol)) >= ngramWidth)
         .select(col(idCol).cast("long").as(outId),
@@ -116,10 +100,9 @@ object Contamination {
     val bloomBytes = exploded(benchmark, "bench_id")
       .agg(graft.functions.bloom_build(col("sh"), log2m, k).as("bf"))
       .head().getAs[Array[Byte]](0)
-    val exactSide = exploded(benchmark, "bench_id")
     exploded(corpusSide, "doc_id")
       .filter(graft.functions.bloom_contains(lit(bloomBytes), col("sh")))
-      .join(if (broadcastExact) broadcast(exactSide) else exactSide, "sh")
+      .join(broadcast(exploded(benchmark, "bench_id")), "sh")
       .filter(col("doc_id") =!= col("bench_id"))
       .groupBy("doc_id", "bench_id")
       .agg(count(lit(1)).as("shared_ngrams"))
@@ -161,41 +144,19 @@ object Contamination {
     * [[sharedNgrams]], the flagging rule keeps no benchmark identity to
     * self-exclude with — a benchmark hosted inside the corpus table must
     * be anti-joined out of the corpus side first, or every benchmark doc
-    * flags itself end-to-end. `excludeBenchIds = true` ENFORCES this: the
-    * benchmark's id set anti-joins the corpus side (ids only, broadcast in
-    * practice — the bench is the tiny side by the same cardinality
-    * argument as the gram broadcast), so a benchmark hosted in the corpus
-    * table is excluded loudly-by-construction instead of silently flagging
-    * itself. Default false: separate-table callers with independent id
-    * spaces must NOT drop corpus docs on id coincidences (the
-    * `benchInCorpus` argument of [[embedOverlap]], same trade).
-    *
-    * `broadcastBench = false` drops the explicit broadcast hint on the
-    * benchmark's gram-hash set: a full eval-suite sweep (10⁸+ distinct
-    * grams) can exceed the broadcast hard cap / driver memory, and there
-    * the flagging degrades to a shuffled semi-join (corpus gram triples
-    * exchange on gh — the [[Dedup.dupSpans]] shape) instead of failing the
-    * job. Default true: at real benchmark sizes the broadcast is the
-    * no-corpus-shuffle plan the scaladoc promises. */
+    * flags itself end-to-end. Separate-table callers with independent id
+    * spaces must NOT drop corpus docs on id coincidences, so the operator
+    * does no id-based exclusion of its own. */
   def contaminatedSpans(corpus: DataFrame, benchmark: DataFrame,
                         idCol: String, textCol: String, width: Int,
-                        spreadInput: Boolean = true,
                         tokenize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-                          Tokenizers.asciiWords,
-                        excludeBenchIds: Boolean = false,
-                        broadcastBench: Boolean = true): DataFrame = {
-    val corpusSide =
-      if (!excludeBenchIds) corpus
-      else corpus.join(
-        broadcast(benchmark.select(col(idCol).cast("long").as("__bench_id")).distinct()),
-        corpus(idCol).cast("long") === col("__bench_id"), "left_anti")
-    val corpusGrams = Dedup.gramHashes(corpusSide, idCol, textCol, width, spreadInput, tokenize)
+                          Tokenizers.asciiWords): DataFrame = {
+    val corpusGrams = Dedup.gramHashes(corpus, idCol, textCol, width, spreadInput = true, tokenize)
     val benchHashes = Dedup.gramHashes(benchmark, idCol, textCol, width,
         spreadInput = false, tokenize)
       .select("gh").distinct()
     val flagged = corpusGrams
-      .join(if (broadcastBench) broadcast(benchHashes) else benchHashes,
-        Seq("gh"), "left_semi")
+      .join(broadcast(benchHashes), Seq("gh"), "left_semi")
       .select(col("doc_id"), col("pos"), (col("pos") + lit(width) - 1).as("fin"))
     Dedup.mergeIslands(flagged)
   }
@@ -203,21 +164,14 @@ object Contamination {
   /** The corpus with [[contaminatedSpans]] applied destructively via
     * [[Dedup.cutSpans]]: benchmark-overlapping token spans cut, text
     * rebuilt as the kept tokens' canonical single-space stream, every
-    * document surviving. Same `recompute`/`drop` derived-column hygiene
-    * as [[Dedup.cutDupSpans]]. Two corpus passes (flag + cut), each
+    * document surviving. Two corpus passes (flag + cut), each
     * pipelined in the scan; persist the spans and call the two stages
     * yourself when the pipeline also wants a before/after
     * [[Dedup.spanStats]] report. */
   def cutContaminatedSpans(corpus: DataFrame, benchmark: DataFrame,
-                           idCol: String, textCol: String, width: Int,
-                           spreadInput: Boolean = true,
-                           tokenize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-                             Tokenizers.asciiWords,
-                           recompute: Map[String, org.apache.spark.sql.Column] = Map.empty,
-                           drop: Seq[String] = Nil): DataFrame =
+                           idCol: String, textCol: String, width: Int): DataFrame =
     Dedup.cutSpans(corpus,
-      contaminatedSpans(corpus, benchmark, idCol, textCol, width, spreadInput, tokenize),
-      idCol, textCol, spreadInput, tokenize, recompute, drop)
+      contaminatedSpans(corpus, benchmark, idCol, textCol, width), idCol, textCol)
 
   /** [[cutContaminatedSpans]] under BPE token identity — the full
     * Lee-et-al-faithful production pass in one call: benchmark-overlap
@@ -228,14 +182,10 @@ object Contamination {
     * for flagging) with the BPE merge loop as the map-side constant. */
   def cutContaminatedSpansBpe(corpus: DataFrame, benchmark: DataFrame,
                               idCol: String, textCol: String, width: Int,
-                              merges: Seq[(String, String)],
-                              spreadInput: Boolean = true,
-                              recompute: Map[String, org.apache.spark.sql.Column] = Map.empty,
-                              drop: Seq[String] = Nil): DataFrame =
+                              merges: Seq[(String, String)]): DataFrame =
     Dedup.cutSpansBpe(corpus,
-      contaminatedSpans(corpus, benchmark, idCol, textCol, width,
-        spreadInput, Tokenizers.bpe(merges)),
-      idCol, textCol, merges, spreadInput, recompute, drop)
+      contaminatedSpans(corpus, benchmark, idCol, textCol, width, Tokenizers.bpe(merges)),
+      idCol, textCol, merges)
 
   /** Split-leakage check — the hygiene pass AFTER dataset splitting: a
     * test/valid document with a near-duplicate in train inflates eval
@@ -279,17 +229,12 @@ object Contamination {
     * pre-filter the bench side with the IVF composition
     * ([[embedOverlapAnn]]) if |bench| exceeds ~10⁵.
     *
-    * @param benchInCorpus the benchmark rows live inside the corpus table
-    *        under the SAME id space (this module's default framing, like
-    *        [[sharedNgrams]]): equal-id pairs are the benchmark matching
-    *        itself and are excluded. Set FALSE when corpus and benchmark
-    *        are separate tables with independent id spaces — there an
-    *        equal id is a coincidence, and silently dropping that pair
-    *        would let a contaminated document through. */
+    * The benchmark rows live inside the corpus table under the SAME id
+    * space (this module's framing, like [[sharedNgrams]]): equal-id pairs
+    * are the benchmark matching itself and are excluded. */
   def embedOverlap(corpus: DataFrame, benchmark: DataFrame, tau: Double,
                    idCol: String = "vec_id",
-                   vecCol: String = "embedding",
-                   benchInCorpus: Boolean = true): DataFrame = {
+                   vecCol: String = "embedding"): DataFrame = {
     // zero-norm guard, same as cosineLshPairs: an undefined cosine must not
     // throw (ANSI) or NaN-rank above tau (non-ANSI)
     def side(df: DataFrame, outId: String, outVec: String) =
@@ -298,7 +243,7 @@ object Contamination {
         .filter(Ann.normSq(col(outVec)) > 0.0)
     side(corpus, "vec_id", "cv")
       .crossJoin(broadcast(side(benchmark, "bench_id", "bv")))
-      .filter(if (benchInCorpus) col("vec_id") =!= col("bench_id") else lit(true))
+      .filter(col("vec_id") =!= col("bench_id"))
       .withColumn("sim", Ann.cosine(col("cv"), col("bv")))
       .filter(col("sim") >= tau)
       .select("vec_id", "bench_id", "sim")
@@ -329,14 +274,12 @@ object Contamination {
     * is pinned ≥ 0.9 by spec (0.993 at nlist=8/nprobe=3 on the sf0.01
     * embeddings), and every emitted pair is exact-verified, so precision
     * is 1 relative to [[embedOverlap]]. Same zero-norm guard,
-    * `benchInCorpus` rule and output schema — `nprobe = nlist`
+    * self-pair exclusion and output schema — `nprobe = nlist`
     * degenerates to exactly [[embedOverlap]]'s pair set. */
   def embedOverlapAnn(corpus: DataFrame, benchmark: DataFrame, tau: Double,
                       nlist: Int, nprobe: Int, seed: Long,
-                      iters: Int = 5, sampleSize: Int = 10000,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding",
-                      benchInCorpus: Boolean = true,
                       broadcastBench: Boolean = true): DataFrame = {
     import org.apache.spark.sql.graft.{CentroidModel, ColumnShim, NearestCell, ProbeCells}
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
@@ -352,7 +295,7 @@ object Contamination {
     // quantizer trained on the zero-norm-FILTERED bench side, so the model
     // is a pure function of the vectors that can actually match (mirrored
     // in tools/gen_oracles.py via kmeans_centroids over the bench sample)
-    val cents = Ann.trainQuantizer(bench, nlist, seed, iters, sampleSize,
+    val cents = Ann.trainQuantizer(bench, nlist, seed, 5, 10000,
       "bench_id", "bv", initFromSample = true)
     val cmodel = new CentroidModel(spark.sparkContext.broadcast(cents))
     val benchCells = bench.withColumn("cell",
@@ -369,7 +312,7 @@ object Contamination {
         ColumnShim.column(ProbeCells(ColumnShim.expression(col("cv")), cmodel, nprobe))))
       .join(if (broadcastBench) broadcast(benchCells) else benchCells.hint("merge"),
         Seq("cell"))
-      .filter(if (benchInCorpus) col("vec_id") =!= col("bench_id") else lit(true))
+      .filter(col("vec_id") =!= col("bench_id"))
       .withColumn("sim", Ann.cosine(col("cv"), col("bv")))
       .filter(col("sim") >= tau)
       .select("vec_id", "bench_id", "sim")

@@ -140,14 +140,14 @@ object Dedup {
     * slower, never OOM, and exactly the text a boilerplate pass
     * ([[dropBoilerplateLines]]) should have removed first.
     *
-    * `spreadInput` (default true, [[SparkEnv.spread]]): the gram
-    * hash+explode is the CPU-heavy step and runs at the SCAN's
-    * parallelism — a single-file input (fixtures, small exports) would
-    * serialize it on one task (measured 2.7× at sf0.1). At real scale the
-    * scan's splits already provide the width and spread() is a no-op
-    * by its own partition-count check. */
+    * The input is spread first ([[SparkEnv.spread]]), as it is for every
+    * span operator here: the gram hash+explode is the CPU-heavy step and
+    * runs at the SCAN's parallelism — a single-file input (fixtures, small
+    * exports) would serialize it on one task (measured 2.7× at sf0.1). At
+    * real scale the scan's splits already provide the width and spread()
+    * is a no-op by its own partition-count check. */
   def dupSpans(df: DataFrame, idCol: String, textCol: String,
-               width: Int, spreadInput: Boolean = true,
+               width: Int,
                tokenize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
                  Tokenizers.asciiWords,
                crossDocOnly: Boolean = true,
@@ -164,7 +164,7 @@ object Dedup {
     // group never reaches the window. Excluded grams are NOT flagged —
     // route that text to [[dropBoilerplateLines]], which is the pass that
     // owns high-document-frequency content.
-    val all = gramHashes(df, idCol, textCol, width, spreadInput, tokenize)
+    val all = gramHashes(df, idCol, textCol, width, spreadInput = true, tokenize)
     val grams = excludeGrams match {
       case Some(hot) => all.join(broadcast(hot.select("gh")), Seq("gh"), "left_anti")
       case None => all
@@ -228,19 +228,11 @@ object Dedup {
     * the census comes back empty the exclusion join is skipped entirely
     * and the plan is bit-identical to plain [[dupSpans]]. */
   def dupSpansAdaptive(df: DataFrame, idCol: String, textCol: String,
-                       width: Int, cap: Long = 65536L,
-                       spreadInput: Boolean = true,
-                       tokenize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-                         Tokenizers.asciiWords,
-                       crossDocOnly: Boolean = true): (DataFrame, DataFrame) = {
-    val hot = hotGrams(df, idCol, textCol, width, cap, spreadInput, tokenize)
-      .localCheckpoint(true)
+                       width: Int, cap: Long = 65536L): (DataFrame, DataFrame) = {
+    val hot = hotGrams(df, idCol, textCol, width, cap).localCheckpoint(true)
     val spans =
-      if (hot.isEmpty)
-        dupSpans(df, idCol, textCol, width, spreadInput, tokenize, crossDocOnly)
-      else
-        dupSpans(df, idCol, textCol, width, spreadInput, tokenize, crossDocOnly,
-          excludeGrams = Some(hot))
+      if (hot.isEmpty) dupSpans(df, idCol, textCol, width)
+      else dupSpans(df, idCol, textCol, width, excludeGrams = Some(hot))
     (spans, hot)
   }
 
@@ -252,11 +244,9 @@ object Dedup {
     * tokens/cap rows (a corpus with more over-cap grams than that is all
     * boilerplate). [[dupSpansAdaptive]] runs it and returns its result. */
   private[api] def hotGrams(df: DataFrame, idCol: String, textCol: String,
-                            width: Int, cap: Long, spreadInput: Boolean = true,
-                            tokenize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-                              Tokenizers.asciiWords): DataFrame = {
+                            width: Int, cap: Long): DataFrame = {
     require(cap >= 1, s"cap must be >= 1, got $cap")
-    gramHashes(df, idCol, textCol, width, spreadInput, tokenize)
+    gramHashes(df, idCol, textCol, width, spreadInput = true, Tokenizers.asciiWords)
       .groupBy("gh")
       .agg(count(lit(1)).as("occurrences"))
       .filter(col("occurrences") > cap)
@@ -323,28 +313,24 @@ object Dedup {
     *    (bounded by duplication mass), the running flag state
     *    [[dupSpansFromIndex]] merges into spans on demand.
     *
-    * `width`, `tokenize` and `crossDocOnly` are part of the index identity:
-    * every append MUST use the same values or grams never match (the
-    * [[Contamination.contaminatedSpans]] same-tokenizer contract). Appends
+    * The index mines [[Tokenizers.asciiWords]] grams under the cross-doc
+    * rule; `width` is part of the index identity: every append MUST use
+    * the same value or grams never match. Appends
     * only add; retention deletes go through [[compactGramIndex]], which
     * rewrites triples minus a deletion set and re-derives flags without a
     * corpus re-mine. */
   def saveGramIndex(corpus: DataFrame, table: String, numBuckets: Int,
-                    idCol: String, textCol: String, width: Int,
-                    spreadInput: Boolean = true,
-                    tokenize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-                      Tokenizers.asciiWords,
-                    crossDocOnly: Boolean = true): Unit = {
+                    idCol: String, textCol: String, width: Int): Unit = {
     val spark = corpus.sparkSession
     BucketedWrite.saveBucketed(
-      gramHashes(corpus, idCol, textCol, width, spreadInput, tokenize)
+      gramHashes(corpus, idCol, textCol, width, spreadInput = true, Tokenizers.asciiWords)
         .select("gh", "doc_id", "pos"),
       table, numBuckets, Seq("gh"))
     // flags computed FROM the bucketed table: the scan already satisfies
     // the window's gh-clustering, so the build pays ONE exchange total
     // (the bucketed write's), and the mining pass is never run twice
     BucketedWrite.dropTable(spark, s"${table}_flags")
-    flagGrams(spark.table(table), width, crossDocOnly)
+    flagGrams(spark.table(table), width, crossDocOnly = true)
       .write.format("parquet").mode("overwrite").saveAsTable(s"${table}_flags")
   }
 
@@ -369,16 +355,11 @@ object Dedup {
     *
     * CONTRACT: batch doc ids must be DISJOINT from every previously
     * indexed id (the [[BandedLsh.appendToSignatureIndex]] rolling
-    * contract) — under `crossDocOnly` a batch-vs-index gram match is
-    * counted as cross-document on that basis. Appends are not idempotent:
-    * re-admitting a batch duplicates its triples (and under
-    * `crossDocOnly = false` flags them) — rebuild to recover. */
+    * contract) — a batch-vs-index gram match is counted as cross-document
+    * on that basis. Appends are not idempotent: re-admitting a batch
+    * duplicates its triples — rebuild to recover. */
   def appendToGramIndex(batch: DataFrame, table: String,
-                        idCol: String, textCol: String, width: Int,
-                        spreadInput: Boolean = true,
-                        tokenize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-                          Tokenizers.asciiWords,
-                        crossDocOnly: Boolean = true): Unit = {
+                        idCol: String, textCol: String, width: Int): Unit = {
     val spark = batch.sparkSession
     val flagsTable = s"${table}_flags"
     // the batch's mining pass runs ONCE for its four consumers (within-
@@ -386,7 +367,7 @@ object Dedup {
     // triple append) — triples are ids+hashes, ~24 B/token, so even a huge
     // batch persists MEMORY_AND_DISK safely (the saveSignatureIndex
     // precedent and measurement)
-    val bg = gramHashes(batch, idCol, textCol, width, spreadInput, tokenize)
+    val bg = gramHashes(batch, idCol, textCol, width, spreadInput = true, Tokenizers.asciiWords)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ONE scan of the triple table per append, not two (guide §6 — at
     // scale the index is the append's dominant I/O; the old shape paid a
@@ -403,7 +384,7 @@ object Dedup {
     //    index's bucketing). No extra action: the persist materializes
     //    inside the flag checkpoint below, and the hit set is bounded by
     //    the batch's collision mass (what the old wide scan emitted).
-    val (hits, newFlags) = appendFlagsFrames(bg, table, width, crossDocOnly)
+    val (hits, newFlags) = appendFlagsFrames(bg, table, width)
     try {
       // COMMIT ORDER: triples BEFORE flags. The two appends are separate
       // transactions; if the session dies between them the index must be
@@ -442,14 +423,13 @@ object Dedup {
     * read (the caller unpersists it once `newFlags` is materialized).
     * Split out so the plan-evidence tool ([[graft.PlanDump]]) dumps the
     * exact frame the append checkpoints. */
-  private[graft] def appendFlagsFrames(bg: DataFrame, table: String,
-                                       width: Int, crossDocOnly: Boolean)
+  private[graft] def appendFlagsFrames(bg: DataFrame, table: String, width: Int)
       : (DataFrame, DataFrame) = {
     val spark = bg.sparkSession
     val hits = spark.table(table)
       .join(broadcast(bg.select("gh").distinct()), Seq("gh"), "left_semi")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val withinBatch = flagGrams(bg, width, crossDocOnly)
+    val withinBatch = flagGrams(bg, width, crossDocOnly = true)
     val batchVsIndex = bg
       .join(broadcast(hits.select("gh").distinct()), Seq("gh"), "left_semi")
       .select(col("doc_id"), col("pos"), (col("pos") + lit(width) - 1).as("fin"))
@@ -486,8 +466,8 @@ object Dedup {
     * derivation the build runs), and the scratch is written gh-bucketed
     * so that pass pays no exchange.
     *
-    * `width` and `crossDocOnly` are the index-identity contract (same
-    * values as the build, like every append); the scratch takes the live
+    * `width` is the index-identity contract (the build's value, like every
+    * append); the scratch takes the live
     * table's layout, so compaction cannot change it. `deletedIds`
     * broadcasts — takedown lists are bounded in practice; a corpus-scale
     * deletion is a rebuild, not a compaction.
@@ -501,8 +481,7 @@ object Dedup {
     * and only appends can transiently over-detect against deleted grams
     * until the swap lands. */
   def compactGramIndex(spark: org.apache.spark.sql.SparkSession,
-                       table: String, deletedIds: DataFrame, width: Int,
-                       crossDocOnly: Boolean = true): Unit = {
+                       table: String, deletedIds: DataFrame, width: Int): Unit = {
     val flagsTable = s"${table}_flags"
     val del = deletedIds
       .select(col(deletedIds.columns.head).cast("long").as("doc_id"))
@@ -511,7 +490,7 @@ object Dedup {
       _.join(broadcast(del), Seq("doc_id"), "left_anti")
         .select("gh", "doc_id", "pos"))
     BucketedWrite.dropTable(spark, flagsTable)
-    flagGrams(spark.table(BucketedWrite.scratchOf(table)), width, crossDocOnly)
+    flagGrams(spark.table(BucketedWrite.scratchOf(table)), width, crossDocOnly = true)
       .write.format("parquet").mode("overwrite").saveAsTable(flagsTable)
     BucketedWrite.swap(spark, table)
   }
@@ -526,14 +505,8 @@ object Dedup {
     * aggregate after the [[dupSpans]] exchanges. Fractions are exact
     * integer ratios cast at the end. */
   def dupSpanStats(df: DataFrame, idCol: String, textCol: String,
-                   groupCol: String, width: Int,
-                   spreadInput: Boolean = true,
-                   tokenize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-                     Tokenizers.asciiWords,
-                   crossDocOnly: Boolean = true): DataFrame =
-    spanStats(df,
-      dupSpans(df, idCol, textCol, width, spreadInput, tokenize, crossDocOnly),
-      idCol, textCol, groupCol, spreadInput, tokenize)
+                   groupCol: String, width: Int): DataFrame =
+    spanStats(df, dupSpans(df, idCol, textCol, width), idCol, textCol, groupCol)
 
   /** [[dupSpanStats]] over a PRE-COMPUTED spans DataFrame (any frame with
     * `doc_id` + `n_tokens` per span — [[dupSpans]],
@@ -546,14 +519,10 @@ object Dedup {
     * on every action, which is exactly what this overload exists to
     * avoid). */
   def spanStats(df: DataFrame, spans: DataFrame, idCol: String,
-                textCol: String, groupCol: String,
-                spreadInput: Boolean = true,
-                tokenize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-                  Tokenizers.asciiWords): DataFrame = {
-    val toks = tokenize(col(textCol))
-    val docs = (if (spreadInput) SparkEnv.spread(df) else df)
+                textCol: String, groupCol: String): DataFrame = {
+    val docs = SparkEnv.spread(df)
       .select(col(idCol).cast("long").as("doc_id"), col(groupCol).as("grp"),
-        size(toks).cast("long").as("n_toks"))
+        size(Tokenizers.asciiWords(col(textCol))).cast("long").as("n_toks"))
     val perDoc = spans
       .groupBy("doc_id")
       .agg(sum("n_tokens").as("dup_toks"), count(lit(1)).as("n_spans"))
@@ -574,33 +543,17 @@ object Dedup {
     * rebuilt text is the kept tokens joined by single spaces, in order;
     * docs with no flagged span pass through with the same normalization
     * applied (so output text is uniformly the canonical token stream).
-    * Other columns pass through untouched UNLESS listed in `recompute`:
-    * a derived column like `n_chars` is stale relative to the rewritten
-    * text, and silently-stale derived columns are exactly the bug a
-    * pipeline ships — so pass `recompute = Map("n_chars" ->
-    * length(col("text")))` to re-derive it from the REWRITTEN row (the
-    * expressions see the post-cut text), or `drop = Seq("n_chars")` to
-    * refuse to carry it at all. `recompute` keys may also introduce new
-    * columns; a name in both `recompute` and `drop` is rejected.
-    * Recompute expressions MUST be independent of each other: all of them
-    * are applied in ONE projection, so each sees exactly the rewritten
-    * text plus the ORIGINAL columns — never another recomputed column's
-    * new value (an expression referencing a sibling recompute key reads
-    * that column's pre-recompute value, by contract, not by name order).
-    * Span lookup joins only (doc_id → span list) — spans are sparse, the
-    * join is broadcast-sized in practice, and the cut itself is a
-    * per-row `filter` over the token array, codegen'd, no shuffle beyond
-    * [[dupSpans]]' own. */
+    * Other columns pass through untouched — a derived column like
+    * `n_chars` is stale relative to the rewritten text, so re-derive it
+    * from the output. Span lookup joins only (doc_id → span list) — spans
+    * are sparse, the join is broadcast-sized in practice, and the cut
+    * itself is a per-row `filter` over the token array, codegen'd, no
+    * shuffle beyond [[dupSpans]]' own. */
   def cutDupSpans(df: DataFrame, idCol: String, textCol: String,
-                  width: Int, spreadInput: Boolean = true,
+                  width: Int,
                   tokenize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-                    Tokenizers.asciiWords,
-                  recompute: Map[String, org.apache.spark.sql.Column] = Map.empty,
-                  drop: Seq[String] = Nil,
-                  crossDocOnly: Boolean = true): DataFrame =
-    cutSpans(df,
-      dupSpans(df, idCol, textCol, width, spreadInput, tokenize, crossDocOnly),
-      idCol, textCol, spreadInput, tokenize, recompute, drop)
+                    Tokenizers.asciiWords): DataFrame =
+    cutSpans(df, dupSpans(df, idCol, textCol, width, tokenize), idCol, textCol, tokenize)
 
   /** [[cutDupSpans]] over a PRE-COMPUTED spans DataFrame (`doc_id`,
     * `span_start`, `span_end` — inclusive 0-based token indices over the
@@ -610,38 +563,32 @@ object Dedup {
     * stage for span sources other than [[dupSpans]] — e.g.
     * [[Contamination.contaminatedSpans]]' benchmark-overlap spans. */
   def cutSpans(df: DataFrame, spansDf: DataFrame, idCol: String,
-               textCol: String, spreadInput: Boolean = true,
+               textCol: String,
                tokenize: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-                 Tokenizers.asciiWords,
-               recompute: Map[String, org.apache.spark.sql.Column] = Map.empty,
-               drop: Seq[String] = Nil): DataFrame = {
-    val overlap = recompute.keySet.intersect(drop.toSet)
-    require(overlap.isEmpty,
-      s"columns listed in both recompute and drop: ${overlap.mkString(", ")}")
-    require(!recompute.contains(textCol) && !drop.contains(textCol),
-      s"'$textCol' is the rewrite target — it cannot be recomputed or dropped")
-    val spans = spansDf
-      .groupBy("doc_id")
-      .agg(collect_list(struct(col("span_start"), col("span_end"))).as("__spans"))
-      .withColumnRenamed("doc_id", "__span_doc")
-    val toks = tokenize(col(textCol))
+                 Tokenizers.asciiWords): DataFrame = {
     val keep = filter(col("__toks"),
       (_, i) => !exists(col("__spans"),
         sp => i >= sp("span_start") && i <= sp("span_end")))
-    val cut = (if (spreadInput) SparkEnv.spread(df) else df).withColumn("__toks", toks)
-      .join(spans, df(idCol).cast("long") === spans("__span_doc"), "left")
-      .withColumn("__spans", coalesce(col("__spans"),
-        array().cast("array<struct<span_start:bigint,span_end:bigint>>")))
+    withSpans(SparkEnv.spread(df).withColumn("__toks", tokenize(col(textCol))),
+        df, spansDf, idCol)
       // null-text rows have a null token array; coalesce to '' so they
       // match the fully-cut-doc convention (empty canonical stream)
       .withColumn(textCol, coalesce(array_join(keep, " "), lit("")))
       .drop("__toks", "__spans", "__span_doc")
-    // derived-column hygiene: re-derive AFTER the rewrite in a SINGLE
-    // projection — every expression sees the same input row (post-cut text
-    // + original columns), so evaluation can't depend on key order
-    val recomputed =
-      if (recompute.isEmpty) cut else cut.withColumns(recompute)
-    if (drop.isEmpty) recomputed else recomputed.drop(drop: _*)
+  }
+
+  /** `left` (the spread `df`, plus any per-row columns the cut needs)
+    * left-joined to each doc's span list as `__spans` — an empty list for
+    * a doc with no span. The join every span cut shares. */
+  private def withSpans(left: DataFrame, df: DataFrame, spansDf: DataFrame,
+                        idCol: String): DataFrame = {
+    val spans = spansDf
+      .groupBy("doc_id")
+      .agg(collect_list(struct(col("span_start"), col("span_end"))).as("__spans"))
+      .withColumnRenamed("doc_id", "__span_doc")
+    left.join(spans, df(idCol).cast("long") === spans("__span_doc"), "left")
+      .withColumn("__spans", coalesce(col("__spans"),
+        array().cast("array<struct<span_start:bigint,span_end:bigint>>")))
   }
 
   /** [[cutSpans]] for spans mined under a BPE tokenizer
@@ -653,34 +600,14 @@ object Dedup {
     * destructive edit share ONE token identity end to end. `merges` must
     * be the SAME list the spans were mined with — flat-stream token
     * indices are only meaningful under the tokenizer that produced them.
-    * Same join shape, null-text convention and `recompute`/`drop`
-    * hygiene as [[cutSpans]]. */
+    * Same join shape and null-text convention as [[cutSpans]]. */
   def cutSpansBpe(df: DataFrame, spansDf: DataFrame, idCol: String,
-                  textCol: String, merges: Seq[(String, String)],
-                  spreadInput: Boolean = true,
-                  recompute: Map[String, org.apache.spark.sql.Column] = Map.empty,
-                  drop: Seq[String] = Nil): DataFrame = {
-    val overlap = recompute.keySet.intersect(drop.toSet)
-    require(overlap.isEmpty,
-      s"columns listed in both recompute and drop: ${overlap.mkString(", ")}")
-    require(!recompute.contains(textCol) && !drop.contains(textCol),
-      s"'$textCol' is the rewrite target — it cannot be recomputed or dropped")
-    val spans = spansDf
-      .groupBy("doc_id")
-      .agg(collect_list(struct(col("span_start"), col("span_end"))).as("__spans"))
-      .withColumnRenamed("doc_id", "__span_doc")
-    val cut = (if (spreadInput) SparkEnv.spread(df) else df)
-      .join(spans, df(idCol).cast("long") === spans("__span_doc"), "left")
-      .withColumn("__spans", coalesce(col("__spans"),
-        array().cast("array<struct<span_start:bigint,span_end:bigint>>")))
+                  textCol: String, merges: Seq[(String, String)]): DataFrame =
+    withSpans(SparkEnv.spread(df), df, spansDf, idCol)
       // null-text rows rebuild as '' (the fully-cut-doc convention)
       .withColumn(textCol, coalesce(
         graft.functions.bpe_cut(col(textCol), col("__spans"), merges), lit("")))
       .drop("__spans", "__span_doc")
-    val recomputed =
-      if (recompute.isEmpty) cut else cut.withColumns(recompute)
-    if (drop.isEmpty) recomputed else recomputed.drop(drop: _*)
-  }
 
   /** [[cutSpans]] with the LAYOUT-PRESERVING rebuild
     * ([[graft.functions.word_cut]]): instead of re-emitting the kept
@@ -696,49 +623,25 @@ object Dedup {
     * No tokenizer seam HERE by design: the byte-level run scan is
     * hard-wired to [[Tokenizers.asciiWords]] identity (the k-th maximal
     * ASCII-letter run IS token k), so `spansDf` must be mined with
-    * `asciiWords` over this same text column. Same join shape, null-text
-    * convention (null rebuilds as '' like the fully-cut doc) and
-    * `recompute`/`drop` hygiene as [[cutSpans]]. */
+    * `asciiWords` over this same text column. Same join shape and
+    * null-text convention (null rebuilds as '' like the fully-cut doc) as
+    * [[cutSpans]]. */
   def cutSpansExact(df: DataFrame, spansDf: DataFrame, idCol: String,
-                    textCol: String, spreadInput: Boolean = true,
-                    recompute: Map[String, org.apache.spark.sql.Column] = Map.empty,
-                    drop: Seq[String] = Nil): DataFrame = {
-    val overlap = recompute.keySet.intersect(drop.toSet)
-    require(overlap.isEmpty,
-      s"columns listed in both recompute and drop: ${overlap.mkString(", ")}")
-    require(!recompute.contains(textCol) && !drop.contains(textCol),
-      s"'$textCol' is the rewrite target — it cannot be recomputed or dropped")
-    val spans = spansDf
-      .groupBy("doc_id")
-      .agg(collect_list(struct(col("span_start"), col("span_end"))).as("__spans"))
-      .withColumnRenamed("doc_id", "__span_doc")
-    val cut = (if (spreadInput) SparkEnv.spread(df) else df)
-      .join(spans, df(idCol).cast("long") === spans("__span_doc"), "left")
-      .withColumn("__spans", coalesce(col("__spans"),
-        array().cast("array<struct<span_start:bigint,span_end:bigint>>")))
+                    textCol: String): DataFrame =
+    withSpans(SparkEnv.spread(df), df, spansDf, idCol)
       .withColumn(textCol, coalesce(
         graft.functions.word_cut(col(textCol), col("__spans")), lit("")))
       .drop("__spans", "__span_doc")
-    val recomputed =
-      if (recompute.isEmpty) cut else cut.withColumns(recompute)
-    if (drop.isEmpty) recomputed else recomputed.drop(drop: _*)
-  }
 
   /** [[cutDupSpans]] with the layout-preserving rebuild: mine with the
     * (fixed) `asciiWords` identity, cut by character offsets
     * ([[cutSpansExact]]). */
   def cutDupSpansExact(df: DataFrame, idCol: String, textCol: String,
-                       width: Int, spreadInput: Boolean = true,
-                       recompute: Map[String, org.apache.spark.sql.Column] = Map.empty,
-                       drop: Seq[String] = Nil,
-                       crossDocOnly: Boolean = true): DataFrame =
-    cutSpansExact(df,
-      dupSpans(df, idCol, textCol, width, spreadInput,
-        Tokenizers.asciiWords, crossDocOnly),
-      idCol, textCol, spreadInput, recompute, drop)
+                       width: Int): DataFrame =
+    cutSpansExact(df, dupSpans(df, idCol, textCol, width), idCol, textCol)
 
   /** Line-frequency boilerplate removal — the CCNet/RefinedWeb paragraph
-    * pass: a LINE (any `sep`-delimited segment) occurring in at least
+    * pass: a LINE (any newline-delimited segment) occurring in at least
     * `minDocs` DISTINCT documents is boilerplate (nav bars, cookie
     * banners, "all rights reserved") and is dropped from every document;
     * the rest of each document survives verbatim. This is the coarse
@@ -765,13 +668,13 @@ object Dedup {
     * task (WindowExec's external buffer) — slower, never OOM; the
     * flagged output itself stays bounded by boilerplate mass. */
   def dropBoilerplateLines(df: DataFrame, idCol: String, textCol: String,
-                           minDocs: Long, sep: String = "\n",
-                           spreadInput: Boolean = true): DataFrame = {
+                           minDocs: Long): DataFrame = {
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
-    val src = if (spreadInput) SparkEnv.spread(df) else df
+    val src = SparkEnv.spread(df)
+    val sep = java.util.regex.Pattern.quote("\n")
     val lines = src
       .select(col(idCol).cast("long").as("doc_id"),
-        posexplode(split(col(textCol), java.util.regex.Pattern.quote(sep), -1)))
+        posexplode(split(col(textCol), sep, -1)))
       .select(col("doc_id"), col("pos"), xxhash64(col("col")).as("lh"))
     // the document-frequency rule as WINDOWS over the line hash, not an
     // aggregate + self-semi-join — the join form makes the plan compute
@@ -792,8 +695,8 @@ object Dedup {
     src.join(flaggedPos, src(idCol).cast("long") === col("__cut_doc"), "left")
       .withColumn("__cut", coalesce(col("__cut"), array().cast("array<bigint>")))
       .withColumn(textCol, array_join(
-        filter(split(col(textCol), java.util.regex.Pattern.quote(sep), -1),
-          (_, i) => !array_contains(col("__cut"), i.cast("long"))), sep))
+        filter(split(col(textCol), sep, -1),
+          (_, i) => !array_contains(col("__cut"), i.cast("long"))), "\n"))
       .drop("__cut", "__cut_doc")
   }
 
@@ -803,19 +706,13 @@ object Dedup {
     * closing the round-11 gap where the faithful BPE detector could only
     * drive a word-level (token-soup) rewrite. */
   def cutDupSpansBpe(df: DataFrame, idCol: String, textCol: String,
-                     width: Int, merges: Seq[(String, String)],
-                     spreadInput: Boolean = true,
-                     recompute: Map[String, org.apache.spark.sql.Column] = Map.empty,
-                     drop: Seq[String] = Nil,
-                     crossDocOnly: Boolean = true): DataFrame =
-    cutSpansBpe(df,
-      dupSpans(df, idCol, textCol, width, spreadInput,
-        Tokenizers.bpe(merges), crossDocOnly),
-      idCol, textCol, merges, spreadInput, recompute, drop)
+                     width: Int, merges: Seq[(String, String)]): DataFrame =
+    cutSpansBpe(df, dupSpans(df, idCol, textCol, width, Tokenizers.bpe(merges)),
+      idCol, textCol, merges)
 
   /** Global first-come PARAGRAPH dedup — the FineWeb-class rule between
     * line-level boilerplate removal and whole-doc dedup: a paragraph
-    * (exact `sep`-delimited substring) is kept only at its FIRST corpus
+    * (exact blank-line-delimited substring) is kept only at its FIRST corpus
     * occurrence (lexicographic (doc_id, pos)); every later occurrence is
     * cut and the doc rebuilt around it. Empty paragraphs are structure,
     * not content — never cut (also the worst skew key gone: the ""
@@ -836,8 +733,7 @@ object Dedup {
     * would surface as a mismatch). Output: `df` with `textCol`
     * rebuilt; docs whose every paragraph was cut keep an empty text. */
   def dedupParagraphs(df: DataFrame, idCol: String = "doc_id",
-                      textCol: String = "text", sep: String = "\n\n",
-                      spreadInput: Boolean = true): DataFrame = {
+                      textCol: String = "text"): DataFrame = {
     // an id that nulls under the long cast would make the cut join never
     // match and the pass silently return the corpus un-deduped — refuse
     // loudly instead. Numeric id types can't null under the cast (fast
@@ -864,7 +760,8 @@ object Dedup {
         s"dedupParagraphs: id column '$idCol' is ${other.simpleString}; " +
           "need a numeric (or losslessly castable string) id")
     }
-    val src = if (spreadInput) SparkEnv.spread(df) else df
+    val src = SparkEnv.spread(df)
+    val sep = "\n\n"
     val quoted = java.util.regex.Pattern.quote(sep)
     // the explicit isnotnull makes the two consumers' subtrees IDENTICAL:
     // without it the cut join's condition infers isnotnull(doc_id) into

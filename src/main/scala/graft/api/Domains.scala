@@ -398,9 +398,9 @@ object Domains {
     * ever distinguishes content splits a group and is rejected.
     *
     * Output report, one row per observed key: `(param, n_docs,
-    * n_groups, safe)` with `safe` additionally requiring `n_docs >=
-    * minDocs` (a param seen once passes vacuously — the floor is the
-    * confidence knob). Feed `safe` params straight to [[dedupByUrl]]'s
+    * n_groups, safe)` with `safe` additionally requiring `n_docs >= 2`
+    * (a param seen once passes vacuously — the floor is the confidence
+    * bar). Feed `safe` params straight to [[dedupByUrl]]'s
     * `dropParamPrefixes` (exact-name matching). Epistemics, stated
     * plainly: `safe` means NEVER OBSERVED to split content in THIS
     * corpus — a constant-valued real param (every URL carries
@@ -413,9 +413,7 @@ object Domains {
     * base) set against the (ukey, hash) projection; two hash
     * aggregations; ids and short strings only, document text never
     * shuffles (the hash is computed at the scan). */
-  def discoverTrackingParams(df: DataFrame, urlCol: String, textCol: String,
-                             minDocs: Long = 2L): DataFrame = {
-    require(minDocs >= 1, s"minDocs must be >= 1, got $minDocs")
+  def discoverTrackingParams(df: DataFrame, urlCol: String, textCol: String): DataFrame = {
     val ukey = normalizedUrl(col(urlCol), sortQuery = true)
     val h = xxhash64(col(textCol))
     val base = df
@@ -453,7 +451,7 @@ object Domains {
     val counts = withK.groupBy("param").agg(count(lit(1)).as("n_docs"))
     counts.join(groups, Seq("param"))
       .select(col("param"), col("n_docs"), col("n_groups"),
-        (col("__worst") === 1L && col("n_docs") >= minDocs).as("safe"))
+        (col("__worst") === 1L && col("n_docs") >= 2L).as("safe"))
   }
 
   /** Path-level URL filtering — the companion of [[filterBlockedHosts]]
@@ -578,7 +576,8 @@ object Domains {
   /** Site-level robots.txt opt-out (REP, RFC 9309) — the other half of
     * the compliant opt-out story next to the page-level
     * [[TextAnalysis.filterNoindex]] meta filter: drops pages whose
-    * path-and-query the host's robots.txt disallows for `agent`.
+    * path-and-query the host's robots.txt disallows for the `*` group
+    * (a generic pipeline crawls as no named agent).
     * `robots` carries one `(host, body)` row per robots.txt the tape
     * delivered (robots.txt responses are ordinary WARC records — slice
     * them off the same parse that feeds the page stages); hosts must be
@@ -601,7 +600,7 @@ object Domains {
     * not. The per-page verdict is one codegen'd pass over the host's
     * (small) rule array; page text never enters the exchange. */
   def filterRobotsTxt(df: DataFrame, urlCol: String, idCol: String,
-                      robots: DataFrame, agent: String = "*"): DataFrame = {
+                      robots: DataFrame): DataFrame = {
     // match Spark's RESOLUTION rule (case-insensitive unless
     // spark.sql.caseSensitive): a ('Host', 'Body') frame that col()
     // resolves fine must not be refused on exact case
@@ -617,7 +616,7 @@ object Domains {
       s"filterRobotsTxt: input must not carry a '$c' column"))
     val hostRules = robots
       .select(col("host").as("__rbt_host"),
-        graft.functions.robots_rules(col("body"), agent).as("__r"))
+        graft.functions.robots_rules(col("body"), "*").as("__r"))
       .groupBy("__rbt_host")
       .agg(flatten(collect_list(col("__r"))).as("__rbt_rules"))
     // REP matches path-and-query from the first octet; an empty path

@@ -282,7 +282,7 @@ object Multimodal {
   }
 
   /** JPEG fixtures for the SECOND [[ImageIoDecoder]] codec path — same
-    * pixel recipe as [[syntheticPngs]], encoded lossy at `quality`. JPEG
+    * pixel recipe as [[syntheticPngs]], encoded lossy at quality 0.95. JPEG
     * cannot be gated bit-exact (its decoded raster is codec-defined, not
     * recipe-defined), so each row also carries the pre-encode raster's
     * `recipe_mean`: the gate pins dims EXACTLY (JPEG preserves them) and
@@ -290,8 +290,7 @@ object Multimodal {
     * — a garbage decode (wrong reader, wrong color space, truncated
     * raster) lands far outside it, while codec-legal quantization noise
     * stays well inside. */
-  def syntheticJpegs(spark: org.apache.spark.sql.SparkSession, n: Int,
-                     quality: Float = 0.95f): DataFrame = {
+  def syntheticJpegs(spark: org.apache.spark.sql.SparkSession, n: Int): DataFrame = {
     val rows = (0 until n).map { m =>
       val img = recipeRaster(m)
       var sum = 0L
@@ -303,7 +302,7 @@ object Multimodal {
       val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
       val params = writer.getDefaultWriteParam
       params.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-      params.setCompressionQuality(quality)
+      params.setCompressionQuality(0.95f)
       val out = new java.io.ByteArrayOutputStream()
       val ios = javax.imageio.ImageIO.createImageOutputStream(out)
       try {
@@ -330,8 +329,8 @@ object Multimodal {
     * near-dup family: hash every image ONCE (the decode is the per-row
     * cost; it runs before the banding exchange and never again), block
     * with the one banded-Hamming pairing [[Dedup.simhashDupPairs]] also
-    * runs (64-bit hash in `bands` chunks; Hamming ≤ bands-1 guarantees a
-    * chunk match), verify candidates with exact Hamming over the two
+    * runs (64-bit dHash in `bands` chunks; Hamming ≤ bands-1 guarantees
+    * a chunk match), verify candidates with exact Hamming over the two
     * longs. Never all-pairs:
     * candidate volume is bounded by chunk-collision degree, ids+hashes
     * only cross the exchange, and payload bytes never shuffle. Output
@@ -339,10 +338,9 @@ object Multimodal {
     * un-hashable images (NULL hash) silently can't pair — dedup over
     * junk is not meaningful. */
   def imageNearDupPairs(media: DataFrame, idCol: String, bytesCol: String,
-                        bands: Int = 4, maxHamming: Int = 10,
-                        kind: String = "dhash"): DataFrame =
+                        bands: Int = 4, maxHamming: Int = 10): DataFrame =
     Dedup.hammingPairs(media.select(col(idCol).as("id"),
-      imageHash(col(bytesCol), kind).as("h")), bands, maxHamming)
+      imageHash(col(bytesCol), "dhash").as("h")), bands, maxHamming)
 
   /** Perceptual audio near-dup pairs — [[imageNearDupPairs]] with the
     * clip fingerprint ([[graft.core.AudioFingerprint]]) in place of the
@@ -462,16 +460,16 @@ object Multimodal {
     * recipe a paired image/audio-caption corpus runs before training:
     *
     *  1. caption rules, per-row and integer-exact: a non-null caption
-    *     with at least `minCaptionTokens` whitespace tokens and at most
-    *     `maxCaptionChars` chars (alt-text stubs — "thumbnail", file
+    *     with at least 4 whitespace tokens and at most 200 chars
+    *     (alt-text stubs — "thumbnail", file
     *     names — are the dominant junk class in paired corpora);
     *  2. caption EXACT dedup, first-come GLOBALLY (template alt-text
     *     repeats across pages and modalities): min id per caption
     *     string wins;
     *  3. perceptual media near-dup per modality —
-    *     [[imageNearDupPairs]] over `kind = "image"` rows,
-    *     [[audioNearDupPairs]] over `kind = "audio"` rows, both on the
-    *     stage-2 survivors — then the GREEDY keep-earliest rule: any
+    *     [[imageNearDupPairs]] over `kind = "image"` rows (4 bands,
+    *     Hamming ≤ 10), [[audioNearDupPairs]] over `kind = "audio"` rows
+    *     (4 bands, Hamming ≤ 6), both on the stage-2 survivors — then the GREEDY keep-earliest rule: any
     *     clip with a verified near-dup of smaller id drops. Greedy is
     *     the stated contract, not transitive closure: with A~B and B~C
     *     (but not A~C), B and C both drop even though C's only partner
@@ -485,22 +483,19 @@ object Multimodal {
     * schema unchanged. */
   def curateMultimodal(media: DataFrame, idCol: String = "media_id",
                        kindCol: String = "kind", bytesCol: String = "bytes",
-                       captionCol: String = "caption",
-                       minCaptionTokens: Int = 4, maxCaptionChars: Int = 200,
-                       imageBands: Int = 4, imageMaxHamming: Int = 10,
-                       audioBands: Int = 4, audioMaxHamming: Int = 6): DataFrame = {
+                       captionCol: String = "caption"): DataFrame = {
     val s1 = media.filter(col(captionCol).isNotNull &&
-      size(split(trim(col(captionCol)), "\\s+")) >= minCaptionTokens &&
-      length(col(captionCol)) <= maxCaptionChars)
+      size(split(trim(col(captionCol)), "\\s+")) >= 4 &&
+      length(col(captionCol)) <= 200)
     val capWinner = s1.groupBy(col(captionCol))
       .agg(min(col(idCol)).as("__cap_keep"))
     val s2 = s1.join(capWinner, Seq(captionCol))
       .filter(col(idCol) === col("__cap_keep")).drop("__cap_keep")
     val imgDrops = imageNearDupPairs(s2.filter(col(kindCol) === "image"),
-        idCol, bytesCol, imageBands, imageMaxHamming)
+        idCol, bytesCol, 4, 10)
       .select(col("id_b").as(idCol))
     val audDrops = audioNearDupPairs(s2.filter(col(kindCol) === "audio"),
-        idCol, bytesCol, audioBands, audioMaxHamming)
+        idCol, bytesCol, 4, 6)
       .select(col("id_b").as(idCol))
     s2.join(imgDrops.unionByName(audDrops).distinct(), Seq(idCol), "left_anti")
   }

@@ -138,23 +138,12 @@ object Sampling {
     *
     * Scale note: the window sorts each stratum inside one partition, so
     * this shape is for strata that fit a partition (languages, sources,
-    * shards — the typical case). For mega-strata, pre-thin with
-    * `prefilterFraction` (a no-shuffle Bernoulli pass with the SAME score,
-    * so survivors are exactly the stratum's smallest-score rows as long as
-    * ~k of them survive): choose ~3k / expected_stratum_size and the
-    * window then sorts thousands of rows, not billions. The two-phase
-    * result is identical to the one-phase result whenever every stratum
-    * retains >= k rows (spec-checked). */
+    * shards — the typical case). */
   def stratifiedSampleByHash(df: DataFrame, stratumCol: String, keyCol: String,
-                             k: Int, seed: Long,
-                             prefilterFraction: Option[Double] = None): DataFrame = {
+                             k: Int, seed: Long): DataFrame = {
     val score = hashScore(col(keyCol), seed)
-    val thinned = prefilterFraction match {
-      case Some(f) => df.filter(score < f)
-      case None => df
-    }
     val w = Window.partitionBy(stratumCol).orderBy(score.asc, col(keyCol).asc)
-    thinned.withColumn("__rank", row_number().over(w))
+    df.withColumn("__rank", row_number().over(w))
       .filter(col("__rank") <= k)
       .drop("__rank")
   }

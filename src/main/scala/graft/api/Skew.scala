@@ -21,31 +21,18 @@ object Skew {
     * itself — hashing only the join key would re-converge every hot row to
     * one bucket).
     *
-    * Result = fact.join(dim, factKey === dimKey, joinType) column-for-column
-    * (salt columns are internal); spec-pinned equal to the unsalted join.
-    *
-    * Fact-side-preserving join types only (inner / cross / left_outer /
-    * left_semi / left_anti): the equivalence holds because every output row
-    * is driven by exactly one fact row, which lives in exactly one salt
-    * bucket. right/full outer would emit one null-padded row per UNMATCHED
-    * (dim row, salt bucket) pair — up to n−1 spurious rows per dim key — so
-    * they are rejected up front. (Skew on the preserved dim side of a right
-    * join = this function with the arguments swapped.) */
+    * Result = the inner join fact.join(dim, factKey === dimKey)
+    * column-for-column (salt columns are internal); spec-pinned equal to
+    * the unsalted join: every output row is driven by exactly one fact
+    * row, which lives in exactly one salt bucket. */
   def saltedJoin(fact: DataFrame, dim: DataFrame, factKey: String, dimKey: String,
-                 scatter: Seq[Column], n: Int, joinType: String = "inner"): DataFrame = {
+                 scatter: Seq[Column], n: Int): DataFrame = {
     require(n >= 1, s"salt fan-out must be >= 1, got $n")
-    val normalized = joinType.toLowerCase.replaceAll("[ _]", "")
-    require(Set("inner", "cross", "left", "leftouter",
-        "leftsemi", "semi", "leftanti", "anti")
-      .contains(normalized),
-      s"saltedJoin supports fact-side-preserving join types only " +
-        s"(inner/cross/left_outer/left_semi/left_anti); for '$joinType' the " +
-        s"n-fold dim replication would emit spurious null-padded rows")
     val fs = fact.withColumn("__salt",
       pmod(xxhash64(scatter: _*), lit(n.toLong)).cast("int"))
     val ds = dim.withColumn("__salt",
       explode(array((0 until n).map(lit(_)): _*)))
-    fs.join(ds, fs(factKey) === ds(dimKey) && fs("__salt") === ds("__salt"), joinType)
+    fs.join(ds, fs(factKey) === ds(dimKey) && fs("__salt") === ds("__salt"), "inner")
       .drop("__salt")
   }
 }

@@ -27,18 +27,16 @@ object TextAnalysis {
 
   /** Main-content tier of [[extractHtml]] — the optional stage between
     * raw extraction and the line-frequency boilerplate pass: blocks
-    * shorter than `minChars` counted characters or with anchor-text
-    * density above `maxLinkPermille` are dropped as chrome
+    * shorter than 25 counted characters or with anchor-text density
+    * above 333‰ are dropped as chrome
     * (nav/footer/sidebar), per the jusText-class rules stated in
     * [[graft.core.HtmlText.extractMain]]. Same per-row, zero-shuffle
     * shape as [[extractHtml]] — compose either as `curate_web`'s first
     * stage; this one removes single-page chrome the document-frequency
     * pass only catches when it repeats across the corpus. */
   def extractMainHtml(df: DataFrame, htmlCol: String = "html",
-                      outCol: String = "text", minChars: Int = 25,
-                      maxLinkPermille: Int = 333): DataFrame =
-    df.withColumn(outCol,
-      graft.functions.html_main_content(col(htmlCol), minChars, maxLinkPermille))
+                      outCol: String = "text"): DataFrame =
+    df.withColumn(outCol, graft.functions.html_main_content(col(htmlCol), 25, 333))
 
   /** Robots-directive page filter — the crawl opt-out stage a compliant
     * pipeline runs FIRST (before extraction spends a single cycle on the
@@ -97,8 +95,8 @@ object TextAnalysis {
   /** Compression-ratio repetition signals (the Gopher/RefinedWeb-class
     * quality tier the n-gram counters miss): per row, the UTF-8 byte
     * length, the zlib-compressed length at level 6, their ratio, and the
-    * all-integer template-spam verdict `spamMult * n_zlib < n_bytes`
-    * (default 3: ratio below 1/3). Short natural prose — including the
+    * all-integer template-spam verdict `3 * n_zlib < n_bytes` (ratio
+    * below 1/3). Short natural prose — including the
     * small-vocabulary fixture docs — measures ≥ 0.39 at level 6, while
     * templated spam whose per-slot variation defeats dup-line and
     * top-n-gram counters (a unique number between every pair of template
@@ -108,8 +106,7 @@ object TextAnalysis {
     * float threshold — exactly reproducible by any oracle. Empty text:
     * 0 bytes compress to a fixed 8-byte zlib header+trailer, ratio is
     * null (Spark division by zero), spam verdict false. */
-  def compressionSignals(df: DataFrame, textCol: String = "text",
-                         level: Int = 6, spamMult: Int = 3): DataFrame = {
+  def compressionSignals(df: DataFrame, textCol: String = "text"): DataFrame = {
     // the signal schema OWNS these names (the exportShards convention):
     // silently replacing an input column loses caller data downstream.
     // The clash test must match Spark's RESOLUTION rule, which is
@@ -125,11 +122,11 @@ object TextAnalysis {
         s"compressionSignals: input must not carry a '$c' column — the " +
           "signal schema owns that name (rename the input column first)"))
     df.withColumn("n_bytes", octet_length(col(textCol)).cast("long"))
-      .withColumn("n_zlib", graft.functions.zlib_len(col(textCol), level))
+      .withColumn("n_zlib", graft.functions.zlib_len(col(textCol), 6))
       .withColumn("zlib_ratio",
         col("n_zlib").cast("double") / col("n_bytes").cast("double"))
       .withColumn("template_spam",
-        col("n_zlib") * spamMult.toLong < col("n_bytes"))
+        col("n_zlib") * 3L < col("n_bytes"))
   }
 
   /** Small, fixed stopword profiles. Deliberately tiny — the point is a
@@ -438,36 +435,28 @@ object TextAnalysis {
     * DuckDB recomputes the WHOLE rule set — with planted bullet/
     * ellipsis/numeric structures — using its own list/string functions;
     * `GopherRulesSpec` exercises each rule independently). A doc keeps
-    * iff ALL of:
+    * iff ALL of, at the published thresholds:
     *
-    *   - word count in [minWords, maxWords];
-    *   - mean word length in [minMeanWordLen, maxMeanWordLen] (filters
-    *     both gibberish runs and single-char noise);
-    *   - symbol-to-word ratio ≤ maxSymbolWordRatio (`#` and `...`
-    *     occurrences — SEO/nav debris);
-    *   - bullet-started line fraction ≤ maxBulletLineFrac and
-    *     `...`-ended line fraction ≤ maxEllipsisLineFrac (list/nav
-    *     pages, truncated scrapes);
-    *   - fraction of words containing ≥1 alphabetic char ≥
-    *     minAlphaWordFrac (tables of numbers);
-    *   - ≥ minStopwordHits distinct canonical stopwords present (the
-    *     "is it prose at all" test).
+    *   - word count in [50, 100 000];
+    *   - mean word length in [3, 10] (filters both gibberish runs and
+    *     single-char noise);
+    *   - symbol-to-word ratio ≤ 0.1 (`#` and `...` occurrences —
+    *     SEO/nav debris);
+    *   - bullet-started line fraction ≤ 0.9 and `...`-ended line
+    *     fraction ≤ 0.3 (list/nav pages, truncated scrapes);
+    *   - fraction of words containing ≥1 alphabetic char ≥ 0.8 (tables
+    *     of numbers);
+    *   - ≥ 2 distinct canonical stopwords present (the "is it prose at
+    *     all" test).
     *
-    * Thresholds default to the published values; recalibrate per corpus
-    * (the [[repetitionFilter]] caveat). Words split on single spaces,
+    * Every signal is returned, so a corpus that needs other cut-offs
+    * filters on the signal columns itself. Words split on single spaces,
     * lines on `\n` — the same conventions the rest of this file pins
     * cross-engine. Returns every signal plus the `keep` verdict
     * (non-destructive; empty/wordless docs keep=false with null
     * ratios). */
   def gopherRules(df: DataFrame, idCol: String = "doc_id",
-                  textCol: String = "text",
-                  minWords: Long = 50L, maxWords: Long = 100000L,
-                  minMeanWordLen: Double = 3.0, maxMeanWordLen: Double = 10.0,
-                  maxSymbolWordRatio: Double = 0.1,
-                  maxBulletLineFrac: Double = 0.9,
-                  maxEllipsisLineFrac: Double = 0.3,
-                  minAlphaWordFrac: Double = 0.8,
-                  minStopwordHits: Int = 2): DataFrame = {
+                  textCol: String = "text"): DataFrame = {
     // the word/line arrays are materialized ONCE in a lower Project and
     // every signal reads the attribute: higher-order functions sit
     // outside codegen subexpression elimination, so the single-Project
@@ -483,10 +472,7 @@ object TextAnalysis {
     gopherSignalsAndKeep(arr, Seq(col(idCol)),
       size(filter(
         typedLit(GopherStopwords("en")),
-        sw => array_contains(col("__ws"), sw))).cast("long"),
-      minWords, maxWords, minMeanWordLen, maxMeanWordLen,
-      maxSymbolWordRatio, maxBulletLineFrac, maxEllipsisLineFrac,
-      minAlphaWordFrac, minStopwordHits)
+        sw => array_contains(col("__ws"), sw))).cast("long"))
   }
 
   /** The published Gopher stopword list per language \u2014 the Rae et al.
@@ -516,7 +502,7 @@ object TextAnalysis {
     * languages: extend the map for every language the corpus carries.
     * All other thresholds stay global (the published values are
     * length/layout rules, far less language-sensitive than function
-    * words; pass different values per corpus slice if needed).
+    * words).
     *
     * Same plan shape as [[gopherRules]] (arrays materialized once in a
     * lower Project); the dispatch is one `try_element_at` on a literal map
@@ -525,15 +511,7 @@ object TextAnalysis {
   def gopherRulesPerLang(df: DataFrame, idCol: String = "doc_id",
                          textCol: String = "text", langCol: String = "lang",
                          stopwords: Map[String, Seq[String]] = GopherStopwords,
-                         fallbackLang: String = "en",
-                         minWords: Long = 50L, maxWords: Long = 100000L,
-                         minMeanWordLen: Double = 3.0,
-                         maxMeanWordLen: Double = 10.0,
-                         maxSymbolWordRatio: Double = 0.1,
-                         maxBulletLineFrac: Double = 0.9,
-                         maxEllipsisLineFrac: Double = 0.3,
-                         minAlphaWordFrac: Double = 0.8,
-                         minStopwordHits: Int = 2): DataFrame = {
+                         fallbackLang: String = "en"): DataFrame = {
     require(stopwords.contains(fallbackLang),
       s"fallbackLang '$fallbackLang' has no stopword list in the map")
     require(stopwords.values.forall(_.nonEmpty),
@@ -552,10 +530,7 @@ object TextAnalysis {
     val sws = coalesce(try_element_at(swMap, lower(col(langCol))),
       typedLit(stopwords(fallbackLang)))
     gopherSignalsAndKeep(arr, Seq(col(idCol), col(langCol)),
-      size(filter(sws, sw => array_contains(col("__ws"), sw))).cast("long"),
-      minWords, maxWords, minMeanWordLen, maxMeanWordLen,
-      maxSymbolWordRatio, maxBulletLineFrac, maxEllipsisLineFrac,
-      minAlphaWordFrac, minStopwordHits)
+      size(filter(sws, sw => array_contains(col("__ws"), sw))).cast("long"))
   }
 
   /** The shared signal algebra behind [[gopherRules]] and
@@ -564,15 +539,7 @@ object TextAnalysis {
     * shape both callers pin) and `stopHits` is the one rule the two
     * variants compute differently. */
   private def gopherSignalsAndKeep(arr: DataFrame, carry: Seq[Column],
-                                   stopHits: Column,
-                                   minWords: Long, maxWords: Long,
-                                   minMeanWordLen: Double,
-                                   maxMeanWordLen: Double,
-                                   maxSymbolWordRatio: Double,
-                                   maxBulletLineFrac: Double,
-                                   maxEllipsisLineFrac: Double,
-                                   minAlphaWordFrac: Double,
-                                   minStopwordHits: Int): DataFrame = {
+                                   stopHits: Column): DataFrame = {
     val t = col("__t")
     val ws = col("__ws")
     val ls = col("__ls")
@@ -597,13 +564,13 @@ object TextAnalysis {
         ellipsisFrac.as("ellipsis_line_frac"), alphaFrac.as("alpha_word_frac"),
         stopHits.as("stopword_hits")): _*)
       .withColumn("keep",
-        coalesce(col("n_words").between(minWords, maxWords) &&
-          col("mean_word_len").between(minMeanWordLen, maxMeanWordLen) &&
-          col("symbol_word_ratio") <= maxSymbolWordRatio &&
-          col("bullet_line_frac") <= maxBulletLineFrac &&
-          col("ellipsis_line_frac") <= maxEllipsisLineFrac &&
-          col("alpha_word_frac") >= minAlphaWordFrac &&
-          col("stopword_hits") >= minStopwordHits, lit(false)))
+        coalesce(col("n_words").between(50L, 100000L) &&
+          col("mean_word_len").between(3.0, 10.0) &&
+          col("symbol_word_ratio") <= 0.1 &&
+          col("bullet_line_frac") <= 0.9 &&
+          col("ellipsis_line_frac") <= 0.3 &&
+          col("alpha_word_frac") >= 0.8 &&
+          col("stopword_hits") >= 2, lit(false)))
   }
 
   /** Shannon entropy of each document's token distribution, in bits —
@@ -814,8 +781,8 @@ object TextAnalysis {
   /** CCNet-style per-language perplexity bucketing (Wenzek et al. 2020):
     * rank each language's documents by an LM score ([[docLogProbBigram]]'s
     * `avg_nll2` is the in-engine scorer; CCNet uses 5-gram KenLM
-    * perplexity — same monotone role) and split into `nBuckets` equal
-    * tiles — head (fluent) / middle / tail (noisy), the split CCNet
+    * perplexity — same monotone role) and split into 3 equal tiles —
+    * head (fluent) / middle / tail (noisy), the split CCNet
     * publishes and pipelines filter or re-weight on.
     *
     * Deterministic: `ntile` over (score ASC, id ASC) — the id tie-break
@@ -830,14 +797,13 @@ object TextAnalysis {
     * quantile cut bins applied map-only, same classes up to threshold-bin
     * error, no per-lang sort. */
   def perplexityBuckets(scored: DataFrame, langCol: String, scoreCol: String,
-                        idCol: String = "doc_id", nBuckets: Int = 3): DataFrame = {
-    require(nBuckets >= 2, s"need at least 2 buckets, got $nBuckets")
+                        idCol: String = "doc_id"): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(langCol)).orderBy(col(scoreCol).asc, col(idCol).asc)
-    scored.withColumn("ppl_bucket", ntile(nBuckets).over(w))
+    scored.withColumn("ppl_bucket", ntile(3).over(w))
       .withColumn("ppl_class",
         when(col("ppl_bucket") === 1, "head")
-          .when(col("ppl_bucket") === nBuckets, "tail")
+          .when(col("ppl_bucket") === 3, "tail")
           .otherwise("middle"))
   }
 

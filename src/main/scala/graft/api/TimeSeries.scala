@@ -40,16 +40,16 @@ object TimeSeries {
     * ordinals, inner `sequence` per chunk), never as one span-length array
     * row — a key with a multi-year span at small `stepSeconds` would
     * otherwise build a single array past Spark's element limit / task
-    * memory with an opaque error. Keys whose span exceeds
-    * `maxBucketsPerKey` (default 100 M — ~3 years at 1 s steps) fail fast
+    * memory with an opaque error. Keys whose span exceeds 100 M buckets
+    * (~3 years at 1 s steps) fail fast
     * with a named-key message instead: an outlier early timestamp (epoch 0
     * from a parse bug) is data corruption to surface, not a grid to
     * materialize. */
   def resampleGapFill(events: DataFrame, keyCol: String, tsCol: String,
                       valueCol: String, stepSeconds: Long,
-                      tieBreak: String, maxBucketsPerKey: Long = 100000000L): DataFrame = {
+                      tieBreak: String): DataFrame = {
     require(stepSeconds > 0, s"stepSeconds must be positive, got $stepSeconds")
-    require(maxBucketsPerKey > 0, s"maxBucketsPerKey must be positive, got $maxBucketsPerKey")
+    val maxBucketsPerKey = 100000000L
     val b = events
       .filter(col(valueCol).isNotNull)
       .select(col(keyCol).as("key"),
@@ -66,8 +66,8 @@ object TimeSeries {
       raise_error(concat(
         lit("resampleGapFill: key "), col("key").cast("string"),
         lit(" spans "), nBuckets.cast("string"),
-        lit(s" buckets at stepSeconds=$stepSeconds (> maxBucketsPerKey=$maxBucketsPerKey)" +
-          " — outlier timestamp in the data, or raise maxBucketsPerKey"))))
+        lit(s" buckets at stepSeconds=$stepSeconds (> $maxBucketsPerKey)" +
+          " — outlier timestamp in the data, or coarsen stepSeconds"))))
       .otherwise(col("lo"))
     val grid = b.groupBy("key")
       .agg(min("bucket_s").as("lo"), max("bucket_s").as("hi"))

@@ -123,13 +123,12 @@ object WarcFiles {
   /** Content-Encoding-aware body decode
     * ([[org.apache.spark.sql.graft.HttpBodyText]] states the full
     * contract): identity bodies slice, gzip bodies gunzip under a
-    * bounded-output guard, corrupt or unsupported encodings fail
-    * loudly. One codegen'd expression over the raw block bytes. */
-  def httpBodyText(content: org.apache.spark.sql.Column,
-                   maxOut: Long = 64L << 20): org.apache.spark.sql.Column =
+    * bounded-output guard (64 MiB), corrupt or unsupported encodings
+    * fail loudly. One codegen'd expression over the raw block bytes. */
+  def httpBodyText(content: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.graft.ColumnShim.column(
       org.apache.spark.sql.graft.HttpBodyText(
-        org.apache.spark.sql.graft.ColumnShim.expression(content), maxOut))
+        org.apache.spark.sql.graft.ColumnShim.expression(content), 64L << 20))
 
   /** Deterministic RESPONSE-record fixture builder: each (id, uri,
     * payload, gzip) lands as a `response` record whose block is a full

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -104,14 +104,13 @@ object EventStreams {
     *  - the union of both queries' emissions equals the batch twin
     *    bit-exactly.
     *
-    * `filesBefore` controls how much of the (ts-sorted) stream arrives
-    * before the crash; a far-future flush row closes the tail windows
-    * after the restart (callers filter event_type='flush', the module's
-    * established pattern). Returns the sink read back as a batch frame. */
-  def windowedCountsRestartReplay(spark: SparkSession, events: Seq[Event],
-                                  windowLen: String = "1 hour",
-                                  filesBefore: Int = 3, filesAfter: Int = 3,
-                                  watermark: String = "1 hour"): DataFrame = {
+    * The first half of the (ts-sorted) stream arrives before the crash
+    * as three files, the rest after it as three more; the aggregation is
+    * 1-hour windows under a 1-hour watermark. A far-future flush row
+    * closes the tail windows after the restart (callers filter
+    * event_type='flush', the module's established pattern). Returns the
+    * sink read back as a batch frame. */
+  def windowedCountsRestartReplay(spark: SparkSession, events: Seq[Event]): DataFrame = {
     val run = replaySeq.incrementAndGet()
     val base = java.nio.file.Paths.get(
       sys.props("java.io.tmpdir"), s"graft_restart_$run")
@@ -149,17 +148,17 @@ object EventStreams {
     def startQuery() = {
       val src = spark.readStream.schema(schema).json(srcDir.toString)
         .withColumn("ts", expr("timestamp_seconds(ts)"))
-      windowedCounts(src, windowLen, watermark)
+      windowedCounts(src, "1 hour", "1 hour")
         .writeStream.format("parquet")
         .option("path", sinkDir.toString)
         .option("checkpointLocation", ckptDir.toString)
         .outputMode("append").start()
     }
 
-    writeFiles(head, names, filesBefore)
+    writeFiles(head, names, 3)
     val q1 = startQuery()
     try q1.processAllAvailable() finally q1.stop()
-    writeFiles(tail, names, filesAfter)
+    writeFiles(tail, names, 3)
     val q2 = startQuery() // NEW query, same checkpoint: the restart
     try q2.processAllAvailable() finally q2.stop()
 
@@ -358,12 +357,11 @@ object EventStreams {
     * streams. (For order-insensitive near-dup dropping, hash with
     * `graft.functions.simhash64` instead — token-vote hashing makes word
     * permutations collide by design.) */
-  def dedupByContent(docs: DataFrame, textCol: String,
-                     watermark: String = "1 hour"): DataFrame = {
+  def dedupByContent(docs: DataFrame, textCol: String): DataFrame = {
     val hashed = docs.withColumn("__content_h", xxhash64(col(textCol)))
     val out =
       if (docs.isStreaming)
-        hashed.withWatermark("ts", watermark).dropDuplicatesWithinWatermark("__content_h")
+        hashed.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark("__content_h")
       else hashed.dropDuplicates("__content_h")
     out.drop("__content_h")
   }
@@ -848,15 +846,14 @@ object EventStreams {
     * `(doc_id, host, admitted)` for every input row — the drop side is
     * load-bearing for crawl telemetry, not just the survivors.
     * Expects columns (doc_id: long, ts: timestamp, url: string). */
-  def domainQuotaAdmit(docs: DataFrame, maxPerDomain: Int,
-                       watermarkDelay: String = "10 seconds"): DataFrame = {
+  def domainQuotaAdmit(docs: DataFrame, maxPerDomain: Int): DataFrame = {
     import docs.sparkSession.implicits._
     require(maxPerDomain > 0, s"maxPerDomain must be positive, got $maxPerDomain")
     val src0 = docs.select(
         graft.api.Domains.urlHost(col("url")).as("host"),
         col("doc_id").cast("long").as("doc_id"), col("ts"))
       .filter(col("host").isNotNull)
-    firstKPerKeyAdmit(src0, maxPerDomain, watermarkDelay)
+    firstKPerKeyAdmit(src0, maxPerDomain)
       .select(col("doc_id"), col("key").as("host"), col("admitted"))
   }
 
@@ -864,12 +861,11 @@ object EventStreams {
     * [[domainQuotaAdmit]] (k = quota, key = host) and [[urlDedupAdmit]]
     * (k = 1, key = canonical URL): one cumulative counter per key in
     * `flatMapGroupsWithState` state, within-batch arrival order pinned
-    * to (event time, doc_id). Input columns `(key, doc_id, ts)`; output
-    * `(doc_id, key, admitted)`. */
-  private def firstKPerKeyAdmit(src0: DataFrame, k: Long,
-                                watermarkDelay: String): DataFrame = {
+    * to (event time, doc_id), under a 10-second watermark. Input columns
+    * `(key, doc_id, ts)`; output `(doc_id, key, admitted)`. */
+  private def firstKPerKeyAdmit(src0: DataFrame, k: Long): DataFrame = {
     import src0.sparkSession.implicits._
-    val src = if (src0.isStreaming) src0.withWatermark("ts", watermarkDelay)
+    val src = if (src0.isStreaming) src0.withWatermark("ts", "10 seconds")
               else src0
     src.as[(String, Long, Timestamp)]
       .groupByKey(_._1)
@@ -915,7 +911,7 @@ object EventStreams {
     * [[graft.api.Domains.dedupByUrl]], the crawl-frontier shape: the
     * FIRST document to arrive under each canonical URL key
     * ([[graft.api.Domains.normalizedUrl]] — percent-normalized,
-    * optionally query-sorted, tracking params optionally stripped via
+    * query-sorted, tracking params optionally stripped via
     * `dropParamPrefixes` so the streaming key can match a batch
     * [[graft.api.Domains.dedupByUrl]] run's exactly) admits; every
     * later arrival under the same key rejects, across micro-batch
@@ -935,16 +931,15 @@ object EventStreams {
     * doc to a private sentinel (`"\u0000" + doc_id`) so it forms its
     * own single-row group; those sentinel entries do grow state with
     * the junk-URL count, documented here rather than hidden. */
-  def urlDedupAdmit(docs: DataFrame, sortQuery: Boolean = true,
-                    watermarkDelay: String = "10 seconds",
+  def urlDedupAdmit(docs: DataFrame,
                     dropParamPrefixes: Seq[String] = Nil): DataFrame = {
-    val key = graft.api.Domains.normalizedUrl(col("url"), sortQuery,
+    val key = graft.api.Domains.normalizedUrl(col("url"), sortQuery = true,
       dropParamPrefixes)
     val src0 = docs.select(
       coalesce(key, concat(lit("\u0000"), col("doc_id").cast("string")))
         .as("ukey"),
       col("doc_id").cast("long").as("doc_id"), col("ts"))
-    firstKPerKeyAdmit(src0, 1L, watermarkDelay)
+    firstKPerKeyAdmit(src0, 1L)
       .select(col("doc_id"), col("admitted"))
   }
 
@@ -1394,7 +1389,6 @@ object EventStreams {
                       checkpoint: String, prefix: String, lookupTbl: String,
                       benchTbl: String, resTbl: String,
                       project: DataFrame => DataFrame,
-                      label: Column = col("lang") === "en",
                       params: graft.api.IncrementalCuration.Params =
                         graft.api.IncrementalCuration.Params(),
                       crashBeforeCommit: Boolean = false): Unit = {
@@ -1412,7 +1406,7 @@ object EventStreams {
           val b = project(df.toDF())
           val admitted = graft.api.IncrementalCuration.admitBatch(b,
             ss.table(benchTbl), ss.table(lookupTbl), prefix,
-            "doc_id", "text", label, params,
+            "doc_id", "text", col("lang") === "en", params,
             generation = Some(s"warc_b$batchId"))
           // idempotent-by-id appends: a replayed wave re-produces the
           // same rows; only ids the table lacks land (ids unique across

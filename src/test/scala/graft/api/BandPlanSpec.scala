@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Pins [[BandedLsh.planBands]] / [[BandedLsh.candidateProbability]] —
   * pure math, no Spark session. The contract: the returned plan meets the
   * recall target at the threshold, uses the largest feasible bandSize
-  * (steepest S-curve = least verification work), and respects maxBands.
+  * (steepest S-curve = least verification work), and respects the 64-band
+  * budget.
   */
 class BandPlanSpec extends AnyFunSuite {
   import BandedLsh.{candidateProbability => p, planBands}
@@ -30,11 +31,14 @@ class BandPlanSpec extends AnyFunSuite {
 
   test("the reference's 8x3 example sits where the planner puts it") {
     // README.md's fixed 8-band/3-row setup: at jaccard 0.6 it catches
-    // 1-(1-0.6^3)^8 ≈ 85.8% — the planner reproduces that regime
+    // 1-(1-0.6^3)^8 ≈ 85.8%. The planner's 64-band budget lands on the
+    // same 3-row curve for a 99.99% target (38 bands; 4 rows would need
+    // 67), and steepens to 6 rows for the example's own 85% (40 bands;
+    // 7 rows would need 67)
     val got = p(0.6, 8, 3)
     assert(math.abs(got - 0.8577) < 0.001)
-    val (b, r) = planBands(0.6, 0.85, maxBands = 8)
-    assert(r == 3 && b <= 8, s"got ($b, $r)")
+    assert(planBands(0.6, 0.9999) == ((38, 3)))
+    assert(planBands(0.6, 0.85) == ((40, 6)))
   }
 
   test("S-curve is monotone in s and steeper with more rows") {
@@ -47,9 +51,8 @@ class BandPlanSpec extends AnyFunSuite {
   }
 
   test("unsatisfiable targets throw instead of under-recalling") {
-    intercept[IllegalArgumentException] {
-      planBands(0.05, 0.999, maxBands = 4)
-    }
+    // bandSize 1 at threshold 0.05 needs 135 bands for 99.9% recall
+    intercept[IllegalArgumentException] { planBands(0.05, 0.999) }
     intercept[IllegalArgumentException] { planBands(0.0, 0.9) }
     intercept[IllegalArgumentException] { planBands(0.6, 1.0) }
   }

@@ -55,13 +55,11 @@ class ContaminationSpec extends AnyFunSuite {
     // log2m=8 (256 bits, k=1) is deliberately undersized: most probes come
     // back might_contain=true, so this exercises fp survival through the
     // pre-filter AND their elimination by the exact join
-    for (log2m <- Seq(8, 20); bcast <- Seq(true, false)) {
+    for (log2m <- Seq(8, 20)) {
       val pruned = Contamination.sharedNgramsBloomPruned(
-          docs, bench, "doc_id", "text", 8, 10L, log2m = log2m, k = 1,
-          broadcastExact = bcast)
+          docs, bench, "doc_id", "text", 8, 10L, log2m = log2m, k = 1)
         .orderBy("doc_id", "bench_id").collect().toSeq
-      assert(pruned == exact,
-        s"log2m=$log2m broadcastExact=$bcast diverged from the exact path")
+      assert(pruned == exact, s"log2m=$log2m diverged from the exact path")
     }
   }
 
@@ -143,8 +141,7 @@ class ContaminationSpec extends AnyFunSuite {
   test("contaminatedSpans: corpus flags without shuffling (benchmark grams broadcast)") {
     val bench = docs.filter(col("doc_id") % 50 === 0)
     val corpus = docs.filter(col("doc_id") % 50 =!= 0)
-    val df = Contamination.contaminatedSpans(corpus, bench, "doc_id", "text",
-      width = 8, spreadInput = false)
+    val df = Contamination.contaminatedSpans(corpus, bench, "doc_id", "text", width = 8)
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
@@ -155,46 +152,5 @@ class ContaminationSpec extends AnyFunSuite {
     // bounded by benchmark size, under the broadcast
     assert(!plan.contains("SortMergeJoin"),
       s"flagging must not sort-merge (corpus-side gh shuffle):\n$plan")
-  }
-
-  test("excludeBenchIds enforces the disjointness contract on a bench hosted in the corpus") {
-    import spark.implicits._
-    def words(n: Int, tag: String): String =
-      (0 until n).map(i => s"$tag${('a' + i % 26).toChar}").mkString(" ")
-    val benchPara = "zebra quagga okapi tapir gnu eland kudu oryx"
-    // bench doc 100 lives INSIDE the corpus table — the contract violation
-    val corpus = Seq(
-      (1L, s"${words(6, "head")} $benchPara ${words(5, "tail")}"),
-      (100L, s"${words(4, "bq")} $benchPara ${words(3, "bt")}"),
-      (2L, words(20, "clean")))
-      .toDF("doc_id", "text")
-    val bench = corpus.filter(col("doc_id") === 100L)
-    // default: the hosted bench doc silently flags itself end-to-end —
-    // the documented hazard this option exists for
-    val selfFlagged = Contamination.contaminatedSpans(corpus, bench,
-        "doc_id", "text", width = 4)
-      .collect().map(_.getLong(0)).toSet
-    assert(selfFlagged.contains(100L), "hazard fixture must self-flag by default")
-    // excludeBenchIds: the hosted doc is anti-joined out; the true leak
-    // in doc 1 still flags, the clean doc stays clean
-    val spans = Contamination.contaminatedSpans(corpus, bench, "doc_id",
-        "text", width = 4, excludeBenchIds = true)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    assert(spans.toSeq == Seq((1L, 6L, 13L)),
-      s"only the genuine leak must flag: ${spans.toSeq}")
-  }
-
-  test("broadcastBench=false produces the same spans through a shuffled semi-join") {
-    val bench = docs.filter(col("doc_id") % 50 === 0)
-    val corpus = docs.filter(col("doc_id") % 50 =!= 0)
-    val hinted = Contamination.contaminatedSpans(corpus, bench, "doc_id",
-        "text", width = 8, spreadInput = false)
-      .orderBy("doc_id", "span_start").collect().toSeq
-    val unhinted = Contamination.contaminatedSpans(corpus, bench, "doc_id",
-        "text", width = 8, spreadInput = false, broadcastBench = false)
-      .orderBy("doc_id", "span_start").collect().toSeq
-    assert(hinted.nonEmpty, "fixture is vacuous: no contaminated spans")
-    assert(unhinted == hinted,
-      "the oversized-bench fallback must not change the span set")
   }
 }

@@ -437,11 +437,6 @@ class DomainsSpec extends AnyFunSuite {
     val kept = Domains.filterRobotsTxt(pages, "url", "doc_id", robots)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == Set(2L, 4L, 7L, 9L, 10L), kept.toString)
-    // crawling AS graftbot: b.com blocks everything, a.com's * group
-    // still applies (no graftbot group there)
-    val asBot = Domains.filterRobotsTxt(pages, "url", "doc_id", robots,
-      agent = "graftbot").select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(asBot == Set(2L, 4L, 9L, 10L), asBot.toString)
     // duplicate host rows merge their rule lists (order-independent)
     val dup = Seq(
       ("a.com", "User-agent: *\nDisallow: /p1\n"),

@@ -233,39 +233,10 @@ class DupSpansSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).sorted
     assert(w2.toSeq == Seq(1L, 2L))
     // the cut composes: repeats excised from the single doc
-    val cut = Dedup.cutDupSpans(df, "doc_id", "text", width = 4,
-        crossDocOnly = false)
+    val cut = Dedup.cutSpans(df, Dedup.dupSpans(df, "doc_id", "text", width = 4,
+        crossDocOnly = false), "doc_id", "text")
       .orderBy("doc_id").collect().map(r => (r.getLong(0), r.getString(1)))
     assert(cut.toSeq == Seq((1L, toks(3, "u")), (2L, toks(12, "z"))))
-  }
-
-  test("cutDupSpans recompute/drop: derived columns re-derive from the rewritten text") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, length => alen}
-    val shared = "alpha beta gamma delta"
-    val df = Seq(
-      (1L, s"$shared keepx", 100L), // stale n_chars on purpose
-      (2L, s"$shared keepy", 200L))
-      .toDF("doc_id", "text", "n_chars")
-    val got = Dedup.cutDupSpans(df, "doc_id", "text", width = 4,
-        recompute = Map("n_chars" -> alen(col("text")).cast("long")))
-      .orderBy("doc_id").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    // the expression sees the POST-cut text, not the input
-    assert(got.toSeq == Seq((1L, "keepx", 5L), (2L, "keepy", 5L)))
-    // drop-list refuses to carry the stale column
-    val dropped = Dedup.cutDupSpans(df, "doc_id", "text", width = 4,
-      drop = Seq("n_chars"))
-    assert(!dropped.columns.contains("n_chars"))
-    // a name in both is a hard error, as is targeting the text column
-    intercept[IllegalArgumentException] {
-      Dedup.cutDupSpans(df, "doc_id", "text", width = 4,
-        recompute = Map("n_chars" -> alen(col("text")).cast("long")),
-        drop = Seq("n_chars"))
-    }
-    intercept[IllegalArgumentException] {
-      Dedup.cutDupSpans(df, "doc_id", "text", width = 4, drop = Seq("text"))
-    }
   }
 
   test("null text: dupSpans skips, cutDupSpans coalesces to empty string") {
@@ -439,13 +410,6 @@ class DupSpansSpec extends AnyFunSuite {
       .filter(org.apache.spark.sql.functions.col("doc_id") === 1L)
       .select("text").as[String].collect()(0)
     assert(keptIntra == s"$boiler\n$boiler\n$boiler")
-    // custom separator
-    val pipey = Seq((1L, "a|boil|b"), (2L, "boil|c"), (3L, "boil"), (4L, "d"))
-      .toDF("doc_id", "text")
-    val keptPipe = Dedup.dropBoilerplateLines(pipey, "doc_id", "text",
-        minDocs = 3L, sep = "|")
-      .orderBy("doc_id").select("text").as[String].collect()
-    assert(keptPipe.toSeq == Seq("a|b", "c", "", "d"))
   }
 
   test("materialized-span overloads match the re-mining signatures") {
@@ -578,33 +542,28 @@ class DupSpansSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("text"))
-    def spansOf(df: org.apache.spark.sql.DataFrame, crossDocOnly: Boolean) =
-      Dedup.dupSpans(df, "doc_id", "text", width = 8, crossDocOnly = crossDocOnly)
+    def spansOf(df: org.apache.spark.sql.DataFrame) =
+      Dedup.dupSpans(df, "doc_id", "text", width = 8)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    for (crossDocOnly <- Seq(true, false)) {
-      val table = s"graft_gramidx_spec_$crossDocOnly"
-      // build on part 0, admit parts 1 and 2 as two rolling batches
-      Dedup.saveGramIndex(docs.filter(col("doc_id") % 3 === 0), table, 4,
-        "doc_id", "text", width = 8, crossDocOnly = crossDocOnly)
-      // after the build alone, the index must equal the batch answer on part 0
-      assert(Dedup.dupSpansFromIndex(spark, table).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-        == spansOf(docs.filter(col("doc_id") % 3 === 0), crossDocOnly),
-        s"build-only spans diverge (crossDocOnly=$crossDocOnly)")
-      Dedup.appendToGramIndex(docs.filter(col("doc_id") % 3 === 1), table,
-        "doc_id", "text", width = 8, crossDocOnly = crossDocOnly)
-      assert(Dedup.dupSpansFromIndex(spark, table).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-        == spansOf(docs.filter(col("doc_id") % 3 < 2), crossDocOnly),
-        s"first-append spans diverge (crossDocOnly=$crossDocOnly)")
-      Dedup.appendToGramIndex(docs.filter(col("doc_id") % 3 === 2), table,
-        "doc_id", "text", width = 8, crossDocOnly = crossDocOnly)
-      val rolled = Dedup.dupSpansFromIndex(spark, table).collect()
+    val table = "graft_gramidx_spec"
+    // build on part 0, admit parts 1 and 2 as two rolling batches
+    Dedup.saveGramIndex(docs.filter(col("doc_id") % 3 === 0), table, 4,
+      "doc_id", "text", width = 8)
+    // after the build alone, the index must equal the batch answer on part 0
+    assert(Dedup.dupSpansFromIndex(spark, table).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      assert(rolled == spansOf(docs, crossDocOnly),
-        s"second-append spans diverge (crossDocOnly=$crossDocOnly)")
-      assert(rolled.nonEmpty, "fixture is vacuous: no duplicate spans")
-    }
+      == spansOf(docs.filter(col("doc_id") % 3 === 0)), "build-only spans diverge")
+    Dedup.appendToGramIndex(docs.filter(col("doc_id") % 3 === 1), table,
+      "doc_id", "text", width = 8)
+    assert(Dedup.dupSpansFromIndex(spark, table).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+      == spansOf(docs.filter(col("doc_id") % 3 < 2)), "first-append spans diverge")
+    Dedup.appendToGramIndex(docs.filter(col("doc_id") % 3 === 2), table,
+      "doc_id", "text", width = 8)
+    val rolled = Dedup.dupSpansFromIndex(spark, table).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
+    assert(rolled == spansOf(docs), "second-append spans diverge")
+    assert(rolled.nonEmpty, "fixture is vacuous: no duplicate spans")
   }
 
   test("gram index compact: deletes rewrite triples AND re-derive flags (un-partnered spans vanish)") {

@@ -1338,6 +1338,70 @@ class PipelineOpsSpec extends AnyFunSuite {
       spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
+  test("compactSignatureIndex: one deletion-set read and one match-count job") {
+    // the deletion set is read once and both stores are counted in one
+    // job; only the two staging writes (two jobs each) come on top
+    val dupText = "the same boilerplate paragraph repeated across the corpus"
+    val corpus = ((0L until 120L).map(i => (i, dupText)) ++
+      (200L until 230L).map(i => (i, s"unique document body number $i with extra words")))
+      .toDF("doc_id", "text")
+    val prefix = "graft_test_cmpjobs_idx"
+    BandedLsh.saveSignatureIndex(corpus, prefix, 4,
+      "doc_id", "text", 4, 8, 3, 123L, hotBucketCap = 50L)
+    try {
+      // deletion sets that take a job to read (a local Seq would not)
+      val (noop, noopJobs) = org.apache.spark.sql.graft.JobCount.of(spark)(
+        BandedLsh.compactSignatureIndex(spark, prefix, spark.range(987654321L, 987654322L).toDF()))
+      assert(noop.collect().isEmpty)
+      assert(noopJobs == 2, s"a compaction that matches nothing ran $noopJobs jobs")
+      val (report, jobs) = org.apache.spark.sql.graft.JobCount.of(spark)(
+        BandedLsh.compactSignatureIndex(spark, prefix,
+          spark.range(0L, 10L).union(spark.range(200L, 202L)).toDF()))
+      assert(report.collect().map(r => r.getString(0) -> r.getLong(1)).toMap ==
+        Map("main" -> 2 * 8L, "hot" -> 10 * 8L))
+      assert(jobs == 6, s"a two-store compaction ran $jobs jobs")
+    } finally for (t <- Seq(prefix, s"${prefix}_hot"))
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("nearDupAgainstIndex: same pairs at any input split, shuffle width or AQE") {
+    // the probe's cold bucketed join and its hot grid-join branch must give
+    // the same (batch_id, corpus_id, sim) set however the batch and the
+    // corpus lookup are split, at any shuffle width, with AQE on or off
+    val dupText = "the same boilerplate paragraph repeated across the corpus"
+    val boiler = (1000L until 1060L).map(i => (i, dupText)).toDF("doc_id", "text")
+    val corpus = plantedDocs.filter($"doc_id" % 3 === 0).unionByName(boiler)
+    val batch = plantedDocs.filter($"doc_id" % 3 =!= 0)
+      .unionByName(Seq((5000L, dupText), (5001L, dupText)).toDF("doc_id", "text"))
+    val prefix = "graft_test_probe_split_idx"
+    BandedLsh.saveSignatureIndex(corpus, prefix, 4,
+      "doc_id", "text", 4, 8, 3, 123L, hotBucketCap = 20L)
+    def probe(c: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      BandedLsh.nearDupAgainstIndex(prefix, c, b, "doc_id", "text", 4, 8, 3, 123L, 0.5,
+          blocks = 4)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    try {
+      assert(spark.table(s"${prefix}_hot").count() > 0, "the hot sidecar must be non-empty")
+      val base = probe(corpus, batch)
+      assert(base.exists(_._1 == 5000L), "the grid-join branch must emit pairs")
+      assert(base.exists(_._1 < 1000L), "the cold branch must emit pairs")
+      for (inParts <- Seq(1, 7); width <- Seq(3, 16); aqe <- Seq(true, false)) {
+        spark.conf.set(keys(0), width.toLong)
+        spark.conf.set(keys(1), aqe)
+        val got = probe(corpus.repartition(inParts), batch.repartition(inParts))
+        assert(got == base, s"input $inParts partitions, width $width, AQE $aqe")
+      }
+    } finally {
+      saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      for (t <- Seq(prefix, s"${prefix}_hot")) spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
+  }
+
   test("compactSignatureIndex refuses leftover scratches from an interrupted run") {
     val prefix = "graft_test_cmp2_idx"
     val hot = s"${prefix}_hot"

@@ -45,15 +45,6 @@ class SamplingSpec extends AnyFunSuite {
     }
   }
 
-  test("prefiltered stratified sample equals the one-phase result when enough survives") {
-    val one = Sampling.stratifiedSampleByHash(docs, "lang", "doc_id", 3, seed = 11L)
-      .select("doc_id").collect().map(_.getLong(0)).sorted
-    val two = Sampling.stratifiedSampleByHash(docs, "lang", "doc_id", 3, seed = 11L,
-        prefilterFraction = Some(0.5))
-      .select("doc_id").collect().map(_.getLong(0)).sorted
-    assert(one.sameElements(two))
-  }
-
   test("assignSplits is exhaustive, disjoint and layout-invariant") {
     val splits = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)
     val out = Sampling.assignSplits(docs, "doc_id", seed = 5L, splits)

@@ -17,16 +17,14 @@ class SkewSpec extends AnyFunSuite {
   }.toDF("k", "row_id", "v")
   private lazy val dim = (0 until 50).map(i => (i.toLong, s"name$i")).toDF("dk", "name")
 
-  test("saltedJoin equals the plain join, inner and left") {
-    for (jt <- Seq("inner", "left")) {
-      val plain = fact.join(dim, fact("k") === dim("dk"), jt)
-        .select("k", "row_id", "v", "dk", "name")
-        .collect().map(_.toString).sorted.toSeq
-      val salted = Skew.saltedJoin(fact, dim, "k", "dk", Seq($"row_id"), 8, jt)
-        .select("k", "row_id", "v", "dk", "name")
-        .collect().map(_.toString).sorted.toSeq
-      assert(salted == plain, s"join type $jt")
-    }
+  test("saltedJoin equals the plain inner join") {
+    val plain = fact.join(dim, fact("k") === dim("dk"))
+      .select("k", "row_id", "v", "dk", "name")
+      .collect().map(_.toString).sorted.toSeq
+    val salted = Skew.saltedJoin(fact, dim, "k", "dk", Seq($"row_id"), 8)
+      .select("k", "row_id", "v", "dk", "name")
+      .collect().map(_.toString).sorted.toSeq
+    assert(salted == plain)
   }
 
   test("saltedJoin scatters the hot key across salt buckets in the plan") {

@@ -335,7 +335,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, Timestamp, String)]
     val df = mem.toDF().toDF("doc_id", "ts", "text")
-    val q = EventStreams.dedupByContent(df, "text", "30 minutes")
+    val q = EventStreams.dedupByContent(df, "text")
       .writeStream.format("memory").queryName("content_dedup")
       .outputMode("append").start()
     try {
