@@ -4159,8 +4159,7 @@ object SparkEntry {
         .select(col("doc_id").cast("long"),
           expr("timestamp_seconds(doc_id + 1)").as("ts"), col("text"))
         .as[(Long, java.sql.Timestamp, String)].collect().toSeq.sortBy(_._1)
-      graft.streaming.EventStreams.nearDupReplay(s, docs,
-          ngramWidth = 4, bandCount = 8, bandSize = 3, lshSeed = 123L, nBatches = 3)
+      graft.streaming.EventStreams.nearDupReplay(s, docs)
         .select(col("band"),
           least(col("doc_id"), col("peer_id")).as("id_a"),
           greatest(col("doc_id"), col("peer_id")).as("id_b"))
@@ -4181,8 +4180,7 @@ object SparkEntry {
           expr("timestamp_seconds(vec_id + 1)").as("ts"),
           col("embedding").cast("array<double>"))
         .as[(Long, java.sql.Timestamp, Seq[Double])].collect().toSeq.sortBy(_._1)
-      graft.streaming.EventStreams.embedNearDupReplay(s, vecs,
-          nbits = 64, bands = 8, lshSeed = 41L, nBatches = 3)
+      graft.streaming.EventStreams.embedNearDupReplay(s, vecs, nBatches = 3)
         .select(col("band"),
           least(col("doc_id"), col("peer_id")).as("id_a"),
           greatest(col("doc_id"), col("peer_id")).as("id_b"))
@@ -4200,7 +4198,7 @@ object SparkEntry {
       val events = eventsSeq(s, dir).sortBy(_.ts.getTime)
       graft.streaming.EventStreams.attributionJoinReplay(s,
           events.filter(_.event_type == "click"),
-          events.filter(_.event_type == "purchase"), "1 hour", 3)
+          events.filter(_.event_type == "purchase"), nBatches = 3)
         .select(col("click_id"), col("purchase_id"), col("user_id"),
           col("click_ts").cast("long").as("click_s"),
           col("purchase_ts").cast("long").as("purchase_s"), col("value"))
@@ -4214,7 +4212,7 @@ object SparkEntry {
       // the replay is bit-equal to the batch bucketing (gap FILLING stays
       // batch-side — it needs closed predecessors)
       val events = eventsSeq(s, dir)
-      graft.streaming.EventStreams.windowedLastValueReplay(s, events, "1 day", 3)
+      graft.streaming.EventStreams.windowedLastValueReplay(s, events, "1 day", nBatches = 3)
         .select(date_format(col("win_start"), "yyyy-MM-dd HH:mm").as("win_start"),
           col("user_id"), col("last_value"))
         .orderBy("win_start", "user_id")
@@ -4225,7 +4223,7 @@ object SparkEntry {
       // append-mode windows close as the watermark advances and must equal
       // the batch aggregation exactly
       val events = eventsSeq(s, dir)
-      graft.streaming.EventStreams.windowedCountsReplay(s, events, "1 hour", 3)
+      graft.streaming.EventStreams.windowedCountsReplay(s, events, nBatches = 3)
         .select(date_format(col("win_start"), "yyyy-MM-dd HH:mm").as("win_start"),
           col("event_type"), col("cnt"), col("min_v"), col("max_v"))
         .orderBy("win_start", "event_type")
@@ -4238,7 +4236,7 @@ object SparkEntry {
       // replay bit-equal to a batch fold — pinned by the Python VALUES
       // oracle re-deriving every window's buckets
       val events = eventsSeq(s, dir)
-      graft.streaming.EventStreams.windowedQuantilesReplay(s, events, "1 hour", 3, b = 5)
+      graft.streaming.EventStreams.windowedQuantilesReplay(s, events, nBatches = 3)
         .select(date_format(col("win_start"), "yyyy-MM-dd HH:mm").as("win_start"),
           col("event_type"), col("p50_x100"), col("p95_x100"))
         .orderBy("win_start", "event_type")
@@ -4251,7 +4249,7 @@ object SparkEntry {
       // estimates bit-equal to a batch run, which the Python VALUES oracle
       // (register-level re-derivation) pins per window
       val events = eventsSeq(s, dir)
-      graft.streaming.EventStreams.windowedDistinctReplay(s, events, "1 hour", 3, p = 10)
+      graft.streaming.EventStreams.windowedDistinctReplay(s, events, nBatches = 3, p = 10)
         .select(date_format(col("win_start"), "yyyy-MM-dd HH:mm").as("win_start"),
           col("event_type"), col("approx_users"))
         .orderBy("win_start", "event_type")
@@ -4276,8 +4274,7 @@ object SparkEntry {
       // Unlike the sketch gates this one is exact, so the oracle is the
       // plain SQL window twin, not a pinned re-derivation.
       val events = eventsSeq(s, dir)
-      graft.streaming.EventStreams.windowedTopKReplay(s, events, k = 3,
-          "1 hour", nBatches = 3)
+      graft.streaming.EventStreams.windowedTopKReplay(s, events, nBatches = 3)
         .select(date_format(col("win_start"), "yyyy-MM-dd HH:mm").as("win_start"),
           col("event_type"), col("rnk"), col("event_id"), col("value"))
         .orderBy("win_start", "event_type", "rnk")
@@ -4290,7 +4287,7 @@ object SparkEntry {
       // order invariance), pinned by the Python counter re-derivation.
       val events = eventsSeq(s, dir)
       graft.streaming.EventStreams.windowedFreqReplay(s, events,
-          probeUsers = Seq(0L, 1L, 2L, 3L, 4L), "1 hour", 3, d = 4, log2w = 12)
+          probeUsers = Seq(0L, 1L, 2L, 3L, 4L), nBatches = 3)
         .select(date_format(col("win_start"), "yyyy-MM-dd HH:mm").as("win_start"),
           col("event_type"), col("user_id"), col("est_cnt"))
         .orderBy("win_start", "event_type", "user_id")
@@ -4339,8 +4336,7 @@ object SparkEntry {
         .select(col("doc_id").cast("long"), col("text"))
         .as[(Long, String)].collect().toSeq.sortBy(_._1)
       val (corpus, stream) = docs.partition(_._1 < 300)
-      graft.streaming.EventStreams.gramIngestReplay(s, "graft_gram_sidx",
-          corpus, stream, nBatches = 4, width = 8)
+      graft.streaming.EventStreams.gramIngestReplay(s, corpus, stream)
         .orderBy("doc_id", "span_start")
     }),
     "stream_novelty_ingest" -> ((s, dir) => {
@@ -4366,8 +4362,7 @@ object SparkEntry {
           .select((col("vec_id") + 100000L).as("vec_id"), col("embedding")))
         .as[(Long, Seq[Double])].collect().toSeq.sortBy(_._1)
       graft.streaming.EventStreams.annNoveltyReplay(s, "graft_annnovs_idx",
-          "graft_annnovs_corpus", stream, nBatches = 4,
-          tau = 1e-6, nprobe = 4, kCand = 8)
+          "graft_annnovs_corpus", stream, nBatches = 4, nprobe = 4)
         .orderBy("vec_id")
     }),
     "stream_ann_append" -> ((s, dir) => {
@@ -4406,8 +4401,7 @@ object SparkEntry {
         .as[(Long, String)].collect().toSeq.sortBy(_._1)
       val (corpus, stream) = docs.partition(_._1 < 300)
       graft.streaming.EventStreams.rollingDedupReplay(s, corpus, stream,
-          nBatches = 4, ngramWidth = 4, bandCount = 8, bandSize = 3,
-          seed = 123L, threshold = 0.5, hotBucketCap = 5L)
+          nBatches = 4, hotBucketCap = 5L)
         .orderBy("doc_id")
     }),
 

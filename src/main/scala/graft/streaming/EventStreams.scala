@@ -2,9 +2,12 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** One gap-connected run of events for a user — a session still open for
   * extension: `[startMs, endMs]` containing `n` events. Top-level so the
@@ -33,7 +36,6 @@ case class HostQuota(count: Long)
   * [[windowedCounts]].
   */
 object EventStreams {
-
   /** Smallest positive Long accepted as epoch nanoseconds by
     * [[normalizeEventTs]]: 1e17 ns = 1973-03-03. Genuine nanosecond data
     * from 1970-01-01..1973-03-03 falls below it and is (incorrectly)
@@ -88,83 +90,6 @@ object EventStreams {
         col("cnt"), col("min_v"), col("max_v"))
   }
 
-  /** CRASH-RECOVERY replay of [[windowedCounts]]: run the aggregation as a
-    * durable file-source → file-sink query, STOP it mid-stream, and resume
-    * a brand-new query from the same checkpoint — the operational property
-    * none of the MemoryStream harnesses can exercise (a MemoryStream's
-    * offsets die with the process, so checkpoint restart over one is
-    * unsupported by design; JSON files + parquet sink are the replayable/
-    * exactly-once pair Structured Streaming actually recovers with).
-    *
-    * What the restart must prove, and the single output checks:
-    *  - windows still OPEN at the stop are carried in the state store and
-    *    finish from post-restart data (no gaps);
-    *  - windows already emitted before the stop are not re-emitted (no
-    *    duplicates — state eviction + the file sink's commit log);
-    *  - the union of both queries' emissions equals the batch twin
-    *    bit-exactly.
-    *
-    * The first half of the (ts-sorted) stream arrives before the crash
-    * as three files, the rest after it as three more; the aggregation is
-    * 1-hour windows under a 1-hour watermark. A far-future flush row
-    * closes the tail windows after the restart (callers filter
-    * event_type='flush', the module's established pattern). Returns the
-    * sink read back as a batch frame. */
-  def windowedCountsRestartReplay(spark: SparkSession, events: Seq[Event]): DataFrame = {
-    val run = replaySeq.incrementAndGet()
-    val base = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_restart_$run")
-    // the counter resets per JVM: a leftover base dir from a previous
-    // process would feed the new query stale files AND a stale checkpoint
-    if (java.nio.file.Files.exists(base)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(base).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.delete)
-    }
-    val srcDir = base.resolve("src"); val sinkDir = base.resolve("sink")
-    val ckptDir = base.resolve("ckpt")
-    java.nio.file.Files.createDirectories(srcDir)
-
-    // ts-sorted so the watermark advances monotonically across files and
-    // the pre-stop portion genuinely closes some windows
-    val sorted = events.sortBy(_.ts.getTime)
-    val far = new Timestamp(sorted.iterator.map(_.ts.getTime).max + 4000L * 86400_000L)
-    val tail = sorted.drop(sorted.size / 2) :+ Event(-1L, far, -1L, "flush", 0.0)
-    val head = sorted.take(sorted.size / 2)
-    def writeFiles(rows: Seq[Event], names: Iterator[String], n: Int): Unit = {
-      val chunk = math.max(1, (rows.size + n - 1) / n)
-      rows.grouped(chunk).foreach { c =>
-        val body = c.map(e =>
-          s"""{"event_id":${e.event_id},"ts":${e.ts.getTime / 1000},""" +
-          s""""user_id":${e.user_id},"event_type":"${e.event_type}","value":${e.value}}""")
-          .mkString("", "\n", "\n")
-        java.nio.file.Files.writeString(srcDir.resolve(names.next()), body)
-      }
-    }
-    val names = Iterator.from(0).map(i => f"part-$i%05d.json")
-
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE")
-    def startQuery() = {
-      val src = spark.readStream.schema(schema).json(srcDir.toString)
-        .withColumn("ts", expr("timestamp_seconds(ts)"))
-      windowedCounts(src, "1 hour", "1 hour")
-        .writeStream.format("parquet")
-        .option("path", sinkDir.toString)
-        .option("checkpointLocation", ckptDir.toString)
-        .outputMode("append").start()
-    }
-
-    writeFiles(head, names, 3)
-    val q1 = startQuery()
-    try q1.processAllAvailable() finally q1.stop()
-    writeFiles(tail, names, 3)
-    val q2 = startQuery() // NEW query, same checkpoint: the restart
-    try q2.processAllAvailable() finally q2.stop()
-
-    spark.read.parquet(sinkDir.toString).filter(col("event_type") =!= "flush")
-  }
-
   /** Windowed approximate distinct users per event type — the streaming
     * distinct count. Structured Streaming rejects COUNT(DISTINCT) in a
     * streaming aggregation outright (it would need the full per-window key
@@ -204,27 +129,6 @@ object EventStreams {
       .select(col("win_start"), col("event_type"),
         (col("pos") + 1).cast("long").as("rnk"),
         col("col.id").as("event_id"), col("col.score").as("value"))
-  }
-
-  /** Replay harness for [[windowedTopKEvents]] — same contract as
-    * [[windowedDistinctReplay]]: far watermark, flush event, results
-    * bit-equal to the batch twin for any micro-batch split. */
-  def windowedTopKReplay(spark: SparkSession, events: Seq[Event], k: Int,
-                         windowLen: String = "1 hour", nBatches: Int = 3): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val sink = s"graft_topk_replay_${replaySeq.incrementAndGet()}"
-    val q = windowedTopKEvents(mem.toDF(), k, windowLen, watermark = "3650 days")
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      val chunk = math.max(1, (events.size + nBatches - 1) / nBatches)
-      events.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-      val far = new Timestamp(events.iterator.map(_.ts.getTime).max + 4000L * 86400_000L)
-      mem.addData(Event(-1L, far, -1L, "flush", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(sink).filter(col("event_type") =!= "flush")
   }
 
   /** Windowed value quantiles per event type via the mergeable HDR
@@ -472,197 +376,6 @@ object EventStreams {
       }
   }
 
-  private val replaySeq = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Streaming decontamination — the stream-static twin of
-    * [[graft.api.Contamination.sharedNgrams]]: each micro-batch of
-    * arriving documents probes the STATIC benchmark's broadcast shingle
-    * set and emits its (doc_id, bench_id, shared_ngrams) flags. The flag
-    * rule is per-document-LOCAL (a doc's flags depend only on its own
-    * text and the static bench), so the query is STATELESS — no
-    * watermark, no state store, and the union of micro-batch outputs is
-    * bit-equal to the batch run over the whole corpus, which is exactly
-    * what the gate pins (it shares contamination_check's oracle).
-    * `foreachBatch` is the composition point because the rule is an
-    * aggregation-after-join — the documented Structured Streaming shape
-    * for running a batch operator per micro-batch; at production scale
-    * the same body sits on a `readStream` source and appends to the
-    * flags table, and the static bench side broadcasts once per batch.
-    * MemoryStream feeding is the test harness. */
-  def contaminationReplay(spark: SparkSession, docs: Seq[(Long, String)],
-                          bench: DataFrame, nBatches: Int,
-                          ngramWidth: Int, minShared: Long): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val tbl = s"graft_stream_contam_${replaySeq.incrementAndGet()}"
-    graft.api.BucketedWrite.dropTable(spark, tbl)
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = mem.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.api.Contamination.sharedNgrams(batch, bench, "doc_id", "text",
-            ngramWidth, minShared)
-          .write.mode("append").format("parquet").saveAsTable(tbl)
-        ()
-      }
-      .outputMode("update").start()
-    try {
-      val chunk = math.max(1, (docs.size + nBatches - 1) / nBatches)
-      docs.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    spark.catalog.refreshTable(tbl)
-    spark.table(tbl)
-  }
-
-  /** Replay a finite event set through [[sessionize]] as a REAL Structured
-    * Streaming query — MemoryStream source split over `nBatches`
-    * micro-batches in the given (arbitrary) order, memory sink, then one
-    * far-future flush event so the watermark closes every open session —
-    * and return the emitted sessions as a batch DataFrame.
-    *
-    * This is the driver-verification harness that puts the streaming
-    * operator under the SAME independent oracle as its batch twin
-    * ([[sessionizeBatch]]'s SQL): equality holds for any within-watermark
-    * arrival order, so arbitrary fixture order over several micro-batches
-    * is a genuine end-to-end check of watermarks, event-time timeouts and
-    * cross-batch state. Not a production source — production streams come
-    * from `readStream` (files/Kafka); the operator under test is identical
-    * either way. */
-  def sessionizeReplay(spark: SparkSession, events: Seq[Event], gapMs: Long,
-                       nBatches: Int = 3): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    // unique sink name per invocation: the memory sink table outlives stop()
-    val sink = s"graft_sessionize_replay_${replaySeq.incrementAndGet()}"
-    // watermark delay far beyond the fixture's time range: replay disorder is
-    // never "late", so the streamed sessions must equal the batch twin exactly
-    val q = sessionize(mem.toDS(), gapMs, watermarkDelay = "3650 days")
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      val chunk = math.max(1, (events.size + nBatches - 1) / nBatches)
-      events.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-      val far = new Timestamp(events.iterator.map(_.ts.getTime).max + 4000L * 86400_000L)
-      mem.addData(Event(-1L, far, -1L, "flush", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(sink).filter(col("user_id") >= 0)
-      .select("user_id", "start", "end", "events")
-  }
-
-  /** Replay [[sessionize]] with a SHORT watermark and caller-controlled
-    * micro-batches — the late-data admission harness. Every other replay
-    * here sets the delay beyond the fixture's time range so nothing is ever
-    * late; this one feeds each element of `batches` as exactly one
-    * micro-batch under a real `watermarkDelay`, so rows arriving after the
-    * watermark passed them are genuinely DROPPED and the caller's oracle
-    * must model the drop set explicitly. The admission rule under test:
-    * batch k's rows are filtered against the watermark established by
-    * batches 0..k-1 (max event time minus delay), and the drop predicate
-    * is `ts <= watermark` — Spark's pre-function late-row filter (the
-    * nearDup replay's documented epoch-0 drop) combined with the
-    * operator's own `>= wm` guard. A final far-future flush closes every
-    * surviving session. */
-  def sessionizeLateReplay(spark: SparkSession, batches: Seq[Seq[Event]], gapMs: Long,
-                           watermarkDelay: String): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val sink = s"graft_late_sessionize_replay_${replaySeq.incrementAndGet()}"
-    val q = sessionize(mem.toDS(), gapMs, watermarkDelay)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      batches.foreach { b => mem.addData(b); q.processAllAvailable() }
-      val far = new Timestamp(
-        batches.flatten.iterator.map(_.ts.getTime).max + 4000L * 86400_000L)
-      mem.addData(Event(-1L, far, -1L, "flush", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(sink).filter(col("user_id") >= 0)
-      .select("user_id", "start", "end", "events")
-  }
-
-  /** Replay a finite document set through [[nearDupCandidates]] as a real
-    * Structured Streaming query and return every emitted candidate.
-    *
-    * Driver-verification harness: with an effectively unbounded bucket
-    * capacity and TTL (the defaults here), every pair of documents sharing a
-    * (band, hash) bucket meets exactly once — whichever arrives later emits
-    * against the earlier member — so the emitted set, normalized to
-    * unordered pairs, equals the full co-bucket pair set per band
-    * REGARDLESS of micro-batch arrival order. That set is pure MinHash
-    * bucket math, independently re-derivable (tools/gen_oracles.py), which
-    * turns the stateful streaming operator into an oracle-checkable one.
-    * Production use keeps the bounded defaults of [[nearDupCandidates]]
-    * (maxBucket, ttl) and accepts the documented recall trade. */
-  def nearDupReplay(spark: SparkSession, docs: Seq[(Long, Timestamp, String)],
-                    ngramWidth: Int, bandCount: Int, bandSize: Int, lshSeed: Long,
-                    nBatches: Int = 3): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Timestamp, String)]
-    val sink = s"graft_neardup_replay_${replaySeq.incrementAndGet()}"
-    val q = nearDupCandidates(mem.toDF().toDF("doc_id", "ts", "text"),
-        ngramWidth, bandCount, bandSize, lshSeed,
-        watermarkDelay = "3650 days", ttlMs = Long.MaxValue / 4, maxBucket = 1 << 20)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      val chunk = math.max(1, (docs.size + nBatches - 1) / nBatches)
-      docs.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    spark.table(sink)
-  }
-
-  /** Replay a finite embedding set through [[embedNearDupCandidates]] —
-    * the cosine twin of [[nearDupReplay]], same disorder-tolerant config
-    * (watermark beyond the fixture range, effectively-unbounded TTL and
-    * bucket cap) so the candidate set must equal pure co-bucket math for
-    * any micro-batch split. */
-  def embedNearDupReplay(spark: SparkSession,
-                         vecs: Seq[(Long, Timestamp, Seq[Double])],
-                         nbits: Int, bands: Int, lshSeed: Long,
-                         nBatches: Int = 3): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Timestamp, Seq[Double])]
-    val sink = s"graft_embed_neardup_replay_${replaySeq.incrementAndGet()}"
-    val q = embedNearDupCandidates(mem.toDF().toDF("vec_id", "ts", "embedding"),
-        nbits, bands, lshSeed,
-        watermarkDelay = "3650 days", ttlMs = Long.MaxValue / 4, maxBucket = 1 << 20)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      val chunk = math.max(1, (vecs.size + nBatches - 1) / nBatches)
-      vecs.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    spark.table(sink)
-  }
-
-  /** Replay a finite event set through [[windowedCounts]] as a real
-    * Structured Streaming query (append mode: a window only emits once the
-    * watermark passes its end) and return every emitted window row.
-    *
-    * Driver-verification harness: with a watermark delay beyond the
-    * fixture's time range nothing is ever late, so the emitted windows must
-    * equal the batch twin (`q9_events_window`'s SQL) for ANY micro-batch
-    * arrival order. A far-future flush event advances the watermark past
-    * every real window; its own forever-open window is filtered out. */
-  def windowedCountsReplay(spark: SparkSession, events: Seq[Event],
-                           windowLen: String = "1 hour", nBatches: Int = 3): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val sink = s"graft_windowed_replay_${replaySeq.incrementAndGet()}"
-    val q = windowedCounts(mem.toDF(), windowLen, watermark = "3650 days")
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      val chunk = math.max(1, (events.size + nBatches - 1) / nBatches)
-      events.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-      val far = new Timestamp(events.iterator.map(_.ts.getTime).max + 4000L * 86400_000L)
-      mem.addData(Event(-1L, far, -1L, "flush", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(sink).filter(col("event_type") =!= "flush")
-  }
-
   /** Stream-stream interval join — click-to-purchase attribution: each
     * purchase joins every click by the same user in the preceding
     * `maxDelay`. The canonical two-stream stateful join: both sides carry
@@ -689,35 +402,6 @@ object EventStreams {
         col("click_ts"), col("purchase_ts"), col("value"))
   }
 
-  /** Replay harness for [[attributionJoin]]: two MemoryStreams fed in
-    * alternating chunks (clicks slightly ahead, so cross-batch matches —
-    * purchase arriving batches after its click — are exercised). Inner
-    * interval joins need no flush event: every match emits once both sides
-    * have arrived. */
-  def attributionJoinReplay(spark: SparkSession, clicks: Seq[Event],
-                            purchases: Seq[Event], maxDelay: String = "1 hour",
-                            nBatches: Int = 3): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val memC = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val memP = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val sink = s"graft_attr_replay_${replaySeq.incrementAndGet()}"
-    val q = attributionJoin(memC.toDF(), memP.toDF(), maxDelay, watermark = "3650 days")
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      val chunk = (xs: Seq[Event]) => math.max(1, (xs.size + nBatches - 1) / nBatches)
-      val cs = clicks.grouped(chunk(clicks)).toSeq
-      val ps = purchases.grouped(chunk(purchases)).toSeq
-      for (i <- 0 until math.max(cs.size, ps.size)) {
-        if (i < cs.size) memC.addData(cs(i))
-        q.processAllAvailable()
-        if (i < ps.size) memP.addData(ps(i))
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    spark.table(sink)
-  }
-
   /** Windowed last observation per user — the streaming face of
     * [[graft.api.TimeSeries.resampleGapFill]]'s bucketing stage: per
     * (window, user), the value of the max-(ts, event_id) event survives. A
@@ -735,97 +419,6 @@ object EventStreams {
       .groupBy(window(col("ts"), windowLen), col("user_id"))
       .agg(max_by(col("value"), struct(col("ts"), col("event_id"))).as("last_value"))
       .select(col("window.start").as("win_start"), col("user_id"), col("last_value"))
-  }
-
-  /** Replay harness for [[windowedLastValue]] — same contract as
-    * [[windowedCountsReplay]]: far watermark, flush event, closed windows
-    * equal the batch twin for any micro-batch split. */
-  def windowedLastValueReplay(spark: SparkSession, events: Seq[Event],
-                              windowLen: String = "1 day", nBatches: Int = 3): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val sink = s"graft_lastval_replay_${replaySeq.incrementAndGet()}"
-    val q = windowedLastValue(mem.toDF(), windowLen, watermark = "3650 days")
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      val chunk = math.max(1, (events.size + nBatches - 1) / nBatches)
-      events.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-      val far = new Timestamp(events.iterator.map(_.ts.getTime).max + 4000L * 86400_000L)
-      mem.addData(Event(-1L, far, -1L, "flush", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(sink).filter(col("user_id") =!= -1L)
-  }
-
-  /** Replay a finite event set through [[windowedDistinctUsers]] — same
-    * harness as [[windowedCountsReplay]] (append mode, far watermark so
-    * nothing is late, flush event to close every real window). The sketch's
-    * order/partition invariance upgrades the usual replay contract: the
-    * emitted estimates are bit-equal to the batch twin for ANY micro-batch
-    * split of the input, which the driver oracle pins value-for-value. */
-  def windowedDistinctReplay(spark: SparkSession, events: Seq[Event],
-                             windowLen: String = "1 hour", nBatches: Int = 3,
-                             p: Int = 12): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val sink = s"graft_hll_replay_${replaySeq.incrementAndGet()}"
-    val q = windowedDistinctUsers(mem.toDF(), windowLen, watermark = "3650 days", p = p)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      val chunk = math.max(1, (events.size + nBatches - 1) / nBatches)
-      events.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-      val far = new Timestamp(events.iterator.map(_.ts.getTime).max + 4000L * 86400_000L)
-      mem.addData(Event(-1L, far, -1L, "flush", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(sink).filter(col("event_type") =!= "flush")
-  }
-
-  /** Replay harness for [[windowedValueQuantiles]] — same contract as
-    * [[windowedDistinctReplay]]: far watermark, flush event, estimates
-    * bit-equal to the batch twin for any micro-batch split. */
-  def windowedQuantilesReplay(spark: SparkSession, events: Seq[Event],
-                              windowLen: String = "1 hour", nBatches: Int = 3,
-                              b: Int = 5): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val sink = s"graft_hist_replay_${replaySeq.incrementAndGet()}"
-    val q = windowedValueQuantiles(mem.toDF(), windowLen, watermark = "3650 days", b = b)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      val chunk = math.max(1, (events.size + nBatches - 1) / nBatches)
-      events.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-      val far = new Timestamp(events.iterator.map(_.ts.getTime).max + 4000L * 86400_000L)
-      mem.addData(Event(-1L, far, -1L, "flush", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(sink).filter(col("event_type") =!= "flush")
-  }
-
-  /** Replay harness for [[windowedUserFreq]] — same contract as
-    * [[windowedDistinctReplay]]: far watermark, flush event, estimates
-    * bit-equal to the batch twin for any micro-batch split. */
-  def windowedFreqReplay(spark: SparkSession, events: Seq[Event], probeUsers: Seq[Long],
-                         windowLen: String = "1 hour", nBatches: Int = 3,
-                         d: Int = 4, log2w: Int = 12): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-    val sink = s"graft_cms_replay_${replaySeq.incrementAndGet()}"
-    val q = windowedUserFreq(mem.toDF(), probeUsers, windowLen,
-        watermark = "3650 days", d = d, log2w = log2w)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      val chunk = math.max(1, (events.size + nBatches - 1) / nBatches)
-      events.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-      val far = new Timestamp(events.iterator.map(_.ts.getTime).max + 4000L * 86400_000L)
-      mem.addData(Event(-1L, far, -1L, "flush", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table(sink).filter(col("event_type") =!= "flush")
   }
 
   /** Streaming per-domain quota admission — the crawl-side twin of
@@ -884,29 +477,6 @@ object EventStreams {
       }.toDF("doc_id", "key", "admitted")
   }
 
-  /** Replay a finite URL stream through [[domainQuotaAdmit]] as a real
-    * Structured Streaming query in the GIVEN order (event times synthesized
-    * monotone from arrival position), returning every verdict row. The
-    * cross-batch check is the whole point: a host whose quota fills in
-    * batch k must reject its batch-k+1 arrivals from persisted state. */
-  def domainQuotaReplay(spark: SparkSession, docs: Seq[(Long, String)],
-                        nBatches: Int, maxPerDomain: Int): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Timestamp, String)]
-    val sink = s"graft_domquota_replay_${replaySeq.incrementAndGet()}"
-    val timed = docs.zipWithIndex.map { case ((id, url), i) =>
-      (id, new Timestamp((i + 1) * 1000L), url)
-    }
-    val q = domainQuotaAdmit(mem.toDF().toDF("doc_id", "ts", "url"), maxPerDomain)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      val chunk = math.max(1, (timed.size + nBatches - 1) / nBatches)
-      timed.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    spark.table(sink).select("doc_id", "host", "admitted")
-  }
-
   /** First-come streaming URL dedup — the streaming twin of
     * [[graft.api.Domains.dedupByUrl]], the crawl-frontier shape: the
     * FIRST document to arrive under each canonical URL key
@@ -943,349 +513,25 @@ object EventStreams {
       .select(col("doc_id"), col("admitted"))
   }
 
-  /** Replay a finite URL stream through [[urlDedupAdmit]] as a real
-    * Structured Streaming query — the [[domainQuotaReplay]] harness
-    * shape. The cross-batch check is the point: a URL first seen in
-    * batch k must reject its batch-k+1 re-fetches from persisted
-    * state. */
-  def urlDedupReplay(spark: SparkSession, docs: Seq[(Long, String)],
-                     nBatches: Int,
-                     dropParamPrefixes: Seq[String] = Nil): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Timestamp, String)]
-    val sink = s"graft_urldedup_replay_${replaySeq.incrementAndGet()}"
-    val timed = docs.zipWithIndex.map { case ((id, url), i) =>
-      (id, new Timestamp((i + 1) * 1000L), url)
-    }
-    val q = urlDedupAdmit(mem.toDF().toDF("doc_id", "ts", "url"),
-        dropParamPrefixes = dropParamPrefixes)
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      val chunk = math.max(1, (timed.size + nBatches - 1) / nBatches)
-      timed.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    spark.table(sink).select("doc_id", "admitted")
-  }
-
-  /** Replay a finite document sequence through [[dedupByContent]] as a real
-    * Structured Streaming query, in the GIVEN order, and return every
-    * surviving row.
-    *
-    * Driver-verification harness for watermark-bounded streaming dedup:
-    * `dropDuplicatesWithinWatermark` keeps the first arrival per content
-    * hash, so with docs fed in id order the survivor set is exactly
-    * "min doc_id per distinct text" — a pure SQL fact any engine can
-    * recompute. Splitting over micro-batches makes later batches' duplicate
-    * drops a genuine cross-batch state check. Event times are synthesized
-    * monotone from arrival position, starting at +1s (the initial watermark
-    * is the epoch and stateful operators drop rows at ts <= watermark). */
-  def dedupContentReplay(spark: SparkSession, docs: Seq[(Long, String)],
-                         nBatches: Int = 4): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Timestamp, String)]
-    val sink = s"graft_dedup_replay_${replaySeq.incrementAndGet()}"
-    val timed = docs.zipWithIndex.map { case ((id, text), i) =>
-      (id, new Timestamp((i + 1) * 1000L), text)
-    }
-    val q = dedupByContent(mem.toDF().toDF("doc_id", "ts", "text"), "text")
-      .writeStream.format("memory").queryName(sink).outputMode("append").start()
-    try {
-      val chunk = math.max(1, (timed.size + nBatches - 1) / nBatches)
-      timed.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    spark.table(sink).select("doc_id", "text")
-  }
-
-  /** Streaming rolling ingestion — the streaming twin of the
-    * saveSignatureIndex → appendToSignatureIndex → nearDupAgainstIndex
-    * batch recipe, proving the index stays probe-consistent ACROSS
-    * micro-batches: a doc admitted (and appended) in batch k must block its
-    * near-dups arriving in batch k+1, including through hot-sidecar routes.
-    * Each micro-batch, under `foreachBatch`:
-    *   1. probe the incoming docs against the current index + admitted
-    *      corpus (`nearDupAgainstIndex` — the LSH params must match the
-    *      build's);
-    *   2. admit the non-colliding docs (intra-batch pairs deliberately
-    *      don't block — same contract as the batch admission loop);
-    *   3. append admitted texts to the corpus table and their signatures
-    *      through the hot/cold-routed [[graft.api.BandedLsh.appendToSignatureIndex]].
-    * Returns `(doc_id, admitted)` for every streamed doc, read back from
-    * the corpus table — the decision log IS the table state, no driver-side
-    * bookkeeping to drift from it. MemoryStream feeding is the test
-    * harness; the foreachBatch body is the production shape. */
-  def rollingDedupReplay(spark: SparkSession, corpus: Seq[(Long, String)],
-                         stream: Seq[(Long, String)], nBatches: Int,
-                         ngramWidth: Int, bandCount: Int, bandSize: Int,
-                         seed: Long, threshold: Double,
-                         hotBucketCap: Long): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val n = replaySeq.incrementAndGet()
-    val idxTbl = s"graft_roll_stream_idx_$n"
-    val corpTbl = s"graft_roll_stream_corpus_$n"
-    val corpusDf = corpus.toDF("doc_id", "text")
-    graft.api.BandedLsh.saveSignatureIndex(corpusDf, idxTbl, 8, "doc_id", "text",
-      ngramWidth, bandCount, bandSize, seed, hotBucketCap)
-    // the per-JVM replay counter restarts while the warehouse dir persists:
-    // drop table AND orphaned location or CREATE refuses the leftover dir
-    graft.api.BucketedWrite.dropTable(spark, corpTbl)
-    corpusDf.write.mode("overwrite").format("parquet").saveAsTable(corpTbl)
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = mem.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // foreachBatch executes on a CLONED SparkSession, and V1 table
-        // relation caches are per-session: an insert invalidates only the
-        // writing session's cache, so reads routed through any OTHER
-        // session silently serve the pre-append file listing (measured:
-        // every append invisible, all admissions false). All reads below go
-        // through the batch's own session, refreshed defensively first —
-        // the writes also run on it, keeping invalidation and lookup on the
-        // same cache.
-        val ss = batch.sparkSession
-        Seq(corpTbl, idxTbl, s"${idxTbl}_hot").foreach(ss.catalog.refreshTable)
-        val b = batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        val dup = graft.api.BandedLsh.nearDupAgainstIndex(idxTbl,
-            ss.table(corpTbl), b, "doc_id", "text",
-            ngramWidth, bandCount, bandSize, seed, threshold)
-          .select(col("batch_id").as("doc_id")).distinct()
-        // PIN the admission decision before any side effect: keep is lazy,
-        // and the writes below mutate the very tables its probe reads — an
-        // unpinned keep re-evaluates during the index append AFTER the
-        // corpus insert landed this batch's own rows, so intra-batch
-        // near-dup admits (A,B admitted together, sim > threshold) suddenly
-        // see each other as corpus near-dups and BOTH drop out of the
-        // re-evaluation: corpus keeps them but their signature rows are
-        // never appended, and later near-dups probe into a hole. The
-        // localCheckpoint also stops paying the probe join three times.
-        val keep = b.join(dup, Seq("doc_id"), "left_anti").localCheckpoint(true)
-        keep.write.mode("append").insertInto(corpTbl)
-        graft.api.BandedLsh.appendToSignatureIndex(keep, idxTbl, "doc_id", "text",
-          ngramWidth, bandCount, bandSize, seed)
-        ()
-      }
-      .outputMode("update").start()
-    try {
-      val chunk = math.max(1, (stream.size + nBatches - 1) / nBatches)
-      stream.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    // the final read is on the OUTER session — refresh or it too would
-    // serve the build-time listing
-    spark.catalog.refreshTable(corpTbl)
-    stream.map(_._1).toDF("doc_id")
-      .join(spark.table(corpTbl).select(col("doc_id"), lit(true).as("in_corpus")),
-        Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("in_corpus"), lit(false)).as("admitted"))
-  }
-
-  /** Streaming day-2 admission: a document stream drives
-    * [[graft.api.IncrementalCuration.admitBatch]] one micro-batch at a
-    * time against day-1 state built on `corpus` — the crawl-side twin
-    * of the batch day-2 seam, the way [[rollingDedupReplay]] twins the
-    * signature index. Each foreachBatch invocation IS one admission
-    * day: the batch admits through the full recipe, folds into the
-    * statistic indexes, appends its full row set to the rolling corpus
-    * LOOKUP table (admitBatch's coverage contract spans every indexed
-    * id, so the lookup grows with the stream), and appends its admitted
-    * rows to a results table. Output = the accumulated admitted rows —
-    * bit-equal to batch-admitting the same slices in the same order
-    * (which the oracle recomputes slice by slice as union-rerun
-    * slices), and probe-consistent across micro-batches because every
-    * admit runs on the batch's OWN cloned session with the state tables
-    * defensively refreshed (the per-session V1 relation-cache trap
-    * [[rollingDedupReplay]] documents). */
-  def incrementalAdmitReplay(spark: SparkSession,
-                             corpus: Seq[(Long, String, String)],
-                             stream: Seq[(Long, String, String)],
-                             bench: Seq[(Long, String)], nBatches: Int,
-                             params: graft.api.IncrementalCuration.Params =
-                               graft.api.IncrementalCuration.Params()): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val n = replaySeq.incrementAndGet()
-    val prefix = s"graft_incadm_$n"
-    val lookupTbl = s"${prefix}_lookup"
-    val resTbl = s"${prefix}_admits"
-    val benchTbl = s"${prefix}_bench"
-    graft.api.IncrementalCuration.reset(spark, prefix)
-    Seq(lookupTbl, resTbl, benchTbl)
-      .foreach(graft.api.BucketedWrite.dropTable(spark, _))
-    val corpusDf = corpus.toDF("doc_id", "text", "lang")
-    // day-1 state build and the lookup/bench table writes are independent
-    // (disjoint tables) — overlapped, guide §2.6
-    graft.api.Par.run(spark, Seq[(String, () => Unit)](
-      ("incrementalAdmitReplay: day-1 state build", () =>
-        graft.api.IncrementalCuration.buildState(corpusDf, prefix,
-          "doc_id", "text", col("lang") === "en", params)),
-      // driver-local fixtures, scanned on every micro-batch's probe:
-      // one file each, not defaultParallelism near-empty ones
-      ("incrementalAdmitReplay: corpus lookup table", () =>
-        corpusDf.coalesce(1).write.format("parquet").saveAsTable(lookupTbl)),
-      ("incrementalAdmitReplay: bench table", () =>
-        bench.toDF("doc_id", "text").coalesce(1).write.format("parquet")
-          .saveAsTable(benchTbl))))
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, String)]
-    val q = mem.toDF().toDF("doc_id", "text", "lang").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val ss = batch.sparkSession
-          (graft.api.IncrementalCuration.stateTables(prefix) ++
-            Seq(lookupTbl, benchTbl, resTbl))
-            .foreach(t => if (ss.catalog.tableExists(t)) ss.catalog.refreshTable(t))
-          val b = batch.select(col("doc_id").cast("long").as("doc_id"),
-            col("text"), col("lang"))
-          // admitBatch pins its own output (localCheckpoint) before
-          // returning, so the append below cannot see a later batch's
-          // statistics through lazy re-evaluation
-          val admitted = graft.api.IncrementalCuration.admitBatch(b,
-            ss.table(benchTbl), ss.table(lookupTbl), prefix,
-            "doc_id", "text", col("lang") === "en", params)
-          // both tables grow AFTER the admit (the probe's candidates come
-          // from the index, which gains this batch only during the admit)
-          // and are disjoint — overlapped (guide §2.6); admitted is
-          // already pinned by admitBatch, b by its persist
-          graft.api.Par.run(ss, Seq[(String, () => Unit)](
-            ("incrementalAdmitReplay: admitted rows append", () =>
-              admitted.write.mode("append").format("parquet")
-                .saveAsTable(resTbl)),
-            ("incrementalAdmitReplay: lookup append", () =>
-              b.select(ss.table(lookupTbl).columns.map(col).toIndexedSeq: _*)
-                .write.mode("append").insertInto(lookupTbl))))
-        }
-        ()
-      }
-      .outputMode("update").start()
-    try {
-      val chunk = math.max(1, (stream.size + nBatches - 1) / nBatches)
-      stream.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    spark.catalog.refreshTable(resTbl)
-    spark.table(resTbl)
-  }
-
-  /** Streaming ingestion into a persisted IVF-PQ index
-    * ([[graft.api.Ann.saveIvfPqIndex]]): an embedding stream lands via
-    * [[graft.api.Ann.appendToIvfPqIndex]] one micro-batch at a time — the
-    * crawl-side twin of the batch append, the way [[rollingDedupReplay]]
-    * twins the signature index. Because the models are FROZEN, per-batch
-    * ingestion commutes: the final index is bit-identical to one big batch
-    * append regardless of batch boundaries (spec-pinned), so what this
-    * operator actually gates is the streaming PLUMBING — foreachBatch runs
-    * on a CLONED SparkSession whose V1 relation cache is independent, so
-    * every batch must refresh the model/codes tables through ITS OWN
-    * session or the frozen-model load and the insert's file listing go
-    * stale (the [[rollingDedupReplay]] trap, same fix). Returns per-cell
-    * population of the final codes table. */
-  def annAppendReplay(spark: SparkSession, tablePrefix: String,
-                      stream: Seq[(Long, Seq[Double])],
-                      nBatches: Int): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])]
-    val q = mem.toDF().toDF("vec_id", "embedding").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ss = batch.sparkSession
-        Seq(s"${tablePrefix}_codes", s"${tablePrefix}_model")
-          .foreach(ss.catalog.refreshTable)
-        graft.api.Ann.appendToIvfPqIndex(
-          batch.select(col("vec_id").cast("long").as("vec_id"),
-            col("embedding").cast("array<double>").as("embedding")),
-          tablePrefix)
-        ()
-      }
-      .outputMode("update").start()
-    try {
-      val chunk = math.max(1, (stream.size + nBatches - 1) / nBatches)
-      stream.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    spark.catalog.refreshTable(s"${tablePrefix}_codes")
-    spark.table(s"${tablePrefix}_codes")
-      .groupBy(col("cell").cast("int").as("cell"))
-      .agg(count(lit(1)).as("cell_rows"))
-  }
-
-  /** Streaming ingestion into a persisted gram-span index
-    * ([[graft.api.Dedup.saveGramIndex]]): each micro-batch lands via
-    * [[graft.api.Dedup.appendToGramIndex]] — the last persisted index
-    * family to get its streaming twin. Appends are order-ASSOCIATIVE by
-    * construction (the flag state ultimately encodes the duplication
-    * relation of the union, and each append flags BOTH sides of every
-    * new cross-batch duplication), so the final index equals the batch
-    * build over the whole corpus regardless of batch boundaries — the
-    * gate reuses the batch dup-span oracle directly. The plumbing being
-    * gated is the cloned-session refresh across the triples AND flags
-    * tables (the rollingDedupReplay trap: a stale relation cache makes a
-    * batch mine against the pre-append listing, silently under-flagging
-    * every later duplication). Returns the final merged span set. */
-  def gramIngestReplay(spark: SparkSession, table: String,
-                       corpus: Seq[(Long, String)],
-                       stream: Seq[(Long, String)], nBatches: Int,
-                       width: Int): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    graft.api.Dedup.saveGramIndex(corpus.toDF("doc_id", "text"), table, 8,
-      "doc_id", "text", width = width)
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val q = mem.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ss = batch.sparkSession
-        Seq(table, s"${table}_flags").foreach(ss.catalog.refreshTable)
-        graft.api.Dedup.appendToGramIndex(
-          batch.select(col("doc_id").cast("long").as("doc_id"), col("text")),
-          table, "doc_id", "text", width = width)
-        ()
-      }
-      .outputMode("update").start()
-    try {
-      val chunk = math.max(1, (stream.size + nBatches - 1) / nBatches)
-      stream.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    Seq(table, s"${table}_flags").foreach(spark.catalog.refreshTable)
-    graft.api.Dedup.dupSpansFromIndex(spark, table)
-  }
-
-  /** Streaming novelty-gated ANN ingestion: [[annAppendReplay]]'s
-    * foreachBatch plumbing around [[graft.api.Ann.admitNovelVectors]] —
-    * each micro-batch searches the PRE-batch index state, drops
-    * near-duplicates on the exact verdict, and appends survivors to both
-    * stores. Cross-batch state is load-bearing exactly like
-    * [[rollingDedupReplay]]: a clone of a batch-1 admit arriving in batch
-    * 3 must drop on state batch 1 appended. Because admission semantics
-    * are defined per batch (pre-batch state only), the streamed verdicts
-    * are bit-equal to the batch-chunked driver loop at the same batch
-    * boundaries — one oracle, two plans. The cloned-session refresh
-    * covers all THREE tables the admit reads (codes, model, raw corpus).
-    * Returns `(vec_id, admitted)` for the whole stream. */
-  def annNoveltyReplay(spark: SparkSession, tablePrefix: String,
-                       corpusTable: String,
-                       stream: Seq[(Long, Seq[Double])], nBatches: Int,
-                       tau: Double, nprobe: Int,
-                       kCand: Int = 8): DataFrame = {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val verdicts = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean)]
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])]
-    val q = mem.toDF().toDF("vec_id", "embedding").writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ss = batch.sparkSession
-        Seq(s"${tablePrefix}_codes", s"${tablePrefix}_model", corpusTable)
-          .foreach(ss.catalog.refreshTable)
-        graft.api.Ann.admitNovelVectors(
-            batch.select(col("vec_id").cast("long").as("vec_id"),
-              col("embedding").cast("array<double>").as("embedding")),
-            tablePrefix, corpusTable, tau, nprobe, kCand)
-          .collect()
-          .foreach(r => verdicts.synchronized {
-            verdicts += ((r.getLong(0), r.getBoolean(1))) })
-        ()
-      }
-      .outputMode("update").start()
-    try {
-      val chunk = math.max(1, (stream.size + nBatches - 1) / nBatches)
-      stream.grouped(chunk).foreach { c => mem.addData(c); q.processAllAvailable() }
-    } finally q.stop()
-    verdicts.toSeq.toDF("vec_id", "admitted")
+  /** Shared stream construction for the WARC tape sources: checkpointable
+    * binaryFile file stream → per-file strict-framing parse. One owner so
+    * [[warcIngest]] and [[warcAdmitIngest]] cannot drift. */
+  private def warcStream(spark: SparkSession, tapeGlob: String)
+      : Dataset[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.types._
+    spark.readStream.format("binaryFile")
+      .schema(StructType(Seq(
+        StructField("path", StringType),
+        StructField("modificationTime", TimestampType),
+        StructField("length", LongType),
+        StructField("content", BinaryType))))
+      .load(tapeGlob)
+      .select("path", "content")
+      .as(org.apache.spark.sql.Encoders.tuple(
+        org.apache.spark.sql.Encoders.STRING,
+        org.apache.spark.sql.Encoders.BINARY))
+      .flatMap { case (p, b) => graft.sources.WarcFiles.parseWarc(p, b) }(
+        org.apache.spark.sql.Encoders.row(graft.sources.WarcFiles.schema))
   }
 
   /** Streaming WARC ingestion — the crawl-side arrival shape: tape files
@@ -1309,27 +555,6 @@ object EventStreams {
     * `spark.read.parquet(outPath)` (`batch` arrives as a hive partition
     * column). Call once per arrival wave; the checkpoint carries the
     * seen-file set across calls and across JVMs. */
-  /** Shared stream construction for the WARC tape sources: checkpointable
-    * binaryFile file stream → per-file strict-framing parse. One owner so
-    * [[warcIngest]] and [[warcAdmitIngest]] cannot drift. */
-  private def warcStream(spark: SparkSession, tapeGlob: String)
-      : Dataset[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.types._
-    spark.readStream.format("binaryFile")
-      .schema(StructType(Seq(
-        StructField("path", StringType),
-        StructField("modificationTime", TimestampType),
-        StructField("length", LongType),
-        StructField("content", BinaryType))))
-      .load(tapeGlob)
-      .select("path", "content")
-      .as(org.apache.spark.sql.Encoders.tuple(
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.BINARY))
-      .flatMap { case (p, b) => graft.sources.WarcFiles.parseWarc(p, b) }(
-        org.apache.spark.sql.Encoders.row(graft.sources.WarcFiles.schema))
-  }
-
   def warcIngest(spark: SparkSession, tapeGlob: String,
                  checkpoint: String, outPath: String): Unit = {
     val parsed = warcStream(spark, tapeGlob)
@@ -1449,5 +674,549 @@ object EventStreams {
       .withColumn("session_id", sum("new_session").over(byUser))
       .groupBy("user_id", "session_id")
       .agg(min("ts").as("start"), max("ts").as("end"), count(lit(1)).as("events"))
+  }
+
+  private val replaySeq = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** The watermark delay of the replays that must equal their batch twin
+    * (see [[feed]]). */
+  private val FarWatermark = "3650 days"
+
+  /** The replay harness behind every replay below. A replay runs a finite
+    * input through one operator as a REAL Structured Streaming query: one
+    * MemoryStream fed `batches` in order, one `addData` +
+    * `processAllAvailable` per element, so each element is one micro-batch
+    * and watermarks, event-time timeouts and cross-batch state are all
+    * exercised end to end; the query is stopped in `finally`. `start`
+    * builds and starts the query over the source.
+    *
+    * Replays that gate an operator rather than its late-data rule set the
+    * watermark delay to [[FarWatermark]], beyond any fixture's time range:
+    * replay disorder is then never "late", and the streamed result must
+    * equal the operator's batch twin for ANY micro-batch split of the input
+    * — bit-equal for the sketch and top-k states, whose merges are order-
+    * invariant. The gated queries pin that against their oracles at one
+    * split, and the split-invariance spec checks it at 1, 3 and 7. The
+    * gated queries and the specs are the only callers: production streams
+    * come from `readStream` (files, Kafka), and the operator under test is
+    * identical either way. */
+  private def feed[T <: Product : TypeTag](spark: SparkSession, batches: Seq[Seq[T]])(
+      start: Dataset[T] => StreamingQuery): Unit = {
+    val mem = MemoryStream[T](spark)(Encoders.product[T])
+    val q = start(mem.toDS())
+    try batches.foreach { b => mem.addData(b); q.processAllAvailable() }
+    finally q.stop()
+  }
+
+  /** [[feed]] into an append-mode memory sink; returns the sink as a batch
+    * frame. The sink name is unique per call: its table outlives stop(). */
+  private def replayToMemory[T <: Product : TypeTag](spark: SparkSession,
+      batches: Seq[Seq[T]])(op: Dataset[T] => Dataset[_]): DataFrame = {
+    val sink = s"graft_replay_${replaySeq.incrementAndGet()}"
+    feed(spark, batches)(op(_).writeStream.format("memory").queryName(sink)
+      .outputMode("append").start())
+    spark.table(sink)
+  }
+
+  /** [[replayToMemory]] over `events` batches closed by one
+    * [[flushEvent]]: append-mode windows and sessions emit only once the
+    * watermark passes them, and the flush pushes it past every real one.
+    * The flush's own window or session stays open (it sits a whole
+    * watermark delay ahead of the watermark it sets), so none of its rows
+    * reach the sink. */
+  private def replayEvents(spark: SparkSession, batches: Seq[Seq[Event]])(
+      op: Dataset[Event] => Dataset[_]): DataFrame =
+    replayToMemory(spark, batches :+ Seq(flushEvent(batches.flatten)))(op)
+
+  /** [[feed]] through a `foreachBatch` body over the source renamed to
+    * `cols` — the composition point for a batch operator run per
+    * micro-batch (update mode, no sink; the body writes its own tables). */
+  private def feedEachBatch[T <: Product : TypeTag](spark: SparkSession,
+      batches: Seq[Seq[T]], cols: String*)(body: DataFrame => Unit): Unit =
+    feed(spark, batches)(_.toDF(cols: _*).writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) => body(batch) }
+      .outputMode("update").start())
+
+  /** `rows` cut into `n` consecutive near-equal micro-batches. */
+  private def chunked[T](rows: Seq[T], n: Int): Seq[Seq[T]] =
+    rows.grouped(math.max(1, (rows.size + n - 1) / n)).toSeq
+
+  /** An event 4000 days after the latest of `events`: it advances the
+    * watermark past every real window and session. */
+  private def flushEvent(events: Seq[Event]): Event = Event(-1L,
+    new Timestamp(events.iterator.map(_.ts.getTime).max + 4000L * 86400_000L),
+    -1L, "flush", 0.0)
+
+  /** `(id, x)` rows stamped with event times monotone in arrival position,
+    * from +1 s: the initial watermark is the epoch, and stateful operators
+    * drop rows at ts <= watermark. */
+  private def byArrival(docs: Seq[(Long, String)]): Seq[(Long, Timestamp, String)] =
+    docs.zipWithIndex.map { case ((id, x), i) => (id, new Timestamp((i + 1) * 1000L), x) }
+
+  private[graft] def windowedCountsReplay(spark: SparkSession, events: Seq[Event],
+                                          nBatches: Int): DataFrame =
+    replayEvents(spark, chunked(events, nBatches))(ds =>
+      windowedCounts(ds.toDF(), watermark = FarWatermark))
+
+  /** CRASH-RECOVERY replay of [[windowedCounts]]: run the aggregation as a
+    * durable file-source → file-sink query, STOP it mid-stream, and resume
+    * a brand-new query from the same checkpoint — the operational property
+    * no MemoryStream replay can exercise (a MemoryStream's offsets die
+    * with the process, so checkpoint restart over one is unsupported by
+    * design; JSON files + parquet sink are the replayable/exactly-once
+    * pair Structured Streaming actually recovers with).
+    *
+    * What the restart must prove, and the single output checks:
+    *  - windows still OPEN at the stop are carried in the state store and
+    *    finish from post-restart data (no gaps);
+    *  - windows already emitted before the stop are not re-emitted (no
+    *    duplicates — state eviction + the file sink's commit log);
+    *  - the union of both queries' emissions equals the batch twin
+    *    bit-exactly.
+    *
+    * The first half of the (ts-sorted) stream arrives before the crash
+    * as three files, the rest after it as three more; the aggregation is
+    * 1-hour windows under a 1-hour watermark. The [[flushEvent]] closes
+    * the tail windows after the restart. Source, sink and checkpoint live
+    * in a fresh temporary directory per call, so no other JVM's query can
+    * share it. Returns the sink read back as a batch frame. */
+  private[graft] def windowedCountsRestartReplay(spark: SparkSession,
+                                                 events: Seq[Event]): DataFrame = {
+    val base = java.nio.file.Files.createTempDirectory("graft_restart_")
+    // the returned frame reads the sink lazily: delete at JVM exit
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(base.toFile))
+    val srcDir = base.resolve("src"); val sinkDir = base.resolve("sink")
+    val ckptDir = base.resolve("ckpt")
+    java.nio.file.Files.createDirectories(srcDir)
+
+    // ts-sorted so the watermark advances monotonically across files and
+    // the pre-stop portion genuinely closes some windows
+    val sorted = events.sortBy(_.ts.getTime)
+    val (head, tail) = sorted.splitAt(sorted.size / 2)
+    val names = Iterator.from(0).map(i => f"part-$i%05d.json")
+    def writeFiles(rows: Seq[Event]): Unit =
+      chunked(rows, 3).foreach { c =>
+        val body = c.map(e =>
+          s"""{"event_id":${e.event_id},"ts":${e.ts.getTime / 1000},""" +
+          s""""user_id":${e.user_id},"event_type":"${e.event_type}","value":${e.value}}""")
+          .mkString("", "\n", "\n")
+        java.nio.file.Files.writeString(srcDir.resolve(names.next()), body)
+      }
+
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE")
+    // each call is a NEW query on the same checkpoint: the second is the restart
+    def runQuery(): Unit = {
+      val src = spark.readStream.schema(schema).json(srcDir.toString)
+        .withColumn("ts", expr("timestamp_seconds(ts)"))
+      val q = windowedCounts(src, "1 hour", "1 hour")
+        .writeStream.format("parquet")
+        .option("path", sinkDir.toString)
+        .option("checkpointLocation", ckptDir.toString)
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+
+    writeFiles(head)
+    runQuery()
+    writeFiles(tail :+ flushEvent(sorted))
+    runQuery()
+    spark.read.parquet(sinkDir.toString)
+  }
+
+  private[graft] def windowedDistinctReplay(spark: SparkSession, events: Seq[Event],
+                                            nBatches: Int, p: Int): DataFrame =
+    replayEvents(spark, chunked(events, nBatches))(ds =>
+      windowedDistinctUsers(ds.toDF(), watermark = FarWatermark, p = p))
+
+  private[graft] def windowedTopKReplay(spark: SparkSession, events: Seq[Event],
+                                        nBatches: Int): DataFrame =
+    replayEvents(spark, chunked(events, nBatches))(ds =>
+      windowedTopKEvents(ds.toDF(), 3, watermark = FarWatermark))
+
+  private[graft] def windowedQuantilesReplay(spark: SparkSession, events: Seq[Event],
+                                             nBatches: Int): DataFrame =
+    replayEvents(spark, chunked(events, nBatches))(ds =>
+      windowedValueQuantiles(ds.toDF(), watermark = FarWatermark))
+
+  private[graft] def windowedFreqReplay(spark: SparkSession, events: Seq[Event],
+                                        probeUsers: Seq[Long], nBatches: Int): DataFrame =
+    replayEvents(spark, chunked(events, nBatches))(ds =>
+      windowedUserFreq(ds.toDF(), probeUsers, watermark = FarWatermark))
+
+  private[graft] def windowedLastValueReplay(spark: SparkSession, events: Seq[Event],
+                                             windowLen: String, nBatches: Int): DataFrame =
+    replayEvents(spark, chunked(events, nBatches))(ds =>
+      windowedLastValue(ds.toDF(), windowLen, FarWatermark))
+
+  private[graft] def sessionizeReplay(spark: SparkSession, events: Seq[Event], gapMs: Long,
+                                      nBatches: Int): DataFrame =
+    replayEvents(spark, chunked(events, nBatches))(sessionize(_, gapMs, FarWatermark))
+
+  /** Replay [[sessionize]] with a SHORT watermark and caller-controlled
+    * micro-batches — the late-data admission harness. Every other replay
+    * here sets the delay beyond the fixture's time range so nothing is ever
+    * late; this one feeds each element of `batches` as exactly one
+    * micro-batch under a real `watermarkDelay`, so rows arriving after the
+    * watermark passed them are genuinely DROPPED and the caller's oracle
+    * must model the drop set explicitly. The admission rule under test:
+    * batch k's rows are filtered against the watermark established by
+    * batches 0..k-1 (max event time minus delay), and the drop predicate
+    * is `ts <= watermark` — Spark's pre-function late-row filter (the
+    * [[byArrival]] epoch-0 drop) combined with the operator's own `>= wm`
+    * guard. A final [[flushEvent]] closes every surviving session. */
+  private[graft] def sessionizeLateReplay(spark: SparkSession, batches: Seq[Seq[Event]],
+                                          gapMs: Long, watermarkDelay: String): DataFrame =
+    replayEvents(spark, batches)(sessionize(_, gapMs, watermarkDelay))
+
+  /** Replay for [[attributionJoin]]: two MemoryStreams fed in alternating
+    * chunks (clicks slightly ahead, so cross-batch matches — purchase
+    * arriving batches after its click — are exercised), hence its own feed
+    * loop. Inner interval joins need no flush event: every match emits
+    * once both sides have arrived. */
+  private[graft] def attributionJoinReplay(spark: SparkSession, clicks: Seq[Event],
+                                           purchases: Seq[Event], nBatches: Int): DataFrame = {
+    import spark.implicits._
+    val memC = MemoryStream[Event](spark)
+    val memP = MemoryStream[Event](spark)
+    val sink = s"graft_replay_${replaySeq.incrementAndGet()}"
+    val q = attributionJoin(memC.toDF(), memP.toDF(), watermark = FarWatermark)
+      .writeStream.format("memory").queryName(sink).outputMode("append").start()
+    try {
+      val cs = chunked(clicks, nBatches)
+      val ps = chunked(purchases, nBatches)
+      for (i <- 0 until math.max(cs.size, ps.size)) {
+        if (i < cs.size) memC.addData(cs(i))
+        q.processAllAvailable()
+        if (i < ps.size) memP.addData(ps(i))
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    spark.table(sink)
+  }
+
+  /** [[nearDupCandidates]] with an effectively unbounded bucket capacity
+    * and TTL: every pair of documents sharing a (band, hash) bucket meets
+    * exactly once — whichever arrives later emits against the earlier
+    * member — so the emitted set, normalized to unordered pairs, equals
+    * the full co-bucket pair set per band REGARDLESS of micro-batch
+    * arrival order. That set is pure MinHash bucket math, independently
+    * re-derivable (tools/gen_oracles.py) for the fixed configuration here:
+    * 4-grams, 8 bands of 3 rows, seed 123, 3 micro-batches. Production use
+    * keeps the bounded defaults (maxBucket, ttl) and accepts the documented
+    * recall trade. */
+  private[graft] def nearDupReplay(spark: SparkSession,
+                                   docs: Seq[(Long, Timestamp, String)]): DataFrame =
+    replayToMemory(spark, chunked(docs, 3))(ds =>
+      nearDupCandidates(ds.toDF("doc_id", "ts", "text"), 4, 8, 3, 123L,
+        FarWatermark, ttlMs = Long.MaxValue / 4, maxBucket = 1 << 20))
+
+  /** The cosine twin of [[nearDupReplay]], same unbounded bucket state,
+    * over 64-bit sketches in 8 bands with seed 41. */
+  private[graft] def embedNearDupReplay(spark: SparkSession,
+                                        vecs: Seq[(Long, Timestamp, Seq[Double])],
+                                        nBatches: Int): DataFrame =
+    replayToMemory(spark, chunked(vecs, nBatches))(ds =>
+      embedNearDupCandidates(ds.toDF("vec_id", "ts", "embedding"), 64, 8, 41L,
+        FarWatermark, ttlMs = Long.MaxValue / 4, maxBucket = 1 << 20))
+
+  /** Documents replayed [[byArrival]] through [[dedupByContent]]:
+    * `dropDuplicatesWithinWatermark` keeps the first arrival per content
+    * hash, so with docs fed in id order the survivor set is exactly "min
+    * doc_id per distinct text" (the batch `Dedup.exact`), and later
+    * batches' drops are a genuine cross-batch state check. */
+  private[graft] def dedupContentReplay(spark: SparkSession, docs: Seq[(Long, String)],
+                                        nBatches: Int): DataFrame =
+    replayToMemory(spark, chunked(byArrival(docs), nBatches))(ds =>
+      dedupByContent(ds.toDF("doc_id", "ts", "text"), "text"))
+      .select("doc_id", "text")
+
+  /** URLs replayed [[byArrival]] through [[domainQuotaAdmit]], one verdict
+    * row per doc. The cross-batch check is the point: a host whose quota
+    * fills in batch k must reject its batch-k+1 arrivals from persisted
+    * state. */
+  private[graft] def domainQuotaReplay(spark: SparkSession, docs: Seq[(Long, String)],
+                                       nBatches: Int, maxPerDomain: Int): DataFrame =
+    replayToMemory(spark, chunked(byArrival(docs), nBatches))(ds =>
+      domainQuotaAdmit(ds.toDF("doc_id", "ts", "url"), maxPerDomain))
+
+  /** The [[domainQuotaReplay]] shape for [[urlDedupAdmit]]: a URL first
+    * seen in batch k must reject its batch-k+1 re-fetches from persisted
+    * state. */
+  private[graft] def urlDedupReplay(spark: SparkSession, docs: Seq[(Long, String)],
+                                    nBatches: Int,
+                                    dropParamPrefixes: Seq[String] = Nil): DataFrame =
+    replayToMemory(spark, chunked(byArrival(docs), nBatches))(ds =>
+      urlDedupAdmit(ds.toDF("doc_id", "ts", "url"), dropParamPrefixes))
+
+  /** Streaming decontamination — the stream-static twin of
+    * [[graft.api.Contamination.sharedNgrams]]: each micro-batch of
+    * arriving documents probes the STATIC benchmark's broadcast shingle
+    * set and emits its (doc_id, bench_id, shared_ngrams) flags. The flag
+    * rule is per-document-LOCAL (a doc's flags depend only on its own
+    * text and the static bench), so the query is STATELESS — no
+    * watermark, no state store, and the union of micro-batch outputs is
+    * bit-equal to the batch run over the whole corpus, which is exactly
+    * what the gate pins (it shares contamination_check's oracle). At
+    * production scale the same body sits on a `readStream` source and
+    * appends to the flags table; the static bench side broadcasts once
+    * per batch. */
+  private[graft] def contaminationReplay(spark: SparkSession, docs: Seq[(Long, String)],
+                                         bench: DataFrame, nBatches: Int,
+                                         ngramWidth: Int, minShared: Long): DataFrame = {
+    val tbl = s"graft_stream_contam_${replaySeq.incrementAndGet()}"
+    graft.api.BucketedWrite.dropTable(spark, tbl)
+    feedEachBatch(spark, chunked(docs, nBatches), "doc_id", "text") { batch =>
+      graft.api.Contamination.sharedNgrams(batch, bench, "doc_id", "text",
+          ngramWidth, minShared)
+        .write.mode("append").format("parquet").saveAsTable(tbl)
+    }
+    spark.catalog.refreshTable(tbl)
+    spark.table(tbl)
+  }
+
+  /** Streaming rolling ingestion — the streaming twin of the
+    * saveSignatureIndex → appendToSignatureIndex → nearDupAgainstIndex
+    * batch recipe, proving the index stays probe-consistent ACROSS
+    * micro-batches: a doc admitted (and appended) in batch k must block its
+    * near-dups arriving in batch k+1, including through hot-sidecar routes.
+    * Each micro-batch, under `foreachBatch`:
+    *   1. probe the incoming docs against the current index + admitted
+    *      corpus (`nearDupAgainstIndex` — the LSH params must match the
+    *      build's);
+    *   2. admit the non-colliding docs (intra-batch pairs deliberately
+    *      don't block — same contract as the batch admission loop);
+    *   3. append admitted texts to the corpus table and their signatures
+    *      through the hot/cold-routed [[graft.api.BandedLsh.appendToSignatureIndex]].
+    * Returns `(doc_id, admitted)` for every streamed doc, read back from
+    * the corpus table — the decision log IS the table state, no driver-side
+    * bookkeeping to drift from it. The LSH configuration is fixed at
+    * 4-grams, 8 bands of 3 rows, seed 123, threshold 0.5; the foreachBatch
+    * body is the production shape. */
+  private[graft] def rollingDedupReplay(spark: SparkSession, corpus: Seq[(Long, String)],
+                                        stream: Seq[(Long, String)], nBatches: Int,
+                                        hotBucketCap: Long): DataFrame = {
+    import spark.implicits._
+    val (ngramWidth, bandCount, bandSize, seed) = (4, 8, 3, 123L)
+    val n = replaySeq.incrementAndGet()
+    val idxTbl = s"graft_roll_stream_idx_$n"
+    val corpTbl = s"graft_roll_stream_corpus_$n"
+    val corpusDf = corpus.toDF("doc_id", "text")
+    graft.api.BandedLsh.saveSignatureIndex(corpusDf, idxTbl, 8, "doc_id", "text",
+      ngramWidth, bandCount, bandSize, seed, hotBucketCap)
+    // the per-JVM replay counter restarts while the warehouse dir persists:
+    // drop table AND orphaned location or CREATE refuses the leftover dir
+    graft.api.BucketedWrite.dropTable(spark, corpTbl)
+    corpusDf.write.mode("overwrite").format("parquet").saveAsTable(corpTbl)
+    feedEachBatch(spark, chunked(stream, nBatches), "doc_id", "text") { batch =>
+      // foreachBatch executes on a CLONED SparkSession, and V1 table
+      // relation caches are per-session: an insert invalidates only the
+      // writing session's cache, so reads routed through any OTHER
+      // session silently serve the pre-append file listing (measured:
+      // every append invisible, all admissions false). All reads below go
+      // through the batch's own session, refreshed defensively first —
+      // the writes also run on it, keeping invalidation and lookup on the
+      // same cache.
+      val ss = batch.sparkSession
+      Seq(corpTbl, idxTbl, s"${idxTbl}_hot").foreach(ss.catalog.refreshTable)
+      val b = batch.select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      val dup = graft.api.BandedLsh.nearDupAgainstIndex(idxTbl,
+          ss.table(corpTbl), b, "doc_id", "text",
+          ngramWidth, bandCount, bandSize, seed, 0.5)
+        .select(col("batch_id").as("doc_id")).distinct()
+      // PIN the admission decision before any side effect: keep is lazy,
+      // and the writes below mutate the very tables its probe reads — an
+      // unpinned keep re-evaluates during the index append AFTER the
+      // corpus insert landed this batch's own rows, so intra-batch
+      // near-dup admits (A,B admitted together, sim > threshold) suddenly
+      // see each other as corpus near-dups and BOTH drop out of the
+      // re-evaluation: corpus keeps them but their signature rows are
+      // never appended, and later near-dups probe into a hole. The
+      // localCheckpoint also stops paying the probe join three times.
+      val keep = b.join(dup, Seq("doc_id"), "left_anti").localCheckpoint(true)
+      keep.write.mode("append").insertInto(corpTbl)
+      graft.api.BandedLsh.appendToSignatureIndex(keep, idxTbl, "doc_id", "text",
+        ngramWidth, bandCount, bandSize, seed)
+    }
+    // the final read is on the OUTER session — refresh or it too would
+    // serve the build-time listing
+    spark.catalog.refreshTable(corpTbl)
+    stream.map(_._1).toDF("doc_id")
+      .join(spark.table(corpTbl).select(col("doc_id"), lit(true).as("in_corpus")),
+        Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("in_corpus"), lit(false)).as("admitted"))
+  }
+
+  /** Streaming day-2 admission: a document stream drives
+    * [[graft.api.IncrementalCuration.admitBatch]] one micro-batch at a
+    * time against day-1 state built on `corpus` — the crawl-side twin
+    * of the batch day-2 seam, the way [[rollingDedupReplay]] twins the
+    * signature index. Each foreachBatch invocation IS one admission
+    * day: the batch admits through the full recipe, folds into the
+    * statistic indexes, appends its full row set to the rolling corpus
+    * LOOKUP table (admitBatch's coverage contract spans every indexed
+    * id, so the lookup grows with the stream), and appends its admitted
+    * rows to a results table. Output = the accumulated admitted rows —
+    * bit-equal to batch-admitting the same slices in the same order
+    * (which the oracle recomputes slice by slice as union-rerun
+    * slices), and probe-consistent across micro-batches because every
+    * admit runs on the batch's OWN cloned session with the state tables
+    * defensively refreshed (the per-session V1 relation-cache trap
+    * [[rollingDedupReplay]] documents). */
+  private[graft] def incrementalAdmitReplay(spark: SparkSession,
+                                            corpus: Seq[(Long, String, String)],
+                                            stream: Seq[(Long, String, String)],
+                                            bench: Seq[(Long, String)], nBatches: Int,
+                                            params: graft.api.IncrementalCuration.Params =
+                                              graft.api.IncrementalCuration.Params()): DataFrame = {
+    import spark.implicits._
+    val n = replaySeq.incrementAndGet()
+    val prefix = s"graft_incadm_$n"
+    val lookupTbl = s"${prefix}_lookup"
+    val resTbl = s"${prefix}_admits"
+    val benchTbl = s"${prefix}_bench"
+    graft.api.IncrementalCuration.reset(spark, prefix)
+    Seq(lookupTbl, resTbl, benchTbl)
+      .foreach(graft.api.BucketedWrite.dropTable(spark, _))
+    val corpusDf = corpus.toDF("doc_id", "text", "lang")
+    // day-1 state build and the lookup/bench table writes are independent
+    // (disjoint tables) — overlapped, guide §2.6
+    graft.api.Par.run(spark, Seq[(String, () => Unit)](
+      ("incrementalAdmitReplay: day-1 state build", () =>
+        graft.api.IncrementalCuration.buildState(corpusDf, prefix,
+          "doc_id", "text", col("lang") === "en", params)),
+      // driver-local fixtures, scanned on every micro-batch's probe:
+      // one file each, not defaultParallelism near-empty ones
+      ("incrementalAdmitReplay: corpus lookup table", () =>
+        corpusDf.coalesce(1).write.format("parquet").saveAsTable(lookupTbl)),
+      ("incrementalAdmitReplay: bench table", () =>
+        bench.toDF("doc_id", "text").coalesce(1).write.format("parquet")
+          .saveAsTable(benchTbl))))
+    feedEachBatch(spark, chunked(stream, nBatches), "doc_id", "text", "lang") { batch =>
+      if (!batch.isEmpty) {
+        val ss = batch.sparkSession
+        (graft.api.IncrementalCuration.stateTables(prefix) ++
+          Seq(lookupTbl, benchTbl, resTbl))
+          .foreach(t => if (ss.catalog.tableExists(t)) ss.catalog.refreshTable(t))
+        val b = batch.select(col("doc_id").cast("long").as("doc_id"),
+          col("text"), col("lang"))
+        // admitBatch pins its own output (localCheckpoint) before
+        // returning, so the append below cannot see a later batch's
+        // statistics through lazy re-evaluation
+        val admitted = graft.api.IncrementalCuration.admitBatch(b,
+          ss.table(benchTbl), ss.table(lookupTbl), prefix,
+          "doc_id", "text", col("lang") === "en", params)
+        // both tables grow AFTER the admit (the probe's candidates come
+        // from the index, which gains this batch only during the admit)
+        // and are disjoint — overlapped (guide §2.6); admitted is
+        // already pinned by admitBatch, b by its persist
+        graft.api.Par.run(ss, Seq[(String, () => Unit)](
+          ("incrementalAdmitReplay: admitted rows append", () =>
+            admitted.write.mode("append").format("parquet")
+              .saveAsTable(resTbl)),
+          ("incrementalAdmitReplay: lookup append", () =>
+            b.select(ss.table(lookupTbl).columns.map(col).toIndexedSeq: _*)
+              .write.mode("append").insertInto(lookupTbl))))
+      }
+    }
+    spark.catalog.refreshTable(resTbl)
+    spark.table(resTbl)
+  }
+
+  /** Streaming ingestion into a persisted IVF-PQ index
+    * ([[graft.api.Ann.saveIvfPqIndex]]): an embedding stream lands via
+    * [[graft.api.Ann.appendToIvfPqIndex]] one micro-batch at a time — the
+    * crawl-side twin of the batch append, the way [[rollingDedupReplay]]
+    * twins the signature index. Because the models are FROZEN, per-batch
+    * ingestion commutes: the final index is bit-identical to one big batch
+    * append regardless of batch boundaries (spec-pinned), so what this
+    * operator actually gates is the streaming PLUMBING — foreachBatch runs
+    * on a CLONED SparkSession whose V1 relation cache is independent, so
+    * every batch must refresh the model/codes tables through ITS OWN
+    * session or the frozen-model load and the insert's file listing go
+    * stale (the [[rollingDedupReplay]] trap, same fix). Returns per-cell
+    * population of the final codes table. */
+  private[graft] def annAppendReplay(spark: SparkSession, tablePrefix: String,
+                                     stream: Seq[(Long, Seq[Double])],
+                                     nBatches: Int): DataFrame = {
+    feedEachBatch(spark, chunked(stream, nBatches), "vec_id", "embedding") { batch =>
+      val ss = batch.sparkSession
+      Seq(s"${tablePrefix}_codes", s"${tablePrefix}_model")
+        .foreach(ss.catalog.refreshTable)
+      graft.api.Ann.appendToIvfPqIndex(
+        batch.select(col("vec_id").cast("long").as("vec_id"),
+          col("embedding").cast("array<double>").as("embedding")),
+        tablePrefix)
+    }
+    spark.catalog.refreshTable(s"${tablePrefix}_codes")
+    spark.table(s"${tablePrefix}_codes")
+      .groupBy(col("cell").cast("int").as("cell"))
+      .agg(count(lit(1)).as("cell_rows"))
+  }
+
+  /** Streaming ingestion into a persisted gram-span index
+    * ([[graft.api.Dedup.saveGramIndex]]): each micro-batch lands via
+    * [[graft.api.Dedup.appendToGramIndex]] — the last persisted index
+    * family to get its streaming twin. Appends are order-ASSOCIATIVE by
+    * construction (the flag state ultimately encodes the duplication
+    * relation of the union, and each append flags BOTH sides of every
+    * new cross-batch duplication), so the final index equals the batch
+    * build over the whole corpus regardless of batch boundaries — the
+    * gate reuses the batch dup-span oracle directly. The plumbing being
+    * gated is the cloned-session refresh across the triples AND flags
+    * tables (the rollingDedupReplay trap: a stale relation cache makes a
+    * batch mine against the pre-append listing, silently under-flagging
+    * every later duplication). The index is `graft_gram_sidx` at width 8,
+    * and the stream arrives in 4 micro-batches. Returns the final merged
+    * span set. */
+  private[graft] def gramIngestReplay(spark: SparkSession, corpus: Seq[(Long, String)],
+                                      stream: Seq[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    val (table, width) = ("graft_gram_sidx", 8)
+    graft.api.Dedup.saveGramIndex(corpus.toDF("doc_id", "text"), table, 8,
+      "doc_id", "text", width = width)
+    feedEachBatch(spark, chunked(stream, 4), "doc_id", "text") { batch =>
+      val ss = batch.sparkSession
+      Seq(table, s"${table}_flags").foreach(ss.catalog.refreshTable)
+      graft.api.Dedup.appendToGramIndex(
+        batch.select(col("doc_id").cast("long").as("doc_id"), col("text")),
+        table, "doc_id", "text", width = width)
+    }
+    Seq(table, s"${table}_flags").foreach(spark.catalog.refreshTable)
+    graft.api.Dedup.dupSpansFromIndex(spark, table)
+  }
+
+  /** Streaming novelty-gated ANN ingestion: [[annAppendReplay]]'s
+    * foreachBatch plumbing around [[graft.api.Ann.admitNovelVectors]] —
+    * each micro-batch searches the PRE-batch index state, drops
+    * near-duplicates on the exact verdict, and appends survivors to both
+    * stores. Cross-batch state is load-bearing exactly like
+    * [[rollingDedupReplay]]: a clone of a batch-1 admit arriving in batch
+    * 3 must drop on state batch 1 appended. Because admission semantics
+    * are defined per batch (pre-batch state only), the streamed verdicts
+    * are bit-equal to the batch-chunked driver loop at the same batch
+    * boundaries — one oracle, two plans. The cloned-session refresh
+    * covers all THREE tables the admit reads (codes, model, raw corpus).
+    * The near-duplicate radius is tau = 1e-6. Returns `(vec_id, admitted)`
+    * for the whole stream. */
+  private[graft] def annNoveltyReplay(spark: SparkSession, tablePrefix: String,
+                                      corpusTable: String,
+                                      stream: Seq[(Long, Seq[Double])], nBatches: Int,
+                                      nprobe: Int): DataFrame = {
+    import spark.implicits._
+    val verdicts = scala.collection.mutable.ArrayBuffer.empty[(Long, Boolean)]
+    feedEachBatch(spark, chunked(stream, nBatches), "vec_id", "embedding") { batch =>
+      val ss = batch.sparkSession
+      Seq(s"${tablePrefix}_codes", s"${tablePrefix}_model", corpusTable)
+        .foreach(ss.catalog.refreshTable)
+      graft.api.Ann.admitNovelVectors(
+          batch.select(col("vec_id").cast("long").as("vec_id"),
+            col("embedding").cast("array<double>").as("embedding")),
+          tablePrefix, corpusTable, 1e-6, nprobe)
+        .collect()
+        .foreach(r => verdicts.synchronized {
+          verdicts += ((r.getLong(0), r.getBoolean(1))) })
+    }
+    verdicts.toSeq.toDF("vec_id", "admitted")
   }
 }

@@ -81,7 +81,7 @@ class RocksDbStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val batch = EventStreams.windowedCounts(events.toDF(), "1 hour")
       .orderBy("win_start", "event_type").collect().map(_.toSeq).toSeq
-    val streamed = EventStreams.windowedCountsReplay(spark, events, "1 hour", nBatches = 4)
+    val streamed = EventStreams.windowedCountsReplay(spark, events, nBatches = 4)
       .orderBy("win_start", "event_type").collect().map(_.toSeq).toSeq
     assert(streamed == batch)
     assert(batch.nonEmpty)
@@ -127,7 +127,7 @@ class RocksDbStreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val batch = EventStreams.windowedDistinctUsers(events.toDF(), "1 hour", p = 8)
       .select("win_start", "event_type", "approx_users")
       .orderBy("win_start", "event_type").collect().map(_.toSeq).toSeq
-    val streamed = EventStreams.windowedDistinctReplay(spark, events, "1 hour", 4, p = 8)
+    val streamed = EventStreams.windowedDistinctReplay(spark, events, 4, p = 8)
       .select("win_start", "event_type", "approx_users")
       .orderBy("win_start", "event_type").collect().map(_.toSeq).toSeq
     assert(streamed == batch)

@@ -2,7 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import scala.reflect.runtime.universe.TypeTag
+
 import graft.TestSpark
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -45,8 +48,7 @@ class StreamingSpec extends AnyFunSuite {
     val dim = emb.head._3.length
     val withZero = emb :+ ((9999L, new Timestamp(86400_000L),
       Seq.fill(dim)(0.0)))
-    val got = EventStreams.embedNearDupReplay(spark, withZero,
-        nbits = 64, bands = 8, lshSeed = 41L, nBatches = 4)
+    val got = EventStreams.embedNearDupReplay(spark, withZero, nBatches = 4)
       .select(least(col("doc_id"), col("peer_id")), greatest(col("doc_id"), col("peer_id")), col("band"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(!got.exists { case (a, b, _) => a == 9999L || b == 9999L },
@@ -114,7 +116,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming sessionize replay equals the batch twin on fixture events") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     // whole-second quantization: sessionizeBatch (and its DuckDB oracle)
     // compare gaps in floor-seconds while the streaming operator uses ms —
     // on whole-second data the two gap semantics coincide exactly
@@ -127,97 +128,47 @@ class StreamingSpec extends AnyFunSuite {
         col("value").cast("double").as("value"))
       .as[EventStreams.Event].collect().toSeq
     val gap = 30 * 60_000L
-    val mem = MemoryStream[EventStreams.Event]
-    val q = EventStreams.sessionize(mem.toDS(), gapMs = gap)
-      .writeStream.format("memory").queryName("sess_eq")
-      .outputMode("append").start()
-    try {
-      mem.addData(events) // full historical replay in one micro-batch
-      q.processAllAvailable()
-      // sentinel a year ahead: watermark passes every real session's
-      // timeout, so the per-user tail sessions all close
-      val far = new Timestamp(events.map(_.ts.getTime).max + 365L * 86400_000L)
-      mem.addData(EventStreams.Event(-1L, far, -1L, "flush", 0.0))
-      q.processAllAvailable()
-      val streamed = spark.sql("SELECT * FROM sess_eq WHERE user_id >= 0").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
-      val batch = EventStreams.sessionizeBatch(events.toDF(), gapMs = gap)
-        .select("user_id", "start", "end", "events").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
-      assert(streamed == batch,
-        s"streaming-only: ${(streamed -- batch).take(3)}; batch-only: ${(batch -- streamed).take(3)}")
-      assert(batch.nonEmpty)
-    } finally q.stop()
+    // full historical replay in one micro-batch, then the flush closes
+    // every per-user tail session
+    val streamed = EventStreams.sessionizeReplay(spark, events, gap, nBatches = 1)
+      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
+    val batch = EventStreams.sessionizeBatch(events.toDF(), gapMs = gap)
+      .select("user_id", "start", "end", "events").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
+    assert(streamed == batch,
+      s"streaming-only: ${(streamed -- batch).take(3)}; batch-only: ${(batch -- streamed).take(3)}")
+    assert(batch.nonEmpty)
   }
 
   test("sessionize merges cross-batch out-of-order events like the batch twin") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     // Out-of-order ACROSS micro-batches, within the watermark delay: the
     // late events must merge into / bridge existing runs — never drag a
     // session's end before its start, never split a session the batch twin
     // merges. (Regression: the previous per-session state extended lastMs
     // backwards on this input.)
     val gap = 10 * 60_000L
-    val mem = MemoryStream[EventStreams.Event]
-    val q = EventStreams.sessionize(mem.toDS(), gapMs = gap, watermarkDelay = "2 hours")
-      .writeStream.format("memory").queryName("sess_ooo")
-      .outputMode("append").start()
-    try {
-      // batch 1: user 100 at t=12 and t=30 (two separate open runs);
-      mem.addData(
-        EventStreams.Event(1, ts(12), 100, "click", 1.0),
-        EventStreams.Event(2, ts(30), 100, "click", 1.0))
-      q.processAllAvailable()
-      // batch 2: LATE events — t=10 (before the first run's start) and t=21
-      // (bridges the 12..30 gap, so all four events become ONE session)
-      mem.addData(
-        EventStreams.Event(3, ts(10), 100, "click", 1.0),
-        EventStreams.Event(4, ts(21), 100, "click", 1.0))
-      q.processAllAvailable()
-      // flush: watermark far past every timeout
-      mem.addData(EventStreams.Event(-1L, ts(100_000), -1L, "flush", 0.0))
-      q.processAllAvailable()
-      val streamed = spark.sql("SELECT * FROM sess_ooo WHERE user_id >= 0").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
-      val batch = EventStreams.sessionizeBatch(Seq(
-        (1L, ts(12), 100L, "click", 1.0), (2L, ts(30), 100L, "click", 1.0),
-        (3L, ts(10), 100L, "click", 1.0), (4L, ts(21), 100L, "click", 1.0))
-        .toDF("event_id", "ts", "user_id", "event_type", "value"), gapMs = gap)
-        .select("user_id", "start", "end", "events").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
-      assert(streamed == batch,
-        s"streaming-only: ${streamed -- batch}; batch-only: ${batch -- streamed}")
-      assert(streamed == Set((100L, ts(10), ts(30), 4L)), s"got $streamed")
-      assert(streamed.forall { case (_, s, e, _) => !e.before(s) })
-    } finally q.stop()
-  }
-
-  test("windowedDistinctUsers replay is bit-equal to the batch twin, any batch split") {
-    import spark.implicits._
-    // 300 events, 3 windows, shuffled arrival order (seeded) — the sketch's
-    // order invariance means the streamed estimates must EQUAL the batch
-    // fold, not just approximate it
-    val rng = new scala.util.Random(7)
-    val events = rng.shuffle((0 until 300).toList).map { i =>
-      EventStreams.Event(i.toLong, ts(i % 170), i.toLong % 97,
-        if (i % 2 == 0) "click" else "view", i.toDouble)
-    }
-    val batch = EventStreams.windowedDistinctUsers(events.toDF(), "1 hour", p = 8)
-      .select("win_start", "event_type", "approx_users")
-      .orderBy("win_start", "event_type")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getDouble(2))).toSeq
-    for (nBatches <- Seq(1, 4)) {
-      val streamed = EventStreams.windowedDistinctReplay(spark, events, "1 hour", nBatches, p = 8)
-        .select("win_start", "event_type", "approx_users")
-        .orderBy("win_start", "event_type")
-        .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getDouble(2))).toSeq
-      assert(streamed == batch, s"nBatches=$nBatches")
-    }
-    // sanity: three windows exist and estimates are near the true counts
-    assert(batch.map(_._1).distinct.size == 3)
-    val total = batch.filter(_._2 == "click").map(_._3).head
-    assert(total > 0)
+    val streamed = EventStreams.sessionizeLateReplay(spark, Seq(
+        // batch 1: user 100 at t=12 and t=30 (two separate open runs);
+        Seq(EventStreams.Event(1, ts(12), 100, "click", 1.0),
+          EventStreams.Event(2, ts(30), 100, "click", 1.0)),
+        // batch 2: LATE events — t=10 (before the first run's start) and
+        // t=21 (bridges the 12..30 gap, so all four events become ONE
+        // session)
+        Seq(EventStreams.Event(3, ts(10), 100, "click", 1.0),
+          EventStreams.Event(4, ts(21), 100, "click", 1.0))),
+        gap, "2 hours")
+      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
+    val batch = EventStreams.sessionizeBatch(Seq(
+      (1L, ts(12), 100L, "click", 1.0), (2L, ts(30), 100L, "click", 1.0),
+      (3L, ts(10), 100L, "click", 1.0), (4L, ts(21), 100L, "click", 1.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value"), gapMs = gap)
+      .select("user_id", "start", "end", "events").collect()
+      .map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))).toSet
+    assert(streamed == batch,
+      s"streaming-only: ${streamed -- batch}; batch-only: ${batch -- streamed}")
+    assert(streamed == Set((100L, ts(10), ts(30), 4L)), s"got $streamed")
+    assert(streamed.forall { case (_, s, e, _) => !e.before(s) })
   }
 
   test("restart replay recovers open windows: both phases emit, union = batch twin") {
@@ -249,85 +200,6 @@ class StreamingSpec extends AnyFunSuite {
     val keys = got.map(g => (g._1, g._2))
     assert(keys.distinct.size == keys.size, "duplicate emission after restart")
     assert(got.map(_._1).distinct.size >= 3, "expected several hourly windows")
-  }
-
-  test("windowedTopKEvents replay is bit-equal to the batch twin, any batch split") {
-    import spark.implicits._
-    // shuffled arrival + deliberate score ties (value has only 7 distinct
-    // levels): the id tiebreak must make every split replay identically,
-    // including which of the tied rows survives at the k boundary
-    val rng = new scala.util.Random(11)
-    val events = rng.shuffle((0 until 300).toList).map { i =>
-      EventStreams.Event(i.toLong, ts(i % 170), i.toLong % 97,
-        if (i % 2 == 0) "click" else "view", (i % 7).toDouble)
-    }
-    val batch = EventStreams.windowedTopKEvents(events.toDF(), k = 3, "1 hour")
-      .orderBy("win_start", "event_type", "rnk")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getDouble(4))).toSeq
-    for (nBatches <- Seq(1, 4)) {
-      val streamed = EventStreams.windowedTopKReplay(spark, events, k = 3, "1 hour", nBatches)
-        .orderBy("win_start", "event_type", "rnk")
-        .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2),
-          r.getLong(3), r.getDouble(4))).toSeq
-      assert(streamed == batch, s"nBatches=$nBatches")
-    }
-    // sanity: each (window, type) emits exactly 3 ranked rows, scores
-    // non-increasing, tied scores in ascending id order
-    assert(batch.groupBy(e => (e._1, e._2)).forall(_._2.map(_._3).sorted == Seq(1L, 2L, 3L)))
-    batch.groupBy(e => (e._1, e._2)).values.foreach { g =>
-      val sorted = g.sortBy(_._3)
-      sorted.sliding(2).foreach { case Seq(a, b) =>
-        assert(a._5 > b._5 || (a._5 == b._5 && a._4 < b._4))
-      case _ => }
-    }
-  }
-
-  test("windowedUserFreq replay is bit-equal to the batch twin, estimates >= truth") {
-    import spark.implicits._
-    val rng = new scala.util.Random(23)
-    val events = rng.shuffle((0 until 300).toList).map { i =>
-      EventStreams.Event(i.toLong, ts(i % 170), i.toLong % 7,
-        if (i % 2 == 0) "click" else "view", i.toDouble)
-    }
-    val watched = Seq(0L, 1L, 2L)
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("win_start", "event_type", "user_id", "est_cnt")
-      .orderBy("win_start", "event_type", "user_id")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    val batch = rows(EventStreams.windowedUserFreq(events.toDF(), watched, "1 hour"))
-    for (nBatches <- Seq(1, 4))
-      assert(rows(EventStreams.windowedFreqReplay(spark, events, watched,
-        "1 hour", nBatches)) == batch, s"nBatches=$nBatches")
-    // CMS guarantee: every estimate bounds the true per-window count below
-    val truth = events.groupBy(e =>
-        (new Timestamp(e.ts.getTime / 3600000L * 3600000L), e.event_type, e.user_id))
-      .view.mapValues(_.size).toMap
-    assert(batch.nonEmpty && batch.forall { case (w, et, u, est) =>
-      est >= truth.getOrElse((w, et, u), 0) })
-  }
-
-  test("windowedValueQuantiles replay is bit-equal to the batch twin") {
-    import spark.implicits._
-    val rng = new scala.util.Random(13)
-    val events = rng.shuffle((0 until 400).toList).map { i =>
-      EventStreams.Event(i.toLong, ts(i % 170), i.toLong % 97, "m",
-        (i % 250) * 1.37 + 0.5)
-    }
-    def rows(df: org.apache.spark.sql.DataFrame) = df
-      .select("win_start", "event_type", "p50_x100", "p95_x100")
-      .orderBy("win_start")
-      .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-    val batch = rows(EventStreams.windowedValueQuantiles(events.toDF(), "1 hour", b = 5))
-    val streamed = rows(EventStreams.windowedQuantilesReplay(spark, events, "1 hour", 4, b = 5))
-    assert(streamed == batch)
-    // sanity: estimates sit within the histogram's relative error of exact
-    val exactP50 = {
-      val vs = events.filter(e => e.ts.getTime < ts(60).getTime)
-        .map(e => (e.value * 100).toLong).sorted
-      vs(math.ceil(0.5 * vs.size).toInt - 1)
-    }
-    assert(math.abs(batch.head._3 - exactP50).toDouble / math.max(exactP50, 1) <= 1.0 / 32 + 1e-9)
   }
 
   test("dedupByContent drops repeated texts across micro-batches") {
@@ -400,7 +272,7 @@ class StreamingSpec extends AnyFunSuite {
       EventStreams.Event(11L, ts(130), 100L, "purchase", 1.0), // 30 min after click 2; 130 > 60 excludes click 1
       EventStreams.Event(12L, ts(50), 300L, "purchase", 2.0))  // no click for user 300
     val streamed = EventStreams.attributionJoinReplay(spark, clicks, purchases,
-        "1 hour", nBatches = 2)
+        nBatches = 2)
       .orderBy("click_id", "purchase_id").collect().map(_.toSeq).toSeq
     val batch = EventStreams.attributionJoin(clicks.toDF(), purchases.toDF(), "1 hour")
       .orderBy("click_id", "purchase_id").collect().map(_.toSeq).toSeq
@@ -425,8 +297,7 @@ class StreamingSpec extends AnyFunSuite {
       (10L, dupText), (11L, dupText),                     // batch 1: intra-batch pair, BOTH admit
       (12L, dupText), (13L, "a genuinely fresh document body"))  // batch 2: 12 must block on the appended rows
     val out = EventStreams.rollingDedupReplay(spark, corpus, stream,
-        nBatches = 2, ngramWidth = 4, bandCount = 8, bandSize = 3,
-        seed = 123L, threshold = 0.5, hotBucketCap = 100000L)
+        nBatches = 2, hotBucketCap = 100000L)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getBoolean(1))).toSeq
     assert(out == Seq((10L, true), (11L, true), (12L, false), (13L, true)),
@@ -495,7 +366,7 @@ class StreamingSpec extends AnyFunSuite {
         }
         val streamed = EventStreams.annNoveltyReplay(spark,
             s"${ps.head}_idx", s"${ps.head}_corp", stream, nBatches = n,
-            tau = 1e-6, nprobe = 3)
+            nprobe = 3)
           .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
         val chunk = math.max(1, (stream.size + n - 1) / n)
         val looped = stream.grouped(chunk).flatMap { c =>
@@ -620,5 +491,152 @@ class StreamingSpec extends AnyFunSuite {
       assert(got == batchRun, s"nBatches=$nb")
     }
     assert(batchRun.nonEmpty && !batchRun.exists(_._1 == 3L))
+  }
+
+  // ---- Split invariance: every replay with a batch twin, run at 1, 3 and
+  // 7 micro-batches, must equal the twin row for row (the replays'
+  // "bit-equal for any micro-batch split" contract). Each case carries its
+  // own fixture and the sanity checks its twin must pass first.
+
+  private case class SplitCase(replay: String, run: Int => DataFrame, twin: () => DataFrame,
+                               sanity: Seq[Seq[Any]] => Unit = _ => ())
+
+  private def frame[A <: Product : TypeTag](rows: Seq[A], cols: String*): DataFrame = {
+    val df = spark.createDataFrame(rows)
+    if (cols.isEmpty) df else df.toDF(cols: _*)
+  }
+
+  private def shuffledEvents(seed: Int, n: Int)(mk: Int => EventStreams.Event) =
+    new scala.util.Random(seed).shuffle((0 until n).toList).map(mk)
+
+  private def clickOrView(i: Int) = if (i % 2 == 0) "click" else "view"
+
+  // 300 events over three hourly windows in shuffled arrival order
+  private val mixedEvents = shuffledEvents(7, 300)(i =>
+    EventStreams.Event(i.toLong, ts(i % 170), i.toLong % 97, clickOrView(i), i.toDouble))
+  // deliberate score ties (7 value levels): the id tie-break must make every
+  // split keep the same tied rows at the k boundary
+  private val tiedEvents = shuffledEvents(11, 300)(i =>
+    EventStreams.Event(i.toLong, ts(i % 170), i.toLong % 97, clickOrView(i), (i % 7).toDouble))
+  private val freqEvents = shuffledEvents(23, 300)(i =>
+    EventStreams.Event(i.toLong, ts(i % 170), i.toLong % 7, clickOrView(i), i.toDouble))
+  private val quantileEvents = shuffledEvents(13, 400)(i =>
+    EventStreams.Event(i.toLong, ts(i % 170), i.toLong % 97, "m", (i % 250) * 1.37 + 0.5))
+  private val sessionEvents = shuffledEvents(11, 200)(i =>
+    EventStreams.Event(i.toLong, ts(i * 2), i.toLong % 7, "click", i.toDouble))
+  private val clicks = (0 until 60).map(i =>
+    EventStreams.Event(i.toLong, ts(i * 3), i.toLong % 9, "click", 0.0))
+  private val purchases = (0 until 30).map(i =>
+    EventStreams.Event(1000L + i, ts(i * 6 + 2), i.toLong % 9, "purchase", i * 1.5))
+  private val texts = (0L until 40L).map(i => (i, s"document body ${i % 13}"))
+  private val hostUrls = (0L until 30L).map(i => (i, s"https://h${i % 3}.example.com/p$i"))
+  // 10 canonical pages fetched 3x under cosmetic variants, plus 2 junk URLs
+  private val variantUrls = (0L until 30L).map { i =>
+    val k = i % 10
+    (i, (i / 10) match {
+      case 0 => s"https://ex.com/p$k"
+      case 1 => s"http://WWW.ex.com/p$k/"
+      case _ => s"https://ex.com/p$k#frag$i"
+    })
+  } ++ Seq((30L, "not a url"), (31L, "also not a url"))
+  private val contamDocs = Seq(
+    (1L, "aaaa bbbb cccc dddd eeee"), (2L, "aaaa bbbb cccc xxxx yyyy"),
+    (3L, "zzzz wwww vvvv uuuu tttt"), (10L, "aaaa bbbb cccc dddd eeee extra tail"))
+  private def contamBench = frame(Seq((100L, "aaaa bbbb cccc dddd eeee")), "doc_id", "text")
+
+  private val splitCases = Seq(
+    SplitCase("windowedCountsReplay",
+      EventStreams.windowedCountsReplay(spark, mixedEvents, _),
+      () => EventStreams.windowedCounts(frame(mixedEvents), "1 hour")),
+    SplitCase("windowedDistinctReplay",
+      EventStreams.windowedDistinctReplay(spark, mixedEvents, _, p = 8),
+      () => EventStreams.windowedDistinctUsers(frame(mixedEvents), "1 hour", p = 8),
+      rows => {
+        // three windows, and the estimates count something
+        assert(rows.map(_(0)).distinct.size == 3)
+        assert(rows.filter(_(1) == "click").map(_(2).asInstanceOf[Double]).head > 0)
+      }),
+    SplitCase("windowedTopKReplay",
+      EventStreams.windowedTopKReplay(spark, tiedEvents, _),
+      () => EventStreams.windowedTopKEvents(frame(tiedEvents), k = 3, "1 hour"),
+      rows => rows.groupBy(r => (r(0), r(1))).values.foreach { g =>
+        // exactly 3 ranked rows per (window, type), scores non-increasing,
+        // tied scores in ascending id order
+        val ranked = g.sortBy(_(2).asInstanceOf[Long])
+        assert(ranked.map(_(2)) == Seq(1L, 2L, 3L))
+        ranked.sliding(2).foreach { case Seq(a, b) =>
+          val (sa, sb) = (a(4).asInstanceOf[Double], b(4).asInstanceOf[Double])
+          assert(sa > sb || (sa == sb && a(3).asInstanceOf[Long] < b(3).asInstanceOf[Long]))
+        }
+      }),
+    SplitCase("windowedQuantilesReplay",
+      EventStreams.windowedQuantilesReplay(spark, quantileEvents, _),
+      () => EventStreams.windowedValueQuantiles(frame(quantileEvents), "1 hour", b = 5),
+      rows => {
+        // the first window's p50 sits within the histogram's relative error
+        val vs = quantileEvents.filter(_.ts.getTime < ts(60).getTime)
+          .map(e => (e.value * 100).toLong).sorted
+        val exactP50 = vs(math.ceil(0.5 * vs.size).toInt - 1)
+        val p50 = rows.head(2).asInstanceOf[Long]
+        assert(math.abs(p50 - exactP50).toDouble / math.max(exactP50, 1) <= 1.0 / 32 + 1e-9)
+      }),
+    SplitCase("windowedFreqReplay",
+      EventStreams.windowedFreqReplay(spark, freqEvents, Seq(0L, 1L, 2L), _),
+      () => EventStreams.windowedUserFreq(frame(freqEvents), Seq(0L, 1L, 2L), "1 hour"),
+      rows => {
+        // CMS guarantee: every estimate bounds the true per-window count below
+        val truth = freqEvents.groupBy(e =>
+            (new Timestamp(e.ts.getTime / 3600000L * 3600000L), e.event_type, e.user_id))
+          .view.mapValues(_.size.toLong).toMap
+        assert(rows.nonEmpty && rows.forall(r =>
+          r(3).asInstanceOf[Long] >= truth.getOrElse(
+            (r(0).asInstanceOf[Timestamp], r(1).asInstanceOf[String], r(2).asInstanceOf[Long]), 0L)))
+      }),
+    SplitCase("windowedLastValueReplay",
+      EventStreams.windowedLastValueReplay(spark, mixedEvents, "1 hour", _),
+      () => EventStreams.windowedLastValue(frame(mixedEvents), "1 hour")),
+    SplitCase("sessionizeReplay",
+      EventStreams.sessionizeReplay(spark, sessionEvents, 10 * 60_000L, _),
+      () => EventStreams.sessionizeBatch(frame(sessionEvents), 10 * 60_000L)
+        .select("user_id", "start", "end", "events")),
+    SplitCase("attributionJoinReplay",
+      EventStreams.attributionJoinReplay(spark, clicks, purchases, _),
+      () => EventStreams.attributionJoin(frame(clicks), frame(purchases))),
+    SplitCase("dedupContentReplay",
+      EventStreams.dedupContentReplay(spark, texts, _),
+      () => graft.api.Dedup.exact(frame(texts, "doc_id", "text"), Seq("text"), "doc_id")),
+    SplitCase("domainQuotaReplay",
+      EventStreams.domainQuotaReplay(spark, hostUrls, _, 4),
+      // the operator on a batch frame: one timestamp, so arrival is id order
+      () => EventStreams.domainQuotaAdmit(frame(hostUrls.map { case (id, u) =>
+        (id, ts(0), u) }, "doc_id", "ts", "url"), 4),
+      rows => assert(rows.count(_(2) == true) == 12)),
+    SplitCase("urlDedupReplay",
+      EventStreams.urlDedupReplay(spark, variantUrls, _),
+      () => {
+        val docs = frame(variantUrls, "doc_id", "url")
+        val kept = graft.api.Domains.dedupByUrl(docs, "url", "doc_id", sortQuery = true)
+          .select(col("doc_id"), lit(true).as("admitted"))
+        docs.join(kept, Seq("doc_id"), "left")
+          .select(col("doc_id"), coalesce(col("admitted"), lit(false)).as("admitted"))
+      }),
+    SplitCase("contaminationReplay",
+      EventStreams.contaminationReplay(spark, contamDocs, contamBench, _, 4, 5L),
+      () => graft.api.Contamination.sharedNgrams(frame(contamDocs, "doc_id", "text"),
+        contamBench, "doc_id", "text", ngramWidth = 4, minShared = 5L),
+      rows => assert(rows.nonEmpty && !rows.exists(_(0) == 3L))))
+
+  for (c <- splitCases) test(s"split invariance 1/3/7: ${c.replay}") {
+    val twin = c.twin()
+    val cols = twin.columns.toSeq.map(col)
+    def rows(df: DataFrame) = df.select(cols: _*).orderBy(cols: _*).collect().map(_.toSeq).toSeq
+    val want = rows(twin)
+    assert(want.nonEmpty, "the fixture must give the twin some rows")
+    c.sanity(want)
+    for (n <- Seq(1, 3, 7)) {
+      val got = rows(c.run(n))
+      assert(got == want, s"nBatches=$n: streamed-only ${got.diff(want).take(3)}, " +
+        s"twin-only ${want.diff(got).take(3)}")
+    }
   }
 }
