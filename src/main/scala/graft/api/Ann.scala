@@ -64,9 +64,7 @@ object Ann {
       graft.functions.cosine_sketch64(col(vecCol), nbits, seed).as("sk"))
     // the shared self band-join's ReusedExchange: the full-vector
     // cosine_sketch64 pass runs once per vector, not per side
-    val banded = sk.select(col("id"),
-        posexplode(SketchBlocking.chunks(col("sk"), bands, nbits)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
+    val banded = SketchBlocking.bandRows(sk, Seq(col("id")), "sk", bands, nbits)
     val cand = BandedLsh.selfBandJoin(banded, "id", bucket = Seq("band", "chunk"))
       .select("id_a", "id_b").distinct()
     cand

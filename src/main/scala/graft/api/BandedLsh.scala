@@ -56,25 +56,87 @@ object BandedLsh {
   private[api] def candidateProbability(s: Double, bandCount: Int, bandSize: Int): Double =
     1.0 - math.pow(1.0 - math.pow(s, bandSize), bandCount)
 
-  /** Explode `lsh_min(textCol, ...)` into (band, hash) rows keyed by `idCol`.
-    * Rows whose text is shorter than `ngramWidth` hash identically everywhere
-    * (empty shingle set, SURVEY.md §2.2.4) and are dropped up front — they
-    * would otherwise form one catastrophic bucket. */
+  /** Explode `lsh_min(textCol, ...)` into (band, hash) rows keyed by `idCol`:
+    * `(idCol, textCol, band, band_hash)`. Rows whose text is shorter than
+    * `ngramWidth` hash identically everywhere (empty shingle set, SURVEY.md
+    * §2.2.4) and are dropped up front — they would otherwise form one
+    * catastrophic bucket.
+    *
+    * The id spread rule: the input is spread by id over
+    * `spark.sql.shuffle.partitions` before the kernel runs, unless its
+    * planned scan already yields at least that many partitions (a
+    * materialized cache or checkpoint, or a file scan with that many
+    * splits, under projections only), read from the plan without running
+    * a job. Any other input keeps the spread. A filter does too, since it
+    * may leave most partitions empty: `index_ingest`'s batches are id
+    * ranges of a 4-partition cache, one partition each, and skipping their
+    * spread ran each batch's kernel in one task (wall +6%, setup +10% over
+    * 5 alternating pairs). A single-row-group parquet file scans as ONE task,
+    * serializing the whole shingle+hash pass (measured 1.0s single-threaded
+    * at sf0.1 inside a broadcast build), and the id-hash shuffle that fixes
+    * it moves each doc once, dwarfed by the (band, hash) shuffle that
+    * always follows. A wide input gains nothing from it: on `dedup_batch`'s
+    * cached 4-partition corpus at 4 shuffle partitions it was one job and
+    * 408 of the 2 282 ms `nearDupPairs` call. */
   def bandedRows(df: DataFrame, idCol: String, textCol: String,
-                 ngramWidth: Int, bandCount: Int, bandSize: Int, seed: Long): DataFrame = {
-    // Spread the CPU-bound minhash kernel across the cluster BEFORE hashing:
-    // banding parallelism must not be capped by the input file layout (a
-    // single-row-group parquet file scans as ONE task, serializing the whole
-    // shingle+hash pass — measured 1.0s single-threaded at sf0.1 inside a
-    // broadcast build). The id-hash shuffle moves each doc once and is
-    // dwarfed by the (band, hash) shuffle/broadcast that always follows.
+                 ngramWidth: Int, bandCount: Int, bandSize: Int, seed: Long): DataFrame =
+    minhashBands(df, idCol, textCol, ngramWidth, bandCount, bandSize, Seq(seed))
+
+  /** The banding step under every MinHash pair path: drop texts shorter
+    * than `ngramWidth`, spread by id (the [[bandedRows]] rule), evaluate
+    * every seed's `lsh_min` and the `carry` columns in ONE projection, and
+    * explode the seeds' concatenated bands. Returns `(idCol, textCol,
+    * carry..., band, band_hash)`, `band` = seedIndex · bandCount + band.
+    * `carry` columns may read only `idCol` and `textCol`.
+    *
+    * The explode is the OUTER variant + a null filter, not a plain
+    * posexplode: Catalyst's InferFiltersFromGenerate fires on inner
+    * attribute generators and pushes the `size(bands) > 0` filter it
+    * infers below the projection (and the spread exchange), re-evaluating
+    * every kernel per row at the scan. Outer generates are exempt; a null
+    * text surfaces as one null row and dies in the same-stage filter. */
+  private def minhashBands(df: DataFrame, idCol: String, textCol: String,
+                           ngramWidth: Int, bandCount: Int, bandSize: Int,
+                           seeds: Seq[Long], carry: Seq[Column] = Nil): DataFrame = {
     val n = SparkEnv.shufflePartitions(df.sparkSession)
-    df.filter(length(col(textCol)) >= ngramWidth)
-      .repartition(n, col(idCol))
-      .select(col(idCol), col(textCol),
-        posexplode(graft.functions.lsh_min(col(textCol), ngramWidth, bandCount, bandSize, seed)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "band_hash")
+    val live = df.select(col(idCol), col(textCol)).filter(length(col(textCol)) >= ngramWidth)
+    val spread = if (plannedWidth(df).exists(_ >= n)) live else live.repartition(n, col(idCol))
+    val minima = seeds.map(minhash(col(textCol), ngramWidth, bandCount, bandSize, _))
+    spread.select((col(idCol) +: col(textCol) +: carry) :+
+        (if (minima.size == 1) minima.head else concat(minima: _*)).as("__bands"): _*)
+      .select(col("*"), posexplode_outer(col("__bands")).as(Seq("band", "band_hash")))
+      .filter(col("band_hash").isNotNull)
+      .drop("__bands")
+  }
+
+  /** The one `lsh_min` text-mode call of this module. */
+  private def minhash(text: Column, ngramWidth: Int, bandCount: Int, bandSize: Int,
+                      seed: Long): Column =
+    graft.functions.lsh_min(text, ngramWidth, bandCount, bandSize, seed)
+
+  /** Partitions `df`'s physical plan yields, when projections over a scan
+    * fix them and the plan says so without running a job: a loaded cache,
+    * a checkpointed or external RDD, or a file scan's splits (file listing
+    * only). None otherwise: an unloaded cache would build its buffers, a
+    * plan with an exchange would run its stages, and a filter may empty
+    * partitions. */
+  private def plannedWidth(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    def width(p: SparkPlan): Option[Int] = p match {
+      // a cache scan goes adaptive; its input plan is the narrow chain
+      case a: adaptive.AdaptiveSparkPlanExec => width(a.inputPlan)
+      case s: InMemoryTableScanExec =>
+        val cache = s.relation.cacheBuilder
+        if (cache.isCachedColumnBuffersLoaded) Some(cache.cachedColumnBuffers.getNumPartitions)
+        else None
+      case s: RDDScanExec => Some(s.rdd.getNumPartitions)
+      case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
+      case _: ProjectExec | _: WholeStageCodegenExec | _: InputAdapter |
+           _: ColumnarToRowExec => width(p.children.head)
+      case _ => None
+    }
+    width(df.queryExecution.executedPlan)
   }
 
   /** The self band-join under every banded pair path: rows sharing a
@@ -88,10 +150,10 @@ object BandedLsh {
     * exchange, so the kernel that built `banded` runs once per row — over
     * uncached inputs (pinned by SingleComputeSpec). Under AQE over a CACHED
     * input the sides plan two band exchanges and the kernel runs twice; the
-    * callers still carrying that hazard are `candidatePairs`,
-    * [[nearDupPairsBySignature]], `Ann.cosineLshPairs` and
-    * `Dedup.hammingPairs`. `hint` goes on the left side for callers whose
-    * plan depends on one. */
+    * callers still carrying that hazard are [[editVerifiedPairs]],
+    * [[nearDupPairsBySignature]], `Ann.cosineLshPairs`, `Dedup.hammingPairs`
+    * and `SemanticDedup.semanticDedup`. `hint` goes on the left side for
+    * callers whose plan depends on one. */
   private[api] def selfBandJoin(banded: DataFrame, id: String,
                                 payload: Seq[(String, String)] = Nil,
                                 bucket: Seq[String] = Seq("band", "band_hash"),
@@ -102,43 +164,6 @@ object BandedLsh {
     val a = side("_a")
     hint.fold(a)(a.hint(_)).join(side("_b"), bucket)
       .filter(col("id_a") < col("id_b"))
-  }
-
-  /** Distinct candidate id pairs (id_a < id_b) that collide in at least one
-    * band — the blocking stage of [[editVerifiedPairs]]. Only ids flow
-    * through the band join and the distinct: shuffling and deduplicating
-    * (id, id) longs is cheap where dragging the full documents through would
-    * move the whole corpus per band; texts are re-attached afterwards by two
-    * id joins. */
-  private[api] def candidatePairs(df: DataFrame, idCol: String, textCol: String,
-                                  ngramWidth: Int, bandCount: Int, bandSize: Int,
-                                  seed: Long): DataFrame = {
-    // The SHUFFLE_HASH hint is load-bearing for the shared exchange: when
-    // the banded rows estimate under the broadcast threshold the planner
-    // would otherwise broadcast one side — which REPLACES that side's
-    // exchange with a broadcast build, so the CPU-bound minhash banding runs
-    // twice (once per side) and the build serializes on the driver
-    // (measured at sf0.1: a second full lsh_min pass + a 6.7 s single-task
-    // build). A shuffled hash join keeps both sides on the one exchange and
-    // builds per partition.
-    val banded = bandedRows(df, idCol, textCol, ngramWidth, bandCount, bandSize, seed)
-      .select(col(idCol), col("band"), col("band_hash"))
-    val n = SparkEnv.shufflePartitions(df.sparkSession)
-    val idPairs = selfBandJoin(banded, idCol, hint = Some("shuffle_hash"))
-      .select("id_a", "id_b")
-      // strict-width dedup: AQE sizes shuffles on BYTES, and a candidate
-      // id-pair stream is tiny bytes but quadratic-in-bucket CPU — the
-      // ENSURE_REQUIREMENTS exchange under distinct() was coalesced to ONE
-      // task (6.7 s serialized at sf0.1, the lsh_blocking_join pathology).
-      // REPARTITION_BY_NUM on the distinct keys is AQE-unresizable and
-      // already satisfies the aggregate's distribution, so the dedup runs
-      // at full width with no extra exchange.
-      .repartition(n, col("id_a"), col("id_b"))
-      .distinct()
-    idPairs
-      .join(df.select(col(idCol).as("id_a"), col(textCol).as("text_a")), "id_a")
-      .join(df.select(col(idCol).as("id_b"), col(textCol).as("text_b")), "id_b")
-      .select("id_a", "id_b", "text_a", "text_b")
   }
 
   /** Full near-dup pair mining: banded blocking + exact-Jaccard verification.
@@ -183,10 +208,10 @@ object BandedLsh {
     * where the O(|a|·|b|) DP per pair is trivially bounded and edit
     * distance is the wanted semantics (shingle Jaccard under-weights
     * transpositions and single-char edits in short strings). Candidates
-    * come from the internal `candidatePairs` (one banding pass, ReusedExchange
-    * self-join, distinct before the text joins — a pair colliding in k
-    * bands pays the DP once); verification is one codegen'd builtin on
-    * the deduplicated stream.
+    * are the distinct id pairs colliding in at least one band (one banding
+    * pass, ReusedExchange self-join, distinct before the text joins — a
+    * pair colliding in k bands pays the DP once); verification is one
+    * codegen'd builtin on the deduplicated stream.
     *
     * Engine note, CLOSED in round 18: DuckDB's `levenshtein` counts
     * BYTE edits, so the cross-engine verifier semantics were pinned
@@ -200,7 +225,7 @@ object BandedLsh {
     *
     * Plan shape — the OPPOSITE order from [[nearDupPairs]], and measured,
     * not assumed: ids-only band join → `distinct` → broadcast text attach
-    * → one DP per UNIQUE pair (`candidatePairs`). Near-uniform key
+    * → one DP per UNIQUE pair. Near-uniform key
     * spaces (serial numbers, templated names) give shingle-MinHash a
     * narrow true/random Jaccard gap, so pairs that collide at all collide
     * in MANY bands; verifying inside the band join pays the DP per
@@ -218,14 +243,43 @@ object BandedLsh {
     * document-scale text use [[nearDupPairs]] (Jaccard) instead. */
   def editVerifiedPairs(df: DataFrame, idCol: String, textCol: String,
                         ngramWidth: Int, bandCount: Int, bandSize: Int,
-                        seed: Long, minSim: Double): DataFrame =
-    candidatePairs(df, idCol, textCol, ngramWidth, bandCount, bandSize, seed)
+                        seed: Long, minSim: Double): DataFrame = {
+    // Only ids flow through the band join and the distinct: shuffling and
+    // deduplicating (id, id) longs is cheap where dragging the full
+    // documents through would move the whole corpus per band; texts are
+    // re-attached afterwards by two id joins.
+    //
+    // The SHUFFLE_HASH hint is load-bearing for the shared exchange: when
+    // the banded rows estimate under the broadcast threshold the planner
+    // would otherwise broadcast one side — which REPLACES that side's
+    // exchange with a broadcast build, so the CPU-bound minhash banding runs
+    // twice (once per side) and the build serializes on the driver
+    // (measured at sf0.1: a second full lsh_min pass + a 6.7 s single-task
+    // build). A shuffled hash join keeps both sides on the one exchange and
+    // builds per partition.
+    val banded = bandedRows(df, idCol, textCol, ngramWidth, bandCount, bandSize, seed)
+      .select(col(idCol), col("band"), col("band_hash"))
+    val idPairs = selfBandJoin(banded, idCol, hint = Some("shuffle_hash"))
+      .select("id_a", "id_b")
+      // strict-width dedup: AQE sizes shuffles on BYTES, and a candidate
+      // id-pair stream is tiny bytes but quadratic-in-bucket CPU — the
+      // ENSURE_REQUIREMENTS exchange under distinct() was coalesced to ONE
+      // task (6.7 s serialized at sf0.1, the lsh_blocking_join pathology).
+      // REPARTITION_BY_NUM on the distinct keys is AQE-unresizable and
+      // already satisfies the aggregate's distribution, so the dedup runs
+      // at full width with no extra exchange.
+      .repartition(SparkEnv.shufflePartitions(df.sparkSession), col("id_a"), col("id_b"))
+      .distinct()
+    idPairs
+      .join(df.select(col(idCol).as("id_a"), col(textCol).as("text_a")), "id_a")
+      .join(df.select(col(idCol).as("id_b"), col(textCol).as("text_b")), "id_b")
       .withColumn("lev",
         graft.functions.levenshtein_cp(col("text_a"), col("text_b")).cast("long"))
       .withColumn("edit_sim",
         lit(1.0) - col("lev") / greatest(length(col("text_a")), length(col("text_b"))))
       .filter(col("edit_sim") >= minSim)
       .select("id_a", "id_b", "lev", "edit_sim")
+  }
 
   /** Candidate-pair census over the banded blocking buckets: Σ C(n,2) and
     * the largest bucket, computed straight from bucket SIZES (one
@@ -279,9 +333,10 @@ object BandedLsh {
     * in perfbench); at ~10^8 bucket pairs the machinery IS the query. Ids
     * come back as longs. Shape:
     *
-    *  1. one id spread exchange for all seeds, then one `posexplode` of the
-    *     seeds' concatenated `lsh_min` arrays; each band is tagged with a
-    *     (seedIndex << 32) | band key ([[blockedRows]]);
+    *  1. at most one id spread exchange for all seeds ([[bandedRows]]'
+    *     rule), then one explode of the seeds' concatenated `lsh_min`
+    *     arrays; each band is tagged with a (seedIndex << 32) | band key
+    *     ([[blockedRows]]);
     *  2. salt rows into `numBlocks` deterministic blocks and replicate each
     *     row to every (block-pair) group of its bucket — the classic triangle
     *     blocking for self-joins, giving numBlocks·(numBlocks+1)/2-way
@@ -309,17 +364,11 @@ object BandedLsh {
   private[api] def blockedRows(df: DataFrame, idCol: String, textCol: String,
                                ngramWidth: Int, bandCount: Int, bandSize: Int,
                                seeds: Seq[Long], numBlocks: Int): DataFrame = {
-    // the bandedRows spread and filter, once for all seeds
-    val minima = seeds.map(s =>
-      graft.functions.lsh_min(col(textCol), ngramWidth, bandCount, bandSize, s))
-    val banded = df.filter(length(col(textCol)) >= ngramWidth)
-      .repartition(SparkEnv.shufflePartitions(df.sparkSession), col(idCol))
-      .select(col(idCol).cast("long").as("id"), col(textCol).as("text"),
-        posexplode(if (minima.size == 1) minima.head else concat(minima: _*)))
+    val banded = minhashBands(df, idCol, textCol, ngramWidth, bandCount, bandSize, seeds)
       .select(
-        (shiftleft((col("pos") / bandCount).cast("long"), 32) +
-          (col("pos") % bandCount).cast("long")).as("bk"),
-        col("col").as("h"), col("id"), col("text"))
+        (shiftleft((col("band") / bandCount).cast("long"), 32) +
+          (col("band") % bandCount).cast("long")).as("bk"),
+        col("band_hash").as("h"), col(idCol).cast("long").as("id"), col(textCol).as("text"))
     // Triangle block replication: each row meets every block once, so every
     // bucket pair meets in exactly one (blo, bhi) group per band. At one
     // block every row is one copy in its bucket's only group. blo/bhi stay
@@ -387,27 +436,13 @@ object BandedLsh {
                               seed: Long, k: Int, sigSeed: Long,
                               threshold: Double): DataFrame = {
     require(k >= 1, s"signature length must be >= 1, got $k")
-    val n = SparkEnv.shufflePartitions(df.sparkSession)
-    // one pass computes BOTH the blocking bands and the k-component
-    // signature; only (id, bands, sig) ever shuffles. The explode is the
-    // OUTER variant + a null filter, not a plain posexplode: Catalyst's
-    // InferFiltersFromGenerate fires on inner attribute generators and
-    // pushes the `size(bands) > 0` filter it infers below the spread
-    // exchange, re-evaluating BOTH lsh_min kernels per row at the scan
-    // (outer generates are exempt; empty-band rows surface as one null
-    // row and die in the same-stage filter — bit-identical output).
-    // the shared self band-join's ReusedExchange: both lsh_min passes run
-    // once per document.
-    val hashed = df
-      .filter(length(col(textCol)) >= ngramWidth)
-      .repartition(n, col(idCol))
-      .select(col(idCol).as("id"),
-        graft.functions.lsh_min(col(textCol), ngramWidth, bandCount, bandSize, seed).as("bands"),
-        graft.functions.lsh_min(col(textCol), ngramWidth, k, 1, sigSeed).as("sig"))
-    val banded = hashed.select(col("id"), col("sig"),
-        posexplode_outer(col("bands")))
-      .filter(col("col").isNotNull)
-      .select(col("id"), col("sig"), col("pos").as("band"), col("col").as("band_hash"))
+    // one projection computes BOTH the blocking bands and the k-component
+    // signature, and the shared self band-join's ReusedExchange reads it:
+    // both lsh_min passes run once per document, and only (id, sig, band,
+    // band_hash) ever shuffles
+    val banded = minhashBands(df, idCol, textCol, ngramWidth, bandCount, bandSize, Seq(seed),
+        Seq(minhash(col(textCol), ngramWidth, k, 1, sigSeed).as("sig")))
+      .select(col(idCol).as("id"), col("sig"), col("band"), col("band_hash"))
     selfBandJoin(banded, "id", Seq("sig" -> "sig"))
       .select("id_a", "id_b", "sig_a", "sig_b")
       .distinct()

@@ -89,9 +89,8 @@ object Dedup {
   private[api] def hammingPairs(hashed: DataFrame, bands: Int,
                                 maxHamming: Int): DataFrame = {
     require(bands >= 1 && bands <= 64, s"bands must be in [1, 64], got $bands")
-    val banded = hashed.select(col("id"), col("h"),
-        posexplode(SketchBlocking.chunks(col("h"), bands, bands * (64 / bands))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "chunk")
+    val banded = SketchBlocking.bandRows(hashed, Seq(col("id"), col("h")), "h", bands,
+      bands * (64 / bands))
     BandedLsh.selfBandJoin(banded, "id", Seq("h" -> "h"), Seq("band", "chunk"))
       .select(col("id_a"), col("id_b"),
         graft.functions.hamming_dist(col("h_a"), col("h_b")).as("hamming"))

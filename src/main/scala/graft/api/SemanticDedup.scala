@@ -81,16 +81,11 @@ object SemanticDedup {
     // drop and never shadow — excluded from the pair join, kept in the
     // output (same guard as cosineLshPairs).
     val live = assigned.filter(Ann.normSq(col(vecCol)) > 0.0)
-    // ids+cluster through the shuffle twice, vectors re-attached by the
-    // cluster-key join itself (both sides need the vector for the verify,
-    // and each side's projection is narrow: id, cluster, d doubles).
-    val a = live.select(col(idCol).as("id_a"), col("cluster"),
-      col(vecCol).as("va"))
-    val b = live.select(col(idCol).as("id_b"), col("cluster"),
-      col(vecCol).as("vb"))
-    val dropped = a.join(b, Seq("cluster"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(Ann.cosine(col("va"), col("vb")) >= lit(tau))
+    // the shared self band-join on the cluster key: both sides read one
+    // repartition of (id, vector, cluster), so the assignment runs once
+    // for the pair join (each side needs the vector for the verify)
+    val dropped = BandedLsh.selfBandJoin(live, idCol, Seq(vecCol -> "v"), Seq("cluster"))
+      .filter(Ann.cosine(col("v_a"), col("v_b")) >= lit(tau))
       .select(col("id_b").as(idCol))
       .distinct()
     assigned.select(col(idCol), col("cluster"))

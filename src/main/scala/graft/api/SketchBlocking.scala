@@ -1,12 +1,13 @@
 package graft.api
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Shared pigeonhole blocking layout for 64-bit sketches: split a sketch
   * into `bands` equal bit-chunks; rows sharing any (band, chunk) pair are
-  * candidates. Used by both SimHash (Hamming) and cosine sign-sketch pair
-  * mining — one implementation so fixes reach every family. */
+  * candidates. Used by SimHash (Hamming) and cosine sign-sketch pair mining
+  * and by the streaming embedding blocker — one implementation so fixes
+  * reach every family. */
 private[graft] object SketchBlocking {
 
   /** All-ones mask for a `width`-bit chunk. Scala shifts are mod 64, so the
@@ -26,4 +27,12 @@ private[graft] object SketchBlocking {
     array((0 until bands).map(b =>
       shiftrightunsigned(sketch, b * width).bitwiseAND(lit(chunkMask(width)))): _*)
   }
+
+  /** `keep` plus one `(band, chunk)` row per band of the sketch column
+    * `sketch`. It must name an already-projected column, not a kernel
+    * call: [[chunks]] reads its argument once per band. A NULL sketch
+    * explodes to no rows. */
+  def bandRows(rows: DataFrame, keep: Seq[Column], sketch: String, bands: Int,
+               nbits: Int): DataFrame =
+    rows.select(keep :+ posexplode(chunks(col(sketch), bands, nbits)).as(Seq("band", "chunk")): _*)
 }

@@ -283,19 +283,11 @@ object EventStreams {
   def nearDupCandidates(docs: DataFrame, ngramWidth: Int, bandCount: Int,
                         bandSize: Int, lshSeed: Long, watermarkDelay: String = "10 seconds",
                         ttlMs: Long = 60 * 60 * 1000L, maxBucket: Int = 64): Dataset[DupCandidate] = {
-    import docs.sparkSession.implicits._
-    val w = ngramWidth
-    val banded = docs.select(col("doc_id").cast("long"), col("ts"), col("text"))
-      .as[(Long, Timestamp, String)]
-      .flatMap { case (id, ts, text) =>
-        if (text == null) Iterator.empty
-        else {
-          val bytes = text.getBytes("UTF-8")
-          val hs = graft.core.MinHashFamily(bandCount, bandSize, lshSeed)
-            .hashWindows(graft.core.Shingles.windowHashesUtf8(bytes, 0, bytes.length, w))
-          hs.iterator.zipWithIndex.map { case (h, band) => (band, h, id, ts) }
-        }
-      }.toDF("band", "h", "doc_id", "ts")
+    // the batch kernel: a NULL text hashes to NULL and explodes to nothing
+    val banded = docs.select(
+      posexplode(graft.functions.lsh_min(col("text"), ngramWidth, bandCount, bandSize, lshSeed))
+        .as(Seq("band", "h")),
+      col("doc_id").cast("long").as("doc_id"), col("ts"))
     bucketCollisions(banded, watermarkDelay, ttlMs, maxBucket)
   }
 
@@ -316,28 +308,14 @@ object EventStreams {
                              watermarkDelay: String = "10 seconds",
                              ttlMs: Long = 60 * 60 * 1000L,
                              maxBucket: Int = 64): Dataset[DupCandidate] = {
-    import vecs.sparkSession.implicits._
-    require(bands >= 1 && nbits % bands == 0,
-      s"bands must divide nbits, got nbits=$nbits bands=$bands")
-    val width = nbits / bands
-    val mask = graft.api.SketchBlocking.chunkMask(width)
-    val banded = vecs.select(col("vec_id").cast("long"), col("ts"),
-        col("embedding").cast("array<double>"))
-      .as[(Long, Timestamp, Seq[Double])]
-      .flatMap { case (id, ts, emb) =>
-        if (emb == null) Iterator.empty
-        else {
-          val arr = emb.toArray
-          var normSq = 0.0
-          var i = 0
-          while (i < arr.length) { normSq += arr(i) * arr(i); i += 1 }
-          if (normSq == 0.0) Iterator.empty
-          else {
-            val sk = graft.core.CosineFamily(nbits, lshSeed, arr.length).sketch(arr)
-            (0 until bands).iterator.map(b => (b, (sk >>> (b * width)) & mask, id, ts))
-          }
-        }
-      }.toDF("band", "h", "doc_id", "ts")
+    // the batch kernels: a NULL or zero-norm vector fails the norm filter
+    val emb = col("embedding").cast("array<double>")
+    val sketched = vecs.filter(graft.api.Ann.normSq(emb) > 0.0)
+      .select(col("vec_id").cast("long").as("doc_id"), col("ts"),
+        graft.functions.cosine_sketch64(emb, nbits, lshSeed).as("sk"))
+    val banded = graft.api.SketchBlocking.bandRows(sketched, Seq(col("doc_id"), col("ts")),
+        "sk", bands, nbits)
+      .select(col("band"), col("chunk").as("h"), col("doc_id"), col("ts"))
     bucketCollisions(banded, watermarkDelay, ttlMs, maxBucket)
   }
 

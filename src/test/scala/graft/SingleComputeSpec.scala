@@ -98,6 +98,81 @@ class SingleComputeSpec extends AnyFunSuite {
     } finally cached.unpersist()
   }
 
+  /** The banding's id-spread exchanges: strict repartitions hashing
+    * exactly the id column. */
+  private def idSpreads(df: org.apache.spark.sql.DataFrame, idCol: String): Int = {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM
+    df.collect()
+    liveNodes(df.queryExecution.executedPlan).count {
+      case e: ShuffleExchangeExec => e.shuffleOrigin == REPARTITION_BY_NUM &&
+        (e.outputPartitioning match {
+          case HashPartitioning(Seq(a: Attribute), _) => a.name == idCol
+          case _ => false
+        })
+      case _ => false
+    }
+  }
+
+  test("banding over a wide materialized input plans no id-spread exchange") {
+    // the cache already yields the shuffle width: spreading it again moves
+    // every document and adds a job for no parallelism
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val cached = docs.repartition(width).cache()
+    try {
+      cached.count()
+      val pairs = api.BandedLsh.nearDupPairs(cached, "doc_id", "text", 4, 8, 3, 42L, 0.6)
+      assert(idSpreads(pairs, "doc_id") == 0,
+        s"no spread expected:\n${pairs.queryExecution.executedPlan}")
+      assert(computeSites(pairs, "lsh_min") == 1,
+        s"banding must compute once:\n${pairs.queryExecution.executedPlan}")
+      val rows = api.BandedLsh.bandedRows(cached, "doc_id", "text", 4, 8, 3, 42L)
+      assert(idSpreads(rows, "doc_id") == 0,
+        s"no spread expected:\n${rows.queryExecution.executedPlan}")
+    } finally cached.unpersist()
+  }
+
+  test("banding over a one-file parquet input plans exactly one id-spread exchange") {
+    // a single-row-group file scans as one task: without the spread the
+    // kernel would run serialized
+    val pairs = api.BandedLsh.nearDupPairs(docs, "doc_id", "text", 4, 8, 3, 42L, 0.6)
+    assert(idSpreads(pairs, "doc_id") == 1,
+      s"one spread expected:\n${pairs.queryExecution.executedPlan}")
+    val rows = api.BandedLsh.bandedRows(docs, "doc_id", "text", 4, 8, 3, 42L)
+    assert(idSpreads(rows, "doc_id") == 1,
+      s"one spread expected:\n${rows.queryExecution.executedPlan}")
+  }
+
+  test("nearDupCandidates on a batch frame: the lsh_min kernel runs in one node") {
+    import org.apache.spark.sql.functions._
+    val batch = docs.select(col("doc_id").cast("long").as("doc_id"),
+      timestamp_seconds(col("doc_id")).as("ts"), col("text"))
+    val df = streaming.EventStreams.nearDupCandidates(batch, 4, 8, 3, 42L).toDF()
+    assert(computeSites(df, "lsh_min") == 1,
+      s"banding must compute once:\n${df.queryExecution.executedPlan}")
+  }
+
+  test("embedNearDupCandidates on a batch frame: the sketch runs in one node") {
+    import org.apache.spark.sql.functions._
+    val batch = emb.select(col("vec_id").cast("long").as("vec_id"),
+      timestamp_seconds(col("vec_id")).as("ts"), col("embedding"))
+    val df = streaming.EventStreams.embedNearDupCandidates(batch, 64, 8, 41L).toDF()
+    assert(computeSites(df, "cosine_sketch") == 1,
+      s"sketching must compute once:\n${df.queryExecution.executedPlan}")
+  }
+
+  test("semanticDedup: the cluster assignment reaches four plan sites") {
+    // the pair join's two sides read one cluster repartition, whose stage
+    // lists the assignment three times: its projection, the not-null filter
+    // Catalyst infers from the cluster join and pushes below it, and the
+    // scan's data filters. The fourth is the verdict's id list. A
+    // hand-built join with one projection per side reached seven.
+    val df = api.SemanticDedup.semanticDedup(emb, nClusters = 4, tau = 0.3, seed = 77L)
+    assert(computeSites(df, "nearest_centroid(") == 4,
+      s"assignment sites:\n${df.queryExecution.executedPlan}")
+  }
+
   test("signatureDupPairs: both lsh_min passes run once") {
     val df = api.BandedLsh.nearDupPairsBySignature(docs, "doc_id", "text",
       4, 8, 3, 42L, k = 24, sigSeed = 77L, threshold = 0.3)

@@ -339,30 +339,54 @@ class PipelineOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("fused pair exec: same pairs at any input split, shuffle width or AQE") {
-    // neither the input's partitioning, nor the shuffle width, nor adaptive
-    // execution may change which pairs come out, or their similarities
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    def both(docs: org.apache.spark.sql.DataFrame) = (
-      pairs(BandedLsh.nearDupPairs(docs, "doc_id", "text", 4, 8, 3, 123L, 0.5)),
-      pairs(BandedLsh.bandedSelfJoinPairs(docs, "doc_id", "text", 4, 8, 3,
-        Seq(123L, 7L), 0.5)))
-    val base = both(plantedDocs)
-    assert(base._1.nonEmpty && base._2.nonEmpty)
+  /** Asserts `run` gives the same result as on the unsplit input for every
+    * input split — 1 and 7 partitions, and a materialized 7-partition
+    * checkpoint, whose planned width lets the banding skip its id spread
+    * at width 3 and keep it at width 16 — at shuffle widths 3 and 16 with
+    * AQE on and off. */
+  private def splitInvariant[T](docs: org.apache.spark.sql.DataFrame)(
+      run: org.apache.spark.sql.DataFrame => T): T = {
+    val base = run(docs)
     val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
     val saved = keys.map(k => k -> spark.conf.getOption(k))
+    val wide = docs.repartition(7).localCheckpoint(true)
     try {
-      for (inParts <- Seq(1, 7); width <- Seq(3, 16); aqe <- Seq(true, false)) {
+      for ((split, in) <- Seq("1 partition" -> docs.repartition(1),
+             "7 partitions" -> docs.repartition(7), "7 checkpointed" -> wide);
+           width <- Seq(3, 16); aqe <- Seq(true, false)) {
         spark.conf.set(keys(0), width.toLong)
         spark.conf.set(keys(1), aqe)
-        val got = both(plantedDocs.repartition(inParts))
-        assert(got == base, s"input $inParts partitions, width $width, AQE $aqe")
+        assert(run(in) == base, s"input $split, width $width, AQE $aqe")
       }
     } finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+    base
+  }
+
+  test("fused pair exec: same pairs at any input split, shuffle width or AQE") {
+    // neither the input's partitioning, nor the shuffle width, nor adaptive
+    // execution may change which pairs come out, or their similarities
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val base = splitInvariant(plantedDocs)(docs => (
+      pairs(BandedLsh.nearDupPairs(docs, "doc_id", "text", 4, 8, 3, 123L, 0.5)),
+      pairs(BandedLsh.bandedSelfJoinPairs(docs, "doc_id", "text", 4, 8, 3,
+        Seq(123L, 7L), 0.5))))
+    assert(base._1.nonEmpty && base._2.nonEmpty)
+  }
+
+  test("relational pair paths: same pairs at any input split, shuffle width or AQE") {
+    // the edit, signature and simhash verifiers over the same banding layer
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val base = splitInvariant(plantedDocs)(docs => (
+      rows(BandedLsh.editVerifiedPairs(docs, "doc_id", "text", 2, 8, 3, 123L, 0.7)),
+      rows(BandedLsh.nearDupPairsBySignature(docs, "doc_id", "text", 4, 8, 3, 123L,
+        k = 32, sigSeed = 9L, threshold = 0.5)),
+      rows(Dedup.simhashDupPairs(docs, "doc_id", "text", 8, 6))))
+    assert(base._1.nonEmpty && base._2.nonEmpty && base._3.nonEmpty,
+      s"every path must emit pairs: ${base._1.size}, ${base._2.size}, ${base._3.size}")
   }
 
   test("nearDupPairs equals the README SQL blocking idiom (per-band UNION)") {
