@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** Driver contract — see SURVEY.md §7 and FIXTURES.md.
   *
@@ -32,120 +33,316 @@ object SparkEntry {
   private def load(spark: SparkSession, dir: String, table: String): DataFrame =
     spark.read.parquet(s"$dir/$table.parquet")
 
-  /** Deterministic URL column for the per-domain gates (the documents
-    * fixture has no URL): per-source hosts, a `WWW.` prefix on %5 ids,
-    * %40 path collisions, trailing slashes on %3, query strings on %7,
-    * fragments on %11 — every normalization rule in
-    * [[graft.api.Domains]] gets exercised. Mirrored verbatim in the
-    * DuckDB/Python oracles. */
-  /** Deterministic raw-HTML twin of the documents fixture: each doc's
-    * text wrapped in a realistic page — head metadata, style + script
-    * (the script body contains `<`, `&&` and a decoy `</p>` closer),
-    * comments, nav chrome, heading, list items with named/numeric
-    * entities, the text split across two `<p>` blocks. Mirrored
-    * byte-for-byte in tools/gen_oracles.py (`planted_html`), so the
-    * html_extract gate pins the EXTRACTOR against the independent
-    * Python scan, not fixture plumbing. */
-  private def withPlantedHtml(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("source"), col("n_chars"),
-      concat(
-        lit("<!DOCTYPE html><html><head><title>Doc "),
-        col("doc_id").cast("string"),
-        lit("</title><style type=\"text/css\">p { color: #333; }</style>" +
-          "<script>if (x < 3 && y > 0) { track(\"</p>\"); }</script>" +
-          "</head><body><!-- header --><div class=\"nav\">Home &raquo; " +
-          "Docs</div><h1>Doc "),
-        col("doc_id").cast("string"),
-        lit("</h1><p>"), substring(col("text"), 1, 80),
-        lit("</p><ul><li>alpha &amp; beta</li><li>&#65;&#x42; size " +
-          "&lt;10&gt;</li></ul><p>"),
-        substring(col("text"), 81, 1000000),
-        lit("</p><br/>&copy; 2026 example</body></html>")).as("html"))
+  /** The planted-fixture registry: every input table a gate plants on top
+    * of the testdata, by name, built here and nowhere else. The gates read
+    * their planted inputs from it; `graft.Verify` writes each table as
+    * parquet under `<fixtureDir>/<name>` when given a fixture directory,
+    * and tools/gen_oracles.py re-derives its oracles over exactly those
+    * rows instead of rebuilding them (FIXTURES.md, "Planted fixtures").
+    * A recipe drift thus changes the rows both sides see, never one
+    * side's copy. */
+  val fixtures: ListMap[String, (SparkSession, String) => DataFrame] = ListMap(
+    // Deterministic URL column for the per-domain gates (the documents
+    // fixture has no URL): per-source hosts, a `WWW.` prefix on %5 ids,
+    // %40 path collisions, trailing slashes on %3, query strings on %7,
+    // fragments on %11 — every normalization rule in graft.api.Domains
+    // gets exercised. The DuckDB oracles of domain_counts / domain_dedup
+    // rebuild the same column in SQL.
+    "planted_urls" -> ((s, dir) => {
+      val did = col("doc_id")
+      load(s, dir, "documents").select(did, col("source"), col("n_chars"),
+        concat(lit("https://"),
+          when(did % 5 === 0, lit("WWW.")).otherwise(lit("")),
+          col("source"), lit(".example.com/p"), (did % 40).cast("string"),
+          when(did % 3 === 0, lit("/")).otherwise(lit("")),
+          when(did % 7 === 0, concat(lit("?q="), (did % 4).cast("string")))
+            .otherwise(lit("")),
+          when(did % 11 === 0, concat(lit("#s"), did.cast("string")))
+            .otherwise(lit(""))).as("url"))
+    }),
+    // Raw-HTML twin of the documents fixture: each doc's text wrapped in
+    // a realistic page — head metadata, style + script (the script body
+    // contains `<`, `&&` and a decoy `</p>` closer), comments, nav
+    // chrome, heading, list items with named/numeric entities, the text
+    // split across two `<p>` blocks. The html_extract gate pins the
+    // EXTRACTOR against the independent Python scan over these pages.
+    "planted_html" -> ((s, dir) =>
+      load(s, dir, "documents").select(col("doc_id"), col("source"), col("n_chars"),
+        concat(
+          lit("<!DOCTYPE html><html><head><title>Doc "),
+          col("doc_id").cast("string"),
+          lit("</title><style type=\"text/css\">p { color: #333; }</style>" +
+            "<script>if (x < 3 && y > 0) { track(\"</p>\"); }</script>" +
+            "</head><body><!-- header --><div class=\"nav\">Home &raquo; " +
+            "Docs</div><h1>Doc "),
+          col("doc_id").cast("string"),
+          lit("</h1><p>"), substring(col("text"), 1, 80),
+          lit("</p><ul><li>alpha &amp; beta</li><li>&#65;&#x42; size " +
+            "&lt;10&gt;</li></ul><p>"),
+          substring(col("text"), 81, 1000000),
+          lit("</p><br/>&copy; 2026 example</body></html>")).as("html"))),
+    // Raw-HTML twin with CHROME planted around the content: nav bar,
+    // link-list sidebar, short heading, an inline-linked prose paragraph
+    // and a link-dense footer — the single-page boilerplate the
+    // main-content tier must drop and plain extraction keeps.
+    "planted_main_html" -> ((s, dir) =>
+      load(s, dir, "documents").select(col("doc_id"), col("source"), col("n_chars"),
+        concat(
+          lit("<html><head>"),
+          // robots opt-out class for the capstone's stage 0 (a meta strips
+          // to no text, so the html_main_content rows are unaffected)
+          when(col("doc_id") % 9 === 4,
+            lit("<meta name=\"robots\" content=\"noindex\">"))
+            .otherwise(lit("")),
+          lit("<title>Doc "), col("doc_id").cast("string"),
+          lit("</title><style>nav { color: red; }</style></head><body>" +
+            "<div class=\"nav\"><a href=\"/\">Home</a> <a href=\"/docs\">Docs" +
+            "</a> <a href=\"/about\">About us</a></div>" +
+            "<aside><ul><li><a href=\"/r1\">related article one</a></li>" +
+            "<li><a href=\"/r2\">related article two</a></li>" +
+            "<li><a href=\"/r3\">related article three</a></li></ul></aside>" +
+            "<h1>Doc "), col("doc_id").cast("string"),
+          lit("</h1><p>"), substring(col("text"), 1, 80),
+          lit("</p><p>See <a href=\"/guide\">the full guide</a> for " +
+            "background and details: "),
+          substring(col("text"), 81, 1000000),
+          lit("</p><footer><a href=\"/privacy\">Privacy</a> | " +
+            "<a href=\"/terms\">Terms</a> &copy; 2026 example</footer>" +
+            "</body></html>")).as("html"))),
+    // Template-spam twin for the compression-ratio gate: docs with
+    // id % 10 == 7 become 288 template words each followed by a UNIQUE
+    // slot number — no duplicate line, no repeated 2-gram (every 2-gram
+    // contains a slot), so dup-line and top-n-gram counters see nothing,
+    // while zlib compresses the repeated template vocabulary past 3:1.
+    // Built from codegen'd builtins (sequence/transform/element_at), so
+    // the fixture is distributed.
+    "planted_spam" -> ((s, dir) =>
+      load(s, dir, "documents").withColumn("text",
+        when(col("doc_id") % 10 === 7,
+          expr("concat_ws(' ', transform(sequence(1, 288), k -> concat(" +
+            "element_at(array('item','best','price','free','shipping'," +
+            "'order','now','satisfaction','guaranteed','call','today'," +
+            "'deal'), CAST((k - 1) % 12 AS INT) + 1), ' ', " +
+            "CAST((doc_id * 131071 + k * 8191) & 65535 AS STRING))))"))
+          .otherwise(col("text")))),
+    // Robots-meta twin for the noindex gate: id-keyed directive classes —
+    // a straight noindex behind a newline-padded token (%6==1, pins the
+    // [\x00-\x20] edge trim), an UPPERCASE keep directive (%6==3), a
+    // single-quoted `none` (%6==5), and a decoy page whose `noindex`
+    // string lives in a DESCRIPTION meta (%6==0, must keep — the name
+    // attribute decides, not the content).
+    "planted_robots_html" -> ((s, dir) =>
+      load(s, dir, "documents").select(col("doc_id"), col("n_chars"),
+        concat(lit("<html><head>"),
+          when(col("doc_id") % 6 === 1,
+            lit("<meta name=\"robots\" content=\"nofollow,\n noindex\">"))
+            .when(col("doc_id") % 6 === 3,
+              lit("<meta NAME=\"ROBOTS\" CONTENT=\"INDEX, FOLLOW\">"))
+            .when(col("doc_id") % 6 === 5,
+              lit("<meta name='robots' content='none'>"))
+            .when(col("doc_id") % 6 === 0,
+              lit("<meta charset=\"utf-8\">" +
+                "<meta name=\"description\" content=\"x, noindex\">"))
+            .otherwise(lit("")),
+          lit("<title>Doc "), col("doc_id").cast("string"),
+          lit("</title></head><body><p>"), substring(col("text"), 1, 40),
+          lit("</p></body></html>")).as("html"))),
+    // The WARC tape gates' page wrap — one table for the three tape
+    // fixtures. Non-ASCII guillemets (\u escapes: source-encoding-proof)
+    // force byte-exact Content-Length framing.
+    "warc_pages" -> ((s, dir) =>
+      load(s, dir, "documents").select(col("doc_id"),
+        concat(lit("<html><head><title>Doc \u00ab"), col("doc_id").cast("string"),
+          lit("\u00bb</title><script>var x = 1 < 2;</script></head><body>" +
+            "<h1>Doc "), col("doc_id").cast("string"), lit("</h1><p>"),
+          col("text"), lit("</p></body></html>")).as("html"))),
+    // The charset tape's pre-encoding bodies, classed by id % 6 (the gate
+    // gives each class its charset and Content-Type label): latin-1 and
+    // windows-1252 suffixes (\u00e9, \u00b1, \u20ac, curly quotes), UTF-8,
+    // an ASCII tail under an unknown label, and two classes that declare
+    // their charset only in the page (`<meta charset>`, http-equiv).
+    "warc_charset_bodies" -> ((s, dir) => {
+      val did = col("doc_id")
+      val base = substring(col("text"), 1, 60)
+      load(s, dir, "documents").select(did,
+        when(did % 6 === 0 || did % 6 === 2,
+          concat(base, lit(" caf\u00e9 \u00b1 na\u00efve")))
+          .when(did % 6 === 1,
+            concat(base, lit(" \u20ac \u201csmart\u201d quotes")))
+          .when(did % 6 === 3, concat(base, lit(" plain ascii tail")))
+          .when(did % 6 === 4, concat(lit("<meta charset=\"windows-1252\"><p>"),
+            base, lit(" \u20ac meta tail</p>")))
+          .otherwise(concat(lit("<meta http-equiv=\"Content-Type\" content=\"" +
+            "text/html; charset=iso-8859-1\"><p>"), base,
+            lit(" caf\u00e9 meta tail</p>"))).as("body"))
+    }),
+    // The chunked tape's pre-encoding bodies: a multi-byte em dash that
+    // the gate's 13-byte chunker splits mid-character.
+    "warc_chunked_bodies" -> ((s, dir) =>
+      load(s, dir, "documents").select(col("doc_id"),
+        concat(substring(col("text"), 1, 80),
+          lit(" \u2014 chunked wire tail")).as("body"))),
+    // The status tape's envelopes by id % 5: 200 plain, 301, 404, 200 +
+    // X-Robots-Tag noindex, 200 + X-Robots-Tag unavailable_after (not a
+    // noindex token: must keep).
+    "warc_status_records" -> ((s, dir) => {
+      val did = col("doc_id")
+      val base = substring(col("text"), 1, 70)
+      load(s, dir, "documents").select(did,
+        when(did % 5 === 1, lit(301)).when(did % 5 === 2, lit(404))
+          .otherwise(lit(200)).as("status"),
+        when(did % 5 === 3, lit("noindex, nofollow"))
+          .when(did % 5 === 4, lit("unavailable_after: 2027-01-01"))
+          .as("x_robots_tag"),
+        when(did % 5 === 0, concat(base, lit(" ok body")))
+          .when(did % 5 === 1, lit("moved"))
+          .when(did % 5 === 2, lit("not found"))
+          .when(did % 5 === 3, concat(base, lit(" hidden body")))
+          .otherwise(concat(base, lit(" ua body"))).as("body"))
+    }),
+    // Per-host robots.txt bodies over the planted_urls hosts, one REP
+    // corner each (robots_txt_filter's comment lists them).
+    "robots_txt" -> ((s, _) => {
+      import s.implicits._
+      Seq(
+        ("src1.example.com",
+          "# site rules\nUser-agent: *\nDisallow: /p\nAllow: /p21\n"),
+        ("src2.example.com",
+          "User-agent: graftbot\nDisallow: /\n" +
+            "User-agent: *\nDisallow: /*2$\n"),
+        ("src3.example.com", "User-agent: graftbot\nDisallow: /\n"),
+        ("src4.example.com", "User-agent: *\nDisallow:\n")
+      ).toDF("host", "body")
+    }),
+    // IDN host spellings for the punycode dedup gate: the raw-unicode
+    // host, its percent-encoded spelling and both casings of the xn--
+    // form over ~30 shared paths, plus an ASCII control host on id % 7.
+    "idn_urls" -> ((s, dir) => {
+      val did = col("doc_id")
+      load(s, dir, "documents").select(did, col("n_chars"),
+        concat(lit("https://"),
+          when(did % 7 === 0, lit("plain.example.de"))
+            .otherwise(
+              when(did % 4 === 0, lit("m\u00fcnchen.example.de"))
+                .when(did % 4 === 1, lit("M%C3%BCnchen.example.de"))
+                .when(did % 4 === 2, lit("xn--mnchen-3ya.example.de"))
+                .otherwise(lit("XN--MNCHEN-3YA.example.de"))),
+          lit("/a"), (did % 30).cast("string")).as("url"))
+    }),
+    // The unicode edit gate's keys: a 400-key customer slice accented by
+    // the per-char bijection a -> \u00e0, e -> \u00e9 (multi-byte keys,
+    // so a byte-edit distance would disagree with the code-point one).
+    "unicode_customers" -> ((s, dir) =>
+      load(s, dir, "customer").filter(col("c_custkey") <= 400)
+        .select(col("c_custkey"),
+          translate(col("c_name"), "ae", "\u00e0\u00e9").as("c_name"))),
+    // [[BpeMerges]] as a table, rank = list position.
+    "bpe_merges" -> ((s, _) => s.createDataFrame(BpeMerges.zipWithIndex
+      .map { case ((a, b), i) => (i.toLong, a, b) }).toDF("merge_rank", "lhs", "rhs")),
+    // The fixed benchmark of the contamination, staged and incremental
+    // curation gates: docs with doc_id % 50 == 0 plus a 10-token passage
+    // (lowercase a-z tokens only, so the ascii tokenizer sees all ten).
+    "planted_bench" -> ((s, dir) =>
+      load(s, dir, "documents").filter(col("doc_id") % 50 === 0)
+        .select(col("doc_id"), concat(col("text"), lit(ContamPassage)).as("text"))),
+    // The contamination-span gates' corpus: the rest of `documents`
+    // (disjoint from planted_bench), with the benchmark passage planted
+    // into docs with doc_id % 7 == 3 — a known benchmark leak in ~1/7 of
+    // the corpus, on top of whatever organic overlap the fixture's planted
+    // duplicates already straddle. The DuckDB span oracles rebuild it in
+    // SQL.
+    "contam_corpus" -> ((s, dir) =>
+      load(s, dir, "documents").filter(col("doc_id") % 50 =!= 0)
+        .select(col("doc_id"),
+          when(col("doc_id") % 7 === 3, concat(col("text"), lit(ContamPassage)))
+            .otherwise(col("text")).as("text"),
+          col("source"))),
+    // The staged-curation gates' corpus (see [[stagedCuration]]): the
+    // contam_corpus split, newline-ified (' the ' -> \n) with a header
+    // line on %3 and a footer on %4 for the boilerplate stage.
+    "staged_corpus" -> ((s, dir) =>
+      load(s, dir, "documents").filter(col("doc_id") % 50 =!= 0)
+        .select(col("doc_id"), col("lang"), col("source"),
+          concat(
+            when(col("doc_id") % 3 === 0, lit("subscribe to our newsletter\n"))
+              .otherwise(lit("")),
+            regexp_replace(col("text"), " the ", "\n"),
+            when(col("doc_id") % 4 === 0, lit("\nall rights reserved"))
+              .otherwise(lit("")),
+            when(col("doc_id") % 7 === 3, lit(ContamPassage)).otherwise(lit("")))
+            .as("text"))),
+    // The incremental-curation gates' corpus: day-1 corpus A
+    // (doc_id < 350) and day-2 batch B (>= 350) in one table, against
+    // planted_bench, with every admission verdict planted NON-VACUOUSLY
+    // (tools/gen_oracles.py asserts each one over these rows):
+    //  - boilerplate: "subscribe to our newsletter" (day-1-known, df >=
+    //    minDocs in A alone) and "limited time offer" — planted so its
+    //    document frequency crosses minDocs ONLY when B's counts merge
+    //    in (the case a frozen-day-1 line table gets wrong). Both lines
+    //    are < width tokens, so only the LINE rule can cut them;
+    //  - dup grams: a 10-token phrase shared across A docs (flagged at
+    //    build) and a second phrase in exactly ONE A doc + several B
+    //    docs — duplicated only once the batch appends (the
+    //    appendToGramIndex batch-vs-index path);
+    //  - exact dups: two B docs share one literal text (within-batch
+    //    keep-earliest) and ~15 B docs clone an A doc's text verbatim
+    //    (index-vs-batch drop);
+    //  - near dups: ~15 B docs clone an A doc plus a short suffix
+    //    (banding + exact-Jaccard > 0.5, dropped via the component rule);
+    //  - decontamination: the passage planted in doc_id % 7 == 3;
+    //  - NB: organic lang labels (en = seed class).
+    "inc_corpus" -> ((s, dir) => {
+      val did = col("doc_id")
+      val fix0 = load(s, dir, "documents").filter(did % 50 =!= 0)
+        .select(did, col("lang"),
+          concat(
+            when(did % 3 === 0, lit("subscribe to our newsletter\n"))
+              .otherwise(lit("")),
+            regexp_replace(col("text"), " the ", "\n"),
+            when(did % 11 === 5 || (did >= 350 && did % 3 === 1),
+              lit("\nlimited time offer")).otherwise(lit("")),
+            when(did % 13 === 2 || (did >= 350 && did % 11 === 4),
+              lit(" lorem alpha beta gamma delta epsilon zeta eta theta iota"))
+              .otherwise(lit("")),
+            when(did === 151 || (did >= 350 && did % 31 === 9),
+              lit(" omega kappa sigma lambda upsilon phi chi psi rho nu"))
+              .otherwise(lit("")),
+            when(did % 7 === 3, lit(ContamPassage)).otherwise(lit("")))
+            .as("text"))
+      val src = fix0.select((col("doc_id") + 200).as("doc_id"),
+        col("text").as("__srctext"))
+      fix0.join(src, Seq("doc_id"), "left")
+        .select(did, col("lang"),
+          when(did >= 350 && did % 97 === 0,
+            lit("the quick brown fox jumps over the lazy dog again and again"))
+            .when(did >= 350 && did % 10 === 3, col("__srctext"))
+            .when(did >= 350 && did % 10 === 6,
+              concat(col("__srctext"), lit(" incremental clone suffix tokens")))
+            .otherwise(col("text")).as("text"))
+    }),
+    // The multimodal composed recipe's (media, caption) rows: BOTH twin
+    // sets (audio ids offset +1000) with planted caption junk (id%7==2
+    // stub captions), a cross-id duplicate caption class (id%11==5), and
+    // unique captions elsewhere so the perceptual stage gets real work.
+    "multimodal_media" -> ((s, _) => {
+      val imgs = graft.api.Multimodal.syntheticPngTwins(s, 48)
+        .withColumn("kind", lit("image"))
+      val wavs = graft.api.Multimodal.syntheticWavTwins(s, 48)
+        .withColumn("media_id", col("media_id") + 1000L)
+        .withColumn("kind", lit("audio"))
+      imgs.unionByName(wavs).withColumn("caption",
+        when(col("media_id") % 7 === 2, lit("thumb img"))
+          .when(col("media_id") % 11 === 5,
+            lit("a duplicated caption planted for the exact dedup stage"))
+          .otherwise(concat(
+            lit("a descriptive caption for media item number "),
+            col("media_id").cast("string"), lit(" in the corpus"))))
+    }))
 
-  /** Raw-HTML twin with CHROME planted around the content: nav bar,
-    * link-list sidebar, short heading, an inline-linked prose paragraph
-    * and a link-dense footer — the single-page boilerplate the
-    * main-content tier must drop and plain extraction keeps. Mirrored
-    * byte-for-byte in tools/gen_oracles.py (`planted_main_html`). */
-  private def withPlantedMainHtml(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("source"), col("n_chars"),
-      concat(
-        lit("<html><head>"),
-        // robots opt-out class for the capstone's stage 0 (a meta strips
-        // to no text, so the html_main_content rows are unaffected)
-        when(col("doc_id") % 9 === 4,
-          lit("<meta name=\"robots\" content=\"noindex\">"))
-          .otherwise(lit("")),
-        lit("<title>Doc "), col("doc_id").cast("string"),
-        lit("</title><style>nav { color: red; }</style></head><body>" +
-          "<div class=\"nav\"><a href=\"/\">Home</a> <a href=\"/docs\">Docs" +
-          "</a> <a href=\"/about\">About us</a></div>" +
-          "<aside><ul><li><a href=\"/r1\">related article one</a></li>" +
-          "<li><a href=\"/r2\">related article two</a></li>" +
-          "<li><a href=\"/r3\">related article three</a></li></ul></aside>" +
-          "<h1>Doc "), col("doc_id").cast("string"),
-        lit("</h1><p>"), substring(col("text"), 1, 80),
-        lit("</p><p>See <a href=\"/guide\">the full guide</a> for " +
-          "background and details: "),
-        substring(col("text"), 81, 1000000),
-        lit("</p><footer><a href=\"/privacy\">Privacy</a> | " +
-          "<a href=\"/terms\">Terms</a> &copy; 2026 example</footer>" +
-          "</body></html>")).as("html"))
-
-  /** Template-spam twin for the compression-ratio gate: docs with
-    * id % 10 == 7 become 288 template words each followed by a UNIQUE
-    * slot number — no duplicate line, no repeated 2-gram (every 2-gram
-    * contains a slot), so dup-line and top-n-gram counters see nothing,
-    * while zlib compresses the repeated template vocabulary past 3:1.
-    * Built from codegen'd builtins (sequence/transform/element_at), so
-    * the fixture is distributed and the Python mirror re-derives it from
-    * the same arithmetic. */
-  private def withPlantedSpam(docs: DataFrame): DataFrame =
-    docs.withColumn("text",
-      when(col("doc_id") % 10 === 7,
-        expr("concat_ws(' ', transform(sequence(1, 288), k -> concat(" +
-          "element_at(array('item','best','price','free','shipping'," +
-          "'order','now','satisfaction','guaranteed','call','today'," +
-          "'deal'), CAST((k - 1) % 12 AS INT) + 1), ' ', " +
-          "CAST((doc_id * 131071 + k * 8191) & 65535 AS STRING))))"))
-        .otherwise(col("text")))
-
-  /** Robots-meta twin for the noindex gate: id-keyed directive classes —
-    * a straight noindex (%6==1), an UPPERCASE keep directive (%6==3), a
-    * single-quoted `none` (%6==5), and a decoy page whose `noindex`
-    * string lives in a DESCRIPTION meta (%6==0, must keep — the name
-    * attribute decides, not the content). Mirrored byte-for-byte in
-    * tools/gen_oracles.py (`planted_robots_html`). */
-  private def withPlantedRobotsHtml(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("n_chars"),
-      concat(lit("<html><head>"),
-        when(col("doc_id") % 6 === 1,
-          lit("<meta name=\"robots\" content=\"nofollow,\n noindex\">"))
-          .when(col("doc_id") % 6 === 3,
-            lit("<meta NAME=\"ROBOTS\" CONTENT=\"INDEX, FOLLOW\">"))
-          .when(col("doc_id") % 6 === 5,
-            lit("<meta name='robots' content='none'>"))
-          .when(col("doc_id") % 6 === 0,
-            lit("<meta charset=\"utf-8\">" +
-              "<meta name=\"description\" content=\"x, noindex\">"))
-          .otherwise(lit("")),
-        lit("<title>Doc "), col("doc_id").cast("string"),
-        lit("</title></head><body><p>"), substring(col("text"), 1, 40),
-        lit("</p></body></html>")).as("html"))
-
-  private def withPlantedUrls(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("source"), col("n_chars"),
-      concat(lit("https://"),
-        when(col("doc_id") % 5 === 0, lit("WWW.")).otherwise(lit("")),
-        col("source"), lit(".example.com/p"),
-        (col("doc_id") % 40).cast("string"),
-        when(col("doc_id") % 3 === 0, lit("/")).otherwise(lit("")),
-        when(col("doc_id") % 7 === 0,
-          concat(lit("?q="), (col("doc_id") % 4).cast("string")))
-          .otherwise(lit("")),
-        when(col("doc_id") % 11 === 0,
-          concat(lit("#s"), col("doc_id").cast("string")))
-          .otherwise(lit(""))).as("url"))
+  /** The benchmark passage planted by the contamination, staged and
+    * incremental fixtures (with its leading separator space). */
+  private val ContamPassage =
+    " zebra quagga okapi tapir gnu eland kudu oryx saiga argali"
 
   /** Multilingual derivative of the documents fixture for the tokenizer-
     * seam gates: accented Latin via translate (a→à, e→é — preserves the
@@ -193,49 +390,14 @@ object SparkEntry {
         .when(col("doc_id") === 1, concat(col("text"), lit(NfcSuffix)))
         .otherwise(col("text")).as("text"))
 
-  /** The contamination-span gates' fixture: a DISJOINT (corpus, benchmark)
-    * split of `documents` (doc_id % 50), with a 10-token passage appended
-    * to every benchmark doc AND planted into corpus docs with doc_id % 7
-    * = 3 — a known benchmark leak in ~1/7 of the corpus, on top of
-    * whatever organic overlap the fixture's planted duplicates already
-    * straddle. Lowercase a-z tokens only, so the ascii tokenizer sees all
-    * ten. Mirrored verbatim in the oracle SQL. */
-  private val ContamPassage =
-    "zebra quagga okapi tapir gnu eland kudu oryx saiga argali"
-  private def contamSpanFixture(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val docs = load(spark, dir, "documents")
-    val bench = docs.filter(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), concat(col("text"), lit(" " + ContamPassage)).as("text"))
-    val corpus = docs.filter(col("doc_id") % 50 =!= 0)
-      .select(col("doc_id"),
-        when(col("doc_id") % 7 === 3,
-          concat(col("text"), lit(" " + ContamPassage)))
-          .otherwise(col("text")).as("text"),
-        col("source"))
-    (corpus, bench)
-  }
-
-  /** The staged-curation gates' shared fixture and 7-stage recipe —
-    * curate_corpus_staged (in-session stop/resume) and
-    * curate_corpus_staged_xsession (simulated JVM restart) must run the
-    * IDENTICAL chain so both land on the same pinned oracle. */
-  private def stagedCurationFixture(s: SparkSession, dir: String)
+  /** The staged-curation gates' fixture and 7-stage recipe —
+    * curate_corpus_staged (in-session stop/resume),
+    * curate_corpus_staged_xsession (simulated JVM restart) and
+    * curate_drop_ledger must run the IDENTICAL chain so all three land on
+    * the same pinned oracle. */
+  private def stagedCuration(s: SparkSession, dir: String)
       : (DataFrame, Seq[(String, DataFrame => DataFrame)]) = {
-    val docs = load(s, dir, "documents")
-    val passage =
-      lit(" zebra quagga okapi tapir gnu eland kudu oryx saiga argali")
-    val bench = docs.filter(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), concat(col("text"), passage).as("text"))
-    val corpus0 = docs.filter(col("doc_id") % 50 =!= 0)
-      .select(col("doc_id"), col("lang"), col("source"),
-        concat(
-          when(col("doc_id") % 3 === 0, lit("subscribe to our newsletter\n"))
-            .otherwise(lit("")),
-          regexp_replace(col("text"), " the ", "\n"),
-          when(col("doc_id") % 4 === 0, lit("\nall rights reserved"))
-            .otherwise(lit("")),
-          when(col("doc_id") % 7 === 3, passage).otherwise(lit("")))
-          .as("text"))
+    val bench = fixtures("planted_bench")(s, dir)
     val stages = Seq[(String, DataFrame => DataFrame)](
       "boilerplate_drop" -> (d => graft.api.Dedup.dropBoilerplateLines(
         d, "doc_id", "text", minDocs = 80L)),
@@ -263,67 +425,17 @@ object SparkEntry {
         .select(col("doc_id"),
           length(col("text")).cast("long").as("n_chars_v2"),
           col("ppl_class"), col("logw"))))
-    (corpus0, stages)
+    (fixtures("staged_corpus")(s, dir), stages)
   }
 
-  /** The incremental-curation gate's fixture: a day-1 corpus A
-    * (doc_id < 350), a day-2 batch B (>= 350) and the fixed benchmark
-    * (doc_id % 50 == 0 + passage), with every admission verdict planted
-    * NON-VACUOUSLY — mirrored line for line (same append order) in
-    * tools/gen_oracles.py:
-    *
-    *  - boilerplate: "subscribe to our newsletter" (day-1-known, df >=
-    *    minDocs in A alone) and "limited time offer" — planted so its
-    *    document frequency crosses minDocs ONLY when B's counts merge
-    *    in (the case a frozen-day-1 line table gets wrong; the Python
-    *    oracle asserts the A-side count is below the cut). Both lines
-    *    are < width tokens, so only the LINE rule can cut them;
-    *  - dup grams: a 10-token phrase shared across A docs (flagged at
-    *    build) and a second phrase in exactly ONE A doc + several B
-    *    docs — duplicated only once the batch appends (the
-    *    appendToGramIndex batch-vs-index path);
-    *  - exact dups: two B docs share one literal text (within-batch
-    *    keep-earliest) and ~15 B docs clone an A doc's text verbatim
-    *    (index-vs-batch drop);
-    *  - near dups: ~15 B docs clone an A doc plus a short suffix
-    *    (banding + exact-Jaccard > 0.5, dropped via the component
-    *    rule);
-    *  - decontamination: the passage planted in doc_id % 7 == 3;
-    *  - NB: organic lang labels (en = seed class). */
-  private def incrementalCurationFixture(s: SparkSession, dir: String)
+  /** The incremental-curation gates' inputs: inc_corpus split into the
+    * day-1 corpus A (doc_id < 350) and the day-2 batch B, plus the
+    * benchmark. */
+  private def incrementalCuration(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val docs = load(s, dir, "documents")
-    val passage =
-      lit(" zebra quagga okapi tapir gnu eland kudu oryx saiga argali")
-    val bench = docs.filter(col("doc_id") % 50 === 0)
-      .select(col("doc_id"), concat(col("text"), passage).as("text"))
-    val did = col("doc_id")
-    val fix0 = docs.filter(did % 50 =!= 0).select(did, col("lang"),
-      concat(
-        when(did % 3 === 0, lit("subscribe to our newsletter\n"))
-          .otherwise(lit("")),
-        regexp_replace(col("text"), " the ", "\n"),
-        when(did % 11 === 5 || (did >= 350 && did % 3 === 1),
-          lit("\nlimited time offer")).otherwise(lit("")),
-        when(did % 13 === 2 || (did >= 350 && did % 11 === 4),
-          lit(" lorem alpha beta gamma delta epsilon zeta eta theta iota"))
-          .otherwise(lit("")),
-        when(did === 151 || (did >= 350 && did % 31 === 9),
-          lit(" omega kappa sigma lambda upsilon phi chi psi rho nu"))
-          .otherwise(lit("")),
-        when(did % 7 === 3, passage).otherwise(lit("")))
-        .as("text"))
-    val src = fix0.select((col("doc_id") + 200).as("doc_id"),
-      col("text").as("__srctext"))
-    val corpus = fix0.join(src, Seq("doc_id"), "left")
-      .select(did, col("lang"),
-        when(did >= 350 && did % 97 === 0,
-          lit("the quick brown fox jumps over the lazy dog again and again"))
-          .when(did >= 350 && did % 10 === 3, col("__srctext"))
-          .when(did >= 350 && did % 10 === 6,
-            concat(col("__srctext"), lit(" incremental clone suffix tokens")))
-          .otherwise(col("text")).as("text"))
-    (corpus.filter(did < 350), corpus.filter(did >= 350), bench)
+    val corpus = fixtures("inc_corpus")(s, dir)
+    (corpus.filter(col("doc_id") < 350), corpus.filter(col("doc_id") >= 350),
+      fixtures("planted_bench")(s, dir))
   }
 
   /** Shared harness for the two tape-fed day-N admission gates: day-1
@@ -342,7 +454,7 @@ object SparkEntry {
   private def warcAdmitGate(s: SparkSession, dir: String, prefix: String,
       scratch: String, crashSecondWave: Boolean): DataFrame = {
     import s.implicits._
-    val (corpusA, batchB, bench) = incrementalCurationFixture(s, dir)
+    val (corpusA, batchB, bench) = incrementalCuration(s, dir)
     val lookupTbl = s"${prefix}_lookup"
     val benchTbl = s"${prefix}_bench"
     val resTbl = s"${prefix}_admits"
@@ -408,15 +520,16 @@ object SparkEntry {
     s.table(resTbl).orderBy("doc_id")
   }
 
-  /** The WARC tape gates' page wrap — ONE owner for the three tape
-    * fixtures (a single-character drift across copies would fail three
-    * gates with an opaque hash mismatch); mirrored byte-for-byte as
-    * `warc_html` in tools/gen_oracles.py. Non-ASCII guillemets force
-    * byte-exact Content-Length framing. */
-  private def warcFixtureHtml(id: Long, t: String): String =
-    "<html><head><title>Doc «" + id +
-      "»</title><script>var x = 1 < 2;</script></head><body>" +
-      "<h1>Doc " + id + "</h1><p>" + t + "</p></body></html>"
+  /** The WARC tape gates' records, (id, target URI, page bytes) in id
+    * order, from the warc_pages fixture. The tape is synthesized in this
+    * JVM (bounded fixture construction, like syntheticWavs — the operator
+    * under test is the distributed READ). */
+  private def warcPageRecords(s: SparkSession, dir: String)
+      : Array[(Long, String, Array[Byte])] =
+    fixtures("warc_pages")(s, dir).collect()
+      .map(r => (r.getLong(0), s"https://example.org/doc/${r.getLong(0)}",
+        r.getString(1).getBytes("UTF-8")))
+      .sortBy(_._1)
 
   /** events.ts has shipped as parquet TIMESTAMP(NANOS) (readable only as a
     * long under the legacy conf) and TIMESTAMP(MICROS) (read as
@@ -514,8 +627,8 @@ object SparkEntry {
   /** Byte-level BPE merge list for the token_count_bpe / pack_sequences_bpe
     * gates — stands in for a learned vocabulary (merges are DATA the caller
     * supplies; no model ships with the engine). Order is rank: earlier
-    * merges apply first. MIRRORED verbatim in tools/gen_oracles.py
-    * (BPE_MERGES) — keep the two lists identical or the crosscheck fails. */
+    * merges apply first. tools/gen_oracles.py reads it as the bpe_merges
+    * fixture table. */
   private[graft] val BpeMerges: Seq[(String, String)] = Seq(
     ("t", "h"), ("th", "e"), ("i", "n"), ("e", "r"), ("a", "n"), ("r", "e"),
     ("o", "n"), ("a", "t"), ("e", "n"), ("o", "r"), ("e", "s"), ("s", "t"),
@@ -706,11 +819,8 @@ object SparkEntry {
       // 400-key slice: the semantic pin needs multi-byte keys, not the
       // ASCII gate's full-cardinality verifier workload (that cost is
       // already measured by edit_blocked_pairs)
-      val customer = load(s, dir, "customer")
-        .filter(col("c_custkey") <= 400)
-        .select(col("c_custkey"),
-          translate(col("c_name"), "ae", "\u00e0\u00e9").as("c_name"))
-      graft.api.BandedLsh.editVerifiedPairs(customer, "c_custkey", "c_name",
+      graft.api.BandedLsh.editVerifiedPairs(fixtures("unicode_customers")(s, dir),
+          "c_custkey", "c_name",
           ngramWidth = 2, bandCount = 4, bandSize = 6, seed = 5L, minSim = 0.9)
         .select(col("id_a").as("key_a"), col("id_b").as("key_b"),
           col("lev"), col("edit_sim"))
@@ -1423,19 +1533,12 @@ object SparkEntry {
     // WARC source (WarcFiles): the format crawl data actually arrives
     // in, parsed by Content-Length byte framing and composed straight
     // into html_extract — the crawl-tape -> text front edge end to end.
-    // The fixture tape is synthesized ON THE DRIVER from the documents
-    // table (bounded fixture construction, like syntheticWavs — the
-    // operator under test is the distributed READ); titles carry
-    // non-ASCII guillemets so a parser counting chars instead of BYTES
-    // mis-frames every following record. Oracle: Python re-derives each
-    // record's extraction through the independent HTML mirror.
+    // The tape wraps the warc_pages fixture; titles carry non-ASCII
+    // guillemets so a parser counting chars instead of BYTES mis-frames
+    // every following record. Oracle: Python re-derives each record's
+    // extraction from warc_pages through the independent HTML scan.
     "source_warc_extract" -> ((s, dir) => {
-      val docs = load(s, dir, "documents").select("doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      val recs = docs.map { case (id, t) =>
-        (id, s"https://example.org/doc/$id",
-          warcFixtureHtml(id, t).getBytes("UTF-8"))
-      }
+      val recs = warcPageRecords(s, dir)
       val base = java.nio.file.Paths.get(
         sys.props("java.io.tmpdir"), "graft_warc_fixture")
       org.apache.commons.io.FileUtils.deleteQuietly(base.toFile)
@@ -1462,12 +1565,7 @@ object SparkEntry {
     // accumulated table must extract bit-equal to the one-shot batch
     // read. One oracle, two arrival paths.
     "stream_warc_ingest" -> ((s, dir) => {
-      val docs = load(s, dir, "documents").select("doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      val recs = docs.map { case (id, t) =>
-        (id, s"https://example.org/doc/$id",
-          warcFixtureHtml(id, t).getBytes("UTF-8"))
-      }
+      val recs = warcPageRecords(s, dir)
       val tmp = sys.props("java.io.tmpdir")
       val tape = java.nio.file.Paths.get(tmp, "graft_warc_stream_tape")
       val ckpt = java.nio.file.Paths.get(tmp, "graft_warc_stream_ckpt")
@@ -1501,11 +1599,8 @@ object SparkEntry {
     // re-derivation as source_warc_extract (the gzip roundtrip must be
     // exactly lossless; the mirror starts from the pre-compression text).
     "source_warc_gzip" -> ((s, dir) => {
-      val docs = load(s, dir, "documents").select("doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      val recs = docs.map { case (id, t) =>
-        (id, s"https://example.org/doc/$id",
-          warcFixtureHtml(id, t).getBytes("UTF-8"), id % 2 == 0)
+      val recs = warcPageRecords(s, dir).map { case (id, uri, page) =>
+        (id, uri, page, id % 2 == 0)
       }
       val base = java.nio.file.Paths.get(
         sys.props("java.io.tmpdir"), "graft_warc_gzip_fixture")
@@ -1549,8 +1644,8 @@ object SparkEntry {
       import graft.api.{Domains, Packing, Sampling}
       import s.implicits._
       val docs0 = load(s, dir, "documents")
-      val recs = (withPlantedMainHtml(docs0).select(col("doc_id"), col("html"))
-        .join(withPlantedUrls(docs0).select(col("doc_id"), col("url")), "doc_id")
+      val recs = (fixtures("planted_main_html")(s, dir).select(col("doc_id"), col("html"))
+        .join(fixtures("planted_urls")(s, dir).select(col("doc_id"), col("url")), "doc_id")
         .collect().map(r => (r.getLong(0), r.getString(2),
           r.getString(1).getBytes("UTF-8"), r.getLong(0) % 2 == 0))
         :+ ((1000001L, "https://src6.example.com/robots.txt",
@@ -1663,32 +1758,24 @@ object SparkEntry {
     // the page (`<meta charset=...>` / the http-equiv Content-Type
     // form), pinning the bounded WHATWG-style prescan; class 4 is also
     // gzip'd (id even), so the prescan provably runs AFTER the inflate.
-    // Oracle: the expected decoded STRINGS re-derived in Python from the
-    // same text + suffix recipe (the encode side is charset-lossless for
-    // the planted characters by construction).
+    // The bodies are the warc_charset_bodies fixture. Oracle: the decoded
+    // strings must equal those bodies (Python asserts each class's encode
+    // side is charset-lossless for its planted characters).
     "source_warc_charset" -> ((s, dir) => {
-      val docs = load(s, dir, "documents").select("doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      val recs = docs.map { case (id, t) =>
-        val base = t.take(60)
-        // \u escapes: source-encoding-proof (the multilingualDocs rule)
-        val (payload, ctype) = (id % 6) match {
-          case 0 => ((base + " caf\u00e9 \u00b1 na\u00efve")
-            .getBytes("ISO-8859-1"), "text/plain; charset=ISO-8859-1")
-          case 1 => ((base + " \u20ac \u201csmart\u201d quotes")
-            .getBytes("windows-1252"), "text/plain; charset=\"windows-1252\"")
-          case 2 => ((base + " caf\u00e9 \u00b1 na\u00efve")
-            .getBytes("UTF-8"), "text/plain; charset=utf-8")
-          case 3 => ((base + " plain ascii tail")
-            .getBytes("UTF-8"), "text/plain; charset=x-unknown-label")
-          case 4 => (("<meta charset=\"windows-1252\"><p>" + base +
-            " \u20ac meta tail</p>").getBytes("windows-1252"), "text/html")
-          case _ => (("<meta http-equiv=\"Content-Type\" content=\"" +
-            "text/html; charset=iso-8859-1\"><p>" + base +
-            " caf\u00e9 meta tail</p>").getBytes("ISO-8859-1"), "text/html")
+      val recs = fixtures("warc_charset_bodies")(s, dir).collect()
+        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+        .map { case (id, body) =>
+          val (charset, ctype) = (id % 6) match {
+            case 0 => ("ISO-8859-1", "text/plain; charset=ISO-8859-1")
+            case 1 => ("windows-1252", "text/plain; charset=\"windows-1252\"")
+            case 2 => ("UTF-8", "text/plain; charset=utf-8")
+            case 3 => ("UTF-8", "text/plain; charset=x-unknown-label")
+            case 4 => ("windows-1252", "text/html")
+            case _ => ("ISO-8859-1", "text/html")
+          }
+          (id, s"https://example.org/doc/$id", body.getBytes(charset),
+            id % 2 == 0, ctype)
         }
-        (id, s"https://example.org/doc/$id", payload, id % 2 == 0, ctype)
-      }
       val basep = java.nio.file.Paths.get(
         sys.props("java.io.tmpdir"), "graft_warc_charset_fixture")
       org.apache.commons.io.FileUtils.deleteQuietly(basep.toFile)
@@ -1718,26 +1805,24 @@ object SparkEntry {
     // extension and a trailer field. A decoder that skipped de-chunking
     // leaves hex size lines embedded in the text (or feeds framing bytes
     // to gunzip and dies); one that de-chunked after inflating dies on
-    // the gzip header. Oracle: Python re-derivation from the same
-    // pre-encoding text recipe (the wire layers are lossless by
-    // construction, so the decode must reproduce it exactly).
+    // the gzip header. Oracle: the warc_chunked_bodies fixture the tape
+    // encodes (the wire layers are lossless by construction, so the
+    // decode must reproduce it exactly).
     "source_warc_chunked" -> ((s, dir) => {
-      val docs = load(s, dir, "documents").select("doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      val recs = docs.map { case (id, t) =>
-        val payload = (t.take(80) + " — chunked wire tail")
-          .getBytes("UTF-8")
-        val (cenc, tenc) = (id % 6) match {
-          case 0 => ("identity", "identity")
-          case 1 => ("identity", "chunked")
-          case 2 => ("gzip", "chunked")
-          case 3 => ("deflate", "chunked")
-          case 4 => ("gzip", "identity")
-          case _ => ("deflate", "identity")
+      val recs = fixtures("warc_chunked_bodies")(s, dir).collect()
+        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
+        .map { case (id, body) =>
+          val (cenc, tenc) = (id % 6) match {
+            case 0 => ("identity", "identity")
+            case 1 => ("identity", "chunked")
+            case 2 => ("gzip", "chunked")
+            case 3 => ("deflate", "chunked")
+            case 4 => ("gzip", "identity")
+            case _ => ("deflate", "identity")
+          }
+          (id, s"https://example.org/doc/$id", body.getBytes("UTF-8"),
+            "text/html; charset=utf-8", cenc, tenc)
         }
-        (id, s"https://example.org/doc/$id", payload,
-          "text/html; charset=utf-8", cenc, tenc)
-      }
       val basep = java.nio.file.Paths.get(
         sys.props("java.io.tmpdir"), "graft_warc_chunked_fixture")
       org.apache.commons.io.FileUtils.deleteQuietly(basep.toFile)
@@ -1766,26 +1851,24 @@ object SparkEntry {
     // status), 404 (drop: status), 200 + X-Robots-Tag: noindex (drop:
     // header directive), 200 + X-Robots-Tag: unavailable_after (keep —
     // not a noindex token, pinning the token rule against
-    // over-dropping). Oracle: Python recomputes the keep set and body
-    // lengths from the same class recipe.
+    // over-dropping). The envelopes are the warc_status_records fixture.
+    // Oracle: Python recomputes the keep set and body lengths from it.
     "http_status_filter" -> ((s, dir) => {
-      val docs = load(s, dir, "documents").select("doc_id", "text")
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      val recs = docs.map { case (id, t) =>
-        val base = t.take(70)
-        val (payload, status, reason, extra) = (id % 5) match {
-          case 0 => (base + " ok body", 200, "OK", Seq.empty[(String, String)])
-          case 1 => ("moved", 301, "Moved Permanently",
-            Seq("Location" -> s"https://example.org/new/$id"))
-          case 2 => ("not found", 404, "Not Found", Seq.empty[(String, String)])
-          case 3 => (base + " hidden body", 200, "OK",
-            Seq("X-Robots-Tag" -> "noindex, nofollow"))
-          case _ => (base + " ua body", 200, "OK",
-            Seq("X-Robots-Tag" -> "unavailable_after: 2027-01-01"))
+      val recs = fixtures("warc_status_records")(s, dir).collect()
+        .map(r => (r.getLong(0), r.getInt(1), Option(r.getString(2)), r.getString(3)))
+        .sortBy(_._1)
+        .map { case (id, status, robotsTag, body) =>
+          val reason = status match {
+            case 200 => "OK"
+            case 301 => "Moved Permanently"
+            case _ => "Not Found"
+          }
+          val headers =
+            (if (status == 301) Seq("Location" -> s"https://example.org/new/$id")
+             else Seq.empty) ++ robotsTag.map("X-Robots-Tag" -> _)
+          (id, s"https://example.org/doc/$id", body.getBytes("UTF-8"),
+            status, reason, headers)
         }
-        (id, s"https://example.org/doc/$id", payload.getBytes("UTF-8"),
-          status, reason, extra)
-      }
       val basep = java.nio.file.Paths.get(
         sys.props("java.io.tmpdir"), "graft_warc_status_fixture")
       org.apache.commons.io.FileUtils.deleteQuietly(basep.toFile)
@@ -2424,7 +2507,7 @@ object SparkEntry {
     // stage needs that a committed table failed to carry surfaces here as
     // a hash mismatch.
     "curate_corpus_staged" -> ((s, dir) => {
-      val (corpus0, stages) = stagedCurationFixture(s, dir)
+      val (corpus0, stages) = stagedCuration(s, dir)
       val prefix = "graft_stagedcur"
       graft.api.StagedPipeline.reset(s, prefix)
       graft.api.StagedPipeline.run(corpus0, stages, prefix, stopAfter = 3)
@@ -2441,7 +2524,7 @@ object SparkEntry {
     // (StagedPipeline.recoverFromWarehouse), pay only stages 4+, and
     // land bit-equal to curate_corpus_staged's pinned oracle.
     "curate_corpus_staged_xsession" -> ((s, dir) => {
-      val (corpus0, stages) = stagedCurationFixture(s, dir)
+      val (corpus0, stages) = stagedCuration(s, dir)
       val prefix = "graft_stagedxs"
       graft.api.StagedPipeline.reset(s, prefix)
       graft.api.StagedPipeline.run(corpus0, stages, prefix, stopAfter = 3)
@@ -2460,7 +2543,7 @@ object SparkEntry {
     // differences, so a frontier-threading bug in either the staged
     // runner or the ledger lands as a row mismatch.
     "curate_drop_ledger" -> ((s, dir) => {
-      val (corpus0, stages) = stagedCurationFixture(s, dir)
+      val (corpus0, stages) = stagedCuration(s, dir)
       val prefix = "graft_ledger"
       graft.api.StagedPipeline.reset(s, prefix)
       graft.api.StagedPipeline.run(corpus0, stages, prefix)
@@ -2482,7 +2565,7 @@ object SparkEntry {
     // Two-day state composition is additionally spec-pinned
     // (IncrementalCurationSpec admits a day-3 batch).
     "curate_corpus_incremental" -> ((s, dir) => {
-      val (corpusA, batchB, bench) = incrementalCurationFixture(s, dir)
+      val (corpusA, batchB, bench) = incrementalCuration(s, dir)
       val prefix = "graft_inccur"
       graft.api.IncrementalCuration.reset(s, prefix)
       graft.api.IncrementalCuration.buildState(corpusA, prefix,
@@ -2500,7 +2583,7 @@ object SparkEntry {
     // oracle — any table silently missing from recovery lands as a
     // verdict or span mismatch.
     "curate_corpus_incremental_xsession" -> ((s, dir) => {
-      val (corpusA, batchB, bench) = incrementalCurationFixture(s, dir)
+      val (corpusA, batchB, bench) = incrementalCuration(s, dir)
       val prefix = "graft_inccurxs"
       graft.api.IncrementalCuration.reset(s, prefix)
       graft.api.IncrementalCuration.buildState(corpusA, prefix,
@@ -2537,7 +2620,7 @@ object SparkEntry {
     // gate (the sequential/batch distinction is real, not vacuous).
     "stream_incremental_admit" -> ((s, dir) => {
       import s.implicits._
-      val (corpusA, batchB, bench) = incrementalCurationFixture(s, dir)
+      val (corpusA, batchB, bench) = incrementalCuration(s, dir)
       val corpus = corpusA
         .select(col("doc_id").cast("long"), col("text"), col("lang"))
         .as[(Long, String, String)].collect().toSeq.sortBy(_._1)
@@ -2585,7 +2668,7 @@ object SparkEntry {
     // flips exact AND near verdicts), and a subtraction error in any
     // count statistic (line df, NB) lands as a score/cut hash mismatch.
     "takedown_incremental" -> ((s, dir) => {
-      val (corpusA, batchB, bench) = incrementalCurationFixture(s, dir)
+      val (corpusA, batchB, bench) = incrementalCuration(s, dir)
       val prefix = "graft_inctake"
       val isDel = col("doc_id") >= 150 && col("doc_id") < 350 &&
         (col("doc_id") % 10 === 3 || col("doc_id") % 10 === 6)
@@ -2600,7 +2683,7 @@ object SparkEntry {
         .orderBy("doc_id")
     }),
     "inc_state_compact" -> ((s, dir) => {
-      val (corpusA, batchB, bench) = incrementalCurationFixture(s, dir)
+      val (corpusA, batchB, bench) = incrementalCuration(s, dir)
       val prefix = "graft_inccmp"
       val b1 = batchB.filter(col("doc_id") < 450)
       val b2 = batchB.filter(col("doc_id") >= 450)
@@ -3209,30 +3292,14 @@ object SparkEntry {
     // The multimodal composed recipe — curate_web for (media, caption)
     // rows: caption rules -> global caption first-come dedup ->
     // perceptual near-dup per modality (image dHash banding + audio
-    // fingerprint banding) with the greedy keep-earliest drop. Fixture:
-    // BOTH twin sets (audio ids offset +1000) with planted caption junk
-    // (id%7==2 stub captions), a cross-id duplicate caption class
-    // (id%11==5), and unique captions elsewhere so the perceptual stage
-    // gets real work. Oracle: full Python chain over the recipe-derived
-    // hashes (no codec libraries) — stage order and the survivor set pin
-    // the composition.
-    "curate_multimodal" -> ((s, dir) => {
-      val cap = when(col("media_id") % 7 === 2, lit("thumb img"))
-        .when(col("media_id") % 11 === 5,
-          lit("a duplicated caption planted for the exact dedup stage"))
-        .otherwise(concat(
-          lit("a descriptive caption for media item number "),
-          col("media_id").cast("string"), lit(" in the corpus")))
-      val imgs = graft.api.Multimodal.syntheticPngTwins(s, 48)
-        .withColumn("kind", lit("image"))
-      val wavs = graft.api.Multimodal.syntheticWavTwins(s, 48)
-        .withColumn("media_id", col("media_id") + 1000L)
-        .withColumn("kind", lit("audio"))
-      graft.api.Multimodal.curateMultimodal(
-          imgs.unionByName(wavs).withColumn("caption", cap))
+    // fingerprint banding) with the greedy keep-earliest drop, over the
+    // multimodal_media fixture. Oracle: full Python chain over its
+    // captions and the recipe-derived hashes (no codec libraries) — stage
+    // order and the survivor set pin the composition.
+    "curate_multimodal" -> ((s, dir) =>
+      graft.api.Multimodal.curateMultimodal(fixtures("multimodal_media")(s, dir))
         .select(col("media_id"), col("kind"), col("caption"))
-        .orderBy("media_id")
-    }),
+        .orderBy("media_id")),
     "multimodal_features_jpeg" -> ((s, dir) => {
       // the second real codec path through the same decoder seam: the
       // recipe rasters JPEG-encoded (lossy, quality 0.95). Dims are pinned
@@ -3342,7 +3409,7 @@ object SparkEntry {
       // via the bounded-heap topk_by aggregate (never a per-host window
       // sort). Oracle: Python re-derivation — same xxhash64 chain, same
       // (score, id) tie order, regexp host extraction — pinned VALUES.
-      val urled = withPlantedUrls(load(s, dir, "documents"))
+      val urled = fixtures("planted_urls")(s, dir)
       graft.api.Domains.domainQuotaSample(urled, "url", "doc_id",
           maxPerDomain = 8, seed = 13L)
         .select(col("doc_id"), graft.api.Domains.urlHost(col("url")).as("host"))
@@ -3371,14 +3438,14 @@ object SparkEntry {
       // mass-based quota: keep docs per host while the running n_chars
       // total (seeded-hash order, ties by id) fits 2000. Oracle: Python
       // re-derivation of host extraction + the per-host cumulative walk.
-      val urled = withPlantedUrls(load(s, dir, "documents"))
+      val urled = fixtures("planted_urls")(s, dir)
       graft.api.Domains.domainTokenQuota(urled, "url", "doc_id",
           col("n_chars"), budgetPerDomain = 2000L, seed = 13L)
         .select(col("doc_id"), col("n_chars"))
         .orderBy("doc_id")
     }),
     // HTML extraction front-end: the documents fixture wrapped in planted
-    // raw pages (withPlantedHtml — script with a decoy </p> closer, style,
+    // raw pages (planted_html — script with a decoy </p> closer, style,
     // comments, nav chrome, entities, the text split across two <p>
     // blocks), extracted by the codegen'd html_extract expression. The
     // oracle re-derives the extraction with an independent Python scan
@@ -3387,7 +3454,7 @@ object SparkEntry {
     // pin the chrome-heavy regions where most rules fire.
     "html_extract" -> ((s, dir) => {
       graft.api.TextAnalysis
-        .extractHtml(withPlantedHtml(load(s, dir, "documents")),
+        .extractHtml(fixtures("planted_html")(s, dir),
           "html", "text")
         .select(col("doc_id"),
           length(col("text")).cast("long").as("n_chars_html"),
@@ -3405,7 +3472,7 @@ object SparkEntry {
     // density rule); n_lines_all vs n_lines_main pins the tier gap row by
     // row. Oracle: independent Python re-derivation of both tiers.
     "html_main_content" -> ((s, dir) => {
-      val html = withPlantedMainHtml(load(s, dir, "documents"))
+      val html = fixtures("planted_main_html")(s, dir)
       graft.api.TextAnalysis.extractMainHtml(html, "html", "text")
         .withColumn("text_all", graft.functions.html_extract(col("html")))
         .select(col("doc_id"),
@@ -3427,7 +3494,7 @@ object SparkEntry {
     // arithmetic.
     "zlib_ratio" -> ((s, dir) => {
       graft.api.TextAnalysis.compressionSignals(
-          withPlantedSpam(load(s, dir, "documents")), "text")
+          fixtures("planted_spam")(s, dir), "text")
         .select(col("doc_id"), col("n_bytes"), col("n_zlib"),
           col("zlib_ratio"), col("template_spam"))
         .orderBy("doc_id")
@@ -3440,7 +3507,7 @@ object SparkEntry {
     // does not drop. Output: survivors with their parsed directive
     // (null = no robots meta). Oracle: Python re-derivation of the scan.
     "html_noindex_filter" -> ((s, dir) => {
-      val html = withPlantedRobotsHtml(load(s, dir, "documents"))
+      val html = fixtures("planted_robots_html")(s, dir)
       graft.api.TextAnalysis.filterNoindex(html, "html",
           robotsCol = Some("robots"))
         .select(col("doc_id"), col("robots"), col("n_chars"))
@@ -3460,20 +3527,11 @@ object SparkEntry {
     // robots has ONLY a graftbot group (no * fallback → all kept);
     // src4 pins the allow-all empty Disallow; every other host has no
     // robots.txt at all. Oracle: Python re-states the RobotsTxt kernel
-    // (parse + longest-match verdict) over the same planted URLs.
+    // (parse + longest-match verdict) over the planted_urls and
+    // robots_txt fixtures.
     "robots_txt_filter" -> ((s, dir) => {
-      import s.implicits._
-      val pages = withPlantedUrls(load(s, dir, "documents"))
-      val robots = Seq(
-        ("src1.example.com",
-          "# site rules\nUser-agent: *\nDisallow: /p\nAllow: /p21\n"),
-        ("src2.example.com",
-          "User-agent: graftbot\nDisallow: /\n" +
-            "User-agent: *\nDisallow: /*2$\n"),
-        ("src3.example.com", "User-agent: graftbot\nDisallow: /\n"),
-        ("src4.example.com", "User-agent: *\nDisallow:\n")
-      ).toDF("host", "body")
-      graft.api.Domains.filterRobotsTxt(pages, "url", "doc_id", robots)
+      graft.api.Domains.filterRobotsTxt(fixtures("planted_urls")(s, dir),
+          "url", "doc_id", fixtures("robots_txt")(s, dir))
         .select(col("doc_id"), col("url"))
         .orderBy("doc_id")
     }),
@@ -3484,7 +3542,7 @@ object SparkEntry {
     // while the prose docs keep their repetition_filter verdicts
     // unchanged. One repetitionStats pass + one map-only signal pass.
     "quality_zlib_composed" -> ((s, dir) => {
-      val docs = withPlantedSpam(load(s, dir, "documents"))
+      val docs = fixtures("planted_spam")(s, dir)
       val rep = graft.api.TextAnalysis.repetitionFilter(docs,
           minWords = 40L, maxDupWordFrac = 0.54,
           maxTop2GramFrac = 0.05, maxDup2GramFrac = 0.05)
@@ -3511,10 +3569,10 @@ object SparkEntry {
       import s.implicits._
       val docs0 = load(s, dir, "documents")
       val extracted = graft.api.TextAnalysis
-        .extractHtml(withPlantedHtml(docs0), "html", "text")
+        .extractHtml(fixtures("planted_html")(s, dir), "html", "text")
         .select(col("doc_id"),
           length(col("text")).cast("long").as("n_chars_ext"))
-      val urled = withPlantedUrls(docs0).join(extracted, "doc_id")
+      val urled = fixtures("planted_urls")(s, dir).join(extracted, "doc_id")
       val blocked = Seq("src3.example.com", "src5.example.com").toDF("domain")
       val s1 = graft.api.Domains.filterBlockedHosts(urled, "url", "doc_id", blocked)
       val s1b = graft.api.Domains.filterUrlPaths(s1, "url", "doc_id",
@@ -3538,7 +3596,7 @@ object SparkEntry {
       // oracle is the sequential walk — valid for ANY chunking because
       // the counter is cumulative and the order global.
       import s.implicits._
-      val docs = withPlantedUrls(load(s, dir, "documents"))
+      val docs = fixtures("planted_urls")(s, dir)
         .select(col("doc_id").cast("long"), col("url"))
         .as[(Long, String)].collect().toSeq.sortBy(_._1)
       graft.streaming.EventStreams.domainQuotaReplay(s, docs,
@@ -3550,7 +3608,7 @@ object SparkEntry {
       // Oracle: DuckDB recomputes host extraction + counts with its own
       // regexp engine — genuinely comparable work, not VALUES.
       graft.api.Domains.domainCounts(
-          withPlantedUrls(load(s, dir, "documents")), "url")
+          fixtures("planted_urls")(s, dir), "url")
         .orderBy("host")
     }),
     "stream_url_dedup" -> ((s, dir) => {
@@ -3563,7 +3621,7 @@ object SparkEntry {
       // valid for ANY chunking because the state is a per-key seen bit
       // and the order global.
       import s.implicits._
-      val docs = withPlantedUrls(load(s, dir, "documents"))
+      val docs = fixtures("planted_urls")(s, dir)
         .select(col("doc_id").cast("long"), col("url"))
         .as[(Long, String)].collect().toSeq.sortBy(_._1)
       graft.streaming.EventStreams.urlDedupReplay(s, docs, nBatches = 5)
@@ -3575,7 +3633,7 @@ object SparkEntry {
       // slashes stripped, query kept). Oracle: DuckDB re-derives the
       // whole normalization with its own regexp engine — two independent
       // URL parsers must agree on the kept set.
-      val urled = withPlantedUrls(load(s, dir, "documents"))
+      val urled = fixtures("planted_urls")(s, dir)
       graft.api.Domains.dedupByUrl(urled, "url", "doc_id")
         .select(col("doc_id"), col("n_chars"))
         .orderBy("doc_id")
@@ -3630,18 +3688,8 @@ object SparkEntry {
       // VALUES from the Python mirror — DuckDB has no punycode, so the
       // independent second implementation is CPython's RFC 3492 codec
       // (+ unquote/NFC), vs the hand-derived graft.core.Punycode here.
-      val did = col("doc_id")
-      val k = (did % 30).cast("string")
-      val urled = load(s, dir, "documents").select(did, col("n_chars"),
-        concat(lit("https://"),
-          when(did % 7 === 0, lit("plain.example.de"))
-            .otherwise(
-              when(did % 4 === 0, lit("m\u00fcnchen.example.de"))
-                .when(did % 4 === 1, lit("M%C3%BCnchen.example.de"))
-                .when(did % 4 === 2, lit("xn--mnchen-3ya.example.de"))
-                .otherwise(lit("XN--MNCHEN-3YA.example.de"))),
-          lit("/a"), k).as("url"))
-      graft.api.Domains.dedupByUrl(urled, "url", "doc_id", idnHost = true)
+      graft.api.Domains.dedupByUrl(fixtures("idn_urls")(s, dir), "url",
+          "doc_id", idnHost = true)
         .select(col("doc_id"), col("n_chars"))
         .orderBy("doc_id")
     }),
@@ -3893,13 +3941,15 @@ object SparkEntry {
     // re-derives spans from the raw text with the identical tokenizer
     // (grams by STRING vs Spark's xxhash64: collisions would surface).
     "contamination_span_detect" -> ((s, dir) => {
-      val (corpus, bench) = contamSpanFixture(s, dir)
+      val (corpus, bench) =
+        (fixtures("contam_corpus")(s, dir), fixtures("planted_bench")(s, dir))
       graft.api.Contamination.contaminatedSpans(corpus, bench, "doc_id",
           "text", width = 8)
         .orderBy("doc_id", "span_start")
     }),
     "contamination_span_cut" -> ((s, dir) => {
-      val (corpus, bench) = contamSpanFixture(s, dir)
+      val (corpus, bench) =
+        (fixtures("contam_corpus")(s, dir), fixtures("planted_bench")(s, dir))
       graft.api.Contamination.cutContaminatedSpans(corpus, bench, "doc_id",
           "text", width = 8)
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -3947,7 +3997,8 @@ object SparkEntry {
     // materialized-span seam — "X% of source Y's tokens overlap the
     // benchmark". One mining pass; group-cardinality-bounded rollup.
     "contamination_span_stats" -> ((s, dir) => {
-      val (corpus, bench) = contamSpanFixture(s, dir)
+      val (corpus, bench) =
+        (fixtures("contam_corpus")(s, dir), fixtures("planted_bench")(s, dir))
       val spans = graft.api.Contamination.contaminatedSpans(corpus, bench,
         "doc_id", "text", width = 8)
       graft.api.Dedup.spanStats(corpus, spans, "doc_id", "text", "source")
@@ -3959,7 +4010,8 @@ object SparkEntry {
     // Oracle: Python re-derives bench gram tuples, flagged windows,
     // islands and the byte rebuild from the same merge list.
     "contamination_span_cut_bpe" -> ((s, dir) => {
-      val (corpus, bench) = contamSpanFixture(s, dir)
+      val (corpus, bench) =
+        (fixtures("contam_corpus")(s, dir), fixtures("planted_bench")(s, dir))
       graft.api.Contamination.cutContaminatedSpansBpe(corpus, bench,
           "doc_id", "text", width = 8, merges = BpeMerges)
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))

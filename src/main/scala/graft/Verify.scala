@@ -1,11 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The one parquet writer for query dumps and fixture tables. */
+  def writeTable(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+
+  /** Usage: `graft.Verify <sfDir> <outDir> [fixtureDir]`. With the optional
+    * fixtureDir, every SparkEntry.fixtures table is also written there as
+    * `<fixtureDir>/<name>` — the inputs tools/gen_oracles.py reads. */
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val (sfDir, outDir, fixtureDir) = args match {
+      case Array(sf, out) => (sf, out, None)
+      case Array(sf, out, fix) => (sf, out, Some(fix))
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -25,8 +35,7 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try writeTable(fn(spark, sfDir), s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -50,6 +59,13 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // a fixture that fails to build fails the run: gen_oracles.py must
+    // never see a partial fixture directory
+    fixtureDir.foreach { dir =>
+      SparkEntry.fixtures.foreach { case (name, build) =>
+        writeTable(build(spark, sfDir), s"$dir/$name")
+      }
+    }
     spark.stop()
   }
 }

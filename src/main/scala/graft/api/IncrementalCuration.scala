@@ -220,14 +220,19 @@ object IncrementalCuration {
     // precedent: input evaluated once, consumers read the cache)
     val c = corpus.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
+      // the high-water-mark aggregate runs FIRST, alone: the one job it
+      // costs anyway reads every partition of `c`, so the builds below
+      // start on a loaded cache instead of queueing on each other's
+      // partition writes ("Block rdd_N_P already exists" WARNs).
+      val maxId = c.agg(max(col(idCol).cast("long"))).head.getLong(0)
       // the builds are INDEPENDENT writes to disjoint tables — overlap
       // them (guide §2.6): each alone leaves most executors idle through
-      // its small stages and its scheduling floor; the high-water-mark
-      // aggregate rides along. Meta is written LAST and sequentially: it
-      // is the recovery SENTINEL (recoverFromWarehouse refuses statistic
-      // tables without meta), so every statistic table must be fully
-      // committed before the sentinel exists.
-      val maxId = Par.run(spark, Seq[(String, () => Any)](
+      // its small stages and its scheduling floor. Meta is written LAST
+      // and sequentially: it is the recovery SENTINEL
+      // (recoverFromWarehouse refuses statistic tables without meta), so
+      // every statistic table must be fully committed before the
+      // sentinel exists.
+      Par.run(spark, Seq[(String, () => Any)](
         (s"buildState($prefix): gram index", () =>
           Dedup.saveGramIndex(c, gramTable(prefix), p.numBuckets,
             idCol, textCol, p.width)),
@@ -260,10 +265,8 @@ object IncrementalCuration {
               BpeTrain.trainBpe(c, textCol, p.bpeMerges, p.bpeVocabCap))
             .coalesce(1)
             .write.format("parquet").saveAsTable(vocabTable(prefix))
-        }),
-        (s"buildState($prefix): id high-water mark", () =>
-          c.agg(max(col(idCol).cast("long"))).head.getLong(0))
-      ), parallelism = 4).last.asInstanceOf[Long]
+        })
+      ), parallelism = 4)
       BucketedWrite.dropTable(spark, metaTable(prefix))
       val metaRows = Seq(("max_doc_id", maxId), ("params_hash", paramsHash(p)))
       metaRows.toDF("key", "value")

@@ -1,7 +1,9 @@
 package graft.api
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnShim
 
 /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
   * arXiv:2303.09540): k-means-cluster the embedding space, then hunt
@@ -51,7 +53,7 @@ object SemanticDedup {
     * second training pass. */
   private[api] def assignToCentroids(df: DataFrame, centroids: Array[Array[Double]],
                                      vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.graft.{CentroidModel, ColumnShim, NearestCell}
+    import org.apache.spark.sql.graft.{CentroidModel, NearestCell}
     require(centroids.nonEmpty, "at least one centroid required")
     val model = new CentroidModel(df.sparkSession.sparkContext.broadcast(centroids))
     df.withColumn("cluster",
@@ -79,8 +81,14 @@ object SemanticDedup {
     // Zero-norm vectors have no direction, so their cosine is undefined
     // (ANSI DIVIDE_BY_ZERO, or NaN which ranks above every tau): they never
     // drop and never shadow — excluded from the pair join, kept in the
-    // output (same guard as cosineLshPairs).
+    // output (same guard as cosineLshPairs). A live vector is non-null, so
+    // its cell is too: saying so keeps Catalyst from inferring
+    // isnotnull(cluster) from the cluster join and pushing that filter
+    // below the projection, where it evaluated the assignment a second
+    // time per vector.
     val live = assigned.filter(Ann.normSq(col(vecCol)) > 0.0)
+      .withColumn("cluster", ColumnShim.column(
+        KnownNotNull(ColumnShim.expression(col("cluster")))))
     // the shared self band-join on the cluster key: both sides read one
     // repartition of (id, vector, cluster), so the assignment runs once
     // for the pair join (each side needs the vector for the verify)
@@ -111,7 +119,7 @@ object SemanticDedup {
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.graft.{CentroidModel, ColumnShim, NearestCell, NearestCellDist}
+    import org.apache.spark.sql.graft.{CentroidModel, NearestCell, NearestCellDist}
     require(k >= 1, s"k must be >= 1, got $k")
     val base = df.select(col(idCol).cast("long").as(idCol),
       col(vecCol).cast("array<double>").as(vecCol))

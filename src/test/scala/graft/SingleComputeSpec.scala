@@ -162,14 +162,15 @@ class SingleComputeSpec extends AnyFunSuite {
       s"sketching must compute once:\n${df.queryExecution.executedPlan}")
   }
 
-  test("semanticDedup: the cluster assignment reaches four plan sites") {
+  test("semanticDedup: the cluster assignment reaches two plan sites") {
     // the pair join's two sides read one cluster repartition, whose stage
-    // lists the assignment three times: its projection, the not-null filter
-    // Catalyst infers from the cluster join and pushes below it, and the
-    // scan's data filters. The fourth is the verdict's id list. A
-    // hand-built join with one projection per side reached seven.
+    // computes the assignment once, in its projection; the second site is
+    // the verdict's id list. A nullable cluster column let Catalyst infer
+    // isnotnull(cluster) from the cluster join and push it below that
+    // projection, into a filter and the scan's data filters (four sites);
+    // a hand-built join with one projection per side reached seven.
     val df = api.SemanticDedup.semanticDedup(emb, nClusters = 4, tau = 0.3, seed = 77L)
-    assert(computeSites(df, "nearest_centroid(") == 4,
+    assert(computeSites(df, "nearest_centroid(") == 2,
       s"assignment sites:\n${df.queryExecution.executedPlan}")
   }
 

@@ -201,6 +201,28 @@ class IncrementalCurationSpec extends AnyFunSuite {
     assert(charsC(206L) < dayC.find(_._1 == 206L).get._2.length)
   }
 
+  test("buildState evaluates each corpus row once, however its builds overlap") {
+    // the builds run concurrently over one persisted corpus: a build that
+    // starts before the cache is filled computes the partition again, and
+    // the counting UDF in the input plan sees that row twice. The race
+    // depends on timing, so the build runs three times.
+    val evals = spark.sparkContext.longAccumulator("corpus row evaluations")
+    val touch = udf { (t: String) => evals.add(1L); t }.asNondeterministic()
+    val n = 400L
+    val corpus = spark.range(0L, n, 1L, 8).select(col("id").as("doc_id"),
+      touch(concat(lit("doc "), col("id").cast("string"),
+        lit(" alpha beta gamma delta epsilon zeta eta theta"))).as("text"),
+      when(col("id") % 2 === 0, lit("en")).otherwise(lit("de")).as("lang"))
+    val prefix = "graft_inccur_evals_spec"
+    (1 to 3).foreach { run =>
+      evals.reset()
+      IncrementalCuration.reset(spark, prefix)
+      IncrementalCuration.buildState(corpus, prefix, "doc_id", "text",
+        col("lang") === "en", P)
+      assert(evals.sum == n, s"build $run evaluated ${evals.sum} rows for $n")
+    }
+  }
+
   test("admitBatch recovers day-1 state across a simulated JVM restart") {
     val prefix = "graft_inccur_xs"
     IncrementalCuration.reset(spark, prefix)

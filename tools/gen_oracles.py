@@ -10,14 +10,25 @@ every golden vector in /root/reference/test/sql/lsh/*.test on import), runs
 it over the sf0.01 fixtures, and writes each result as a
 `SELECT ... FROM (VALUES ...)` statement into src/main/resources/oracles/.
 
+Planted inputs (HTML pages, URLs, template spam, the curation corpora, the
+BPE merge list, ...) are never rebuilt here: `graft.Verify` writes every
+table of SparkEntry.fixtures into a fixture directory, and this tool reads
+those tables (load_fixture), so both engines see exactly the same rows.
+What stays in Python is the independent re-derivation of each OPERATOR,
+which is what the gates check, plus the adequacy asserts over the rows.
+
 Python-vs-Scala is a genuinely independent implementation check: the two
 sides share no code, only the published algorithm (rustc-hash FxHash64,
 rand 0.8.5 StdRng/ChaCha12, ziggurat normal, saturating f64->u64).  The
 embeddings fixture is d=64, so this also covers the dot-product
 accumulation-order regime the d=5 goldens cannot reach (SURVEY §7.5.3).
 
-Usage: python3 tools/gen_oracles.py [sfDir] [sparkOutDir]
-  sfDir        fixture dir (default /root/testdata/sf0.01)
+Usage: python3 tools/gen_oracles.py sfDir fixtureDir [sparkOutDir]
+  sfDir        testdata dir (the oracles are pinned at sf0.01)
+  fixtureDir   planted-fixture tables, written by
+               `graft.Verify <sfDir> <outDir> <fixtureDir>` over the SAME
+               sfDir; a missing table or column exits nonzero naming the
+               fixture and the directory
   sparkOutDir  optional Verify output dir; when present every generated row
                set is cross-checked against the Spark parquet before the SQL
                is written (mismatch -> nonzero exit, nothing written).
@@ -530,6 +541,28 @@ def ann_oracle_sql(sel_rows):
         'ORDER BY query_id, "rank"')
 
 
+def load_fixture(name, cols, fix_dir):
+    """Rows of planted fixture `name` (a SparkEntry.fixtures table that
+    graft.Verify wrote under fix_dir/name), the given columns, ordered by
+    the first one. A missing table or column is a hard error: there is no
+    Python copy of the recipe to fall back to."""
+    path = os.path.join(fix_dir, name)
+    con = duckdb.connect()
+    try:
+        have = {r[0] for r in con.execute(
+            f"DESCRIBE SELECT * FROM '{path}/*.parquet'").fetchall()}
+    except duckdb.Error:
+        sys.exit(f"fixture {name!r} missing from {fix_dir} (write it with "
+                 f"graft.Verify <sfDir> <outDir> {fix_dir})")
+    missing = [c for c in cols if c not in have]
+    if missing:
+        sys.exit(f"fixture {name!r} in {fix_dir} lacks column(s) "
+                 f"{', '.join(missing)}")
+    return con.execute(
+        f"SELECT {', '.join(cols)} FROM '{path}/*.parquet' "
+        f"ORDER BY {cols[0]}").fetchall()
+
+
 def crosscheck(name, rows, cols, spark_dir, order_by):
     """Compare generated rows against the Spark Verify parquet, with an
     explicit ORDER BY on the query's sort keys — glob order plus intra-file
@@ -554,7 +587,7 @@ def crosscheck(name, rows, cols, spark_dir, order_by):
     return True
 
 
-def main(sf_dir, spark_dir):
+def main(sf_dir, fix_dir, spark_dir):
     con = duckdb.connect()
     docs = con.execute(
         f"SELECT doc_id, text FROM '{sf_dir}/documents.parquet' ORDER BY doc_id"
@@ -899,15 +932,14 @@ def main(sf_dir, spark_dir):
         "ORDER BY key_a, key_b")
     custom["edit_blocked_pairs"] = (ec_pairs, ("key_a", "key_b"), ec_sql)
 
-    # ---- edit_pairs_unicode: the NON-ASCII leg — names accented by the
-    # per-char bijection a -> U+00E0, e -> U+00E9 (mirroring the gate's
-    # translate), full re-derivation: shingle bands over the accented
-    # keys, then the CODE-POINT Levenshtein DP (Python strings are code
-    # points, the exact unit levenshtein_cp implements). A byte-edit or
-    # UTF-16-unit distance would disagree here, which is the point.
-    eu_tr = {ord("a"): "à", ord("e"): "é"}
-    eu_name = {cid: name.translate(eu_tr) for cid, name in customers
-               if cid <= 400}
+    # ---- edit_pairs_unicode: the NON-ASCII leg — the unicode_customers
+    # fixture (names accented a -> U+00E0, e -> U+00E9), full
+    # re-derivation: shingle bands over the accented keys, then the
+    # CODE-POINT Levenshtein DP (Python strings are code points, the exact
+    # unit levenshtein_cp implements). A byte-edit or UTF-16-unit distance
+    # would disagree here, which is the point.
+    eu_name = dict(load_fixture("unicode_customers", ("c_custkey", "c_name"),
+                                fix_dir))
     eu_sets = {cid: vk.shingles_from_text(n, 2) for cid, n in eu_name.items()}
     eu_buckets = {}
     for cid in eu_name:
@@ -975,24 +1007,15 @@ def main(sf_dir, spark_dir):
     # one leading www.), keep the 8 smallest (hashScore(doc_id, 13), id)
     # per host — independent re-derivation of both the URL parsing and
     # the xxhash64 selection chain.
-    def planted_url(did, src):
-        u = ("https://" + ("WWW." if did % 5 == 0 else "") + src
-             + ".example.com/p" + str(did % 40))
-        if did % 3 == 0:
-            u += "/"
-        if did % 7 == 0:
-            u += "?q=" + str(did % 4)
-        if did % 11 == 0:
-            u += "#s" + str(did)
-        return u
+    url_of = dict(load_fixture("planted_urls", ("doc_id", "url"), fix_dir))
 
     def url_host(u):
         h = re.match(r"^[a-z]+://([^/?#]+)", u).group(1).lower()
         return re.sub(r"^www\.", "", h)
 
     by_host = {}
-    for did, _lang, src, _nch in drows:
-        by_host.setdefault(url_host(planted_url(did, src)), []).append(did)
+    for did, _lang, _src, _nch in drows:
+        by_host.setdefault(url_host(url_of[did]), []).append(did)
     dq_rows = sorted(
         (did, host) for host, ids in by_host.items()
         for did in sorted(ids, key=lambda i: (hash_score(i, 13), i))[:8])
@@ -1144,21 +1167,9 @@ def main(sf_dir, spark_dir):
                 res.append(t)
         return "\n".join(res)
 
-    def planted_html(did, t):
-        return (
-            "<!DOCTYPE html><html><head><title>Doc " + str(did) +
-            '</title><style type="text/css">p { color: #333; }</style>'
-            '<script>if (x < 3 && y > 0) { track("</p>"); }</script>'
-            '</head><body><!-- header --><div class="nav">Home &raquo; '
-            "Docs</div><h1>Doc " + str(did) +
-            "</h1><p>" + t[:80] +
-            "</p><ul><li>alpha &amp; beta</li><li>&#65;&#x42; size "
-            "&lt;10&gt;</li></ul><p>" + t[80:] +
-            "</p><br/>&copy; 2026 example</body></html>")
-
     hx_text = dict(docs)
-    hx_ext = {did: html_extract_py(planted_html(did, hx_text[did] or ""))
-              for did, _l, _s, _n in drows}
+    hx_ext = {did: html_extract_py(page) for did, page in load_fixture(
+        "planted_html", ("doc_id", "html"), fix_dir)}
     hx_rows = []
     for did in sorted(hx_ext):
         t = hx_ext[did]
@@ -1305,28 +1316,12 @@ def main(sf_dir, spark_dir):
                 res.append(t)
         return "\n".join(res)
 
-    def planted_main_html(did, t):
-        robots = ('<meta name="robots" content="noindex">'
-                  if did % 9 == 4 else "")
-        return (
-            "<html><head>" + robots + "<title>Doc " + str(did) +
-            "</title><style>nav { color: red; }</style></head><body>"
-            '<div class="nav"><a href="/">Home</a> <a href="/docs">Docs'
-            '</a> <a href="/about">About us</a></div>'
-            '<aside><ul><li><a href="/r1">related article one</a></li>'
-            '<li><a href="/r2">related article two</a></li>'
-            '<li><a href="/r3">related article three</a></li></ul></aside>'
-            "<h1>Doc " + str(did) + "</h1><p>" + t[:80] +
-            '</p><p>See <a href="/guide">the full guide</a> for '
-            "background and details: " + t[80:] +
-            '</p><footer><a href="/privacy">Privacy</a> | '
-            '<a href="/terms">Terms</a> &copy; 2026 example</footer>'
-            "</body></html>")
+    main_page = dict(load_fixture("planted_main_html", ("doc_id", "html"),
+                                  fix_dir))
 
     hm_rows = []
     mc_text = {}  # main-content extraction, reused by the warc_to_shards chain
-    for did, _l, _s, _n in drows:
-        page = planted_main_html(did, hx_text[did] or "")
+    for did, page in sorted(main_page.items()):
         tm = html_main_py(page)
         mc_text[did] = tm
         ta = html_extract_py(page)
@@ -1365,33 +1360,24 @@ def main(sf_dir, spark_dir):
     # states the determinism contract).
     import zlib as _zlib
 
-    ZR_WORDS = ["item", "best", "price", "free", "shipping", "order",
-                "now", "satisfaction", "guaranteed", "call", "today",
-                "deal"]
-
-    def spam_text(did):
-        return " ".join(
-            ZR_WORDS[(k - 1) % 12] + " " +
-            str((did * 131071 + k * 8191) & 0xFFFF)
-            for k in range(1, 289))
-
+    spam_docs = load_fixture("planted_spam", ("doc_id", "text"), fix_dir)
+    spam_dids = {did for did, _t in spam_docs if did % 10 == 7}
     zr_rows = []
-    for did, t in docs:
-        txt = spam_text(did) if did % 10 == 7 else (t or "")
+    for did, txt in spam_docs:
         b = txt.encode("utf-8")
         nz = len(_zlib.compress(b, 6))
         # empty text: the contracted row is (0, 8, NULL ratio, False) —
         # Spark's double division by zero is null, mirrored as None
         zr_rows.append((did, len(b), nz,
                         nz / len(b) if b else None, nz * 3 < len(b)))
-        if did % 10 == 7:
+        if did in spam_dids:
             words = txt.split(" ")
             grams = list(zip(words, words[1:]))
             assert len(set(grams)) == len(grams), \
                 "spam fixture has a repeated 2-gram — no longer evades"
             assert "\n" not in txt
     flagged = {did for did, _b, _z, _r, sp in zr_rows if sp}
-    assert flagged == {did for did, _t in docs if did % 10 == 7}, \
+    assert flagged == spam_dids, \
         "zlib spam rule mislabels: flagged set != planted set"
     queries["zlib_ratio"] = (
         ("doc_id", "n_bytes", "n_zlib", "zlib_ratio", "template_spam"),
@@ -1407,8 +1393,7 @@ def main(sf_dir, spark_dir):
     # only on the compression rule.
     qz_spam = {did: sp for did, _b, _z, _r, sp in zr_rows}
     qz_rows = []
-    for did, t in docs:
-        txt = spam_text(did) if did % 10 == 7 else (t or "")
+    for did, txt in spam_docs:
         words = re.split(r"\s+", txt.strip()) if txt.strip() else [""]
         wc = len(words)
         dup_w = 1.0 - len(set(words)) / wc
@@ -1424,7 +1409,6 @@ def main(sf_dir, spark_dir):
                    and dup2 <= 0.05)
         qz_rows.append((did, keep_ng, qz_spam[did],
                         keep_ng and not qz_spam[did]))
-    spam_dids = {did for did, _t in docs if did % 10 == 7}
     assert all(kn and sp for did, kn, sp, _k in qz_rows
                if did in spam_dids), \
         "composition vacuous: spam must PASS the n-gram filter and be " \
@@ -1493,36 +1477,24 @@ def main(sf_dir, spark_dir):
                 i += 1
         return None
 
-    def planted_robots_html(did, t):
-        if did % 6 == 1:
-            # newline-padded token: pins the [\x00-\x20] edge trim (Spark's
-            # space-only builtin trim would KEEP this page)
-            meta = '<meta name="robots" content="nofollow,\n noindex">'
-        elif did % 6 == 3:
-            meta = '<meta NAME="ROBOTS" CONTENT="INDEX, FOLLOW">'
-        elif did % 6 == 5:
-            meta = "<meta name='robots' content='none'>"
-        elif did % 6 == 0:
-            meta = ('<meta charset="utf-8">'
-                    '<meta name="description" content="x, noindex">')
-        else:
-            meta = ""
-        return ("<html><head>" + meta + "<title>Doc " + str(did) +
-                "</title></head><body><p>" + t[:40] + "</p></body></html>")
-
+    nr_pages = load_fixture("planted_robots_html",
+                            ("doc_id", "html", "n_chars"), fix_dir)
     nr_rows = []
-    for did, _l, _s, nch in drows:
-        page = planted_robots_html(did, hx_text[did] or "")
+    for did, page, nch in nr_pages:
         r = meta_robots_py(page)
         dropped = r is not None and any(
             tok.strip().lower() in ("noindex", "none")
             for tok in r.split(","))
         if not dropped:
             nr_rows.append((did, r, nch))
+    # the newline-padded token pins the [\x00-\x20] edge trim (Spark's
+    # space-only builtin trim would KEEP such a page): it must be planted
+    assert any("\n noindex" in page for _d, page, _n in nr_pages), \
+        "robots fixture vacuous: no newline-padded noindex token"
     kept = {did for did, _r, _n in nr_rows}
-    assert all(did not in kept for did, _l, _s, _n in drows
+    assert all(did not in kept for did, _p, _n in nr_pages
                if did % 6 in (1, 5)), "noindex/none classes must drop"
-    assert all(did in kept for did, _l, _s, _n in drows
+    assert all(did in kept for did, _p, _n in nr_pages
                if did % 6 in (0, 3)), \
         "decoy description meta and INDEX directive must keep"
     assert any(r == "INDEX, FOLLOW" for _d, r, _n in nr_rows), \
@@ -1532,20 +1504,15 @@ def main(sf_dir, spark_dir):
         ("BIGINT", "VARCHAR", "BIGINT"), nr_rows, "doc_id")
 
     # ---- source_warc_extract: the crawl-tape front edge — Spark builds
-    # a 2-file WARC tape from the documents table (non-ASCII titles, so
+    # a 2-file WARC tape from the warc_pages fixture (non-ASCII titles, so
     # Content-Length must count BYTES), parses it by strict framing, and
-    # extracts text; this mirror re-derives each record's extraction from
-    # the same wrap recipe through the independent HTML scan. The framing
-    # itself has no Python twin — a misframed parse surfaces as missing/
-    # extra rows or garbled text, both hash mismatches.
-    def warc_html(did, t):
-        return ("<html><head><title>Doc «" + str(did) +
-                "»</title><script>var x = 1 < 2;</script></head><body>"
-                "<h1>Doc " + str(did) + "</h1><p>" + t + "</p></body></html>")
-
+    # extracts text; this re-derives each record's extraction from the
+    # same pages through the independent HTML scan. The framing itself
+    # has no Python twin — a misframed parse surfaces as missing/extra
+    # rows or garbled text, both hash mismatches.
     wx_rows = []
-    for did, text in docs:
-        t = html_extract_py(warc_html(did, text or ""))
+    for did, page in load_fixture("warc_pages", ("doc_id", "html"), fix_dir):
+        t = html_extract_py(page)
         wx_rows.append((did, "https://example.org/doc/%d" % did,
                         "resource", len(t), t[:60]))
     assert all(h.startswith("Doc «") for *_x, h in wx_rows), \
@@ -1567,45 +1534,31 @@ def main(sf_dir, spark_dir):
         [(did, uri, "response", n, h) for did, uri, _t, n, h in wx_rows],
         "doc_id")
 
-    # ---- source_warc_charset: charset-labeled body decode. The mirror
-    # re-derives the expected decoded STRING from the same text + suffix
-    # recipe; encode/decode is lossless for the planted characters in
-    # each class by construction, so a Spark side that ignored the
-    # charset label (mangling \u00e9 to U+FFFD, \u20ac to a C1 control)
-    # fails the hash. Class 3's unknown label pins the stated UTF-8
-    # fallback on an ASCII payload.
+    # ---- source_warc_charset: charset-labeled body decode. The expected
+    # decoded strings are the warc_charset_bodies rows; encode/decode is
+    # lossless for the planted characters in each class (asserted below),
+    # so a Spark side that ignored the charset label (mangling \u00e9 to
+    # U+FFFD, \u20ac to a C1 control) fails the hash. Class 3's unknown
+    # label pins the stated UTF-8 fallback on an ASCII payload.
+    wc_bodies = load_fixture("warc_charset_bodies", ("doc_id", "body"),
+                             fix_dir)
+    wc_codec = {0: "latin-1", 1: "cp1252", 4: "cp1252", 5: "latin-1"}
     wc_rows = []
-    for did, text in docs:
-        base = (text or "")[:60]
-        if did % 6 == 0:
-            body = base + " caf\u00e9 \u00b1 na\u00efve"
-            assert body.encode("latin-1").decode("latin-1") == body
-        elif did % 6 == 1:
-            body = base + " \u20ac \u201csmart\u201d quotes"
-            assert body.encode("cp1252").decode("cp1252") == body
-        elif did % 6 == 2:
-            body = base + " caf\u00e9 \u00b1 na\u00efve"
-        elif did % 6 == 3:
-            body = base + " plain ascii tail"
-        elif did % 6 == 4:
-            # NO header charset: the label rides a <meta charset=...> in
-            # the page and the prescan must find it after the gunzip
-            body = ('<meta charset="windows-1252"><p>' + base
-                    + " \u20ac meta tail</p>")
-            assert body.encode("cp1252").decode("cp1252") == body
-        else:
-            # http-equiv Content-Type form, latin-1, no header label
-            body = ('<meta http-equiv="Content-Type" content="'
-                    'text/html; charset=iso-8859-1"><p>' + base
-                    + " caf\u00e9 meta tail</p>")
-            assert body.encode("latin-1").decode("latin-1") == body
+    for did, body in wc_bodies:
+        codec = wc_codec.get(did % 6)
+        if codec:
+            assert body.encode(codec).decode(codec) == body, \
+                f"charset fixture: doc {did} is not {codec}-lossless"
         wc_rows.append((did, len(body), body[max(len(body) - 30, 0):]))
     # fixture adequacy: every class must actually occur, and the two
     # prescan classes must include gzip'd members (prescan-after-inflate)
-    assert all(any(d % 6 == k for d, _t in docs) for k in range(6)), \
+    assert all(any(d % 6 == k for d, _b in wc_bodies) for k in range(6)), \
         "charset fixture vacuous: a class is empty at this SF"
-    assert any(d % 6 == 4 and d % 2 == 0 for d, _t in docs), \
+    assert any(d % 6 == 4 and d % 2 == 0 for d, _b in wc_bodies), \
         "charset fixture vacuous: no gzip'd meta-prescan page"
+    assert all(any(ord(c) > 127 for c in b) for d, b in wc_bodies
+               if d % 6 in wc_codec), \
+        "charset fixture vacuous: a legacy-charset body is pure ASCII"
     queries["source_warc_charset"] = (
         ("doc_id", "n_chars_body", "tail30"),
         ("BIGINT", "BIGINT", "VARCHAR"), wc_rows, "doc_id")
@@ -1614,33 +1567,40 @@ def main(sf_dir, spark_dir):
     # mixes identity, bare chunked, chunked-of-gzip, chunked-of-deflate
     # and unchunked gzip/deflate controls; the wire layers are lossless
     # by construction, so the decode must reproduce the pre-encoding
-    # text exactly. A skipped de-chunk leaves hex size lines in the
-    # text; a wrong layer order feeds chunk framing to gunzip; either
-    # fails the hash (or the loud decode).
-    wk_rows = []
-    for did, text in docs:
-        body = (text or "")[:80] + " \u2014 chunked wire tail"
-        wk_rows.append((did, len(body), body[max(len(body) - 30, 0):]))
-    assert all(any(d % 6 == k for d, _t in docs) for k in range(6)), \
+    # text (warc_chunked_bodies) exactly. A skipped de-chunk leaves hex
+    # size lines in the text; a wrong layer order feeds chunk framing to
+    # gunzip; either fails the hash (or the loud decode).
+    wk_bodies = load_fixture("warc_chunked_bodies", ("doc_id", "body"),
+                             fix_dir)
+    wk_rows = [(did, len(body), body[max(len(body) - 30, 0):])
+               for did, body in wk_bodies]
+    assert all(any(d % 6 == k for d, _b in wk_bodies) for k in range(6)), \
         "chunked fixture vacuous: a wire-nesting class is empty"
+    assert all(len(b.encode("utf-8")) > len(b) for _d, b in wk_bodies), \
+        "chunked fixture vacuous: no multi-byte character to split"
     queries["source_warc_chunked"] = (
         ("doc_id", "n_chars_body", "tail30"),
         ("BIGINT", "BIGINT", "VARCHAR"), wk_rows, "doc_id")
 
     # ---- http_status_filter: envelope-level admission — keep = status
-    # 200 AND no X-Robots-Tag noindex/none token. Classes (id%5): 200
-    # plain keep / 301 drop / 404 drop / 200+noindex drop / 200 +
-    # unavailable_after KEEP (not a noindex token — pins the rule
-    # against over-dropping).
-    hs_rows = []
-    for did, text in docs:
-        base = (text or "")[:70]
-        if did % 5 == 0:
-            hs_rows.append((did, 200, len(base + " ok body")))
-        elif did % 5 == 4:
-            hs_rows.append((did, 200, len(base + " ua body")))
-    assert all(any(d % 5 == k for d, _t in docs) for k in range(5)), \
+    # 200 AND no X-Robots-Tag noindex/none token, over the
+    # warc_status_records envelopes. Classes (id%5): 200 plain keep / 301
+    # drop / 404 drop / 200+noindex drop / 200 + unavailable_after KEEP
+    # (not a noindex token — pins the rule against over-dropping).
+    hs_recs = load_fixture("warc_status_records",
+                           ("doc_id", "status", "x_robots_tag", "body"),
+                           fix_dir)
+    hs_rows = [(did, st, len(body)) for did, st, tag, body in hs_recs
+               if st == 200 and not any(
+                   tok.strip().lower() in ("noindex", "none")
+                   for tok in (tag or "").split(","))]
+    assert all(any(d % 5 == k for d, *_r in hs_recs) for k in range(5)), \
         "status fixture vacuous: a class is empty at this SF"
+    assert any(st != 200 for _d, st, _t, _b in hs_recs) and \
+        any(st == 200 and t and "noindex" in t for _d, st, t, _b in hs_recs) and \
+        any(st == 200 and t and "noindex" not in t
+            for _d, st, t, _b in hs_recs), \
+        "status fixture vacuous: a status, noindex or keep-tag class is missing"
     queries["http_status_filter"] = (
         ("doc_id", "status", "n_chars_body"),
         ("BIGINT", "INTEGER", "BIGINT"), hs_rows, "doc_id")
@@ -1665,7 +1625,7 @@ def main(sf_dir, spark_dir):
     def cw_host_blocked(h):
         return h in cw_blocked or any(h.endswith("." + b) for b in cw_blocked)
 
-    cw_url = {did: planted_url(did, src) for did, _l, src, _n in drows}
+    cw_url = dict(url_of)
     cw_s1 = [did for did, _l, _s, _n in drows
              if not cw_host_blocked(url_host(cw_url[did]))]
 
@@ -1762,15 +1722,8 @@ def main(sf_dir, spark_dir):
                     best_allow = True
         return best_len >= 0 and not best_allow
 
-    rbt_rules = {h: rbt_parse(b, "*") for h, b in {
-        "src1.example.com":
-            "# site rules\nUser-agent: *\nDisallow: /p\nAllow: /p21\n",
-        "src2.example.com":
-            "User-agent: graftbot\nDisallow: /\n"
-            "User-agent: *\nDisallow: /*2$\n",
-        "src3.example.com": "User-agent: graftbot\nDisallow: /\n",
-        "src4.example.com": "User-agent: *\nDisallow:\n",
-    }.items()}
+    rbt_rules = {h: rbt_parse(b, "*") for h, b in load_fixture(
+        "robots_txt", ("host", "body"), fix_dir)}
 
     def rbt_target(u):
         m = re.match(r"^[a-z]+://[^/?#]+([^?#]*)", u)
@@ -1779,8 +1732,8 @@ def main(sf_dir, spark_dir):
         return path + ("?" + qm.group(1) if qm and qm.group(1) else "")
 
     rbt_rows, rbt_dropped = [], set()
-    for did, _lang, src, _n in drows:
-        u = planted_url(did, src)
+    for did, _lang, _src, _n in drows:
+        u = url_of[did]
         rules = rbt_rules.get(url_host(u))
         if rules is not None and rbt_disallowed(rbt_target(u), rules):
             rbt_dropped.add(did)
@@ -1832,18 +1785,10 @@ def main(sf_dir, spark_dir):
 
     idn_first = {}
     idn_rows = []
-    for did, _lang, _src, nchars in drows:
-        if did % 7 == 0:
-            host = "plain.example.de"
-        elif did % 4 == 0:
-            host = "m\u00fcnchen.example.de"
-        elif did % 4 == 1:
-            host = "M%C3%BCnchen.example.de"
-        elif did % 4 == 2:
-            host = "xn--mnchen-3ya.example.de"
-        else:
-            host = "XN--MNCHEN-3YA.example.de"
-        key = idn_fold_host(host) + "/a" + str(did % 30)
+    for did, nchars, url in load_fixture("idn_urls",
+                                         ("doc_id", "n_chars", "url"), fix_dir):
+        host, path = re.match(r"^https://([^/]+)(/.*)$", url).groups()
+        key = idn_fold_host(host) + path
         if key not in idn_first:
             idn_first[key] = did
             idn_rows.append((did, nchars))
@@ -1938,19 +1883,15 @@ def main(sf_dir, spark_dir):
         ("BIGINT", "BIGINT", "BIGINT", "BIGINT", "BIGINT"), pack_rows, "id")
 
     # ---- token_count_bpe / pack_sequences_bpe: byte-level BPE under the
-    # pinned merge list (MIRROR of SparkEntry.BpeMerges — keep identical).
+    # pinned merge list (the bpe_merges fixture, rank order).
     # Algorithm mirror of BpeCount.countWord: words are maximal runs of
     # non-ASCII-whitespace bytes of the UTF-8 encoding; tokens start as
     # single bytes; the lowest-rank adjacent pair merges ALL occurrences
     # left-to-right; repeat until no listed pair remains.
-    BPE_MERGES = [
-        ("t", "h"), ("th", "e"), ("i", "n"), ("e", "r"), ("a", "n"), ("r", "e"),
-        ("o", "n"), ("a", "t"), ("e", "n"), ("o", "r"), ("e", "s"), ("s", "t"),
-        ("a", "r"), ("o", "u"), ("i", "t"), ("an", "d"), ("in", "g"), ("t", "o"),
-        ("o", "f"), ("e", "d"), ("i", "s"), ("a", "l"), ("l", "e"), ("c", "o"),
-        ("s", "e"), ("m", "e"), ("d", "e"), ("the", "r"), ("h", "a"), ("c", "e"),
-        ("l", "i"), ("h", "i"), ("u", "r"), ("r", "o"), ("w", "h"), ("wh", "i")]
-    bpe_rank = {(a.encode(), b.encode()): i for i, (a, b) in enumerate(BPE_MERGES)}
+    bpe_rank = {(a.encode(), b.encode()): i for i, a, b in load_fixture(
+        "bpe_merges", ("merge_rank", "lhs", "rhs"), fix_dir)}
+    assert sorted(bpe_rank.values()) == list(range(len(bpe_rank))), \
+        "bpe_merges: ranks must be 0..n-1 over distinct pairs"
 
     def bpe_word_toks_r(w, rank):
         """BPE merge loop for one whitespace-free word (bytes) under an
@@ -2032,7 +1973,7 @@ def main(sf_dir, spark_dir):
     # have survived every LATER drop stage (noindex, blocklist, path,
     # param) — otherwise the stage is vacuous in this composition
     def wts_noindex(did):
-        r = meta_robots_py(planted_main_html(did, hx_text[did] or ""))
+        r = meta_robots_py(main_page[did])
         return r is not None and any(
             tok.strip().lower() in ("noindex", "none")
             for tok in r.split(","))
@@ -2407,16 +2348,17 @@ def main(sf_dir, spark_dir):
         ("doc_id", "text"), ("BIGINT", "VARCHAR"), wx_rows, "doc_id")
 
     # ---- contamination_span_cut_bpe: the cross-corpus pass under BPE
-    # identity — mirrors contamSpanFixture (bench = doc_id%50==0 + passage;
-    # corpus = rest, passage planted at doc_id%7==3), flags corpus windows
-    # whose BPE token tuple occurs anywhere in the bench set, merges
-    # islands, rebuilds bytes (bpe_cut_text).
-    CONTAM_PASSAGE = " zebra quagga okapi tapir gnu eland kudu oryx saiga argali"
-    cb_bench = {did: t + CONTAM_PASSAGE for did, t in docs if did % 50 == 0}
-    cb_corpus = {did: (t + CONTAM_PASSAGE if did % 7 == 3 else t)
-                 for did, t in docs if did % 50 != 0}
+    # identity over the contam_corpus / planted_bench fixtures: flags
+    # corpus windows whose BPE token tuple occurs anywhere in the bench
+    # set, merges islands, rebuilds bytes (bpe_cut_text).
+    bench_text = dict(load_fixture("planted_bench", ("doc_id", "text"),
+                                   fix_dir))
+    cb_corpus = dict(load_fixture("contam_corpus", ("doc_id", "text"),
+                                  fix_dir))
+    assert not set(bench_text) & set(cb_corpus), \
+        "contamination split must be disjoint"
     cb_bench_grams = set()
-    for t in cb_bench.values():
+    for t in bench_text.values():
         toks = bpe_tokens(t)
         for i in range(len(toks) - SPAN_W + 1):
             cb_bench_grams.add(tuple(toks[i:i + SPAN_W]))
@@ -3105,16 +3047,7 @@ def main(sf_dir, spark_dir):
     # seed-5 splits, train only. Every stage refits on its own input;
     # all folds/sorts mirror the per-operator oracles bit for bit.
     V2_W = 8
-    v2_bench = {did: (t or "") + CONTAM_PASSAGE
-                for did, t in docs if did % 50 == 0}
-    v2 = {}
-    for did, t in docs:
-        if did % 50 == 0:
-            continue
-        v2[did] = (("subscribe to our newsletter\n" if did % 3 == 0 else "")
-                   + (t or "").replace(" the ", "\n")
-                   + ("\nall rights reserved" if did % 4 == 0 else "")
-                   + (CONTAM_PASSAGE if did % 7 == 3 else ""))
+    v2 = dict(load_fixture("staged_corpus", ("doc_id", "text"), fix_dir))
     v2_linedocs = {}
     for did, tt in v2.items():
         for l in set(tt.split("\n")):
@@ -3140,7 +3073,7 @@ def main(sf_dir, spark_dir):
         return [(a, b) for a, b in spans]
 
     v2_bgrams = set()
-    for t in v2_bench.values():
+    for t in bench_text.values():
         bt = v2_toks(t)
         for i in range(len(bt) - V2_W + 1):
             v2_bgrams.add(tuple(bt[i:i + V2_W]))
@@ -3295,44 +3228,14 @@ def main(sf_dir, spark_dir):
     # NB counts, exact/near dup identity) and slice the batch (>= 350).
     # The Scala side admits B against day-1 indexes of A (< 350); the
     # mergeable-statistics design makes this slice its bit-exact answer.
-    # Fixture mirrors SparkEntry.incrementalCurationFixture line for line
-    # (same concat order).
-    INC_P1 = " lorem alpha beta gamma delta epsilon zeta eta theta iota"
-    INC_P2 = " omega kappa sigma lambda upsilon phi chi psi rho nu"
+    # Input: the inc_corpus fixture (A = doc_id < 350, B = the rest)
+    # against planted_bench. The two planted strings below are what the
+    # adequacy asserts look for in those rows.
     INC_OFFER = "limited time offer"
-    INC_LIT = "the quick brown fox jumps over the lazy dog again and again"
+    INC_P2 = " omega kappa sigma lambda upsilon phi chi psi rho nu"
     INC_W = 8
     INC_MINDOCS = 60
-    text_of = dict(docs)
-
-    def inc_fix0(did):
-        x = (text_of[did] or "").replace(" the ", "\n")
-        if did % 3 == 0:
-            x = "subscribe to our newsletter\n" + x
-        if did % 11 == 5 or (did >= 350 and did % 3 == 1):
-            x += "\n" + INC_OFFER
-        if did % 13 == 2 or (did >= 350 and did % 11 == 4):
-            x += INC_P1
-        if did == 151 or (did >= 350 and did % 31 == 9):
-            x += INC_P2
-        if did % 7 == 3:
-            x += CONTAM_PASSAGE
-        return x
-
-    inc = {}
-    for did, _t in docs:
-        if did % 50 == 0:
-            continue
-        if did >= 350 and did % 97 == 0:
-            inc[did] = INC_LIT
-        elif did >= 350 and did % 10 == 3:
-            inc[did] = inc_fix0(did - 200)
-        elif did >= 350 and did % 10 == 6:
-            inc[did] = inc_fix0(did - 200) + " incremental clone suffix tokens"
-        else:
-            inc[did] = inc_fix0(did)
-    inc_bench = {did: (t or "") + CONTAM_PASSAGE
-                 for did, t in docs if did % 50 == 0}
+    inc = dict(load_fixture("inc_corpus", ("doc_id", "text"), fix_dir))
 
     # the cross-threshold boilerplate line is the gate's point: its
     # document frequency must sit BELOW minDocs on day-1 A alone and AT
@@ -3435,12 +3338,14 @@ def main(sf_dir, spark_dir):
                     e[1] = did
     inc_dup = {g for g, (mn, mx) in inc_gd.items() if mn != mx}
     inc_bgrams = set()
-    for t in inc_bench.values():
+    for t in bench_text.values():
         bt = v2_toks(t)
         for i in range(len(bt) - INC_W + 1):
             inc_bgrams.add(tuple(bt[i:i + INC_W]))
     # P2 is duplicated ONLY via the batch (one day-1 holder): its grams
     # must be in the dup set (the appendToGramIndex batch-vs-index path)
+    assert sum(1 for d, t in inc.items() if d < 350 and INC_P2 in t) == 1, \
+        "inc fixture vacuous: P2 must have exactly one day-1 holder"
     p2t = v2_toks(INC_P2)
     assert tuple(p2t[:INC_W]) in inc_dup, \
         "inc fixture vacuous: P2 grams not duplicated via the batch"
@@ -4299,6 +4204,8 @@ def main(sf_dir, spark_dir):
     # dims 16+id%9 x 16+id%7, channel byte = FxHash(add(add(add(add(0,id),
     # x),y),c)) & 0xff) — no PNG machinery in Python, so the Spark side's
     # encode->ImageIO decode roundtrip must reproduce the raster exactly.
+    # Kept twin (pixel recipe): Python has no PNG decoder, and the gate's
+    # point is that Spark's decode reproduces this raster.
     mr_rows = []
     for m in range(64):
         mw, mh = 16 + m % 9, 16 + m % 7
@@ -4331,6 +4238,8 @@ def main(sf_dir, spark_dir):
     # operator runs. The Spark side decodes real PNG bytes through
     # ImageIO; PNG is lossless, so any hash difference is an extractor
     # bug, not codec noise.
+    # Kept twin (pixel recipe): Python has no image library to decode the
+    # PNG bytes Spark hashes.
     def ip_raster(m):
         mw, mh = 16 + m % 9, 16 + m % 7
         return [[(vk.Fx().add(m).add(x).add(y).add(0).fin() & 0xFF,
@@ -4448,6 +4357,8 @@ def main(sf_dir, spark_dir):
     # (graft.core.AudioFingerprint), then the same 4x16-bit pigeonhole
     # banding + Hamming <= 6 the Scala operator runs. PCM is lossless, so
     # any fingerprint difference is a decode/recipe bug, not codec noise.
+    # Kept twin (sample recipe): Python has no audio library to decode the
+    # WAV bytes Spark fingerprints.
     def af_samples(m, perturb):
         ch = 1 + m % 2
         frames = 400 + (m % 5) * 37
@@ -4515,29 +4426,27 @@ def main(sf_dir, spark_dir):
     # stage over the SAME recipe hashes as the piecewise gates (ip_h for
     # images, af_h for audio; audio ids offset +1000). Every stage's
     # survivor set feeds the next, so stage-order bugs land as row
-    # mismatches.
-    def cm_caption(mid):
-        if mid % 7 == 2:
-            return "thumb img"
-        if mid % 11 == 5:
-            return "a duplicated caption planted for the exact dedup stage"
-        return ("a descriptive caption for media item number %d "
-                "in the corpus" % mid)
-
-    cm_kind = {mid: "image" for mid in ip_h}
-    cm_kind.update({1000 + mid: "audio" for mid in af_h})
+    # mismatches. Media ids, kinds and captions come from the
+    # multimodal_media fixture; its ids must be exactly the recipe's.
+    cm_media = load_fixture("multimodal_media",
+                            ("media_id", "kind", "caption"), fix_dir)
+    cm_kind = {mid: kind for mid, kind, _c in cm_media}
+    cm_cap = {mid: cap for mid, _k, cap in cm_media}
+    assert cm_kind == {**{mid: "image" for mid in ip_h},
+                       **{1000 + mid: "audio" for mid in af_h}}, \
+        "multimodal_media ids/kinds differ from the pixel/sample recipes"
     cm_hash = {mid: ip_h[mid] for mid in ip_h}
     cm_hash.update({1000 + mid: af_h[mid] for mid in af_h})
     # stage 1: caption rules
     cm_s1 = [mid for mid in sorted(cm_kind)
-             if len(cm_caption(mid).split()) >= 4
-             and len(cm_caption(mid)) <= 200]
+             if len(cm_cap[mid].split()) >= 4
+             and len(cm_cap[mid]) <= 200]
     assert len(cm_s1) < len(cm_kind), "caption rule stage is vacuous"
     # stage 2: global first-come caption dedup
     cm_first = {}
     for mid in cm_s1:
-        cm_first.setdefault(cm_caption(mid), mid)
-    cm_s2 = [mid for mid in cm_s1 if cm_first[cm_caption(mid)] == mid]
+        cm_first.setdefault(cm_cap[mid], mid)
+    cm_s2 = [mid for mid in cm_s1 if cm_first[cm_cap[mid]] == mid]
     assert len(cm_s2) < len(cm_s1), "caption dedup stage is vacuous"
     # the planted duplicate class must resolve to ONE survivor, and it
     # must be the smallest id across BOTH modalities
@@ -4564,7 +4473,7 @@ def main(sf_dir, spark_dir):
         [m for m in cm_s2 if cm_kind[m] == "audio"], 6)
     assert cm_img_drops and cm_aud_drops, \
         "perceptual stage vacuous in one modality"
-    cm_rows = [(mid, cm_kind[mid], cm_caption(mid)) for mid in cm_s2
+    cm_rows = [(mid, cm_kind[mid], cm_cap[mid]) for mid in cm_s2
                if mid not in cm_img_drops and mid not in cm_aud_drops]
     cm_rows.sort()
     # at least one near twin must have reached stage 3 and been dropped
@@ -4582,6 +4491,7 @@ def main(sf_dir, spark_dir):
     # decoded mean byte lies within 2.0 of the recipe raster's mean
     # (measured codec noise < 0.5 at quality 0.95; a wrong decode is tens
     # off or the -1 sentinel).
+    # Kept twin (raster dims): Python has no JPEG decoder.
     mj_rows = [(m, 16 + m % 9, 16 + m % 7, "TRUE") for m in range(48)]
     mj_sql = (
         "SELECT CAST(media_id AS BIGINT) AS media_id,"
@@ -4600,6 +4510,8 @@ def main(sf_dir, spark_dir):
     # & 0xffff) — no WAV machinery in Python; PCM is lossless, so the
     # Spark side's encode->javax.sound decode roundtrip must reproduce the
     # sample stream exactly.
+    # Kept twin (sample recipe): Python has no WAV decoder, and the gate's
+    # point is that Spark's decode reproduces these samples.
     wv_rows = []
     for m in range(48):
         ch = 1 + m % 2
@@ -4860,6 +4772,7 @@ def main(sf_dir, spark_dir):
 
 
 if __name__ == "__main__":
-    sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    sp = sys.argv[2] if len(sys.argv) > 2 else None
-    sys.exit(main(sf, sp))
+    if len(sys.argv) not in (3, 4):
+        sys.exit(__doc__[__doc__.index("Usage:"):])
+    sys.exit(main(sys.argv[1], sys.argv[2],
+                  sys.argv[3] if len(sys.argv) > 3 else None))

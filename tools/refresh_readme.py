@@ -3,7 +3,7 @@
 
 Counts are derived, never typed:
   - driver query count  = entries in SparkEntry.queries (the `-> ((s, dir)`
-    arrow pattern; cross-checked against oracle_sql.json from the latest
+    arrow pattern inside `def queries`; cross-checked against oracle_sql.json from the latest
     Verify dump when one exists)
   - test count          = "Tests: succeeded N" from the latest `sbt test`
     log (pass the log path, default /tmp/test_log.txt)
@@ -20,7 +20,10 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def query_count():
     src = open(os.path.join(ROOT, "src/main/scala/graft/SparkEntry.scala")).read()
-    n = len(re.findall(r'"\w+" -> \(\(s, dir\)', src))
+    # only the queries map: the fixtures registry uses the same arrow form
+    body = src[src.index("  def queries:"):]
+    body = body[:re.search(r"\n  (def|val|private|lazy) ", body[1:]).start() + 1]
+    n = len(re.findall(r'"\w+" -> \(\(s, dir\)', body))
     oj = "/tmp/verify_out/oracle_sql.json"
     if os.path.exists(oj):
         m = len(json.load(open(oj)))
