@@ -41,7 +41,7 @@ object SparkEntry {
     * rows instead of rebuilding them (FIXTURES.md, "Planted fixtures").
     * A recipe drift thus changes the rows both sides see, never one
     * side's copy. */
-  val fixtures: ListMap[String, (SparkSession, String) => DataFrame] = ListMap(
+  private[graft] val fixtures: ListMap[String, (SparkSession, String) => DataFrame] = ListMap(
     // Deterministic URL column for the per-domain gates (the documents
     // fixture has no URL): per-source hosts, a `WWW.` prefix on %5 ids,
     // %40 path collisions, trailing slashes on %3, query strings on %7,
@@ -2438,28 +2438,14 @@ object SparkEntry {
     // kept. Decon runs BEFORE dedup so benchmark text can't vote in the
     // duplication statistics; every scoring stage refits its model on ITS
     // OWN input (order and threading are the contract this gate pins).
-    // Fixture: the boilerplate_lines_drop newline-ification (header %3,
-    // footer %4, ' the '→'\n') plus the contamination_span_cut_bpe plant
-    // (bench = %50==0 docs + passage, passage appended to corpus %7==3).
+    // Fixture: the staged_corpus and planted_bench registry tables (the
+    // same inputs the staged gates below read).
     // Oracle: FULL-CHAIN Python re-derivation — every stage recomputed
     // from scratch on the previous stage's output, so stage-order, id-
     // threading and tokenizer-identity bugs surface as row mismatches.
     "curate_corpus_v2" -> ((s, dir) => {
-      val docs = load(s, dir, "documents")
-      val passage =
-        lit(" zebra quagga okapi tapir gnu eland kudu oryx saiga argali")
-      val bench = docs.filter(col("doc_id") % 50 === 0)
-        .select(col("doc_id"), concat(col("text"), passage).as("text"))
-      val corpus0 = docs.filter(col("doc_id") % 50 =!= 0)
-        .select(col("doc_id"), col("lang"), col("source"),
-          concat(
-            when(col("doc_id") % 3 === 0, lit("subscribe to our newsletter\n"))
-              .otherwise(lit("")),
-            regexp_replace(col("text"), " the ", "\n"),
-            when(col("doc_id") % 4 === 0, lit("\nall rights reserved"))
-              .otherwise(lit("")),
-            when(col("doc_id") % 7 === 3, passage).otherwise(lit("")))
-            .as("text"))
+      val bench = fixtures("planted_bench")(s, dir)
+      val corpus0 = fixtures("staged_corpus")(s, dir)
       val c1 = graft.api.Dedup.dropBoilerplateLines(
         corpus0, "doc_id", "text", minDocs = 80L)
       val deconSpans = graft.api.Contamination.contaminatedSpans(

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   /** The one parquet writer for query dumps and fixture tables. */
-  def writeTable(df: DataFrame, path: String): Unit =
+  private[graft] def writeTable(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
   /** Usage: `graft.Verify <sfDir> <outDir> [fixtureDir]`. With the optional

@@ -28,7 +28,8 @@ Usage: python3 tools/gen_oracles.py sfDir fixtureDir [sparkOutDir]
   fixtureDir   planted-fixture tables, written by
                `graft.Verify <sfDir> <outDir> <fixtureDir>` over the SAME
                sfDir; a missing table or column exits nonzero naming the
-               fixture and the directory
+               fixture and the directory, and so do tables whose doc_ids
+               or pass-through columns disagree with sfDir's documents
   sparkOutDir  optional Verify output dir; when present every generated row
                set is cross-checked against the Spark parquet before the SQL
                is written (mismatch -> nonzero exit, nothing written).
@@ -563,6 +564,55 @@ def load_fixture(name, cols, fix_dir):
         f"ORDER BY {cols[0]}").fetchall()
 
 
+def check_same_testdata(sf_dir, fix_dir):
+    """Exit nonzero unless fix_dir was written from sf_dir's testdata.
+    Verify writes the whole directory in one run from one documents table.
+    Each doc_id-keyed table must draw only on sf_dir's doc_ids and carry
+    their lang/source/n_chars unchanged (every column it shares with
+    documents except the text the recipes rewrite), and together the
+    tables must cover every doc_id. sf0.001 and sf0.01 hold the same 500
+    doc_ids with different rows, so the id sets alone cannot tell them
+    apart. Without this, the gates that loop over fixture rows alone would
+    emit oracles at the fixture's scale."""
+    if not os.path.isdir(fix_dir):
+        sys.exit(f"fixture directory {fix_dir} missing (write it with "
+                 f"graft.Verify {sf_dir} <outDir> {fix_dir})")
+    con = duckdb.connect()
+    doc_path = f"{sf_dir}/documents.parquet"
+    doc_cols = {r[0] for r in con.execute(
+        f"DESCRIBE SELECT * FROM '{doc_path}'").fetchall()}
+    docs = {r[0] for r in con.execute(
+        f"SELECT doc_id FROM '{doc_path}'").fetchall()}
+    seen = set()
+    for name in sorted(os.listdir(fix_dir)):
+        path = os.path.join(fix_dir, name)
+        try:
+            cols = {r[0] for r in con.execute(
+                f"DESCRIBE SELECT * FROM '{path}/*.parquet'").fetchall()}
+        except duckdb.Error:
+            continue  # not a table; load_fixture names it if a gate reads it
+        if "doc_id" not in cols:
+            continue
+        ids = {r[0] for r in con.execute(
+            f"SELECT doc_id FROM '{path}/*.parquet'").fetchall()}
+        kept = sorted((cols & doc_cols) - {"doc_id", "text"})
+        differ = con.execute(
+            f"SELECT count(*) FROM '{path}/*.parquet' f "
+            f"JOIN '{doc_path}' d USING (doc_id) WHERE "
+            + " OR ".join(f"f.{c} IS DISTINCT FROM d.{c}" for c in kept)
+        ).fetchone()[0] if kept else 0
+        if not ids <= docs or differ:
+            sys.exit(f"fixture {name!r} in {fix_dir} does not match "
+                     f"{doc_path} ({len(ids - docs)} unknown doc_id(s), "
+                     f"{differ} row(s) with other {'/'.join(kept)}): "
+                     f"{fix_dir} was written from other testdata")
+        seen |= ids
+    if seen != docs:
+        sys.exit(f"fixtures in {fix_dir} cover {len(seen)} of the "
+                 f"{len(docs)} doc_ids of {doc_path}: {fix_dir} was "
+                 f"written from other testdata")
+
+
 def crosscheck(name, rows, cols, spark_dir, order_by):
     """Compare generated rows against the Spark Verify parquet, with an
     explicit ORDER BY on the query's sort keys — glob order plus intra-file
@@ -588,6 +638,7 @@ def crosscheck(name, rows, cols, spark_dir, order_by):
 
 
 def main(sf_dir, fix_dir, spark_dir):
+    check_same_testdata(sf_dir, fix_dir)
     con = duckdb.connect()
     docs = con.execute(
         f"SELECT doc_id, text FROM '{sf_dir}/documents.parquet' ORDER BY doc_id"
